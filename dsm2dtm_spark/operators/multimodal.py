@@ -1,7 +1,8 @@
 """Multimodal (image/audio/video) column operators.
 
 Media are opaque ``binary`` columns with typed metadata, exactly like the DSM
-grids; all heavy work happens in Arrow-batched ``mapInPandas`` stages.
+grids; all heavy work happens in per-row functions behind ``util.map_rows``
+(Arrow-batched ``mapInPandas`` stages).
 
 Codec status in this environment (no PIL/cv2/ffmpeg — SURVEY.md §7.0):
 - ``png_rgb`` is a REAL codec: a from-scratch stdlib-zlib PNG truecolor
@@ -31,10 +32,8 @@ import io
 import struct
 import wave
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -51,7 +50,8 @@ from pyspark.sql.types import (
 STUBBED_CODECS = ("jpeg", "webp", "opus", "h264")
 
 # one PNG container implementation in the tree: codecs.py owns it
-from dsm2dtm_spark.codecs import _PNG_SIG, _iter_png_chunks, _png_chunk  # noqa: E402
+from dsm2dtm_spark.codecs import _PNG_SIG, _iter_png_chunks, _png_chunk, ahash64  # noqa: E402
+from dsm2dtm_spark.util import map_rows  # noqa: E402
 
 
 def fake_rgb8_encode(arr: np.ndarray) -> bytes:
@@ -250,25 +250,23 @@ def audio_features(df: DataFrame) -> DataFrame:
     """Audio quality/filtering features per row (media_id, bytes) of PCM16
     WAV payloads: duration, RMS level, peak, zero-crossing rate (a crude
     voiced/noise discriminator) — the signals a pretraining-audio pipeline
-    filters on. Arrow-batched ``mapInPandas``, numpy-vectorized per clip."""
+    filters on. One ``map_rows`` pass, numpy-vectorized per clip."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in AUDIO_FEATURE_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                samples, rate = decode_wav_pcm16(row.bytes)
-                mono = samples.astype(np.float64).mean(axis=1)
-                out["media_id"].append(row.media_id)
-                out["duration_s"].append(round(len(samples) / rate, 6))
-                out["sample_rate"].append(rate)
-                out["channels"].append(samples.shape[1])
-                out["rms"].append(round(float(np.sqrt(np.mean(mono**2))), 4) if len(mono) else 0.0)
-                out["peak"].append(int(np.abs(samples).max()) if len(samples) else 0)
-                zc = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) if len(mono) > 1 else 0.0
-                out["zero_crossing_rate"].append(round(zc, 4))
-            yield pd.DataFrame(out)
+    def run(row) -> dict:
+        samples, rate = decode_wav_pcm16(row.bytes)
+        mono = samples.astype(np.float64).mean(axis=1)
+        zc = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) if len(mono) > 1 else 0.0
+        return {
+            "media_id": row.media_id,
+            "duration_s": round(len(samples) / rate, 6),
+            "sample_rate": rate,
+            "channels": samples.shape[1],
+            "rms": round(float(np.sqrt(np.mean(mono**2))), 4) if len(mono) else 0.0,
+            "peak": int(np.abs(samples).max()) if len(samples) else 0,
+            "zero_crossing_rate": round(zc, 4),
+        }
 
-    return df.mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    return map_rows(df, run, AUDIO_FEATURE_SCHEMA)
 
 
 def encode_avi_dib(frames: np.ndarray, fps: int = 25) -> bytes:
@@ -354,21 +352,21 @@ def avi_frame_sample(df: DataFrame, every_n: int) -> DataFrame:
     of uncompressed-DIB AVI payloads; emits every ``every_n``-th frame as a
     fake_rgb8 row (same downstream schema as ``frame_sample``)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in FRAME_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                frames = decode_avi_dib(row.bytes)
-                for i in range(0, len(frames), every_n):
-                    out["media_id"].append(row.media_id)
-                    out["frame_idx"].append(i)
-                    out["bytes"].append(fake_rgb8_encode(np.ascontiguousarray(frames[i])))
-                    out["h"].append(frames.shape[1])
-                    out["w"].append(frames.shape[2])
-                    out["fmt"].append("fake_rgb8")
-            yield pd.DataFrame(out)
+    def run(row) -> list[dict]:
+        frames = decode_avi_dib(row.bytes)
+        return [
+            {
+                "media_id": row.media_id,
+                "frame_idx": i,
+                "bytes": fake_rgb8_encode(np.ascontiguousarray(frames[i])),
+                "h": frames.shape[1],
+                "w": frames.shape[2],
+                "fmt": "fake_rgb8",
+            }
+            for i in range(0, len(frames), every_n)
+        ]
 
-    return df.mapInPandas(run, FRAME_SCHEMA)
+    return map_rows(df, run, FRAME_SCHEMA)
 
 
 def media_decode_stub(data: bytes, h: int, w: int, fmt: str) -> np.ndarray:
@@ -401,22 +399,18 @@ def media_features(df: DataFrame) -> DataFrame:
     channel means, 16-bin luma histogram, perceptual hash. Arrow-batched;
     ~ARROW_BATCH_ROWS rows per python invocation."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dsm2dtm_spark import codecs as _c
+    def run(row) -> dict:
+        img = media_decode_stub(row.bytes, int(row.h), int(row.w), row.fmt)
+        luma = img.astype(np.float64).mean(axis=2)
+        hist = np.histogram(luma, bins=16, range=(0, 256))[0]
+        return {
+            "media_id": row.media_id,
+            "mean_rgb": [round(float(x), 4) for x in img.reshape(-1, 3).mean(axis=0)],
+            "luma_hist": hist.astype(np.int64).tolist(),
+            "phash": ahash64(luma, nodata=float("nan")),
+        }
 
-        for pdf in batches:
-            out = {k: [] for k in FEATURE_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                img = media_decode_stub(row.bytes, int(row.h), int(row.w), row.fmt)
-                luma = img.astype(np.float64).mean(axis=2)
-                hist = np.histogram(luma, bins=16, range=(0, 256))[0]
-                out["media_id"].append(row.media_id)
-                out["mean_rgb"].append([round(float(x), 4) for x in img.reshape(-1, 3).mean(axis=0)])
-                out["luma_hist"].append(hist.astype(np.int64).tolist())
-                out["phash"].append(_c.ahash64(luma, nodata=float("nan")))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, FEATURE_SCHEMA)
+    return map_rows(df, run, FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType(
@@ -433,27 +427,25 @@ RESIZE_SCHEMA = StructType(
 def media_resize(df: DataFrame, out_h: int, out_w: int) -> DataFrame:
     """Bilinear resize per channel (reuses the raster zoom kernel)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dsm2dtm_spark.kernels import zoom_bilinear
+    from dsm2dtm_spark.kernels import zoom_bilinear
 
-        for pdf in batches:
-            out = {k: [] for k in RESIZE_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                img = media_decode_stub(row.bytes, int(row.h), int(row.w), row.fmt)
-                chans = [
-                    zoom_bilinear(img[:, :, c].astype(np.float64), (out_h / img.shape[0], out_w / img.shape[1]))
-                    for c in range(3)
-                ]
-                rs = np.clip(np.rint(np.stack(chans, axis=2)), 0, 255).astype(np.uint8)
-                rs = rs[:out_h, :out_w]
-                out["media_id"].append(row.media_id)
-                out["bytes"].append(fake_rgb8_encode(np.ascontiguousarray(rs)))
-                out["h"].append(rs.shape[0])
-                out["w"].append(rs.shape[1])
-                out["fmt"].append("fake_rgb8")
-            yield pd.DataFrame(out)
+    def run(row) -> dict:
+        img = media_decode_stub(row.bytes, int(row.h), int(row.w), row.fmt)
+        chans = [
+            zoom_bilinear(img[:, :, c].astype(np.float64), (out_h / img.shape[0], out_w / img.shape[1]))
+            for c in range(3)
+        ]
+        rs = np.clip(np.rint(np.stack(chans, axis=2)), 0, 255).astype(np.uint8)
+        rs = rs[:out_h, :out_w]
+        return {
+            "media_id": row.media_id,
+            "bytes": fake_rgb8_encode(np.ascontiguousarray(rs)),
+            "h": rs.shape[0],
+            "w": rs.shape[1],
+            "fmt": "fake_rgb8",
+        }
 
-    return df.mapInPandas(run, RESIZE_SCHEMA)
+    return map_rows(df, run, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(
@@ -474,19 +466,19 @@ def frame_sample(df: DataFrame, every_n: int) -> DataFrame:
     every ``every_n``-th frame as its own row (UDTF-style expansion, the same
     pattern as raster tiling)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in FRAME_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                h, w, nf = int(row.h), int(row.w), int(row.n_frames)
-                frame_bytes = h * w * 3
-                for i in range(0, nf, every_n):
-                    out["media_id"].append(row.media_id)
-                    out["frame_idx"].append(i)
-                    out["bytes"].append(row.bytes[i * frame_bytes : (i + 1) * frame_bytes])
-                    out["h"].append(h)
-                    out["w"].append(w)
-                    out["fmt"].append("fake_rgb8")
-            yield pd.DataFrame(out)
+    def run(row) -> list[dict]:
+        h, w, nf = int(row.h), int(row.w), int(row.n_frames)
+        frame_bytes = h * w * 3
+        return [
+            {
+                "media_id": row.media_id,
+                "frame_idx": i,
+                "bytes": row.bytes[i * frame_bytes : (i + 1) * frame_bytes],
+                "h": h,
+                "w": w,
+                "fmt": "fake_rgb8",
+            }
+            for i in range(0, nf, every_n)
+        ]
 
-    return df.mapInPandas(run, FRAME_SCHEMA)
+    return map_rows(df, run, FRAME_SCHEMA)

@@ -7,10 +7,10 @@ slope / hillshade — from the elevation grid, (b) the normalized DSM
 multi-resolution overviews (the GDAL-overview pyramid that makes a
 10^12-image corpus browsable), and (d) lattice composites (mosaic rollups
 of many rasters onto one shared grid). This module provides each as a
-Spark-first operator: ONE mapInPandas decode pass per image emitting
-narrow rows or per-(image, cell) partial aggregates, all combination
-JVM-side (map-side combine shape — at 100 TB only small partials shuffle,
-never pixels).
+Spark-first operator: ONE decode pass per image (a per-row function behind
+``util.map_rows``) emitting narrow rows or per-(image, cell) partial
+aggregates, all combination JVM-side (map-side combine shape — at 100 TB
+only small partials shuffle, never pixels).
 
 Arithmetic contract (CLAUDE.md): every derived quantity uses IEEE
 mul/add/div/sqrt only — no libm — in the exact association the SQL
@@ -27,8 +27,6 @@ them are exact.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -36,7 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 from dsm2dtm_spark import codecs, golden
 from dsm2dtm_spark.operators.zonal import pixel_center_lonlat
 from dsm2dtm_spark.params import DEFAULT_RADIUS_M, NODATA_DEFAULT
-from dsm2dtm_spark.util import ensure_min_partitions
+from dsm2dtm_spark.util import ensure_min_partitions, map_rows
 
 # unit light vector for hillshade with EXACTLY representable components
 # (0.48² + 0.36² + 0.8² = 1): azimuth/altitude angles would need libm
@@ -104,39 +102,31 @@ def slope_shade_stats(
     meta = ensure_min_partitions(
         images.select("image_id", "bytes", "w", "h", "fmt", "xres_m", "yres_m"), mult=2
     )
-    cols = ["image_id", "n_px", "n_flat", "n_steep",
-            "max_slope", "mean_slope", "mean_shade", "min_shade"]
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                grads = interior_gradients(g, float(row.xres_m), float(row.yres_m))
-                if grads is None:
-                    continue
-                gx, gy = grads
-                # hoist the squares but KEEP the SQL's left-association:
-                # slope sums (gx²+gy²); shade's denominator is ((1+gx²)+gy²)
-                # — "1.0 + (gx²+gy²)" would differ by an ulp
-                gx2, gy2 = gx * gx, gy * gy
-                slope = np.sqrt(gx2 + gy2)
-                shade = (lz - lx * gx - ly * gy) / np.sqrt(1.0 + gx2 + gy2)
-                rows.append(
-                    {
-                        "image_id": row.image_id,
-                        "n_px": int(slope.size),
-                        "n_flat": int(np.sum(slope <= flat_max)),
-                        "n_steep": int(np.sum(slope >= steep_min)),
-                        "max_slope": float(slope.max()),
-                        "mean_slope": float(slope.mean()),
-                        "mean_shade": float(shade.mean()),
-                        "min_shade": float(shade.min()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def stats(row) -> dict | None:
+        g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
+        grads = interior_gradients(g, float(row.xres_m), float(row.yres_m))
+        if grads is None:
+            return None
+        gx, gy = grads
+        # hoist the squares but KEEP the SQL's left-association: slope sums
+        # (gx²+gy²); shade's denominator is ((1+gx²)+gy²) — "1.0 + (gx²+gy²)"
+        # would differ by an ulp
+        gx2, gy2 = gx * gx, gy * gy
+        slope = np.sqrt(gx2 + gy2)
+        shade = (lz - lx * gx - ly * gy) / np.sqrt(1.0 + gx2 + gy2)
+        return {
+            "image_id": row.image_id,
+            "n_px": int(slope.size),
+            "n_flat": int(np.sum(slope <= flat_max)),
+            "n_steep": int(np.sum(slope >= steep_min)),
+            "max_slope": float(slope.max()),
+            "mean_slope": float(slope.mean()),
+            "mean_shade": float(shade.mean()),
+            "min_shade": float(shade.min()),
+        }
 
-    out = meta.mapInPandas(stats, SLOPE_SHADE_SCHEMA)
+    out = map_rows(meta, stats, SLOPE_SHADE_SCHEMA)
     r = value_round
     return out.select(
         "image_id", "n_px", "n_flat", "n_steep",
@@ -163,38 +153,34 @@ def aspect_octants(images: DataFrame) -> DataFrame:
         images.select("image_id", "bytes", "w", "h", "fmt", "xres_m", "yres_m"), mult=2
     )
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                grads = interior_gradients(g, float(row.xres_m), float(row.yres_m))
-                if grads is None:
-                    continue
-                gx, gy = grads
-                de, dn = -gx, gy
-                oct_ = np.select(
-                    [
-                        (de > 0) & (dn >= 0) & (de >= dn),
-                        (de > 0) & (dn > 0) & (dn > de),
-                        (de <= 0) & (dn > 0) & (dn >= -de),
-                        (de < 0) & (dn > 0) & (-de > dn),
-                        (de < 0) & (dn <= 0) & (-de >= -dn),
-                        (de < 0) & (dn < 0) & (-dn > -de),
-                        (de >= 0) & (dn < 0) & (-dn >= de),
-                        (de > 0) & (dn < 0) & (de > -dn),
-                    ],
-                    list(range(8)),
-                    default=-1,  # only (0, 0) falls through every sector
-                )
-                counts = np.bincount(oct_ + 1, minlength=9)
-                for k in np.nonzero(counts)[0]:
-                    rows.append(
-                        {"image_id": row.image_id, "octant": int(k) - 1, "n_px": int(counts[k])}
-                    )
-            yield pd.DataFrame(rows, columns=["image_id", "octant", "n_px"])
+    def stats(row) -> list[dict] | None:
+        g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
+        grads = interior_gradients(g, float(row.xres_m), float(row.yres_m))
+        if grads is None:
+            return None
+        gx, gy = grads
+        de, dn = -gx, gy
+        oct_ = np.select(
+            [
+                (de > 0) & (dn >= 0) & (de >= dn),
+                (de > 0) & (dn > 0) & (dn > de),
+                (de <= 0) & (dn > 0) & (dn >= -de),
+                (de < 0) & (dn > 0) & (-de > dn),
+                (de < 0) & (dn <= 0) & (-de >= -dn),
+                (de < 0) & (dn < 0) & (-dn > -de),
+                (de >= 0) & (dn < 0) & (-dn >= de),
+                (de > 0) & (dn < 0) & (de > -dn),
+            ],
+            list(range(8)),
+            default=-1,  # only (0, 0) falls through every sector
+        )
+        counts = np.bincount(oct_ + 1, minlength=9)
+        return [
+            {"image_id": row.image_id, "octant": int(k) - 1, "n_px": int(counts[k])}
+            for k in np.nonzero(counts)[0]
+        ]
 
-    return meta.mapInPandas(stats, ASPECT_SCHEMA)
+    return map_rows(meta, stats, ASPECT_SCHEMA)
 
 
 CURVATURE_SCHEMA = (
@@ -217,36 +203,29 @@ def curvature_stats(
     meta = ensure_min_partitions(
         images.select("image_id", "bytes", "w", "h", "fmt", "xres_m", "yres_m"), mult=2
     )
-    cols = ["image_id", "n_px", "n_convex", "n_concave", "max_lap", "min_lap", "mean_lap"]
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                m = interior_valid_mask(g)
-                if m is None:
-                    continue
-                g64 = g.astype(np.float64)
-                c = g64[1:-1, 1:-1]
-                xr, yr = float(row.xres_m), float(row.yres_m)
-                d2x = (g64[1:-1, 2:] - 2.0 * c + g64[1:-1, :-2]) / (xr * xr)
-                d2y = (g64[2:, 1:-1] - 2.0 * c + g64[:-2, 1:-1]) / (yr * yr)
-                lap = (d2x + d2y)[m]
-                rows.append(
-                    {
-                        "image_id": row.image_id,
-                        "n_px": int(lap.size),
-                        "n_convex": int(np.sum(lap <= -flat_tol)),
-                        "n_concave": int(np.sum(lap >= flat_tol)),
-                        "max_lap": float(lap.max()),
-                        "min_lap": float(lap.min()),
-                        "mean_lap": float(lap.mean()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def stats(row) -> dict | None:
+        g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
+        m = interior_valid_mask(g)
+        if m is None:
+            return None
+        g64 = g.astype(np.float64)
+        c = g64[1:-1, 1:-1]
+        xr, yr = float(row.xres_m), float(row.yres_m)
+        d2x = (g64[1:-1, 2:] - 2.0 * c + g64[1:-1, :-2]) / (xr * xr)
+        d2y = (g64[2:, 1:-1] - 2.0 * c + g64[:-2, 1:-1]) / (yr * yr)
+        lap = (d2x + d2y)[m]
+        return {
+            "image_id": row.image_id,
+            "n_px": int(lap.size),
+            "n_convex": int(np.sum(lap <= -flat_tol)),
+            "n_concave": int(np.sum(lap >= flat_tol)),
+            "max_lap": float(lap.max()),
+            "min_lap": float(lap.min()),
+            "mean_lap": float(lap.mean()),
+        }
 
-    out = meta.mapInPandas(stats, CURVATURE_SCHEMA)
+    out = map_rows(meta, stats, CURVATURE_SCHEMA)
     r = value_round
     return out.select(
         "image_id", "n_px", "n_convex", "n_concave",
@@ -295,22 +274,13 @@ def ndsm_stats(
         images.select("image_id", "bytes", "w", "h", "fmt", "xres_m", "yres_m"), mult=3
     )
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                dtm = golden.dsm_to_dtm(
-                    g, (float(row.xres_m), float(row.yres_m)), radius_m=radius_m
-                )
-                s = ndsm_numpy(g, dtm, above_m)
-                if s is not None:
-                    rows.append({"image_id": row.image_id, **s})
-            yield pd.DataFrame(
-                rows, columns=["image_id", "n_px", "n_above", "max_ndsm", "mean_ndsm"]
-            )
+    def stats(row) -> dict | None:
+        g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
+        dtm = golden.dsm_to_dtm(g, (float(row.xres_m), float(row.yres_m)), radius_m=radius_m)
+        s = ndsm_numpy(g, dtm, above_m)
+        return None if s is None else {"image_id": row.image_id, **s}
 
-    out = meta.mapInPandas(stats, NDSM_SCHEMA)
+    out = map_rows(meta, stats, NDSM_SCHEMA)
     return out.select(
         "image_id", "n_px", "n_above",
         F.round("max_ndsm", value_round).alias("max_ndsm"),
@@ -331,21 +301,13 @@ def elevation_bands(images: DataFrame, band_m: float = 10.0) -> DataFrame:
         raise ValueError(f"band_m must be positive, got {band_m}")
     meta = ensure_min_partitions(images.select("image_id", "bytes", "w", "h", "fmt"), mult=2)
 
-    def hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                vals = g[g != NODATA_DEFAULT].astype(np.float64)
-                if not vals.size:
-                    continue
-                bands = np.floor(vals / band).astype(np.int64)
-                uniq, counts = np.unique(bands, return_counts=True)
-                for b, n in zip(uniq, counts):
-                    rows.append({"image_id": row.image_id, "band": int(b), "n_px": int(n)})
-            yield pd.DataFrame(rows, columns=["image_id", "band", "n_px"])
+    def hist(row) -> list[dict]:
+        g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
+        vals = g[g != NODATA_DEFAULT].astype(np.float64)
+        uniq, counts = np.unique(np.floor(vals / band).astype(np.int64), return_counts=True)
+        return [{"image_id": row.image_id, "band": int(b), "n_px": int(n)} for b, n in zip(uniq, counts)]
 
-    return meta.mapInPandas(hist, BANDS_SCHEMA)
+    return map_rows(meta, hist, BANDS_SCHEMA)
 
 
 # -------------------------------------------------------- overview pyramid
@@ -394,31 +356,27 @@ def build_overviews(images: DataFrame, levels: int = 2, value_round: int = 4) ->
         images.select("image_id", "bytes", "w", "h", "fmt"), mult=2
     )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                for level, cnt, value in overview_levels_numpy(g, levels):
-                    yy, xx = np.nonzero(cnt)
-                    if not yy.size:
-                        continue
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "image_id": row.image_id,
-                                "level": np.full(yy.size, level, dtype=np.int32),
-                                "py": yy.astype(np.int32),
-                                "px": xx.astype(np.int32),
-                                "n_src": cnt[yy, xx],
-                                "value": value[yy, xx],
-                            }
-                        )
+    def build(row) -> pd.DataFrame | None:
+        g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
+        frames = []
+        for level, cnt, value in overview_levels_numpy(g, levels):
+            yy, xx = np.nonzero(cnt)
+            if yy.size:
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "image_id": row.image_id,
+                            "level": np.full(yy.size, level, dtype=np.int32),
+                            "py": yy.astype(np.int32),
+                            "px": xx.astype(np.int32),
+                            "n_src": cnt[yy, xx],
+                            "value": value[yy, xx],
+                        }
                     )
-            cols = ["image_id", "level", "py", "px", "n_src", "value"]
-            yield pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=cols)
+                )
+        return pd.concat(frames, ignore_index=True) if frames else None
 
-    out = meta.mapInPandas(build, OVERVIEW_SCHEMA)
+    out = map_rows(meta, build, OVERVIEW_SCHEMA)
     return out.select(
         "image_id", "level", "py", "px", "n_src",
         F.round("value", value_round).alias("value"),
@@ -487,41 +445,34 @@ def grid_composite(images: DataFrame, cell_deg: float = 0.05, value_round: int =
         images.select("image_id", "bytes", "w", "h", "fmt", "lon0", "lat0", "xres_m", "yres_m"), mult=2
     )
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                yy, xx = np.nonzero(g != NODATA_DEFAULT)
-                if not yy.size:
-                    continue
-                lons, lats = pixel_center_lonlat(
-                    float(row.lon0), float(row.lat0),
-                    float(row.xres_m), float(row.yres_m), int(row.h), int(row.w),
-                )
-                cx = np.floor(lons[xx] / cell).astype(np.int64)
-                cy = np.floor(lats[yy] / cell).astype(np.int64)
-                vals = g[yy, xx].astype(np.float64)
-                keys, inv = np.unique(np.stack([cy, cx], axis=1), axis=0, return_inverse=True)
-                inv = inv.ravel()  # numpy 2.0 returns (n,1) with axis=, 2.1+ (n,)
-                mx = np.full(len(keys), -np.inf)
-                np.maximum.at(mx, inv, vals)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "image_id": row.image_id,
-                            "cy": keys[:, 0],
-                            "cx": keys[:, 1],
-                            "n_px": np.bincount(inv, minlength=len(keys)),
-                            "sum_val": np.bincount(inv, weights=vals, minlength=len(keys)),
-                            "max_val": mx,
-                        }
-                    )
-                )
-            cols = ["image_id", "cy", "cx", "n_px", "sum_val", "max_val"]
-            yield pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=cols)
+    def partials(row) -> pd.DataFrame | None:
+        g = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
+        yy, xx = np.nonzero(g != NODATA_DEFAULT)
+        if not yy.size:
+            return None
+        lons, lats = pixel_center_lonlat(
+            float(row.lon0), float(row.lat0),
+            float(row.xres_m), float(row.yres_m), int(row.h), int(row.w),
+        )
+        cx = np.floor(lons[xx] / cell).astype(np.int64)
+        cy = np.floor(lats[yy] / cell).astype(np.int64)
+        vals = g[yy, xx].astype(np.float64)
+        keys, inv = np.unique(np.stack([cy, cx], axis=1), axis=0, return_inverse=True)
+        inv = inv.ravel()  # numpy 2.0 returns (n,1) with axis=, 2.1+ (n,)
+        mx = np.full(len(keys), -np.inf)
+        np.maximum.at(mx, inv, vals)
+        return pd.DataFrame(
+            {
+                "image_id": row.image_id,
+                "cy": keys[:, 0],
+                "cx": keys[:, 1],
+                "n_px": np.bincount(inv, minlength=len(keys)),
+                "sum_val": np.bincount(inv, weights=vals, minlength=len(keys)),
+                "max_val": mx,
+            }
+        )
 
-    part = meta.mapInPandas(partials, COMPOSITE_PARTIAL_SCHEMA)
+    part = map_rows(meta, partials, COMPOSITE_PARTIAL_SCHEMA)
     r = value_round
     return part.groupBy("cy", "cx").agg(
         F.sum("n_px").alias("n_px"),

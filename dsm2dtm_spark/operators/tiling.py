@@ -3,19 +3,28 @@ E5, E8) — the scale path for rasters too large to process one-per-task.
 
 Plan shape (SURVEY.md §3 engine lifecycle):
 
-    pass 1  image_stats     mapInPandas: per-image global scalars (valid min,
+    pass 1  image_stats     map_rows: per-image global scalars (valid min,
                             auto slope, dims → derived params + halo). These
                             are the whole-image quantities tiles cannot know
                             locally (reference algorithm.py:197, 382-388).
-    pass 2  emit_tiles      mapInPandas: cut overlapping tiles (core + halo ≥
+                            The only quarantining pass (permissive).
+    pass 2  emit_tiles      map_rows: cut overlapping tiles (core + halo ≥
                             total influence radius), key each by its S2-style
                             cell id + a salt column; `repartition(cell_id,
                             salt)` is the explicit halo-exchange shuffle and
                             the skew control for hot cells (E13).
-    pass 3  process_tiles   mapInPandas: run the standard pipeline per tile
-                            with injected global scalars, keep only the core.
+    pass 3  process_tiles   map_rows: run the standard pipeline per tile
+                            with injected global scalars, keep only the core;
+                            wall_ms/partition_id lineage per tile.
     pass 4  stitch          groupBy(image_id).applyInPandas: reassemble and
                             re-encode; bit-identical to the whole-image path.
+
+Passes 1-3 (and ``halo_from_metadata``) are per-row functions behind
+``util.map_rows``, the engine's one per-row Python boundary: it owns the
+batch loop, the schema-ordered output frames, the ``wall_ms`` and
+``partition_id`` lineage columns (filled wherever the output schema has
+them) and the permissive quarantine (image_id passes through, ``error``
+set, every other column NULL).
 
 Exactness argument (tested): every stage's output pixel depends on inputs
 within a bounded radius; the halo is the sum of those radii
@@ -37,7 +46,6 @@ from __future__ import annotations
 
 import math
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -54,7 +62,7 @@ from pyspark.sql.types import (
 
 from dsm2dtm_spark import codecs, golden
 from dsm2dtm_spark.operators import cellindex
-from dsm2dtm_spark.util import ensure_min_partitions
+from dsm2dtm_spark.util import ensure_min_partitions, map_rows
 from dsm2dtm_spark.params import (
     MAX_HALO_PX,
     MAX_WINDOW_PX,
@@ -63,6 +71,7 @@ from dsm2dtm_spark.params import (
     PMF_BASE_SLOPE,
     PMF_INIT_THRESHOLD,
     PMF_MAX_THRESHOLD,
+    DerivedParams,
     apply_radius_override,
     derive_params,
     total_influence_px,
@@ -169,84 +178,76 @@ def image_stats(
     see only error-free rows (pass 1 is the single place original bytes are
     first decoded, so the quarantine decision is made exactly once)."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dsm2dtm_spark.kernels.streamstats import CHUNKED_FORMATS, chunked_min_and_slope
+    from dsm2dtm_spark.kernels.streamstats import CHUNKED_FORMATS, chunked_min_and_slope
 
-        def one(row) -> dict:
-            cell_size = max((abs(row.xres_m) + abs(row.yres_m)) / 2.0, 0.001)
-            if cell_size < MIN_PROCESS_RES_M * 0.9:
-                raise ValueError(
-                    f"{row.image_id}: cell_size {cell_size} routes to the coarse path, "
-                    "which is whole-image by construction — use the whole-image plan"
-                )
-            h, w = int(row.h), int(row.w)
-            max_dim = max(h, w)
-            # windows/sigmas/halo depend only on (resolution, dims, radius) —
-            # derive and safety-check them from METADATA, before any decode,
-            # so a runaway kernel/halo config fails fast even on a raster
-            # whose decode itself would be the OOM (slope only sets slope_px,
-            # patched after estimation below)
-            p = derive_params(cell_size, max_image_dim=max_dim, base_slope=PMF_BASE_SLOPE)
-            if radius_m is not None:
-                apply_radius_override(p, radius_m, cell_size, max_dim)
-            halo = total_influence_px(p)
-            if halo > MAX_HALO_PX:
-                # each tile ships (tile+2·halo)² f32 pixels through the
-                # shuffle — a runaway halo is an OOM, not a slow job
-                raise ValueError(
-                    f"{row.image_id}: derived halo {halo}px exceeds the safety cap "
-                    f"{MAX_HALO_PX}px (kernel cap {MAX_WINDOW_PX}px); "
-                    "reduce the radius or downsample first"
-                )
-            # the streamed kernel covers the no-decimation slope domain
-            # (res ≥ 0.5); rarer sub-0.5 m standard rows decode whole-image
-            if chunked and row.fmt in CHUNKED_FORMATS and cell_size >= 0.5:
-                mn, s_auto = chunked_min_and_slope(row.bytes, h, w, cell_size, NODATA_DEFAULT, fmt=row.fmt)
-                s = slope if slope is not None else s_auto
-            else:
-                grid = codecs.decode(row.bytes, h, w, row.fmt)
-                valid = grid != NODATA_DEFAULT
-                mn = float(grid[valid].min()) if valid.any() else float("nan")
-                s = slope if slope is not None else golden.terrain_slope(grid, cell_size, NODATA_DEFAULT)
-            p.slope_px = float(s) * cell_size
-            return {
-                "image_id": row.image_id,
-                "min_valid": mn,
-                "slope_used": float(s),
-                "cell_size": cell_size,
-                "init_window": p.init_window,
-                "max_window": p.max_window,
-                "refine_sigma": p.refine_sigma,
-                "final_sigma": p.final_sigma,
-                "gap_dist_px": p.gap_dist_px,
-                "halo_px": halo,
-                "error": None,
-            }
+    def one(row) -> dict:
+        # windows/sigmas/halo come from METADATA, checked before any decode
+        # so a runaway kernel/halo config fails fast even on a raster whose
+        # decode itself would be the OOM (slope only sets slope_px, patched
+        # after estimation below)
+        cell_size, p, halo = _metadata_params(row, radius_m)
+        h, w = int(row.h), int(row.w)
+        # the streamed kernel covers the no-decimation slope domain
+        # (res ≥ 0.5); rarer sub-0.5 m standard rows decode whole-image
+        if chunked and row.fmt in CHUNKED_FORMATS and cell_size >= 0.5:
+            mn, s_auto = chunked_min_and_slope(row.bytes, h, w, cell_size, NODATA_DEFAULT, fmt=row.fmt)
+            s = slope if slope is not None else s_auto
+        else:
+            grid = codecs.decode(row.bytes, h, w, row.fmt)
+            valid = grid != NODATA_DEFAULT
+            mn = float(grid[valid].min()) if valid.any() else float("nan")
+            s = slope if slope is not None else golden.terrain_slope(grid, cell_size, NODATA_DEFAULT)
+        p.slope_px = float(s) * cell_size
+        return {
+            "image_id": row.image_id,
+            "min_valid": mn,
+            "slope_used": float(s),
+            "cell_size": cell_size,
+            "init_window": p.init_window,
+            "max_window": p.max_window,
+            "refine_sigma": p.refine_sigma,
+            "final_sigma": p.final_sigma,
+            "gap_dist_px": p.gap_dist_px,
+            "halo_px": halo,
+        }
 
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    rows.append(one(row))
-                except Exception as exc:  # noqa: BLE001 — quarantined, not swallowed
-                    if not permissive:
-                        raise
-                    rows.append(
-                        {k: None for k in STATS_SCHEMA.fieldNames()}
-                        | {"image_id": row.image_id, "error": f"{type(exc).__name__}: {exc}"[:500]}
-                    )
-            yield pd.DataFrame(rows, columns=STATS_SCHEMA.fieldNames())
+    return map_rows(images, one, STATS_SCHEMA, permissive=permissive)
 
-    return images.mapInPandas(stats, STATS_SCHEMA)
+
+def _metadata_params(row, radius_m: float | None) -> tuple[float, DerivedParams, int]:
+    """(cell_size, derived params, halo_px) of one image row from METADATA
+    alone — resolution, dims and the radius override; ``slope`` never enters
+    (it only sets ``slope_px`` after estimation). The one derivation both
+    ``image_stats`` and ``halo_from_metadata`` run, so the two halos are the
+    same integer. Fails fast on a coarse row reaching the tile stages and on
+    a halo above the safety cap."""
+    cell_size = max((abs(row.xres_m) + abs(row.yres_m)) / 2.0, 0.001)
+    if cell_size < MIN_PROCESS_RES_M * 0.9:
+        raise ValueError(
+            f"{row.image_id}: cell_size {cell_size} routes to the coarse path, "
+            "which is whole-image by construction — use the whole-image plan"
+        )
+    max_dim = max(int(row.h), int(row.w))
+    p = derive_params(cell_size, max_image_dim=max_dim, base_slope=PMF_BASE_SLOPE)
+    if radius_m is not None:
+        apply_radius_override(p, radius_m, cell_size, max_dim)
+    halo = total_influence_px(p)
+    if halo > MAX_HALO_PX:
+        # each tile ships (tile+2·halo)² f32 pixels through the shuffle — a
+        # runaway halo is an OOM, not a slow job
+        raise ValueError(
+            f"{row.image_id}: derived halo {halo}px exceeds the safety cap "
+            f"{MAX_HALO_PX}px (kernel cap {MAX_WINDOW_PX}px); "
+            "reduce the radius or downsample first"
+        )
+    return cell_size, p, halo
 
 
 def halo_from_metadata(images: DataFrame, radius_m: float | None) -> DataFrame:
     """(image_id, halo_px) from METADATA alone — no decode. Windows, sigmas
     and therefore the halo depend only on (resolution, dims, radius): this is
-    exactly the pre-decode derivation ``image_stats`` runs (same
-    ``derive_params``/``apply_radius_override``/``total_influence_px`` calls
-    on the same inputs — ``slope`` never enters, it only patches ``slope_px``
-    after estimation), so the value is the same integer.
+    exactly the pre-decode derivation ``image_stats`` runs (the shared
+    ``_metadata_params``), so the value is the same integer.
 
     Purpose (r7, guide §1.2 "remove unnecessary passes"): pass 2's tile cut
     needs ONLY ``halo_px`` from pass 1, but the halo join made the whole
@@ -257,35 +258,10 @@ def halo_from_metadata(images: DataFrame, radius_m: float | None) -> DataFrame:
     The same metadata safety checks fail fast here (coarse row reaching the
     tile stages, runaway halo)."""
 
-    def halos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "halo_px": []}
-            for row in pdf.itertuples(index=False):
-                cell_size = max((abs(row.xres_m) + abs(row.yres_m)) / 2.0, 0.001)
-                if cell_size < MIN_PROCESS_RES_M * 0.9:
-                    raise ValueError(
-                        f"{row.image_id}: cell_size {cell_size} routes to the coarse "
-                        "path, which is whole-image by construction — use the "
-                        "whole-image plan"
-                    )
-                max_dim = max(int(row.h), int(row.w))
-                p = derive_params(cell_size, max_image_dim=max_dim, base_slope=PMF_BASE_SLOPE)
-                if radius_m is not None:
-                    apply_radius_override(p, radius_m, cell_size, max_dim)
-                halo = total_influence_px(p)
-                if halo > MAX_HALO_PX:
-                    raise ValueError(
-                        f"{row.image_id}: derived halo {halo}px exceeds the safety cap "
-                        f"{MAX_HALO_PX}px (kernel cap {MAX_WINDOW_PX}px); "
-                        "reduce the radius or downsample first"
-                    )
-                out["image_id"].append(row.image_id)
-                out["halo_px"].append(halo)
-            yield pd.DataFrame(out, columns=["image_id", "halo_px"])
-
     meta = images.select("image_id", "h", "w", "xres_m", "yres_m")
-    return meta.mapInPandas(
-        halos,
+    return map_rows(
+        meta,
+        lambda row: {"image_id": row.image_id, "halo_px": _metadata_params(row, radius_m)[2]},
         StructType([StructField("image_id", StringType()), StructField("halo_px", IntegerType())]),
     )
 
@@ -307,65 +283,64 @@ def emit_tiles(
     beyond executor memory (10-gigapixel GeoTIFF class) flow through the
     tiled plan. Output rows are byte-identical to the whole-image cut."""
 
-    def tiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dsm2dtm_spark.kernels.streamstats import CHUNKED_FORMATS, block_source_for
+    from dsm2dtm_spark.kernels.streamstats import CHUNKED_FORMATS, block_source_for
 
-        for pdf in batches:
-            out = {k: [] for k in TILE_SCHEMA.fieldNames()}
+    def tile(row, h, w, tr, tc, cy, cx, ch, cw, cut_y, cut_x, cut_arr) -> dict:
+        lon_c, lat_c = tile_center_lonlat(
+            row.lon0, row.lat0, row.xres_m, row.yres_m, cx + cw / 2.0, cy + ch / 2.0
+        )
+        return {
+            "image_id": row.image_id,
+            "tile_row": tr,
+            "tile_col": tc,
+            "cell_id": int(cellindex.encode_cells(np.array([lon_c]), np.array([lat_c]), cell_res)[0]),
+            "salt": zlib.crc32(f"{row.image_id}/{tr}/{tc}".encode()) % N_SALT,
+            "core_y": cy,
+            "core_x": cx,
+            "core_h": ch,
+            "core_w": cw,
+            "cut_y": cut_y,
+            "cut_x": cut_x,
+            "cut_h": cut_arr.shape[0],
+            "cut_w": cut_arr.shape[1],
+            # zf32 (zlib-1 over f32, lossless): the payload crosses one
+            # Arrow boundary out, the salted shuffle, and one boundary back
+            # in — compressing here cuts the plan's memory traffic 3-200×,
+            # which is the measured 8→32 scaling ceiling
+            "payload": codecs.encode_zf32(cut_arr),
+            "fmt": row.fmt,
+            "caption": row.caption,
+            "img_h": h,
+            "img_w": w,
+        }
 
-            def add(row, h, w, tr, tc, cy, cx, ch, cw, cut_y, cut_x, cut_arr):
-                lon_c, lat_c = tile_center_lonlat(
-                    row.lon0, row.lat0, row.xres_m, row.yres_m, cx + cw / 2.0, cy + ch / 2.0
-                )
-                cell = int(cellindex.encode_cells(np.array([lon_c]), np.array([lat_c]), cell_res)[0])
-                out["image_id"].append(row.image_id)
-                out["tile_row"].append(tr)
-                out["tile_col"].append(tc)
-                out["cell_id"].append(cell)
-                out["salt"].append(zlib.crc32(f"{row.image_id}/{tr}/{tc}".encode()) % N_SALT)
-                out["core_y"].append(cy)
-                out["core_x"].append(cx)
-                out["core_h"].append(ch)
-                out["core_w"].append(cw)
-                out["cut_y"].append(cut_y)
-                out["cut_x"].append(cut_x)
-                out["cut_h"].append(cut_arr.shape[0])
-                out["cut_w"].append(cut_arr.shape[1])
-                # zf32 (zlib-1 over f32, lossless): the payload crosses one
-                # Arrow boundary out, the salted shuffle, and one boundary
-                # back in — compressing here cuts the plan's memory traffic
-                # 3-200×, which is the measured 8→32 scaling ceiling
-                out["payload"].append(codecs.encode_zf32(cut_arr))
-                out["fmt"].append(row.fmt)
-                out["caption"].append(row.caption)
-                out["img_h"].append(h)
-                out["img_w"].append(w)
-
-            for row in pdf.itertuples(index=False):
-                h, w = int(row.h), int(row.w)
-                halo = int(row.halo_px)
-                if chunked and row.fmt in CHUNKED_FORMATS:
-                    src = block_source_for(row.bytes, h, w, row.fmt, block_rows=tile_px, halo=halo)
-                    n_cols = max(1, math.ceil(w / tile_px))
-                    for cy, y1, lo, blk in src():  # one band of tiles per block
-                        tr = cy // tile_px
-                        for tc in range(n_cols):
-                            cx = tc * tile_px
-                            cw = min(tile_px, w - cx)
-                            x0 = max(0, cx - halo)
-                            x1 = min(w, cx + cw + halo)
-                            add(row, h, w, tr, tc, cy, cx, y1 - cy, cw, lo, x0, blk[:, x0:x1])
-                    continue
-                grid = codecs.decode(row.bytes, h, w, row.fmt)
-                for tr, tc, cy, cx, ch, cw in tile_grid(h, w, tile_px):
-                    y0 = max(0, cy - halo)
+    def cut(row) -> list[dict]:
+        h, w = int(row.h), int(row.w)
+        halo = int(row.halo_px)
+        if chunked and row.fmt in CHUNKED_FORMATS:
+            src = block_source_for(row.bytes, h, w, row.fmt, block_rows=tile_px, halo=halo)
+            n_cols = max(1, math.ceil(w / tile_px))
+            out = []
+            for cy, y1, lo, blk in src():  # one band of tiles per block
+                tr = cy // tile_px
+                for tc in range(n_cols):
+                    cx = tc * tile_px
+                    cw = min(tile_px, w - cx)
                     x0 = max(0, cx - halo)
-                    y1 = min(h, cy + ch + halo)
                     x1 = min(w, cx + cw + halo)
-                    add(row, h, w, tr, tc, cy, cx, ch, cw, y0, x0, grid[y0:y1, x0:x1])
-            yield pd.DataFrame(out)
+                    out.append(tile(row, h, w, tr, tc, cy, cx, y1 - cy, cw, lo, x0, blk[:, x0:x1]))
+            return out
+        grid = codecs.decode(row.bytes, h, w, row.fmt)
+        out = []
+        for tr, tc, cy, cx, ch, cw in tile_grid(h, w, tile_px):
+            y0 = max(0, cy - halo)
+            x0 = max(0, cx - halo)
+            y1 = min(h, cy + ch + halo)
+            x1 = min(w, cx + cw + halo)
+            out.append(tile(row, h, w, tr, tc, cy, cx, ch, cw, y0, x0, grid[y0:y1, x0:x1]))
+        return out
 
-    return images_with_stats.mapInPandas(tiles, TILE_SCHEMA)
+    return map_rows(images_with_stats, cut, TILE_SCHEMA)
 
 
 def process_tiles(
@@ -421,50 +396,40 @@ def process_tiles(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time
+    def run(row) -> dict:
+        # zero-copy over the inflated buffer: pmf/refine/smooth never write
+        # to their input (they build a min-filled working copy), so the
+        # read-only array is safe to hand them directly
+        cut = codecs.decode_zf32(row.payload, int(row.cut_h), int(row.cut_w))
+        mn = None if np.isnan(row.min_valid) else float(row.min_valid)
+        ground = golden.pmf(
+            cut, NODATA_DEFAULT, int(row.init_window), int(row.max_window),
+            float(row.slope_used) * float(row.cell_size),
+            init_threshold, max_threshold, min_fill=mn,
+        )
+        ground = golden.refine(ground, NODATA_DEFAULT, float(row.refine_sigma), min_fill=mn)
+        ground = golden.final_smooth(ground, NODATA_DEFAULT, float(row.final_sigma), min_fill=mn)
+        dtm = golden.gap_fill(ground, NODATA_DEFAULT, float(row.gap_dist_px))
+        oy = int(row.core_y) - int(row.cut_y)
+        ox = int(row.core_x) - int(row.cut_x)
+        core = dtm[oy : oy + int(row.core_h), ox : ox + int(row.core_w)]
+        return {
+            "image_id": row.image_id,
+            "tile_row": int(row.tile_row),
+            "tile_col": int(row.tile_col),
+            "cell_id": int(row.cell_id),
+            "core_y": int(row.core_y),
+            "core_x": int(row.core_x),
+            "core_h": int(row.core_h),
+            "core_w": int(row.core_w),
+            "fmt": row.fmt,
+            "caption": row.caption,
+            "img_h": int(row.img_h),
+            "img_w": int(row.img_w),
+            "core_bytes": codecs.encode_zf32(core),
+        }
 
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
-            out = {k: [] for k in out_schema.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                t0 = time.perf_counter()
-                # zero-copy over the inflated buffer: pmf/refine/smooth never
-                # write to their input (they build a min-filled working
-                # copy), so the read-only array is safe to hand them directly
-                cut = codecs.decode_zf32(row.payload, int(row.cut_h), int(row.cut_w))
-                mn = None if np.isnan(row.min_valid) else float(row.min_valid)
-                ground = golden.pmf(
-                    cut, NODATA_DEFAULT, int(row.init_window), int(row.max_window),
-                    float(row.slope_used) * float(row.cell_size),
-                    init_threshold, max_threshold, min_fill=mn,
-                )
-                ground = golden.refine(ground, NODATA_DEFAULT, float(row.refine_sigma), min_fill=mn)
-                ground = golden.final_smooth(ground, NODATA_DEFAULT, float(row.final_sigma), min_fill=mn)
-                dtm = golden.gap_fill(ground, NODATA_DEFAULT, float(row.gap_dist_px))
-                oy = int(row.core_y) - int(row.cut_y)
-                ox = int(row.core_x) - int(row.cut_x)
-                core = dtm[oy : oy + int(row.core_h), ox : ox + int(row.core_w)]
-                out["image_id"].append(row.image_id)
-                out["tile_row"].append(int(row.tile_row))
-                out["tile_col"].append(int(row.tile_col))
-                out["cell_id"].append(int(row.cell_id))
-                out["core_y"].append(int(row.core_y))
-                out["core_x"].append(int(row.core_x))
-                out["core_h"].append(int(row.core_h))
-                out["core_w"].append(int(row.core_w))
-                out["fmt"].append(row.fmt)
-                out["caption"].append(row.caption)
-                out["img_h"].append(int(row.img_h))
-                out["img_w"].append(int(row.img_w))
-                out["core_bytes"].append(codecs.encode_zf32(core))
-                out["wall_ms"].append((time.perf_counter() - t0) * 1000.0)
-                out["partition_id"].append(pid)
-            yield pd.DataFrame(out)
-
-    return shuffled.mapInPandas(run, out_schema)
+    return map_rows(shuffled, run, out_schema)
 
 
 def tiled_lineage_metrics(processed: DataFrame) -> DataFrame:

@@ -23,8 +23,6 @@ over valid (non-nodata) pixels whose centers fall inside the zone.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -35,6 +33,7 @@ from dsm2dtm_spark.operators import cellindex
 from dsm2dtm_spark.operators.spatial import points_in_polygon, with_cover_cells
 from dsm2dtm_spark.operators.tiling import M_PER_DEG_LAT, M_PER_DEG_LON_EQ, lon_scale
 from dsm2dtm_spark.params import NODATA_DEFAULT
+from dsm2dtm_spark.util import map_rows
 
 ZONAL_SCHEMA = (
     "footprint_id string, image_id string, n_px long, "
@@ -98,6 +97,22 @@ def _candidates(images: DataFrame, other_cells: DataFrame, other_id: str, cell_r
     )
 
 
+def _resident_grid():
+    """``grid_of(row)``: the row's decoded grid through a one-slot cache
+    keyed on image_id. Fed candidates sorted by image_id within the
+    partition, ONE decoded grid is resident at a time (not every distinct
+    image of a batch) and each image decodes once per partition."""
+    slot = [None, None]
+
+    def grid_of(row) -> np.ndarray:
+        if slot[0] != row.image_id:
+            slot[1] = None  # release the previous grid before decoding the next
+            slot[:] = [row.image_id, codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)]
+        return slot[1]
+
+    return grid_of
+
+
 def zonal_stats(
     images: DataFrame,
     footprints: DataFrame,
@@ -116,51 +131,39 @@ def zonal_stats(
         on="footprint_id",
     )
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # sort by image_id so same-image candidates are adjacent: ONE
-            # decoded grid is resident at a time instead of every distinct
-            # image in the batch (unbounded-cache peak-memory fix); output
-            # order is irrelevant (per-pair aggregates)
-            pdf = pdf.sort_values("image_id", kind="stable")
-            cached_id, grid = None, None
-            for row in pdf.itertuples(index=False):
-                if row.image_id != cached_id:
-                    grid = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                    cached_id = row.image_id
-                lons, lats = pixel_center_lonlat(
-                    float(row.lon0), float(row.lat0), float(row.xres_m), float(row.yres_m),
-                    int(row.h), int(row.w),
-                )
-                if row.kind == "rect":
-                    in_x = (lons >= row.x0) & (lons <= row.x1)
-                    in_y = (lats >= row.y0) & (lats <= row.y1)
-                    mask = in_y[:, None] & in_x[None, :]
-                else:
-                    gx, gy = np.meshgrid(lons, lats)
-                    mask = points_in_polygon(
-                        np.asarray(row.xs, dtype=np.float64),
-                        np.asarray(row.ys, dtype=np.float64),
-                        gx.ravel(), gy.ravel(),
-                    ).reshape(grid.shape)
-                mask &= grid != NODATA_DEFAULT
-                if not mask.any():
-                    continue
-                vals = grid[mask].astype(np.float64)
-                rows.append(
-                    {
-                        "footprint_id": row.footprint_id,
-                        "image_id": row.image_id,
-                        "n_px": int(vals.size),
-                        "mean_val": float(vals.mean()),
-                        "min_val": float(vals.min()),
-                        "max_val": float(vals.max()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["footprint_id", "image_id", "n_px", "mean_val", "min_val", "max_val"])
+    grid_of = _resident_grid()
 
-    out = cand.mapInPandas(stats, ZONAL_SCHEMA)
+    def stats(row) -> dict | None:
+        grid = grid_of(row)
+        lons, lats = pixel_center_lonlat(
+            float(row.lon0), float(row.lat0), float(row.xres_m), float(row.yres_m),
+            int(row.h), int(row.w),
+        )
+        if row.kind == "rect":
+            in_x = (lons >= row.x0) & (lons <= row.x1)
+            in_y = (lats >= row.y0) & (lats <= row.y1)
+            mask = in_y[:, None] & in_x[None, :]
+        else:
+            gx, gy = np.meshgrid(lons, lats)
+            mask = points_in_polygon(
+                np.asarray(row.xs, dtype=np.float64),
+                np.asarray(row.ys, dtype=np.float64),
+                gx.ravel(), gy.ravel(),
+            ).reshape(grid.shape)
+        mask &= grid != NODATA_DEFAULT
+        if not mask.any():
+            return None
+        vals = grid[mask].astype(np.float64)
+        return {
+            "footprint_id": row.footprint_id,
+            "image_id": row.image_id,
+            "n_px": int(vals.size),
+            "mean_val": float(vals.mean()),
+            "min_val": float(vals.min()),
+            "max_val": float(vals.max()),
+        }
+
+    out = map_rows(cand.sortWithinPartitions("image_id"), stats, ZONAL_SCHEMA)
     # round JVM-side (HALF_UP, same as the SQL oracles' ROUND) — Python's
     # banker's rounding would disagree on exact half-boundaries
     return out.select(
@@ -196,30 +199,18 @@ def point_sample(images: DataFrame, points: DataFrame, cell_res: int = 8) -> Dat
         F.broadcast(points.select("query_id", "x", "y")), on="query_id"
     )
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # same single-grid residency trick as zonal_stats (sorted batch)
-            pdf = pdf.sort_values("image_id", kind="stable")
-            cached_id, grid = None, None
-            for row in pdf.itertuples(index=False):
-                h, w = int(row.h), int(row.w)
-                scale = M_PER_DEG_LON_EQ * lon_scale(float(row.lat0))
-                px = int(np.floor((float(row.x) - float(row.lon0)) * scale / float(row.xres_m)))
-                py = int(np.floor((float(row.lat0) - float(row.y)) * M_PER_DEG_LAT / float(row.yres_m)))
-                if not (0 <= px < w and 0 <= py < h):
-                    continue
-                if row.image_id != cached_id:
-                    grid = codecs.decode(row.bytes, h, w, row.fmt)
-                    cached_id = row.image_id
-                v = float(grid[py, px])
-                if v == NODATA_DEFAULT:
-                    continue
-                rows.append(
-                    {"query_id": int(row.query_id), "image_id": row.image_id,
-                     "py": py, "px": px, "value": v}
-                )
-            yield pd.DataFrame(rows, columns=["query_id", "image_id", "py", "px", "value"])
+    grid_of = _resident_grid()
 
-    out = cand.mapInPandas(sample, POINT_SAMPLE_SCHEMA)
+    def sample(row) -> dict | None:
+        scale = M_PER_DEG_LON_EQ * lon_scale(float(row.lat0))
+        px = int(np.floor((float(row.x) - float(row.lon0)) * scale / float(row.xres_m)))
+        py = int(np.floor((float(row.lat0) - float(row.y)) * M_PER_DEG_LAT / float(row.yres_m)))
+        if not (0 <= px < int(row.w) and 0 <= py < int(row.h)):
+            return None
+        v = float(grid_of(row)[py, px])
+        if v == NODATA_DEFAULT:
+            return None
+        return {"query_id": int(row.query_id), "image_id": row.image_id, "py": py, "px": px, "value": v}
+
+    out = map_rows(cand.sortWithinPartitions("image_id"), sample, POINT_SAMPLE_SCHEMA)
     return out.select("query_id", "image_id", "py", "px", F.round("value", 4).alias("value"))

@@ -1,25 +1,25 @@
 """Whole-image DSM→DTM Spark job (SURVEY.md §7.1 step 4; reference lifecycle
 core.py:207-251 re-expressed as one declarative plan).
 
-One image = one UDF group: the image+caption regime (grids ≤ ~2k on a side)
-processes each row's grid entirely inside a ``mapInPandas`` stage — bit-exact
-vs the golden single-node pipeline by construction, zero halo machinery, and
+One image = one UDF call: the image+caption regime (grids ≤ ~2k on a side)
+processes each row's grid entirely inside the engine's one per-row Python
+boundary, ``util.map_rows`` (a ``mapInPandas`` stage) — bit-exact vs the
+golden single-node pipeline by construction, zero halo machinery, and
 embarrassingly parallel across executors. The Arrow batch row cap
 (session.ARROW_BATCH_ROWS) bounds Python-worker memory; Catalyst keeps scan
 pruning/pushdown because everything upstream of the UDF is plain DataFrame.
 
-Per-partition lineage + throughput metrics ride on every output row
-(partition_id, wall_ms) per the north_rule; aggregate with
-``lineage_metrics``.
+``map_rows`` owns the lineage and quarantine contract: every output row
+carries ``partition_id`` and ``wall_ms`` (per-row kernel time, north_rule;
+aggregate with ``lineage_metrics``), and a permissive run turns a failing
+row into image_id/w/h/fmt/caption + ``error`` with every computed column
+NULL — never a fake ``phash``/``valid_*`` value a dedup or a coverage count
+could mistake for data.
 """
 
 from __future__ import annotations
 
-import time
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -32,7 +32,7 @@ from pyspark.sql.types import (
 )
 
 from dsm2dtm_spark import codecs, golden
-from dsm2dtm_spark.util import ensure_min_partitions
+from dsm2dtm_spark.util import ensure_min_partitions, map_rows
 from dsm2dtm_spark.params import (
     DEFAULT_RADIUS_M,
     NODATA_DEFAULT,
@@ -72,8 +72,8 @@ def dtm_transform(
     DTM rows in the same codec, plus lineage/metrics columns.
 
     ``permissive=True``: a corrupt payload no longer kills the job — the row
-    comes back with null bytes and the exception recorded in ``error``
-    (filter ``error IS NULL`` for clean rows, route the rest to a quarantine
+    comes back with null bytes/phash/valid_in/valid_out and the exception
+    recorded in ``error`` (filter ``error IS NULL`` for clean rows, route the rest to a quarantine
     sink). At 10^12 rows a poison row is a certainty, not an edge case.
 
     ``min_parallelism``: compute is ~10^3× heavier per byte than the scan, so
@@ -85,57 +85,30 @@ def dtm_transform(
     golden.validate_job_params(radius_m if radius_m is not None else DEFAULT_RADIUS_M, slope)
     images = ensure_min_partitions(images, min_parallelism, mult=3)
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def one(row) -> dict:
+        grid = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
+        dtm = golden.dsm_to_dtm(
+            grid,
+            (float(row.xres_m), float(row.yres_m)),
+            radius_m=radius_m,
+            slope=slope,
+            nodata=nodata,
+            init_threshold=init_threshold,
+            max_threshold=max_threshold,
+        )
+        return {
+            "image_id": row.image_id,
+            "bytes": codecs.encode(dtm, row.fmt, nodata),
+            "w": int(row.w),
+            "h": int(row.h),
+            "fmt": row.fmt,
+            "caption": row.caption,
+            "phash": codecs.ahash64(dtm, nodata),
+            "valid_in": int(np.sum(grid != nodata)),
+            "valid_out": int(np.sum(dtm != nodata)),
+        }
 
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
-            out = {k: [] for k in DTM_OUTPUT_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                t0 = time.perf_counter()
-                try:
-                    grid = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                    dtm = golden.dsm_to_dtm(
-                        grid,
-                        (float(row.xres_m), float(row.yres_m)),
-                        radius_m=radius_m,
-                        slope=slope,
-                        nodata=nodata,
-                        init_threshold=init_threshold,
-                        max_threshold=max_threshold,
-                    )
-                    data = codecs.encode(dtm, row.fmt, nodata)
-                except Exception as exc:  # noqa: BLE001 — quarantined, not swallowed
-                    if not permissive:
-                        raise
-                    out["image_id"].append(row.image_id)
-                    out["bytes"].append(None)
-                    out["w"].append(int(row.w))
-                    out["h"].append(int(row.h))
-                    out["fmt"].append(row.fmt)
-                    out["caption"].append(row.caption)
-                    out["phash"].append(0)
-                    out["valid_in"].append(0)
-                    out["valid_out"].append(0)
-                    out["wall_ms"].append((time.perf_counter() - t0) * 1000.0)
-                    out["partition_id"].append(pid)
-                    out["error"].append(f"{type(exc).__name__}: {exc}"[:500])
-                    continue
-                out["image_id"].append(row.image_id)
-                out["bytes"].append(data)
-                out["w"].append(int(row.w))
-                out["h"].append(int(row.h))
-                out["fmt"].append(row.fmt)
-                out["caption"].append(row.caption)
-                out["phash"].append(codecs.ahash64(dtm, nodata))
-                out["valid_in"].append(int(np.sum(grid != nodata)))
-                out["valid_out"].append(int(np.sum(dtm != nodata)))
-                out["wall_ms"].append((time.perf_counter() - t0) * 1000.0)
-                out["partition_id"].append(pid)
-                out["error"].append(None)
-            yield pd.DataFrame(out)
-
-    return images.mapInPandas(process, DTM_OUTPUT_SCHEMA)
+    return map_rows(images, one, DTM_OUTPUT_SCHEMA, permissive=permissive)
 
 
 def resume_remaining(images: DataFrame, done: DataFrame | None) -> DataFrame:

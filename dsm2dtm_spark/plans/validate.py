@@ -3,17 +3,14 @@ Spark job — engine output vs a reference table, row by row.
 
 `pytest` proves the invariant at fixture scale; this plan is the operational
 form for real tables: join the two snapshot tables on image_id, decode both
-payloads per row inside one mapInPandas stage, and emit a verdict row
+payloads per row inside one ``util.map_rows`` stage, and emit a verdict row
 (allclose / PSNR / caption equality / nodata-mask agreement). A summary agg
 gives the gate: 0 failing rows.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -25,6 +22,7 @@ from pyspark.sql.types import (
 
 from dsm2dtm_spark import codecs
 from dsm2dtm_spark.params import NODATA_DEFAULT
+from dsm2dtm_spark.util import map_rows
 
 VERDICT_SCHEMA = StructType(
     [
@@ -58,36 +56,34 @@ def validate_against(
     )
     joined = result.join(ref, on="image_id", how="inner")
 
-    def judge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in VERDICT_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                got = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                want = codecs.decode(row.ref_bytes, int(row.h), int(row.w), row.ref_fmt)
-                gm = got == nodata
-                wm = want == nodata
-                both = ~gm & ~wm
-                diff = float(np.abs(got[both] - want[both]).max()) if both.any() else 0.0
-                p = codecs.psnr(want, got, nodata)
-                # exact branch only when neither side quantized the payload;
-                # png16/qz8 storage is a quantizer relative to a raw_f32
-                # reference, so those rows are judged on the PSNR floor
-                if row.fmt == "raw_f32" and row.ref_fmt == "raw_f32":
-                    ok = diff <= lossless_atol
-                else:
-                    ok = p >= psnr_floor_db
-                cap = row.caption == row.ref_caption
-                mask = bool((gm == wm).all())
-                out["image_id"].append(row.image_id)
-                out["fmt"].append(row.fmt)
-                out["caption_equal"].append(cap)
-                out["mask_equal"].append(mask)
-                out["max_abs_diff"].append(diff)
-                out["psnr_db"].append(float(min(p, 1e9)))
-                out["passes"].append(bool(ok and cap and mask))
-            yield pd.DataFrame(out)
+    def judge(row) -> dict:
+        got = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
+        want = codecs.decode(row.ref_bytes, int(row.h), int(row.w), row.ref_fmt)
+        gm = got == nodata
+        wm = want == nodata
+        both = ~gm & ~wm
+        diff = float(np.abs(got[both] - want[both]).max()) if both.any() else 0.0
+        p = codecs.psnr(want, got, nodata)
+        # exact branch only when neither side quantized the payload;
+        # png16/qz8 storage is a quantizer relative to a raw_f32
+        # reference, so those rows are judged on the PSNR floor
+        if row.fmt == "raw_f32" and row.ref_fmt == "raw_f32":
+            ok = diff <= lossless_atol
+        else:
+            ok = p >= psnr_floor_db
+        cap = row.caption == row.ref_caption
+        mask = bool((gm == wm).all())
+        return {
+            "image_id": row.image_id,
+            "fmt": row.fmt,
+            "caption_equal": cap,
+            "mask_equal": mask,
+            "max_abs_diff": diff,
+            "psnr_db": float(min(p, 1e9)),
+            "passes": bool(ok and cap and mask),
+        }
 
-    return joined.mapInPandas(judge, VERDICT_SCHEMA)
+    return map_rows(joined, judge, VERDICT_SCHEMA)
 
 
 def validation_summary(verdicts: DataFrame) -> DataFrame:

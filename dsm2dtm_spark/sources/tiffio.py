@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -596,26 +595,20 @@ def read_geotiff_table(spark, paths: list[str], parallelism: int | None = None):
     using the built-in reader — the zero-dependency twin of
     sources.geotiff.read_geotiff_table (same schema, same semantics: band-1
     float32, nodata normalized to the −99999 sentinel, hard-fail on missing
-    CRS per reference core.py:60-61). Files open INSIDE mapInPandas on the
-    executors; the driver never touches pixel data."""
+    CRS per reference core.py:60-61). Files open INSIDE the per-row map on
+    the executors; the driver never touches pixel data."""
     from pyspark.sql import functions as F
 
-    def load(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                with open(path, "rb") as f:
-                    rows.append(_row_from_tif_bytes(path, f.read()))
-            yield pd.DataFrame(rows)
+    from dsm2dtm_spark.util import map_rows
+
+    def load(row) -> dict:
+        with open(row.path, "rb") as f:
+            return _row_from_tif_bytes(row.path, f.read())
 
     if parallelism is None:
         parallelism = min(len(paths), spark.sparkContext.defaultParallelism) or 1
-    pdf = pd.DataFrame({"path": paths})
-    return (
-        spark.createDataFrame(pdf)
-        .repartition(parallelism, F.col("path"))
-        .mapInPandas(load, GEOTIFF_ROW_SCHEMA)
-    )
+    paths_df = spark.createDataFrame(pd.DataFrame({"path": paths})).repartition(parallelism, F.col("path"))
+    return map_rows(paths_df, load, GEOTIFF_ROW_SCHEMA)
 
 
 def read_raster_array(image_id: str, grid: np.ndarray, profile: dict) -> dict:
@@ -669,6 +662,8 @@ def read_geotiff_objects(spark, items, parallelism: int | None = None):
 
     from pyspark.sql import functions as F
 
+    from dsm2dtm_spark.util import map_rows
+
     paths: list[str] = []
     byte_items: list[tuple[str, bytes]] = []
     inline_rows: list[dict] = []
@@ -693,18 +688,18 @@ def read_geotiff_objects(spark, items, parallelism: int | None = None):
     if paths:
         parts.append(read_geotiff_table(spark, paths, parallelism))
     if byte_items:
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield pd.DataFrame(
-                    [_row_from_tif_bytes(r.image_id, r.data) for r in pdf.itertuples(index=False)]
-                )
-
         n = parallelism or min(len(byte_items), spark.sparkContext.defaultParallelism) or 1
         bdf = spark.createDataFrame(
             pd.DataFrame(byte_items, columns=["image_id", "data"]),
             "image_id string, data binary",
         )
-        parts.append(bdf.repartition(n, F.col("image_id")).mapInPandas(decode, GEOTIFF_ROW_SCHEMA))
+        parts.append(
+            map_rows(
+                bdf.repartition(n, F.col("image_id")),
+                lambda row: _row_from_tif_bytes(row.image_id, row.data),
+                GEOTIFF_ROW_SCHEMA,
+            )
+        )
     if inline_rows:
         parts.append(spark.createDataFrame(pd.DataFrame(inline_rows), GEOTIFF_ROW_SCHEMA))
     if not parts:
@@ -725,7 +720,7 @@ def write_geotiff_files(
     """DTM output rows (image_id, bytes, w, h, fmt, lon0/lat0/xres_m/yres_m,
     crs, is_geographic when present) → one .tif per row under ``out_dir`` —
     the sink half of the reference's GeoTIFF-out surface (core.py:191-204).
-    Runs distributed (mapInPandas writes on executors against a shared
+    Runs distributed (a per-row map writes on executors against a shared
     filesystem); returns the written paths. Quarantined rows (NULL bytes —
     the permissive plans' poison-row marker) are skipped, not crashed on.
     Filenames carry a short image_id digest so inputs sharing a basename
@@ -734,52 +729,47 @@ def write_geotiff_files(
     import os
 
     from dsm2dtm_spark import codecs
+    from dsm2dtm_spark.util import map_rows
 
     os.makedirs(out_dir, exist_ok=True)
     cols = set(dtm_rows.columns)
 
-    def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                if row.bytes is None:  # quarantined in permissive mode
-                    continue
-                grid = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                ovs = None
-                if overview_levels:
-                    # embed the pyramid (GDAL-readable overviews) so LOD
-                    # consumers never touch base pixels
-                    from dsm2dtm_spark.operators.terrain import overview_levels_numpy
+    def dump(row) -> dict | None:
+        if row.bytes is None:  # quarantined in permissive mode
+            return None
+        grid = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
+        ovs = None
+        if overview_levels:
+            # embed the pyramid (GDAL-readable overviews) so LOD consumers
+            # never touch base pixels
+            from dsm2dtm_spark.operators.terrain import overview_levels_numpy
 
-                    ovs = [
-                        np.where(cnt > 0, value, float(nodata)).astype(np.float32)
-                        for _, cnt, value in overview_levels_numpy(
-                            grid, overview_levels, nodata=float(nodata)
-                        )
-                    ]
-                name = os.path.basename(str(row.image_id)).rsplit(".", 1)[0] or "raster"
-                digest = hashlib.md5(str(row.image_id).encode()).hexdigest()[:8]
-                path = os.path.join(out_dir, f"{name}_{digest}_dtm.tif")
-                data = write_geotiff(
-                    grid,
-                    x0=float(getattr(row, "lon0", 0.0)),
-                    y0=float(getattr(row, "lat0", 0.0)),
-                    xres=float(getattr(row, "xres_m", 1.0)),
-                    yres=float(getattr(row, "yres_m", 1.0)),
-                    epsg=int(getattr(row, "crs", 32631)),
-                    nodata=nodata,
-                    is_geographic=bool(getattr(row, "is_geographic", False)),
-                    compress=compress,
-                    overviews=ovs,
-                )
-                tmp = path + ".tmp"
-                with open(tmp, "wb") as f:
-                    f.write(data)
-                os.replace(tmp, path)
-                out.append({"image_id": row.image_id, "path": path})
-            yield pd.DataFrame(out)
+            ovs = [
+                np.where(cnt > 0, value, float(nodata)).astype(np.float32)
+                for _, cnt, value in overview_levels_numpy(grid, overview_levels, nodata=float(nodata))
+            ]
+        name = os.path.basename(str(row.image_id)).rsplit(".", 1)[0] or "raster"
+        digest = hashlib.md5(str(row.image_id).encode()).hexdigest()[:8]
+        path = os.path.join(out_dir, f"{name}_{digest}_dtm.tif")
+        data = write_geotiff(
+            grid,
+            x0=float(getattr(row, "lon0", 0.0)),
+            y0=float(getattr(row, "lat0", 0.0)),
+            xres=float(getattr(row, "xres_m", 1.0)),
+            yres=float(getattr(row, "yres_m", 1.0)),
+            epsg=int(getattr(row, "crs", 32631)),
+            nodata=nodata,
+            is_geographic=bool(getattr(row, "is_geographic", False)),
+            compress=compress,
+            overviews=ovs,
+        )
+        tmp = path + ".tmp"
+        with open(tmp, "wb") as f:
+            f.write(data)
+        os.replace(tmp, path)
+        return {"image_id": row.image_id, "path": path}
 
     needed = [c for c in ("image_id", "bytes", "w", "h", "fmt", "lon0", "lat0",
                           "xres_m", "yres_m", "crs", "is_geographic") if c in cols]
-    written = dtm_rows.select(*needed).mapInPandas(dump, "image_id string, path string")
+    written = map_rows(dtm_rows.select(*needed), dump, "image_id string, path string")
     return [r.path for r in written.collect()]

@@ -123,6 +123,15 @@ class TestPermissiveMode:
         assert len(rows) == 6
         bad = [r for r in rows if r.error is not None]
         assert len(bad) == 1 and bad[0].bytes is None
+        # quarantined: NULL, not a fake 0 — phash 0 is a real aHash (a phash
+        # dedup would merge every poison row) and valid_in 0 claims "no
+        # valid input pixels"
+        assert (bad[0].phash, bad[0].valid_in, bad[0].valid_out) == (None, None, None)
+        src = pdf.iloc[2]
+        assert (bad[0].image_id, bad[0].w, bad[0].h, bad[0].fmt, bad[0].caption) == (
+            src.image_id, src.w, src.h, src.fmt, src.caption
+        )
+        assert bad[0].wall_ms is not None and bad[0].partition_id is not None
         good = [r for r in rows if r.error is None]
         assert all(r.bytes is not None for r in good)
 
