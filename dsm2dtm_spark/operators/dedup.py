@@ -3,9 +3,9 @@ alongside SURVEY.md §2): exact, n-gram Jaccard, MinHash+LSH, SimHash.
 
 Scale notes (the 100 TB framing):
 - exact dedup is a hash groupBy on a fingerprint — one shuffle, no payloads;
-- MinHash+LSH: signature computation is embarrassingly parallel (explode
-  shingles → groupBy min per hash — all JVM); candidate generation buckets
-  signatures by (band, band-hash) so the join is an equi-join, never O(n²);
+- MinHash+LSH: signing is embarrassingly parallel (one Arrow UDF per row,
+  no shuffle); candidate generation buckets signatures by (band, band key)
+  so the join is an equi-join, never O(n²);
 - SimHash: 64-bit fingerprint; near-dup = small Hamming distance within
   bucketed prefixes;
 - n-gram Jaccard is the exact verifier applied only to LSH candidates;
@@ -17,6 +17,10 @@ Scale notes (the 100 TB framing):
 
 from __future__ import annotations
 
+import hashlib
+import struct
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -50,13 +54,13 @@ def shingle_expr(text_col: str, n: int = 3):
 
 
 def _gram_slices(t: str, n: int):
-    """The ONE copy of the python-side gram construction both Arrow twins
-    share (shingle_grams_udf and jaccard_counts_udf): codepoint slices
-    ``t[i:i+n]`` over ``max(len(t)-n+1, 1)`` positions — exactly
-    ``substring(t, i+1, n)`` over ``greatest(length(t)-(n-1), 1)`` incl.
-    the short-text clamp. Keeping it shared is load-bearing: the rounded
-    Jaccard oracles rely on both UDFs agreeing bit-for-bit with
-    shingle_expr, so the clamp/slicing must never drift between them."""
+    """The ONE copy of the python-side gram construction every Arrow twin
+    shares (shingle_grams_udf, jaccard_counts_udf and the MinHash signer):
+    codepoint slices ``t[i:i+n]`` over ``max(len(t)-n+1, 1)`` positions —
+    exactly ``substring(t, i+1, n)`` over ``greatest(length(t)-(n-1), 1)``
+    incl. the short-text clamp. Keeping it shared is load-bearing: the
+    rounded Jaccard oracles and the signatures rely on the UDFs agreeing
+    bit-for-bit with shingle_expr, so the clamp/slicing must never drift."""
     return (t[i : i + n] for i in range(max(len(t) - n + 1, 1)))
 
 
@@ -137,38 +141,228 @@ def ngram_jaccard(df_pairs: DataFrame, left_text: str, right_text: str, n: int =
     return df_pairs.withColumn("jaccard", F.round(inter / union, 4))
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_hashes: int = 32, shingle_n: int = 3
+_XXH_SEED = 42  # Spark's xxhash64 seed; also its hash of NULL
+_M64 = (1 << 64) - 1
+_XP1, _XP2, _XP3, _XP4, _XP5 = (
+    0x9E3779B185EBCA87,
+    0xC2B2AE3D27D4EB4F,
+    0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63,
+    0x27D4EB2F165667C5,
+)
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64(data: bytes) -> int:
+    """XXH64 of ``data`` with seed 42 as a signed 64-bit int — bit-exact
+    with Spark's ``xxhash64`` of a string (``XXH64.hashUnsafeBytes`` over
+    its utf-8 bytes: 32-byte stripes, then 8-, 4- and 1-byte tails,
+    little-endian word reads)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [
+            (_XXH_SEED + _XP1 + _XP2) & _M64,
+            (_XXH_SEED + _XP2) & _M64,
+            _XXH_SEED,
+            (_XXH_SEED - _XP1) & _M64,
+        ]
+        while i <= n - 32:
+            for j, w in enumerate(struct.unpack_from("<4Q", data, i)):
+                v[j] = _rotl64((v[j] + w * _XP2) & _M64, 31) * _XP1 & _M64
+            i += 32
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12) + _rotl64(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ (_rotl64(x * _XP2 & _M64, 31) * _XP1 & _M64)) * _XP1 + _XP4) & _M64
+    else:
+        h = _XXH_SEED + _XP5
+    h = (h + n) & _M64
+    while i <= n - 8:
+        (k,) = struct.unpack_from("<Q", data, i)
+        h ^= _rotl64(k * _XP2 & _M64, 31) * _XP1 & _M64
+        h = (_rotl64(h, 27) * _XP1 + _XP4) & _M64
+        i += 8
+    if i + 4 <= n:
+        (k,) = struct.unpack_from("<I", data, i)
+        h ^= k * _XP1 & _M64
+        h = (_rotl64(h, 23) * _XP2 + _XP3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _XP5 & _M64
+        h = _rotl64(h, 11) * _XP1 & _M64
+    h ^= h >> 33
+    h = h * _XP2 & _M64
+    h ^= h >> 29
+    h = h * _XP3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+# Per-worker gram cache of the MinHash signer, keyed by (method, n_hashes):
+# gram → row of one growing matrix holding that gram's per-gram hash work.
+# Character n-grams repeat massively across documents (sf1: 50k docs hold
+# 377 distinct 3-grams), so each distinct gram is hashed once per worker,
+# not once per occurrence. Rows: md5 → the n_hashes (hi, lo) uint64 halves
+# of md5('i:'||gram); xxhash64 → ONE int64, pmod(xxhash64(gram), P) — the
+# permutations are applied per document. Bounded: a document that could
+# push the cache past _GRAM_CACHE_MAX rows first resets it to a fresh
+# _GRAM_CACHE_ROWS matrix (recompute, never wrong; the grown storage is
+# freed, not kept).
+_GRAM_CACHE: dict[tuple, dict] = {}
+_GRAM_CACHE_MAX = 262_144
+_GRAM_CACHE_ROWS = 4096
+
+
+def _fresh_gram_cache(method: str, n_hashes: int) -> dict:
+    if method == "md5":
+        mat = np.empty((_GRAM_CACHE_ROWS, n_hashes, 2), dtype=np.uint64)
+    else:
+        mat = np.empty(_GRAM_CACHE_ROWS, dtype=np.int64)
+    return {"idx": {}, "mat": mat, "n": 0}
+
+
+def _sign_batch(lowered: pd.Series, n_hashes: int, shingle_n: int, method: str) -> pd.Series:
+    """MinHash signatures of a batch of JVM-lowered texts: the distinct
+    ``shingle_n``-grams of ``_gram_slices`` (NULL text → the one NULL gram
+    of ``shingle_expr``), their cached per-gram hashes, per-component mins.
+
+    - md5: component i = min over grams of md5('i:'||gram) as lowercase hex
+      — the lexicographic min of the hexdigests is the numeric (hi, lo)
+      min, so it is taken on the uint64 halves and formatted once;
+    - xxhash64: component i = min over grams of (aᵢ·h + bᵢ) mod P with
+      h = pmod(xxhash64(gram), P).
+
+    Both equal Spark's own md5 / xxhash64 / pmod / min over ``shingle_expr``
+    grams bit for bit; the input must be lowered in the JVM so the case
+    mapping stays the SQL oracles'."""
+    key = (method, n_hashes)
+    st = _GRAM_CACHE.get(key) or _GRAM_CACHE.setdefault(key, _fresh_gram_cache(method, n_hashes))
+    if method == "md5":
+        prefixes = [f"{i}:".encode() for i in range(n_hashes)]
+        maxu = np.uint64(0xFFFFFFFFFFFFFFFF)
+
+        def gram_row(g):
+            gb = g.encode("utf-8")
+            digests = b"".join(hashlib.md5(p + gb).digest() for p in prefixes)
+            return np.frombuffer(digests, dtype=">u8").reshape(n_hashes, 2)
+
+        def signature(m):
+            hi, lo = m[:, :, 0], m[:, :, 1]
+            hi_min = hi.min(0)
+            lo_min = np.where(hi == hi_min, lo, maxu).min(0)
+            return [f"{h:016x}{l:016x}" for h, l in zip(hi_min.tolist(), lo_min.tolist())]
+
+    else:
+        mult = np.array([2 * i + 1 for i in range(n_hashes)], dtype=np.int64)
+        add = np.array(
+            [(1442695040888963407 + i * 6364136223846793005) % MERSENNE_P for i in range(n_hashes)],
+            dtype=np.int64,
+        )
+
+        def gram_row(g):
+            return (_XXH_SEED if g is None else _xxh64(g.encode("utf-8"))) % MERSENNE_P
+
+        def signature(h):
+            return ((h[:, None] * mult + add) % MERSENNE_P).min(0).tolist()
+
+    out = []
+    for t in lowered:
+        grams = {None} if t is None else set(_gram_slices(t, shingle_n))
+        if st["n"] + len(grams) > _GRAM_CACHE_MAX:
+            st = _GRAM_CACHE[key] = _fresh_gram_cache(method, n_hashes)
+        idx = st["idx"]
+        rows = []
+        for g in grams:
+            r = idx.get(g)
+            if r is None:
+                r = st["n"]
+                if r == len(st["mat"]):
+                    st["mat"] = np.concatenate([st["mat"], np.empty_like(st["mat"])])
+                st["mat"][r] = gram_row(g)
+                idx[g] = r
+                st["n"] = r + 1
+            rows.append(r)
+        out.append(signature(st["mat"][rows]))
+    return pd.Series(out, dtype=object)
+
+
+def _sign_rows(
+    df: DataFrame, text_col: str, id_col: str, n_hashes: int, shingle_n: int, method: str, *cols
 ) -> DataFrame:
-    """MinHash signatures: shingle → xxhash64 → k affine permutations
-    (aᵢ·h+bᵢ mod Mersenne61) → min per permutation. One explode + one groupBy
-    (map-side partial min), signature as array<bigint>.
+    """(id, *cols, signature) in ONE projection over one Arrow UDF on
+    ``lower(text)`` — no explode, no groupBy, no join. The NULL rule
+    differs per flavour and is kept: md5 drops NULL-text rows; xxhash64
+    signs them from the NULL gram (hash = the seed). Ids are assumed
+    unique per row."""
+    if method not in ("xxhash64", "md5"):
+        raise ValueError(f"method must be 'xxhash64' or 'md5', got {method!r}")
+
+    @F.pandas_udf("array<string>" if method == "md5" else "array<bigint>")
+    def sig(lowered: pd.Series) -> pd.Series:
+        return _sign_batch(lowered, n_hashes, shingle_n, method)
+
+    if method == "md5":
+        df = df.filter(F.col(text_col).isNotNull())
+    return df.select(F.col(id_col), *cols, sig(F.lower(F.col(text_col))).alias("signature"))
+
+
+def minhash_signatures(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_hashes: int = 32,
+    shingle_n: int = 3,
+    method: str = "xxhash64",
+) -> DataFrame:
+    """MinHash signatures (id, signature) over distinct character
+    ``shingle_n``-grams. ``method`` picks only the per-gram hash:
+
+    - ``xxhash64``: h = pmod(xxhash64(gram), P) through ``n_hashes`` affine
+      permutations (aᵢ·h+bᵢ mod P, P = 2^31−1) → array<bigint>;
+    - ``md5``: component i = min of md5('i:'||gram) → array<string>; min
+      over VARCHAR is the same lexicographic order in Spark and DuckDB, so
+      an oracle replays it exactly.
 
     Deterministic: permutation coefficients derive from the hash index."""
-    hs = df.select(id_col, F.explode(shingle_expr(text_col, shingle_n)).alias("sh")).withColumn(
-        "h", F.pmod(F.xxhash64("sh"), F.lit(MERSENNE_P))
-    )
-    aggs = []
-    for i in range(n_hashes):
-        a = 2 * i + 1  # odd multipliers (small, keeps a·h below 2^37)
-        b = (1442695040888963407 + i * 6364136223846793005) % MERSENNE_P
-        aggs.append(F.min((F.col("h") * a + b) % MERSENNE_P).alias(f"mh_{i}"))
-    sig = hs.groupBy(id_col).agg(*aggs)
-    return sig.select(id_col, F.array(*[f"mh_{i}" for i in range(n_hashes)]).alias("signature"))
+    return _sign_rows(df, text_col, id_col, n_hashes, shingle_n, method)
+
+
+def band_buckets(
+    signatures: DataFrame,
+    id_col: str = "doc_id",
+    bands: int = 4,
+    carry_signature: bool = False,
+) -> DataFrame:
+    """Explode (id, signature) → narrow (id, band, bucket) LSH band rows,
+    the one band-key expression of every LSH consumer. For band b the key
+    is md5 of the '|'-joined stringified components b·rpb+1 .. (b+1)·rpb,
+    rpb = size(signature) div bands read per row — both flavours (bigint
+    arrays stringify first), replayable in DuckDB as md5(string_agg(comp,
+    '|' ORDER BY i)). No lambda: the keys and their ``posexplode`` run
+    under whole-stage codegen.
+
+    ``carry_signature=True`` keeps the signature array on each band row
+    (bands× payload duplication) — used by the shuffle-path verify so the
+    candidate pair stream needs no signature-attach join at all."""
+    rpb = F.expr(f"CAST(size(signature) DIV {bands} AS INT)")
+    comps = F.col("signature").cast("array<string>")
+    keys = F.array(*[F.md5(F.array_join(F.slice(comps, b * rpb + 1, rpb), "|")) for b in range(bands)])
+    keep = ["signature"] if carry_signature else []
+    return signatures.select(F.col(id_col), F.posexplode(keys).alias("band", "bucket"), *keep)
 
 
 def minhash_lsh_candidates(
     signatures: DataFrame,
     id_col: str = "doc_id",
     bands: int = 8,
-    rows_per_band: int = 4,
     bucket_cap: int | None = None,
-    bucket_method: str = "xxhash64",
 ) -> DataFrame:
-    """LSH banding: split each signature into ``bands`` bands of
-    ``rows_per_band`` values, bucket by (band, hash(band slice)), self-join
-    buckets → distinct candidate pairs (left id < right id). Equi-join only —
-    the candidate step never goes quadratic in table size.
+    """LSH banding: bucket each signature by (band, band key) through
+    ``band_buckets``, self-join buckets → distinct candidate pairs (left id
+    < right id). Equi-join only — the candidate step never goes quadratic
+    in table size.
 
     Skew guards (web crawls are duplicate floods, so these matter at scale):
     identical signatures are collapsed to one representative before the
@@ -185,25 +379,7 @@ def minhash_lsh_candidates(
     members = signatures.join(reps, on="signature").select(
         F.col(id_col).alias("_mid"), F.col("_rep")
     )
-    def bucket_of(i):
-        sl = F.slice("signature", i * rows_per_band + 1, rows_per_band)
-        if bucket_method == "md5":
-            # SQL-replayable: md5 over the '|'-joined stringified slice
-            # (DuckDB: md5(string_agg(comp, '|' ORDER BY i)))
-            return F.md5(F.array_join(F.transform(sl, lambda x: x.cast("string")), "|"))
-        return F.xxhash64(sl.cast("string")).cast("string")
-
-    b = reps.select(
-        "_rep",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band"), bucket_of(i).alias("bucket"))
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_rep", "bb.band", "bb.bucket")
+    b = band_buckets(reps, id_col="_rep", bands=bands)
     if bucket_cap is not None:
         hot = b.groupBy("band", "bucket").count().filter(F.col("count") > bucket_cap).select("band", "bucket")
         b = b.join(F.broadcast(hot), on=["band", "bucket"], how="left_anti")
@@ -246,9 +422,9 @@ def minhash_near_dups(
     """Full MinHash-LSH near-dup pipeline: signatures → banded candidates →
     exact n-gram-Jaccard verification ≥ threshold. ``bucket_cap`` bounds
     candidate generation under near-dup floods (see minhash_lsh_candidates).
-    ``method='md5'`` uses the string-MinHash signature + md5 band buckets —
-    every step SQL-replayable (the DuckDB-oracle flavor; xxhash64 stays the
-    fast production default).
+    ``method`` picks the signature hash (see minhash_signatures);
+    ``method='md5'`` makes every step SQL-replayable (the DuckDB-oracle
+    flavor; xxhash64 stays the production default).
 
     ``shingle_n`` sets the character-shingle length for BOTH the signatures
     and the verify. Pick it against the corpus' background similarity: on
@@ -263,19 +439,12 @@ def minhash_near_dups(
     onto the candidate pairs instead of re-shingling text per pair — a doc
     in k candidate pairs previously paid k interpreted O(len·grams)
     transforms, the measured sf1 hot spot."""
-    if method == "md5":
-        from dsm2dtm_spark.operators.incremental import minhash_signatures_md5
-
-        sig = minhash_signatures_md5(df, text_col, id_col, n_hashes, shingle_n)
-    else:
-        sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n)
+    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n, method)
     # the signing feeds the candidate generator's collapse/member/band
     # subtrees; materialize it once (the candidate step re-derives the
     # relation three times otherwise)
     sig = sig.localCheckpoint(eager=False)
-    cand = minhash_lsh_candidates(
-        sig, id_col, bands, n_hashes // bands, bucket_cap=bucket_cap, bucket_method=method
-    )
+    cand = minhash_lsh_candidates(sig, id_col, bands, bucket_cap=bucket_cap)
     grams = df.select(F.col(id_col), shingle_expr(text_col, shingle_n).alias("_grams"))
     pairs = (
         cand.join(

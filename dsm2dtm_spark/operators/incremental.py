@@ -17,13 +17,17 @@ tables (sources.manifest), and each fresh batch joins against them:
 3. commit — survivors' signatures/bands append to the store, so the next
    batch dedups against corpus + this batch (associative by construction).
 
-Signatures come in two flavors:
-- ``method='xxhash64'`` (default): the fast JVM path of
-  ``dedup.minhash_signatures`` — production.
+Signatures come in two flavors, signed by the one MinHash signer of
+``dedup.minhash_signatures`` (an Arrow UDF with a per-worker gram cache)
+and banded by the one ``dedup.band_buckets`` expression; ``method`` picks
+only the per-gram hash:
+- ``method='xxhash64'`` (default): component i = min of (aᵢ·h+bᵢ) mod P
+  over the grams' h = pmod(xxhash64(gram), P) — production.
 - ``method='md5'``: string MinHash (component i = MIN over shingles of
-  md5('i:' || shingle)) — ~2× the hash cost, but every step is exactly
-  replayable in ANSI SQL/DuckDB (md5 + min-over-varchar + string_agg), so
-  the whole incremental pipeline is oracle-checkable, not rows-only.
+  md5('i:' || shingle)) — n_hashes md5 calls per distinct gram instead of
+  one xxhash64, but every step is exactly replayable in ANSI SQL/DuckDB
+  (md5 + min-over-varchar + string_agg), so the whole incremental pipeline
+  is oracle-checkable, not rows-only.
 
 Reference anchor: the resume anti-join of plans/dtm_job.py:141 applied to
 the dedup domain; no reference-repo equivalent (engine extension).
@@ -31,128 +35,10 @@ the dedup domain; no reference-repo equivalent (engine extension).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, StringType
 
-from dsm2dtm_spark.operators.dedup import minhash_signatures
+from dsm2dtm_spark.operators.dedup import _sign_rows, band_buckets
 from dsm2dtm_spark.sources.manifest import SnapshotTable
-
-# per-worker gram → md5-component cache for the string-MinHash UDF (guide
-# §4.5: heavyweight state once per task — here once per *worker*, since
-# spark.python.worker.reuse keeps the module alive across tasks). Character
-# n-grams repeat massively across documents (measured at sf1: 50k docs hold
-# only 377 distinct 3-grams / 2041 distinct 5-grams), so hashing each
-# distinct gram once collapses ~114M md5 calls per signing pass to a few
-# thousand. Bounded: a pathological high-entropy corpus clears the cache
-# instead of growing it without limit (recompute, never wrong).
-_MD5_GRAM_CACHE: dict[int, dict] = {}
-_MD5_CACHE_MAX = 262_144
-
-
-def _md5_minhash_sig_udf(n_hashes: int, shingle_n: int):
-    """Arrow-batched string-MinHash over the (JVM-)lowered text: distinct
-    character ``shingle_n``-grams → per-gram md5('i:'||gram) components →
-    elementwise min. Bit-identical to the old explode/groupBy expression
-    chain: Python slices by codepoint exactly like ``substring`` (including
-    the short-text clamp — at least one gram, the whole text), hashlib.md5
-    hexdigest == Spark's md5 over the same utf-8 bytes, min over ASCII-hex
-    bytes == min over VARCHAR, and MIN is order-insensitive so gram order
-    is irrelevant. The input must already be LOWERCASED in the JVM
-    (``F.lower``), keeping the locale/unicode case mapping identical to the
-    SQL oracles'.
-
-    NOTE: the grams are deliberately NOT computed via ``shingle_expr`` here:
-    a pandas UDF whose argument contains shingle_expr's nested lambda
-    (inner lambda referencing the outer's variable) hits a Spark 4.1
-    extraction bug under joins — the PythonUDF is left inside a plain
-    Project and execution dies with INTERNAL_ERROR 'Cannot evaluate
-    expression' (reproduced; plain/single-level-lambda arguments extract
-    fine)."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def sig(lowered_batch: pd.Series) -> pd.Series:
-        import hashlib
-
-        import numpy as np
-
-        # r7 #2: the cache maps gram → ROW INDEX into one growing
-        # (N, n_hashes, 2) uint64 matrix of (hi, lo) halves of the md5
-        # digest; a document's component mins then come from ONE fancy-index
-        # gather + vectorized 128-bit lexicographic min (min of hi, then min
-        # of lo among hi-minimal rows) instead of stacking per-gram S32
-        # arrays and a full O(g log g) byte-string sort per doc (measured
-        # 656 → 155 µs/doc, outputs byte-identical: hexdigest order ==
-        # (hi, lo) numeric order == '%016x%016x' formatting).
-        st = _MD5_GRAM_CACHE.setdefault(
-            (n_hashes, shingle_n),
-            {"idx": {}, "mat": np.empty((4096, n_hashes, 2), dtype=np.uint64), "n": 0},
-        )
-        idx_cache, mat = st["idx"], st["mat"]
-        prefixes = [f"{i}:".encode() for i in range(n_hashes)]
-        maxu = np.uint64(0xFFFFFFFFFFFFFFFF)
-        out = []
-        for t in lowered_batch:
-            if t is None:
-                out.append(None)
-                continue
-            # same gram set as shingle_expr: substrings at 0..len-n (at
-            # least one — short texts yield themselves), distinct
-            grams = {t[i : i + shingle_n] for i in range(max(len(t) - shingle_n + 1, 1))}
-            idxs = []
-            for g in grams:
-                ix = idx_cache.get(g)
-                if ix is None:
-                    if st["n"] >= _MD5_CACHE_MAX:
-                        # bounded degrade: forget, recompute — never wrong
-                        idx_cache.clear()
-                        st["n"] = 0
-                    if st["n"] >= mat.shape[0]:
-                        mat = np.concatenate([mat, np.empty_like(mat)])
-                        st["mat"] = mat
-                    gb = g.encode("utf-8")
-                    row = st["n"]
-                    for j, p in enumerate(prefixes):
-                        # byte-identical to Spark's md5(concat_ws(':', i, g)):
-                        # the digest bytes whose lowercase hex IS hexdigest
-                        d = hashlib.md5(p + gb).digest()
-                        mat[row, j, 0] = int.from_bytes(d[:8], "big")
-                        mat[row, j, 1] = int.from_bytes(d[8:], "big")
-                    idx_cache[g] = row
-                    st["n"] = row + 1
-                    ix = row
-                idxs.append(ix)
-            m = mat[idxs]
-            hi, lo = m[:, :, 0], m[:, :, 1]
-            hi_min = hi.min(0)
-            lo_min = np.where(hi == hi_min, lo, maxu).min(0)
-            out.append([f"{h:016x}{l:016x}" for h, l in zip(hi_min.tolist(), lo_min.tolist())])
-        return pd.Series(out, dtype=object)
-
-    return sig
-
-
-def minhash_signatures_md5(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_hashes: int = 16, shingle_n: int = 3
-) -> DataFrame:
-    """SQL-replayable string MinHash: component i = MIN over the document's
-    distinct character ``shingle_n``-grams of md5('i:' || gram). min() over
-    VARCHAR is the same lexicographic order in Spark and DuckDB, so an
-    oracle replays signatures exactly. Returns (id, signature:array<string>).
-
-    r7 (guide §4.2/§4.5): the per-(gram, i) md5 storm moved from JVM
-    expressions (explode → 16 md5 per exploded gram occurrence → 16-way min
-    groupBy) into one Arrow-batched UDF with a per-worker gram cache —
-    grams repeat massively across documents (sf1: 377 distinct 3-grams in
-    50k docs), so each distinct gram is hashed once per worker instead of
-    once per occurrence, and the explode/groupBy exchange disappears
-    (values bit-identical, see _md5_minhash_sig_udf). Rows with NULL text
-    drop from the output exactly like the old explode did; ids are assumed
-    unique per row (every call site signs id-keyed documents)."""
-    sig = _md5_minhash_sig_udf(n_hashes, shingle_n)
-    return df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), sig(F.lower(F.col(text_col))).alias("signature")
-    )
 
 
 def _est_jaccard_expr(n_hashes: int):
@@ -180,120 +66,13 @@ def sign_documents(
     method: str = "xxhash64",
 ) -> DataFrame:
     """(id, fingerprint, signature) for a document batch — the rows a
-    SignatureStore persists. ``fingerprint`` = md5(text) (the exact-dup key,
-    SQL-replayable in both flavors); ``signature`` is the MinHash array in
-    the chosen ``method`` (see module docstring).
-
-    The md5 flavor signs in ONE projection (r7): fingerprint and signature
-    both derive from the current row, so the old fingerprint⋈signature
-    self-join (an Exchange pair per signing) is gone. The xxhash64 flavor
-    keeps the join — its signature is a real explode/groupBy aggregate."""
-    if method == "md5":
-        sig = _md5_minhash_sig_udf(n_hashes, shingle_n)
-        return df.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col),
-            F.md5(F.col(text_col)).alias("fingerprint"),
-            sig(F.lower(F.col(text_col))).alias("signature"),
-        )
-    if method != "xxhash64":
-        raise ValueError(f"method must be 'xxhash64' or 'md5', got {method!r}")
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n)
-    fp = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("fingerprint"))
-    return fp.join(sig, on=id_col)
-
-
-def band_buckets(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 4,
-    carry_signature: bool = False,
-    n_hashes: int | None = None,
-) -> DataFrame:
-    """Explode (id, signature) → narrow (id, band, bucket) LSH band rows.
-    bucket = md5 of the band's '|'-joined components — one string expression
-    that covers both signature flavors (bigint arrays stringify first) and
-    replays in DuckDB as md5(string_agg(comp, '|' ORDER BY i)).
-
-    ``carry_signature=True`` keeps the signature array on each band row
-    (4× payload duplication) — used by the shuffle-path verify so the
-    candidate pair stream needs no signature-attach join at all (r7).
-
-    ``n_hashes`` (optional): when the caller knows the signature length, the
-    per-band bucket unrolls to ``md5(concat_ws('|', get(sig, i)...))`` over
-    a ``posexplode`` of the per-row bucket array — whole-stage-codegen
-    expressions, where the generic ``transform``/``array_join`` lambda chain
-    is CodegenFallback (interpreted per band row; measured ~10 of the 19
-    JVM-CPU core-s the two band stages burned per sf1 pass, r7 guide §4.1).
-    Values are identical for well-formed rows: ``concat_ws`` and
-    ``array_join`` join non-null strings the same way, and every signature
-    this engine writes has exactly ``n_hashes`` non-null components."""
-    out_cols = [id_col, "band"]
-    if n_hashes is not None:
-        rpb = n_hashes // bands
-        bucket_arr = F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[F.get("signature", b * rpb + j).cast("string") for j in range(rpb)],
-                    )
-                )
-                for b in range(bands)
-            ]
-        )
-        sel = [F.col(id_col), F.posexplode(bucket_arr).alias("band", "bucket")]
-        keep = ["signature"] if carry_signature else []
-        return signatures.select(*sel, *keep).select(*out_cols, "bucket", *keep)
-    rows_per_band = (F.size("signature") / bands).cast("int")
-    bucket = F.md5(
-        F.array_join(
-            F.transform(
-                F.slice("signature", F.col("band") * F.col("_rpb") + 1, F.col("_rpb")),
-                lambda x: x.cast("string"),
-            ),
-            "|",
-        )
-    ).alias("bucket")
-    exploded = signatures.select(
-        F.col(id_col),
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-        F.col("signature"),
-        rows_per_band.alias("_rpb"),
+    SignatureStore persists, in ONE projection (no Exchange, no join).
+    ``fingerprint`` = md5(text) (the exact-dup key, SQL-replayable in both
+    flavors); ``signature`` is the MinHash array in the chosen ``method``
+    (see module docstring). md5 drops NULL-text rows; xxhash64 signs them."""
+    return _sign_rows(
+        df, text_col, id_col, n_hashes, shingle_n, method, F.md5(F.col(text_col)).alias("fingerprint")
     )
-    if carry_signature:
-        return exploded.select(*out_cols, bucket, "signature")
-    return exploded.select(*out_cols, bucket)
-
-
-def _trusted_n_hashes(store_params: dict, summary: dict | None) -> int | None:
-    """The DECLARED signature length for the unrolled codegen band-bucket
-    form (``band_buckets(n_hashes=...)``): the batch's own sig_params
-    first, else the store's recorded ones; None (→ generic expression)
-    with neither. Declared only — callers must confirm it against the
-    actual arrays with ``_verified_n_hashes`` before unrolling, because
-    the unrolled form indexes components 0..n-1 blindly (a shorter array
-    would bucket NULL-skipped ``md5('')`` floods instead of failing)."""
-    nh = ((summary or {}).get("sig_params") or {}).get("n_hashes")
-    if nh is None:
-        nh = (store_params or {}).get("n_hashes")
-    return nh if isinstance(nh, int) and nh > 0 else None
-
-
-def _verified_n_hashes(signatures_df: DataFrame, nh: int | None) -> int | None:
-    """Confirm a declared signature length against the batch's ACTUAL
-    arrays before the unrolled band-bucket form is allowed: one min/max
-    aggregate over ``size(signature)`` (the append paths checkpoint the
-    batch eagerly first, so this is a single fast job over cached rows).
-    Any mismatch, mixed lengths, or an empty batch falls back to the
-    generic length-adaptive expression — correct for every length — and
-    the declared-vs-actual inconsistency then surfaces through
-    ``check_params``/the estimator rather than silently flooding buckets."""
-    if nh is None:
-        return None
-    row = signatures_df.agg(
-        F.min(F.size("signature")).alias("lo"), F.max(F.size("signature")).alias("hi")
-    ).first()
-    return nh if row is not None and row.lo == nh and row.hi == nh else None
 
 
 class SignatureStore:
@@ -378,9 +157,6 @@ class SignatureStore:
                 "Rebuild the store or match its parameters."
             )
 
-    def _known_n_hashes(self, summary: dict | None) -> int | None:
-        return _trusted_n_hashes(self.params(), summary)
-
     def append(self, signatures_df: DataFrame, bands: int = 4, summary: dict | None = None) -> None:
         """Register a batch: commit its signature rows and derived band rows
         (derived here, not re-signed — slicing stored arrays is free). The
@@ -388,25 +164,14 @@ class SignatureStore:
         write would re-execute the whole sign+dedup lineage a second time —
         the most expensive stage of every ingest. With a configured
         ``bucket_cap`` the hot-bucket census updates here too (write-path
-        amortization; see class docstring). Band buckets use the unrolled
-        whole-stage-codegen form when the signature length is known from
-        sig_params (r7 — the generic ``transform`` chain is CodegenFallback,
-        interpreted per band row)."""
+        amortization; see class docstring)."""
         if self.bucket_cap is not None:
             # backfill BEFORE this batch's rows land in the band table, or
             # the later census read would double-count them
             self._backfill_census_if_needed(signatures_df.sparkSession)
-        # resolve the declared length BEFORE the signatures commit:
-        # params() reads the LATEST snapshot summary, which after
-        # write_dataframe is this batch's (possibly sig_params-less) one —
-        # the store-params fallback would never fire (r7 review)
-        nh = self._known_n_hashes(summary)
         signatures_df = signatures_df.localCheckpoint(eager=True)
-        nh = _verified_n_hashes(signatures_df, nh)
         self.signatures.write_dataframe(signatures_df, summary=summary)
-        band_rows = band_buckets(
-            signatures_df, bands=bands, n_hashes=nh
-        ).localCheckpoint(eager=False)
+        band_rows = band_buckets(signatures_df, bands=bands).localCheckpoint(eager=False)
         self.bands.write_dataframe(band_rows, summary=summary)
         if self.bucket_cap is not None:
             self._update_bucket_census(band_rows)
@@ -771,16 +536,7 @@ class BucketedSignatureStore:
             self._backfill_census_if_needed(spark)
         meta = self._meta()
         tables = meta.setdefault("tables", {})
-        # unrolled codegen bucket form when sig_params pin the signature
-        # length (r7) — same values, no interpreted transform per band row;
-        # declared length confirmed against the checkpointed batch first
-        band_rows = band_buckets(
-            signatures_df,
-            bands=bands,
-            n_hashes=_verified_n_hashes(
-                signatures_df, _trusted_n_hashes(self.params(), summary)
-            ),
-        ).localCheckpoint(eager=False)
+        band_rows = band_buckets(signatures_df, bands=bands).localCheckpoint(eager=False)
         for kind, df in (("signatures", signatures_df), ("bands", band_rows)):
             cols = self._BUCKET_COLS[kind]
             writer = (
@@ -1165,7 +921,7 @@ def dedup_against(
     # unrolled codegen form, see _est_jaccard_expr
     est_j = _est_jaccard_expr(n_hashes)
     if broadcast_fresh:
-        fresh_bands = band_buckets(fresh_sigs, id_col=id_col, bands=bands, n_hashes=n_hashes)
+        fresh_bands = band_buckets(fresh_sigs, id_col=id_col, bands=bands)
         corpus_bands = stored_bands.select(
             F.col(id_col).alias("_cid"), F.col("band"), F.col("bucket")
         )
@@ -1208,14 +964,13 @@ def dedup_against(
         # stored signatures — md5 of array slices, nothing re-shingled);
         # the narrow band table remains the broadcast path's stream source.
         fb = band_buckets(
-            fresh_sigs, id_col=id_col, bands=bands, carry_signature=True, n_hashes=n_hashes
+            fresh_sigs, id_col=id_col, bands=bands, carry_signature=True
         ).withColumnRenamed("signature", "_fsig")
         cb = band_buckets(
             stored_signatures.select(F.col(id_col).alias("_cid"), "signature"),
             id_col="_cid",
             bands=bands,
             carry_signature=True,
-            n_hashes=n_hashes,
         ).withColumnRenamed("signature", "_csig")
         if method == "md5":
             # est only needs per-component EQUALITY, and unhex is a
@@ -1399,13 +1154,7 @@ def _repair_bands(spark, store, bands: int, id_col: str = "doc_id", n_sigs: int 
             return 0
     except Exception:  # noqa: BLE001 — footers are an optimization only
         pass  # fall through to the anti-join, the safe path
-    sigs = store.read_signatures(spark)
-    derived = band_buckets(
-        sigs,
-        id_col=id_col,
-        bands=bands,
-        n_hashes=_verified_n_hashes(sigs, _trusted_n_hashes(store.params(), None)),
-    )
+    derived = band_buckets(store.read_signatures(spark), id_col=id_col, bands=bands)
     try:
         existing = store.read_bands(spark).select(id_col, "band")
         to_add = derived.join(existing, on=[id_col, "band"], how="left_anti")

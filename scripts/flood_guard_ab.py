@@ -84,13 +84,11 @@ def main():
         sig = minhash_signatures(df, n_hashes=N_HASHES)
 
         t0 = time.time()
-        c_nocap = minhash_lsh_candidates(sig, bands=BANDS, rows_per_band=N_HASHES // BANDS).count()
+        c_nocap = minhash_lsh_candidates(sig, bands=BANDS).count()
         w_nocap = round(time.time() - t0, 2)
 
         t0 = time.time()
-        c_cap = minhash_lsh_candidates(
-            sig, bands=BANDS, rows_per_band=N_HASHES // BANDS, bucket_cap=CAP
-        ).count()
+        c_cap = minhash_lsh_candidates(sig, bands=BANDS, bucket_cap=CAP).count()
         w_cap = round(time.time() - t0, 2)
 
         t0 = time.time()

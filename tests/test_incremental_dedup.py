@@ -9,13 +9,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from dsm2dtm_spark.operators.dedup import minhash_signatures
 from dsm2dtm_spark.operators.incremental import (
     SignatureStore,
     _matched_fingerprints,
     band_buckets,
     dedup_against,
     incremental_dedup,
-    minhash_signatures_md5,
     sign_documents,
 )
 
@@ -448,12 +448,45 @@ class TestStoreCensusAndRepair:
         assert repair_store(spark, corpus, store) == 1
         assert store.read_signatures(spark).count() == 7
 
+    def test_torn_bands_heal_reads_signatures_once(self, spark, tmp_path):
+        """A bands heal derives the missing rows in one pass over the stored
+        signatures — no separate signature-length aggregate job first — and
+        a store append likewise runs no such job."""
+        from dsm2dtm_spark.operators.incremental import repair_store
+        from dsm2dtm_spark.sources.manifest import SnapshotTable
+
+        docs = _df(spark, [(i, f"document {i} on weirs and gates number {i}") for i in range(3)])
+        corpus = SnapshotTable(str(tmp_path / "corpus"))
+        corpus.write_pandas(docs.toPandas())
+        store = SignatureStore(str(tmp_path / "store"))
+        sigs = sign_documents(docs, method="md5").localCheckpoint(eager=True)
+        sp = {"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}}
+        store.signatures.write_dataframe(sigs, summary=sp)
+        store.bands.write_dataframe(band_buckets(sigs).filter("(doc_id = 0 AND band < 2) OR doc_id = 1"))
+
+        sc = spark.sparkContext
+        try:
+            sc.setJobGroup("torn-heal", "torn-bands heal")
+            assert repair_store(spark, corpus, store, method="md5") == 2
+            heal_jobs = len(sc.statusTracker().getJobIdsForGroup("torn-heal"))
+            sc.setJobGroup("append-jobs", "one store append")
+            SignatureStore(str(tmp_path / "store2")).append(sigs, summary=sp)
+            append_jobs = len(sc.statusTracker().getJobIdsForGroup("append-jobs"))
+        finally:
+            sc.setJobGroup(None, None)
+        # only the derive/anti-join, the bands write and the healed-id
+        # count run; a signature-length aggregate would add jobs on top
+        assert heal_jobs <= 10
+        assert append_jobs <= 3
+
 
 class TestMd5SignatureProperties:
     def test_md5_signature_is_permutation_invariant_and_text_keyed(self, spark):
         sigs = {
             r.doc_id: r.signature
-            for r in minhash_signatures_md5(_df(spark, CORPUS + [(9, CORPUS[0][1])])).collect()
+            for r in minhash_signatures(
+                _df(spark, CORPUS + [(9, CORPUS[0][1])]), n_hashes=16, method="md5"
+            ).collect()
         }
         assert sigs[0] == sigs[9]  # same text → same signature
         assert sigs[0] != sigs[1]
@@ -489,46 +522,38 @@ class TestMd5SignatureProperties:
 
 
 class TestBandBucketsUnrolled:
-    """r7: band_buckets(n_hashes=...) unrolls the bucket expression to
-    codegen concat_ws/get — the bucket VALUES must equal the generic
-    transform/array_join form for both signature flavors."""
+    """band_buckets is one lambda-free expression for both signature
+    flavors: key of band b = md5 of the '|'-joined stringified components
+    b·rpb .. (b+1)·rpb-1, with rpb = size(signature) div bands per row."""
 
-    def test_md5_flavor_equal(self, spark):
+    @staticmethod
+    def _reference(rows, bands):
+        import hashlib
+
+        out = []
+        for doc_id, sig in rows:
+            rpb = len(sig) // bands
+            for b in range(bands):
+                key = "|".join(str(c) for c in sig[b * rpb : (b + 1) * rpb])
+                out.append((doc_id, b, hashlib.md5(key.encode()).hexdigest()))
+        return sorted(out)
+
+    def test_matches_python_reference(self, spark):
         import pandas as pd
 
-        sigs = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": [0, 1],
-                    "signature": [[f"{i:032x}" for i in range(16)], [f"{i + 7:032x}" for i in range(16)]],
-                }
-            )
-        )
-        a = sorted(map(tuple, band_buckets(sigs, bands=4).collect()))
-        b = sorted(map(tuple, band_buckets(sigs, bands=4, n_hashes=16).collect()))
-        assert a == b
-
-    def test_bigint_flavor_equal(self, spark):
-        import pandas as pd
-
-        sigs = spark.createDataFrame(
-            pd.DataFrame({"doc_id": [0], "signature": [[int(x) for x in range(16)]]})
-        )
-        a = sorted(map(tuple, band_buckets(sigs, bands=4).collect()))
-        b = sorted(map(tuple, band_buckets(sigs, bands=4, n_hashes=16).collect()))
-        assert a == b
-
-    def test_carry_signature_equal(self, spark):
-        import pandas as pd
-
-        sigs = spark.createDataFrame(
-            pd.DataFrame({"doc_id": [3], "signature": [[f"{i:032x}" for i in range(16)]]})
-        )
-        a = sorted(map(tuple, band_buckets(sigs, bands=4, carry_signature=True).collect()))
-        b = sorted(
-            map(tuple, band_buckets(sigs, bands=4, carry_signature=True, n_hashes=16).collect())
-        )
-        assert a == b
+        bigint = [(0, list(range(16))), (1, [7 * i - 40 for i in range(13)]), (2, [2**40, -3])]
+        strs = [(3, [f"{i:032x}" for i in range(16)]), (4, [f"{i + 7:032x}" for i in range(13)])]
+        for rows in (bigint, strs):
+            sigs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "signature"]))
+            for bands in (4, 3):
+                want = self._reference(rows, bands)
+                assert sorted(map(tuple, band_buckets(sigs, bands=bands).collect())) == want
+                carried = band_buckets(sigs, bands=bands, carry_signature=True).collect()
+                assert sorted((r.doc_id, r.band, r.bucket) for r in carried) == want
+                assert all(r.signature == dict(rows)[r.doc_id] for r in carried)
+            # no higher-order-function lambda: the keys run under codegen
+            plan = band_buckets(sigs)._jdf.queryExecution().optimizedPlan().toString()
+            assert "lambdafunction" not in plan
 
     def test_append_with_wrong_declared_n_hashes_falls_back_to_generic(self, spark, tmp_path):
         # r7 review: the unrolled form indexes components 0..n-1 blindly, so

@@ -72,13 +72,13 @@ class TestMinhashLSH:
         rows += [(flood_n, "a totally unrelated sentence about cats"), (flood_n + 1, "der hund ist gut")]
         d = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
         sig = D.minhash_signatures(d, n_hashes=16)
-        cand = D.minhash_lsh_candidates(sig, bands=4, rows_per_band=4)
+        cand = D.minhash_lsh_candidates(sig, bands=4)
         assert cand.count() == flood_n * (flood_n - 1) // 2  # exactly the true dup pairs
 
     def test_bucket_cap_bounds_nearflood_and_keeps_recall_elsewhere(self, spark, docs_df):
         sig = D.minhash_signatures(docs_df, n_hashes=32)
-        capped = D.minhash_lsh_candidates(sig, bands=8, rows_per_band=4, bucket_cap=3)
-        uncapped = {(r.left_id, r.right_id) for r in D.minhash_lsh_candidates(sig, bands=8, rows_per_band=4).collect()}
+        capped = D.minhash_lsh_candidates(sig, bands=8, bucket_cap=3)
+        uncapped = {(r.left_id, r.right_id) for r in D.minhash_lsh_candidates(sig, bands=8).collect()}
         got = {(r.left_id, r.right_id) for r in capped.collect()}
         assert got <= uncapped  # cap only ever removes candidates
         assert (1, 2) in got  # exact dups survive (collapse path, not buckets)
