@@ -538,22 +538,37 @@ class TestBandBucketsUnrolled:
                 out.append((doc_id, b, hashlib.md5(key.encode()).hexdigest()))
         return sorted(out)
 
-    def test_matches_python_reference(self, spark):
+    BIGINT = [(0, list(range(16))), (1, [7 * i - 40 for i in range(13)]), (2, [2**40, -3])]
+    MD5 = [(3, [f"{i:032x}" for i in range(16)]), (4, [f"{i + 7:032x}" for i in range(13)])]
+
+    @staticmethod
+    def _sigs(spark, rows):
         import pandas as pd
 
-        bigint = [(0, list(range(16))), (1, [7 * i - 40 for i in range(13)]), (2, [2**40, -3])]
-        strs = [(3, [f"{i:032x}" for i in range(16)]), (4, [f"{i + 7:032x}" for i in range(13)])]
-        for rows in (bigint, strs):
-            sigs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "signature"]))
+        return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "signature"]))
+
+    def _check_flavor(self, spark, rows):
+        sigs = self._sigs(spark, rows)
+        for bands in (4, 3):
+            want = self._reference(rows, bands)
+            assert sorted(map(tuple, band_buckets(sigs, bands=bands).collect())) == want
+        # no higher-order-function lambda: the keys run under codegen
+        plan = band_buckets(sigs)._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan
+
+    def test_md5_flavor_equal(self, spark):
+        self._check_flavor(spark, self.MD5)
+
+    def test_bigint_flavor_equal(self, spark):
+        self._check_flavor(spark, self.BIGINT)
+
+    def test_carry_signature_equal(self, spark):
+        for rows in (self.BIGINT, self.MD5):
+            sigs = self._sigs(spark, rows)
             for bands in (4, 3):
-                want = self._reference(rows, bands)
-                assert sorted(map(tuple, band_buckets(sigs, bands=bands).collect())) == want
                 carried = band_buckets(sigs, bands=bands, carry_signature=True).collect()
-                assert sorted((r.doc_id, r.band, r.bucket) for r in carried) == want
+                assert sorted((r.doc_id, r.band, r.bucket) for r in carried) == self._reference(rows, bands)
                 assert all(r.signature == dict(rows)[r.doc_id] for r in carried)
-            # no higher-order-function lambda: the keys run under codegen
-            plan = band_buckets(sigs)._jdf.queryExecution().optimizedPlan().toString()
-            assert "lambdafunction" not in plan
 
     def test_append_with_wrong_declared_n_hashes_falls_back_to_generic(self, spark, tmp_path):
         # r7 review: the unrolled form indexes components 0..n-1 blindly, so
