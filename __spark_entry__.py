@@ -1093,12 +1093,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # and the query runs against the committed postings — no corpus
         # re-hash. Reused across invocations while the FIXTURE KEY matches
         # (bench reruns hit the committed index, which is the behavior
-        # being measured); the key is (rows, size, mtime) of the embeddings
-        # parquet, NOT just the row count — a regenerated fixture with the
-        # same row count but different vectors must rebuild (a stale index
-        # answered from old vectors when only rows were compared; caught by
-        # the r7 sf1 re-sweep after the make_sf l_linenumber fix shifted
-        # the generator's rng stream).
+        # being measured); the key is the md5 of the embeddings parquet's
+        # bytes, NOT the row count — a regenerated fixture with the same row
+        # count but different vectors must rebuild (a stale index answered
+        # from old vectors when only rows were compared; caught by the r7
+        # sf1 re-sweep after the make_sf l_linenumber fix shifted the
+        # generator's rng stream). Bytes, not stat fields: a re-touch of the
+        # same bytes must keep the index, and a same-size rewrite with its
+        # mtime restored must not. Not the parquet footer alone: two files
+        # with different vectors can share chunk sizes and min/max stats.
         import hashlib
         import shutil
         import tempfile
@@ -1109,8 +1112,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         emb_path = os.path.join(sf, "embeddings.parquet")
         n_rows = pq.ParquetFile(emb_path).metadata.num_rows
-        st = os.stat(emb_path)
-        fixture_key = f"{n_rows}:{st.st_size}:{st.st_mtime_ns}"
+        digest = hashlib.md5()
+        with open(emb_path, "rb") as f:
+            for block in iter(lambda: f.read(1 << 20), b""):
+                digest.update(block)
+        fixture_key = digest.hexdigest()
         root = os.path.join(
             tempfile.gettempdir(),
             f"q_annstore_{kind}_{hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]}",

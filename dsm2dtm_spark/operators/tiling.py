@@ -369,8 +369,8 @@ def process_tiles(
         # a caller-known tile count caps the explicit exchange at one
         # partition per tile (the useful maximum): each surplus partition is
         # an EMPTY mapInPandas task that still pays the full python-worker
-        # protocol round trip (measured ~10 ms each — 64 empty tasks ≈
-        # 0.7 s on the 64-tile bench table). Big jobs are unaffected: the
+        # protocol round trip (measured on 4 cores: each adds ~16 ms of
+        # stage wall, so 60 empty tasks ≈ 1 s). Big jobs are unaffected: the
         # 4×cores term governs as soon as tiles ≥ 4×cores (guide §2).
         n_parts = max(min(n_parts, n_tiles_hint), N_SALT)
     # repartition FIRST, attach the broadcast stats on the reduce side (r7):

@@ -4,7 +4,11 @@ Single place that encodes the execution-model decisions (SURVEY.md §4.2):
 AQE on (runtime re-planning + skew-join splitting + partition coalescing),
 Arrow on with a small batch row cap (rows carry multi-MB image payloads — the
 default 10k rows/batch would materialize GBs per Arrow batch in the Python
-worker), and a shuffle-partition count sized to the local core budget.
+worker), a shuffle-partition count sized to the local core budget, and
+the engine's own Python daemon (``_daemon``): reused workers skip PySpark's
+per-task re-read of unchanged zip archives on ``sys.path``. The workers find
+the engine, and that daemon, at the import root of this package, wherever
+the driver was started.
 """
 
 from __future__ import annotations
@@ -12,6 +16,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+import dsm2dtm_spark
 
 ARROW_BATCH_ROWS = 64  # ≈ 64 × (few MB) decoded per python-worker batch
 
@@ -24,6 +30,9 @@ _MALLOC_ENV = {
     "MALLOC_MMAP_THRESHOLD_": "1073741824",
     "MALLOC_TRIM_THRESHOLD_": "268435456",
 }
+
+# the directory (or zip) that holds the `dsm2dtm_spark` package
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(dsm2dtm_spark.__file__)))
 
 
 def get_spark(
@@ -64,6 +73,16 @@ def get_spark(
     )
     for k, v in _MALLOC_ENV.items():
         b = b.config(f"spark.executorEnv.{k}", v)  # real clusters: per-executor
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    # workers inherit neither the driver's sys.path nor, off the repo root,
+    # its cwd: put the engine's import root on their path before naming a
+    # daemon module that lives in it
+    worker_path = extra_conf.pop("spark.executorEnv.PYTHONPATH", None)
+    b = b.config(
+        "spark.executorEnv.PYTHONPATH",
+        os.pathsep.join(p for p in (worker_path, _IMPORT_ROOT) if p),
+    )
+    b = b.config("spark.python.daemon.module", "dsm2dtm_spark._daemon")
+    for k, v in extra_conf.items():
         b = b.config(k, v)
     return b.getOrCreate()

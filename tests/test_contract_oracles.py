@@ -182,3 +182,51 @@ def test_contract_tables_match_regeneration(tmp_path):
     fresh = synth.image_table(n_rows=80, seed=42, sizes=(50, 64, 80), dup_fraction=0.05)
     assert list(committed.columns) == list(fresh.columns)
     pd.testing.assert_frame_equal(committed, fresh)
+
+
+def test_ann_fixture_reuse_follows_content(spark, tmp_path, monkeypatch):
+    """The persisted ANN index behind emb_*_topk_persisted is reused while
+    the embeddings parquet holds the same bytes, re-touched or not, and is
+    rebuilt when a rewrite keeps the row count but changes the vectors
+    (ADVICE r07 #3)."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from dsm2dtm_spark.operators.annstore import AnnIndexStore
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    emb = sf / "embeddings.parquet"
+    shutil.copy(os.path.join(SF_DIR, "embeddings.parquet"), emb)
+    built = []
+    create = AnnIndexStore.create.__func__
+
+    def counting_create(cls, root, **kw):
+        built.append(root)
+        return create(cls, root, **kw)
+
+    monkeypatch.setattr(AnnIndexStore, "create", classmethod(counting_create))
+
+    def topk():
+        rows = entry.queries()["emb_ivf_topk_persisted"](spark, str(sf)).toPandas()
+        return sorted(map(tuple, rows.itertuples(index=False)))
+
+    try:
+        first = topk()
+        assert len(built) == 1
+        st = os.stat(emb)
+        os.utime(emb, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))  # same bytes, new mtime
+        assert topk() == first
+        assert len(built) == 1
+
+        t = pq.read_table(emb)  # same rows, vectors handed round in reverse
+        moved = t.column("embedding").take(list(range(t.num_rows))[::-1])
+        pq.write_table(t.set_column(1, "embedding", moved), emb)
+        assert pq.ParquetFile(emb).metadata.num_rows == t.num_rows
+        second = topk()
+        assert len(built) == 2
+        assert second != first
+    finally:
+        for root in set(built):
+            shutil.rmtree(root, ignore_errors=True)
