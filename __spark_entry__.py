@@ -842,11 +842,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import shutil
         import tempfile
 
-        from dsm2dtm_spark.operators.incremental import (
-            BucketedSignatureStore,
-            dedup_against,
-            sign_documents,
-        )
+        from dsm2dtm_spark.operators.incremental import BucketedSignatureStore, incremental_dedup
 
         # same one-shuffle checkpoint as docs_incremental_dedup (r7): the
         # store append and the fresh-side dedup otherwise each re-run the
@@ -862,10 +858,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "doc_id", F.col("doc_id") + 100000
             )
         )
-        # FIXED per-sf root, rebuilt at call start: the store must outlive
-        # the returned (lazy) DataFrame's execution, so cleanup cannot
-        # happen after return — instead each call tears down the previous
-        # call's store, capping the leak at one store per sf dir
+        # FIXED per-sf root, rebuilt at call start: each call tears down
+        # the previous call's store, capping the leak at one store per sf dir
         root = os.path.join(
             tempfile.gettempdir(),
             f"q_bstore_{hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]}",
@@ -874,18 +868,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         store = BucketedSignatureStore(root, n_buckets=16)
         spark.sql(f"DROP TABLE IF EXISTS {store.sig_table}")
         spark.sql(f"DROP TABLE IF EXISTS {store.bands_table}")
-        store.append(
-            sign_documents(corpus, method="md5"),
-            summary={"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}},
-        )
-        decisions, _ = dedup_against(
-            fresh,
-            store.read_signatures(spark),
-            store.read_bands(spark),
-            method="md5",
-            threshold=0.75,
-            broadcast_fresh=False,
-        )
+        # bootstrap with the corpus, then dedup the batch through the same
+        # store-backed step the ingest job runs (the layout resolves the
+        # shuffle path) without committing it
+        incremental_dedup(store, corpus, method="md5")
+        decisions = incremental_dedup(store, fresh, method="md5", threshold=0.75, commit=False)
         return decisions.select("doc_id", "verdict")
 
     q["docs_incremental_dedup_bucketed"] = docs_incremental_dedup_bucketed

@@ -156,7 +156,7 @@ def gap_fill_idw(ground: np.ndarray, nodata: float, max_dist_px: float, k: int =
     holes within range with the inverse-distance-squared weighted mean of the
     k nearest valid cells found in a certified growing window. NOT used on
     the reference-parity path (the reference gathers the single nearest
-    value); opt-in via the pipeline's ``inpaint='idw'``."""
+    value); callers apply it to a ground grid themselves."""
     invalid = ground == nodata
     dtm = ground.astype(np.float32, copy=True)
     if not invalid.any() or not (~invalid).any():
@@ -215,7 +215,6 @@ def _standard_path(
     slope: float | None,
     init_threshold: float,
     max_threshold: float,
-    inpaint: str = "nearest",
 ) -> np.ndarray:
     """Full-resolution pipeline: slope → params → PMF → refine → smooth →
     gap fill (reference algorithm.py:349-445)."""
@@ -229,8 +228,6 @@ def _standard_path(
     ground = pmf(dsm, nodata, p.init_window, p.max_window, p.slope_px, init_threshold, max_threshold)
     ground = refine(ground, nodata, p.refine_sigma)
     ground = final_smooth(ground, nodata, p.final_sigma)
-    if inpaint == "idw":
-        return gap_fill_idw(ground, nodata, p.gap_dist_px)
     return gap_fill(ground, nodata, p.gap_dist_px)
 
 
@@ -288,19 +285,16 @@ def dsm_to_dtm(
     init_threshold: float = PMF_INIT_THRESHOLD,
     max_threshold: float = PMF_MAX_THRESHOLD,
     nodata: float = NODATA_DEFAULT,
-    inpaint: str = "nearest",
 ) -> np.ndarray:
     """DSM→DTM, array in / array out (reference algorithm.py:448-487).
 
     Routes to the coarse path when the collapsed cell size is finer than
     0.9 × 0.5 m, else runs the standard pipeline at native resolution.
-    ``inpaint='idw'`` swaps the reference's nearest-value gap fill for the
-    engine's IDW variant (engine extension; reference parity keeps 'nearest').
     """
     cell_size = max((abs(resolution[0]) + abs(resolution[1])) / 2.0, 0.001)
     if cell_size < MIN_PROCESS_RES_M * 0.9:
         return _coarse_path(dsm, cell_size, nodata, radius_m, slope, init_threshold, max_threshold)
-    return _standard_path(dsm, cell_size, nodata, radius_m, slope, init_threshold, max_threshold, inpaint=inpaint)
+    return _standard_path(dsm, cell_size, nodata, radius_m, slope, init_threshold, max_threshold)
 
 
 def validate_job_params(radius_m: float, slope: float | None) -> None:

@@ -85,6 +85,12 @@ class SignatureStore:
     ['bucket'])``) so the band table's footer min/max make the candidate
     join's scan prunable.
 
+    This class owns the layout-independent half of a store — the params
+    check, the append sequence and the hot-bucket census — and the plain
+    snapshot layout. ``BucketedSignatureStore`` overrides only the layout:
+    manifest, table registration, table writes, reads, row counts and
+    ``compact``.
+
     ``bucket_cap``: configuring the flood cap ON THE STORE moves the
     hot-bucket census to the write path (VERDICT r4 #5): each append
     commits the new rows' per-(band, bucket) partial counts to a third
@@ -105,23 +111,13 @@ class SignatureStore:
     BROADCAST_FRESH_DEFAULT = True
 
     def __init__(self, root: str, bucket_cap: int | None = None):
-        import os
-
-        if os.path.exists(os.path.join(root, "store.json")):
-            raise ValueError(
-                f"{root} holds a BucketedSignatureStore (store.json manifest); "
-                "opening it as a plain SignatureStore would silently ignore the "
-                "committed state and re-bootstrap — reopen with "
-                "BucketedSignatureStore (jobs: --bucketed-store)."
-            )
         self.root = root
-        self.signatures = SnapshotTable(f"{root}/signatures")
-        self.bands = SnapshotTable(f"{root}/bands")
+        self._open_layout()
         self.bucket_stats = SnapshotTable(f"{root}/bucket_stats")
         persisted = self._persisted_cap()
         if bucket_cap is not None and persisted is not None and bucket_cap != persisted:
             raise ValueError(
-                f"SignatureStore at {root} maintains its hot-bucket census "
+                f"{type(self).__name__} at {root} maintains its hot-bucket census "
                 f"for bucket_cap={persisted}; reopen with that cap (got {bucket_cap})."
             )
         self.bucket_cap = bucket_cap if bucket_cap is not None else persisted
@@ -134,6 +130,25 @@ class SignatureStore:
             self.bucket_cap is not None and persisted is None and not self.is_empty()
         )
 
+    # ------------------------------------------------ layout: snapshot tables
+
+    def _open_layout(self) -> None:
+        import os
+
+        if os.path.exists(os.path.join(self.root, "store.json")):
+            raise ValueError(
+                f"{self.root} holds a BucketedSignatureStore (store.json manifest); "
+                "opening it as a plain SignatureStore would silently ignore the "
+                "committed state and re-bootstrap — reopen with "
+                "BucketedSignatureStore (jobs: --bucketed-store)."
+            )
+        self.signatures = SnapshotTable(f"{self.root}/signatures")
+        self.bands = SnapshotTable(f"{self.root}/bands")
+
+    def _write(self, kind: str, df: DataFrame, summary: dict | None) -> None:
+        """Commit ``df`` to the ``kind`` sub-table ('signatures' or 'bands')."""
+        getattr(self, kind).write_dataframe(df, summary=summary)
+
     def is_empty(self) -> bool:
         return self.signatures.current_snapshot() is None
 
@@ -142,6 +157,41 @@ class SignatureStore:
         bootstrap). Empty dict for an empty store."""
         snap = self.signatures.current_snapshot()
         return (snap.summary or {}).get("sig_params", {}) if snap else {}
+
+    def read_signatures(self, spark) -> DataFrame:
+        return self.signatures.read(spark)
+
+    def read_bands(self, spark) -> DataFrame:
+        return self.bands.read(spark)
+
+    def signature_row_count(self) -> int | None:
+        """Footer-metadata row count of the signature table (the repair
+        high-watermark; zero data scan)."""
+        return self.signatures.row_count()
+
+    def band_row_count(self) -> int | None:
+        """Footer-metadata row count of the band table (the second repair
+        watermark: complete ⇔ bands == signatures × bands_per_doc)."""
+        return self.bands.row_count()
+
+    def compact(self, spark, **kwargs) -> dict:
+        """Table maintenance: every ingest appends a few small files to each
+        sub-table, and a year of daily batches turns the candidate join's
+        scan into a footer-listing exercise. Folds both sub-tables' small
+        files (bands clustered by ``bucket`` so the rewritten footers' minima
+        and maxima make ``read(where=...)`` file skipping sharp). Returns
+        {'signatures': n_compacted, 'bands': n_compacted}."""
+        kwargs.pop("sort_by", None)  # bands' clustering key is fixed
+        s = self.signatures.compact(spark, **kwargs)
+        b = self.bands.compact(spark, sort_by=["bucket"], **kwargs)
+        n_stats = self._rollup_census(spark)
+        return {
+            "signatures": (s.summary.get("compacted", 0) if s else 0),
+            "bands": (b.summary.get("compacted", 0) if b else 0),
+            "bucket_stats": n_stats,
+        }
+
+    # ------------------------------------------------ layout-independent
 
     def check_params(self, n_hashes: int, bands: int, shingle_n: int, method: str) -> None:
         """Fail fast when a batch's signature parameters differ from the
@@ -165,31 +215,23 @@ class SignatureStore:
         the most expensive stage of every ingest. With a configured
         ``bucket_cap`` the hot-bucket census updates here too (write-path
         amortization; see class docstring)."""
-        if self.bucket_cap is not None:
-            # backfill BEFORE this batch's rows land in the band table, or
-            # the later census read would double-count them
-            self._backfill_census_if_needed(signatures_df.sparkSession)
+        # backfill BEFORE this batch's rows land in the band table, or the
+        # later census read would double-count them
+        self._backfill_census_if_needed(signatures_df.sparkSession)
         signatures_df = signatures_df.localCheckpoint(eager=True)
-        self.signatures.write_dataframe(signatures_df, summary=summary)
-        band_rows = band_buckets(signatures_df, bands=bands).localCheckpoint(eager=False)
-        self.bands.write_dataframe(band_rows, summary=summary)
-        if self.bucket_cap is not None:
-            self._update_bucket_census(band_rows)
-
-    def band_row_count(self) -> int | None:
-        """Footer-metadata row count of the band table (the second repair
-        watermark: complete ⇔ bands == signatures × bands_per_doc)."""
-        return self.bands.row_count()
+        self._write("signatures", signatures_df, summary)
+        self._add_bands(band_buckets(signatures_df, bands=bands).localCheckpoint(eager=False), summary)
 
     def append_band_rows(self, band_rows: DataFrame, summary: dict | None = None) -> None:
         """Commit band rows WITHOUT signature rows — the repair path for
         the crash window where the signatures commit landed but the bands
         commit did not (``repair_store`` derives the rows from the STORED
         signatures, so nothing is re-shingled and nothing duplicates)."""
-        if self.bucket_cap is not None:
-            self._backfill_census_if_needed(band_rows.sparkSession)
-        band_rows = band_rows.localCheckpoint(eager=True)
-        self.bands.write_dataframe(band_rows, summary=summary)
+        self._backfill_census_if_needed(band_rows.sparkSession)
+        self._add_bands(band_rows.localCheckpoint(eager=True), summary)
+
+    def _add_bands(self, band_rows: DataFrame, summary: dict | None) -> None:
+        self._write("bands", band_rows, summary)
         if self.bucket_cap is not None:
             self._update_bucket_census(band_rows)
 
@@ -208,7 +250,7 @@ class SignatureStore:
         append's partial counts land (a caller appending first would double-
         count its own batch once the backfill later re-reads it), which is
         why every census writer and reader calls this first."""
-        if not getattr(self, "_census_backfill_pending", False):
+        if not self._census_backfill_pending:
             return
         self._census_backfill_pending = False
         counts = self.read_bands(spark).groupBy("band", "bucket").agg(F.count("*").alias("n"))
@@ -308,11 +350,6 @@ class SignatureStore:
         )
         return spark.createDataFrame([(int(b), str(k)) for b, k in hot], schema)
 
-    def signature_row_count(self) -> int | None:
-        """Footer-metadata row count of the signature table (the repair
-        high-watermark; zero data scan)."""
-        return self.signatures.row_count()
-
     def _rollup_census(self, spark) -> int:
         """Fold per-append census partials into one row per (band, bucket),
         carrying the cap/hot-list summary keys — the append-time probe then
@@ -330,32 +367,9 @@ class SignatureStore:
         self.bucket_stats.write_dataframe(rolled, operation="rollup", summary=carried)
         return len(snap.files)
 
-    def read_signatures(self, spark) -> DataFrame:
-        return self.signatures.read(spark)
 
-    def read_bands(self, spark) -> DataFrame:
-        return self.bands.read(spark)
-
-    def compact(self, spark, **kwargs) -> dict:
-        """Table maintenance: every ingest appends a few small files to each
-        sub-table, and a year of daily batches turns the candidate join's
-        scan into a footer-listing exercise. Folds both sub-tables' small
-        files (bands clustered by ``bucket`` so the rewritten footers' minima
-        and maxima make ``read(where=...)`` file skipping sharp). Returns
-        {'signatures': n_compacted, 'bands': n_compacted}."""
-        kwargs.pop("sort_by", None)  # bands' clustering key is fixed
-        s = self.signatures.compact(spark, **kwargs)
-        b = self.bands.compact(spark, sort_by=["bucket"], **kwargs)
-        n_stats = self._rollup_census(spark)
-        return {
-            "signatures": (s.summary.get("compacted", 0) if s else 0),
-            "bands": (b.summary.get("compacted", 0) if b else 0),
-            "bucket_stats": n_stats,
-        }
-
-
-class BucketedSignatureStore:
-    """SignatureStore variant whose sub-tables are hive-BUCKETED EXTERNAL
+class BucketedSignatureStore(SignatureStore):
+    """SignatureStore layout whose sub-tables are hive-BUCKETED EXTERNAL
     tables — ``signatures`` bucketed+sorted by ``fingerprint``, ``bands`` by
     ``(band, bucket)`` (operators/bucketing.py applied to the dedup store;
     VERDICT r4 #4). The bucket files ARE the shuffle, paid once at write:
@@ -364,31 +378,35 @@ class BucketedSignatureStore:
 
     Use this (with ``dedup_against(broadcast_fresh=False)``) when batches
     are too big to broadcast; the default SignatureStore + broadcast probes
-    cover the common small-batch-vs-huge-store case.
+    cover the common small-batch-vs-huge-store case. Only the layout
+    differs: the params check, the append sequence, the hot list and the
+    ``bucket_stats`` census are the base class's.
 
     Storage is self-contained under ``root``: parquet bucket files in
     versioned subdirectories (``signatures_v0`` …, bumped by ``compact``)
-    plus a small JSON manifest (column DDL + bucket spec for catalog
-    re-registration, sig_params, cumulative row count — the repair
-    high-watermark — and append summaries) updated atomically AFTER the
-    table writes, plus the same ``bucket_stats`` census table as
-    SignatureStore. The session catalog is only a cache: any new Spark
-    session (a later spark-submit run) re-registers the tables from the
-    manifest DDL on first touch, and the bucketed-read property survives
-    because it lives in the catalog entry the manifest recreates.
-    Single-writer, like every snapshot table here. Crash points: between
-    table write and manifest update ⇒ the row count is stale-low, which
-    only makes the next repair run its anti-join (conservative); mid-compact
-    ⇒ the manifest still points at the old version and the half-written new
-    version directory is swept by the next compact."""
+    plus a small fixed-size JSON manifest (column DDL + bucket spec for
+    catalog re-registration, sig_params, and the cumulative row count — the
+    repair high-watermark) updated atomically AFTER each table write. The
+    session catalog is only a cache: any new Spark session (a later
+    spark-submit run) re-registers the tables from the manifest DDL on
+    first touch, and the bucketed-read property survives because it lives
+    in the catalog entry the manifest recreates. Single-writer, like every
+    snapshot table here. Crash points: between a table write and its
+    manifest update ⇒ the row count is stale-low, which only makes the next
+    repair run its anti-join (conservative); mid-compact ⇒ the manifest
+    still points at the old version and the half-written new version
+    directory is swept by the next compact."""
 
-    MAX_HOT_LIST = SignatureStore.MAX_HOT_LIST
     # the bucket files serve shuffle joins exchange-free; broadcast probes
     # would waste the layout
     BROADCAST_FRESH_DEFAULT = False
     _BUCKET_COLS = {"signatures": ["fingerprint"], "bands": ["band", "bucket"]}
 
     def __init__(self, root: str, bucket_cap: int | None = None, n_buckets: int = 16):
+        self.n_buckets = n_buckets
+        super().__init__(root, bucket_cap)
+
+    def _open_layout(self) -> None:
         import hashlib
         import os
 
@@ -396,37 +414,21 @@ class BucketedSignatureStore:
         # merely opening a root with the plain class scaffolds empty
         # signatures/meta dirs, and that must not brick the root for the
         # bucketed layout (r5 review finding)
-        if os.path.exists(os.path.join(root, "signatures", "meta", "CURRENT")) and not os.path.exists(
-            os.path.join(root, "store.json")
-        ):
+        if os.path.exists(
+            os.path.join(self.root, "signatures", "meta", "CURRENT")
+        ) and not os.path.exists(self._meta_path()):
             raise ValueError(
-                f"{root} holds a plain SignatureStore (snapshot sub-tables); "
+                f"{self.root} holds a plain SignatureStore (snapshot sub-tables); "
                 "opening it as a BucketedSignatureStore would silently ignore "
                 "the committed state and re-bootstrap — reopen with "
                 "SignatureStore (jobs: drop --bucketed-store)."
             )
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-        digest = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:10]
+        os.makedirs(self.root, exist_ok=True)
+        digest = hashlib.md5(os.path.abspath(self.root).encode()).hexdigest()[:10]
         self.sig_table = f"sigstore_{digest}_signatures"
         self.bands_table = f"sigstore_{digest}_bands"
-        self.bucket_stats = SnapshotTable(f"{root}/bucket_stats")
-        meta = self._meta()
-        persisted_buckets = meta.get("n_buckets")
-        if persisted_buckets is not None and persisted_buckets != n_buckets:
-            n_buckets = persisted_buckets  # layout is fixed at creation
-        self.n_buckets = n_buckets
-        persisted_cap = self._persisted_cap()
-        if bucket_cap is not None and persisted_cap is not None and bucket_cap != persisted_cap:
-            raise ValueError(
-                f"BucketedSignatureStore at {root} maintains its hot-bucket census "
-                f"for bucket_cap={persisted_cap}; reopen with that cap (got {bucket_cap})."
-            )
-        self.bucket_cap = bucket_cap if bucket_cap is not None else persisted_cap
-        # same first-enable census hole as the plain store (ADVICE r5)
-        self._census_backfill_pending = (
-            self.bucket_cap is not None and persisted_cap is None and not self.is_empty()
-        )
+        # the layout is fixed at creation: the manifest's count wins
+        self.n_buckets = self._meta().get("n_buckets") or self.n_buckets
 
     # --------------------------------------------------------- manifest
 
@@ -454,20 +456,13 @@ class BucketedSignatureStore:
             json.dump(meta, f, indent=1)
         os.replace(tmp, self._meta_path())
 
-    # -------------------------------------------------------- interface
+    # --------------------------------------------------------- layout
 
     def is_empty(self) -> bool:
         return not self._meta().get("rows")
 
     def params(self) -> dict:
         return self._meta().get("sig_params", {})
-
-    check_params = SignatureStore.check_params
-    _persisted_cap = SignatureStore._persisted_cap
-    _update_bucket_census = SignatureStore._update_bucket_census
-    _backfill_census_if_needed = SignatureStore._backfill_census_if_needed
-    _rollup_census = SignatureStore._rollup_census
-    hot_buckets = SignatureStore.hot_buckets
 
     def _table_name(self, kind: str) -> str:
         return self.sig_table if kind == "signatures" else self.bands_table
@@ -527,43 +522,35 @@ class BucketedSignatureStore:
             else:
                 spark.catalog.refreshTable(name)
 
-    def append(self, signatures_df: DataFrame, bands: int = 4, summary: dict | None = None) -> None:
-        signatures_df = signatures_df.localCheckpoint(eager=True)
-        n_new = signatures_df.count()  # cached blocks — cheap; keeps the manifest's watermark
-        spark = signatures_df.sparkSession
-        self._ensure_registered(spark)
-        if self.bucket_cap is not None:
-            self._backfill_census_if_needed(spark)
+    def _write(self, kind: str, df: DataFrame, summary: dict | None) -> None:
+        """Append ``df`` to the ``kind`` bucket table (creating it as an
+        EXTERNAL table on first write), then commit the manifest: the
+        signatures write moves the row watermark and records sig_params."""
+        self._ensure_registered(df.sparkSession)
         meta = self._meta()
         tables = meta.setdefault("tables", {})
-        band_rows = band_buckets(signatures_df, bands=bands).localCheckpoint(eager=False)
-        for kind, df in (("signatures", signatures_df), ("bands", band_rows)):
-            cols = self._BUCKET_COLS[kind]
-            writer = (
-                df.write.bucketBy(self.n_buckets, *cols).sortBy(*cols).format("parquet")
+        cols = self._BUCKET_COLS[kind]
+        writer = df.write.bucketBy(self.n_buckets, *cols).sortBy(*cols).format("parquet")
+        if kind in tables:
+            writer.mode("append").saveAsTable(self._table_name(kind))
+        else:
+            # path option ⇒ EXTERNAL table: data under the store root,
+            # catalog entry recreatable from the manifest in any session
+            writer.mode("overwrite").option("path", self._location(kind, 0)).saveAsTable(
+                self._table_name(kind)
             )
-            if kind in tables:
-                writer.mode("append").saveAsTable(self._table_name(kind))
-            else:
-                entry = {
-                    "version": 0,
-                    "ddl": ", ".join(
-                        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-                    ),
-                }
-                # path option ⇒ EXTERNAL table: data under the store root,
-                # catalog entry recreatable from the manifest in any session
-                writer.mode("overwrite").option(
-                    "path", self._location(kind, 0)
-                ).saveAsTable(self._table_name(kind))
-                tables[kind] = entry
-        if self.bucket_cap is not None:
-            self._update_bucket_census(band_rows)
-        meta["rows"] = meta.get("rows", 0) + n_new
+            tables[kind] = {
+                "version": 0,
+                "ddl": ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields),
+            }
+        if kind == "signatures":
+            meta["rows"] = meta.get("rows", 0) + df.count()  # checkpointed blocks — cheap
+            if summary and summary.get("sig_params"):
+                meta["sig_params"] = summary["sig_params"]
         meta["n_buckets"] = self.n_buckets
-        if summary and summary.get("sig_params"):
-            meta["sig_params"] = summary["sig_params"]
-        meta.setdefault("summaries", []).append(summary or {})
+        # older manifests carry an unread per-append summary log, re-parsed
+        # by every _meta() call; drop it so the manifest stays fixed-size
+        meta.pop("summaries", None)
         self._write_meta(meta)
 
     def read_signatures(self, spark) -> DataFrame:
@@ -598,26 +585,6 @@ class BucketedSignatureStore:
         """Footer-metadata row count of the band table (summed num_rows over
         the current version directory — zero data pages read)."""
         return self._footer_rows("bands")
-
-    def append_band_rows(self, band_rows: DataFrame, summary: dict | None = None) -> None:
-        """Bands-only repair append (see SignatureStore.append_band_rows);
-        the manifest row watermark tracks signatures, so only the census
-        moves here."""
-        band_rows = band_rows.localCheckpoint(eager=True)
-        spark = band_rows.sparkSession
-        self._ensure_registered(spark)
-        if self.bucket_cap is not None:
-            self._backfill_census_if_needed(spark)
-        cols = self._BUCKET_COLS["bands"]
-        (
-            band_rows.write.mode("append")
-            .bucketBy(self.n_buckets, *cols)
-            .sortBy(*cols)
-            .format("parquet")
-            .saveAsTable(self.bands_table)
-        )
-        if self.bucket_cap is not None:
-            self._update_bucket_census(band_rows)
 
     def sync_row_watermark(self, spark) -> int:
         """Correct a stale-low manifest row count — the crash window between
@@ -1012,6 +979,50 @@ def dedup_against(
     return decisions, keep_sigs
 
 
+def _dedup_step(
+    store: SignatureStore,
+    fresh: DataFrame,
+    *,
+    text_col: str,
+    id_col: str,
+    threshold: float,
+    n_hashes: int,
+    bands: int,
+    shingle_n: int,
+    method: str,
+    bucket_cap: int | None,
+    broadcast_fresh: bool | None,
+) -> tuple[DataFrame, DataFrame]:
+    """Dedup ``fresh`` against ``store`` WITHOUT committing: returns
+    ``(decisions, kept signatures)``, the pair ``dedup_against`` returns.
+    An empty store keeps the whole batch (bootstrap). Otherwise the batch
+    must match the store's signature parameters, and the decisions are
+    pinned before the caller mutates the store."""
+    if store.is_empty():
+        return (
+            fresh.select(F.col(id_col), F.lit("keep").alias("verdict")),
+            sign_documents(fresh, text_col, id_col, n_hashes, shingle_n, method),
+        )
+    store.check_params(n_hashes, bands, shingle_n, method)
+    spark = fresh.sparkSession
+    decisions, keep_sigs = dedup_against(
+        fresh,
+        store.read_signatures(spark),
+        store.read_bands(spark),
+        text_col=text_col,
+        id_col=id_col,
+        threshold=threshold,
+        n_hashes=n_hashes,
+        bands=bands,
+        shingle_n=shingle_n,
+        method=method,
+        bucket_cap=bucket_cap,
+        broadcast_fresh=store.BROADCAST_FRESH_DEFAULT if broadcast_fresh is None else broadcast_fresh,
+        hot_buckets=store.hot_buckets(spark, bucket_cap),
+    )
+    return decisions.localCheckpoint(eager=True), keep_sigs
+
+
 def incremental_dedup(
     store: SignatureStore,
     fresh: DataFrame,
@@ -1036,34 +1047,15 @@ def incremental_dedup(
     layout is built for: broadcast probes for the plain SignatureStore,
     shuffle joins (which its bucket files serve exchange-free) for
     BucketedSignatureStore. Pass an explicit bool to override."""
-    if broadcast_fresh is None:
-        broadcast_fresh = getattr(store, "BROADCAST_FRESH_DEFAULT", True)
-    spark = fresh.sparkSession
-    sig_params = {"n_hashes": n_hashes, "bands": bands, "shingle_n": shingle_n, "method": method}
-    if store.is_empty():
-        sigs = sign_documents(fresh, text_col, id_col, n_hashes, shingle_n, method)
-        if commit:
-            store.append(sigs, bands=bands, summary={"op": "bootstrap", "sig_params": sig_params})
-        return fresh.select(F.col(id_col), F.lit("keep").alias("verdict"))
-    store.check_params(n_hashes, bands, shingle_n, method)
-    decisions, keep_sigs = dedup_against(
-        fresh,
-        store.read_signatures(spark),
-        store.read_bands(spark),
-        text_col=text_col,
-        id_col=id_col,
-        threshold=threshold,
-        n_hashes=n_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        method=method,
-        bucket_cap=bucket_cap,
+    op = "bootstrap" if store.is_empty() else "incremental"
+    decisions, keep_sigs = _dedup_step(
+        store, fresh, text_col=text_col, id_col=id_col, threshold=threshold, n_hashes=n_hashes,
+        bands=bands, shingle_n=shingle_n, method=method, bucket_cap=bucket_cap,
         broadcast_fresh=broadcast_fresh,
-        hot_buckets=store.hot_buckets(spark, bucket_cap),
     )
-    decisions = decisions.localCheckpoint(eager=True)  # pin before the store mutates
     if commit:
-        store.append(keep_sigs, bands=bands, summary={"op": "incremental", "sig_params": sig_params})
+        sig_params = {"n_hashes": n_hashes, "bands": bands, "shingle_n": shingle_n, "method": method}
+        store.append(keep_sigs, bands=bands, summary={"op": op, "sig_params": sig_params})
     return decisions
 
 
@@ -1095,8 +1087,6 @@ def repair_store(
     rows, and ``band_buckets`` over ONLY the stored signatures missing band
     rows (nothing is re-shingled for the bands heal). Returns how many
     documents were repaired (re-signed + bands-restored)."""
-    from dsm2dtm_spark.operators.incremental import sign_documents
-
     if corpus_table.current_snapshot() is None:
         return 0
     if store.is_empty():
@@ -1192,14 +1182,10 @@ def ingest_batch(
     something to commit; an already-ingested ``batch_id`` short-circuits.
     ``broadcast_fresh`` defaults to the store layout's strategy (see
     ``incremental_dedup``)."""
-    from pyspark.sql import functions as F
-
     from dsm2dtm_spark.functions.text import quality_features
     from dsm2dtm_spark.operators.dedup import exact_dedup
     from dsm2dtm_spark.operators.decontam import decontaminate
 
-    if broadcast_fresh is None:
-        broadcast_fresh = getattr(store, "BROADCAST_FRESH_DEFAULT", True)
     # self-heal BEFORE the batch guard: a crash between the corpus and store
     # commits left rows committed-but-unsigned, and the guard would
     # otherwise short-circuit past them forever
@@ -1238,27 +1224,11 @@ def ingest_batch(
         ).localCheckpoint(eager=False)
         counts["after_decontam"] = kept.count()
 
-    sig_params = {"n_hashes": n_hashes, "bands": bands, "shingle_n": 3, "method": method}
-    if store.is_empty():
-        decisions = kept.select(F.col(id_col), F.lit("keep").alias("verdict"))
-        keep_sigs = sign_documents(kept, text_col, id_col, n_hashes=n_hashes, method=method)
-    else:
-        store.check_params(**sig_params)
-        decisions, keep_sigs = dedup_against(
-            kept,
-            store.read_signatures(spark),
-            store.read_bands(spark),
-            text_col=text_col,
-            id_col=id_col,
-            threshold=threshold,
-            n_hashes=n_hashes,
-            bands=bands,
-            method=method,
-            bucket_cap=bucket_cap,
-            broadcast_fresh=broadcast_fresh,
-            hot_buckets=store.hot_buckets(spark, bucket_cap),
-        )
-        decisions = decisions.localCheckpoint(eager=True)
+    decisions, keep_sigs = _dedup_step(
+        store, kept, text_col=text_col, id_col=id_col, threshold=threshold, n_hashes=n_hashes,
+        bands=bands, shingle_n=3, method=method, bucket_cap=bucket_cap,
+        broadcast_fresh=broadcast_fresh,
+    )
     verdicts = {r["verdict"]: r["n"] for r in decisions.groupBy("verdict").agg(F.count("*").alias("n")).collect()}
     counts["dropped_exact_vs_corpus"] = verdicts.get("exact", 0)
     counts["dropped_near_vs_corpus"] = verdicts.get("near", 0)
@@ -1275,6 +1245,7 @@ def ingest_batch(
         # and a LOST store append only risks duplicates being re-admitted
         # (conservative), never committed rows being double-dropped
         corpus_table.write_dataframe(survivors, summary=summary)
+        sig_params = {"n_hashes": n_hashes, "bands": bands, "shingle_n": 3, "method": method}
         store.append(keep_sigs, bands=bands, summary={"op": "ingest", "sig_params": sig_params})
     elif batch_id and corpus_table.current_snapshot() is not None:
         # record the batch even when nothing survives, so reruns short-circuit

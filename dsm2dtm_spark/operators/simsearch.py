@@ -556,7 +556,6 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    dim: int | None = None,
     n_centroids: int = 16,
     nprobe: int | None = None,
     id_col: str = "vec_id",
@@ -585,10 +584,8 @@ def ivf_topk(
     the candidate join is a plain equi-join on the list id — never O(n·q).
     Centroids regenerate deterministically from (dim, n_centroids, seed)
     inside the Arrow UDF, so the plan needs no driver-side action to learn
-    the embedding dimension (``dim`` is accepted for API compatibility but
-    unused) — or pass ``centroids=train_centroids(...)`` to use the
-    k-means-trained coarse quantizer from the offline index build."""
-    del dim  # derived per batch inside the UDF
+    the embedding dimension — or pass ``centroids=train_centroids(...)`` to
+    use the k-means-trained coarse quantizer from the offline index build."""
     cache: dict[int, np.ndarray] = {} if centroids is None else {centroids.shape[1]: centroids}
     trained_dim = None if centroids is None else centroids.shape[1]
     if centroids is not None:
@@ -647,7 +644,6 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    dim: int | None = None,
     n_planes: int | None = None,
     n_tables: int | None = None,
     id_col: str = "vec_id",
@@ -663,7 +659,7 @@ def lsh_topk(
     rerank. Recall/latency trade via (n_planes, n_tables): fewer planes →
     bigger buckets, more tables → more chances to collide. The exact verifier
     is brute_force_topk (tests measure recall). Planes regenerate
-    deterministically inside the Arrow UDF (``dim`` accepted but unused).
+    deterministically inside the Arrow UDF from each batch's dimension.
 
     Defaults derive (n_planes, n_tables) from a RECALL TARGET: the k-th-
     neighbor cosine is estimated on a bounded sample and fed through the
@@ -671,7 +667,6 @@ def lsh_topk(
     fixed defaults silently under-recalled on unclustered corpora). Passing
     only ``n_planes`` derives the matching table count; passing both skips
     the sample entirely (no driver action)."""
-    del dim  # derived per batch inside the UDF
     if n_planes is None or n_tables is None:
         est = estimate_kth_neighbor_cosine(corpus, k, vec_col=vec_col, seed=13)
         n_planes, n_tables = derive_srp_topk_params(

@@ -10,8 +10,9 @@ same table format, lineage included, and a consumer cannot tell which path a
 row took.
 
 Exactly-once story: Spark's checkpoint gives at-least-once foreachBatch
-delivery; the snapshot commit records the batch id and skips batches it has
-already committed (idempotent replay), upgrading the sink to exactly-once.
+delivery; the snapshot commit records the batch id (``stream_batch_id``:
+the epoch id scoped to the checkpoint) and skips batches it has already
+committed (idempotent replay), upgrading the sink to exactly-once.
 """
 
 from __future__ import annotations
@@ -25,6 +26,20 @@ IMAGE_SCHEMA_DDL = (
     "image_id string, bytes binary, w int, h int, fmt string, caption string, "
     "phash long, lon0 double, lat0 double, xres_m double, yres_m double, crs int"
 )
+
+
+def stream_batch_id(checkpoint_dir: str, epoch_id: int) -> str:
+    """The replay key every foreachBatch sink here commits: epoch ids restart
+    at 0 per CHECKPOINT, so a bare epoch id from a second stream (new
+    checkpoint, same table) would collide with the first stream's and its
+    first batches would be silently skipped as already committed."""
+    import hashlib
+
+    return f"{hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]}-epoch-{epoch_id}"
+
+
+def _committed(table: SnapshotTable, batch_id: str) -> bool:
+    return batch_id in {s.summary.get("stream_batch_id") for s in table.snapshots()}
 
 
 def streaming_dtm_ingest(
@@ -49,9 +64,9 @@ def streaming_dtm_ingest(
         .parquet(inbox_dir)
     )
 
-    def sink(batch_df, batch_id: int):
-        done = {s.summary.get("stream_batch_id") for s in output_table.snapshots()}
-        if batch_id in done:
+    def sink(batch_df, epoch_id: int):
+        batch_id = stream_batch_id(checkpoint_dir, epoch_id)
+        if _committed(output_table, batch_id):
             return  # replayed micro-batch after a crash: already committed
         result = dtm_transform(batch_df, radius_m=radius_m)
         output_table.write_dataframe(result, summary={"stream_batch_id": batch_id, "op": "stream-dtm"})
@@ -101,9 +116,9 @@ def streaming_overview_ingest(
         .parquet(inbox_dir)
     )
 
-    def sink(batch_df, batch_id: int):
-        done = {s.summary.get("stream_batch_id") for s in output_table.snapshots()}
-        if batch_id in done:
+    def sink(batch_df, epoch_id: int):
+        batch_id = stream_batch_id(checkpoint_dir, epoch_id)
+        if _committed(output_table, batch_id):
             return  # replayed micro-batch after a crash: already committed
         output_table.write_dataframe(
             build_overviews(batch_df, levels=levels).unionByName(

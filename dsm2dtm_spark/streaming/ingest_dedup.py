@@ -11,9 +11,10 @@ store.
 
 Exactly-once story (same as streaming/ingest.py): Spark's checkpoint gives
 at-least-once foreachBatch delivery; ``ingest_batch``'s batch-id guard
-(keyed by the epoch id here) makes replayed epochs no-ops, upgrading the
-sink to exactly-once; the repair step inside ``ingest_batch`` self-heals a
-crash between the corpus and store commits.
+(keyed by ``stream_batch_id``, the checkpoint-scoped epoch id) makes
+replayed epochs no-ops, upgrading the sink to exactly-once; the repair step
+inside ``ingest_batch`` self-heals a crash between the corpus and store
+commits.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from pyspark.sql import SparkSession
 
 from dsm2dtm_spark.operators.incremental import SignatureStore, ingest_batch
 from dsm2dtm_spark.sources.manifest import SnapshotTable
+from dsm2dtm_spark.streaming.ingest import stream_batch_id
 
 DOC_SCHEMA_DDL = "doc_id long, text string, lang string, source string, n_chars int"
 
@@ -42,18 +44,11 @@ def streaming_doc_ingest(
     ingest over a parquet inbox. ``ingest_params`` pass through to
     ``ingest_batch`` (threshold, method, bucket_cap, ngram, …). Returns the
     query handle (already awaited in availableNow mode)."""
-    import hashlib
-
     stream = (
         spark.readStream.schema(schema_ddl)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(inbox_dir)
     )
-    # epoch ids restart at 0 per CHECKPOINT: scope the batch id to the
-    # checkpoint identity, or a second stream (new checkpoint, same corpus)
-    # would collide with old epoch ids and silently skip its first batches
-    ckpt_tag = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-
     def sink(batch_df, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -63,7 +58,7 @@ def streaming_doc_ingest(
             corpus_table,
             store,
             eval_docs=eval_docs,
-            batch_id=f"{ckpt_tag}-epoch-{epoch_id}",
+            batch_id=stream_batch_id(checkpoint_dir, epoch_id),
             **ingest_params,
         )
 

@@ -391,6 +391,62 @@ class TestBucketedStore:
         sc.setJobGroup(None, None)
         assert list(ids) == []
 
+    def test_manifest_size_is_flat_across_appends(self, spark, tmp_path):
+        """store.json is re-parsed on every read and append: it must hold
+        layout state only, not a log that grows by one entry per append. A
+        manifest that still carries the old per-append log opens, and the
+        next append drops the log."""
+        import json
+        import os
+
+        root = str(tmp_path / "flat")
+        store = BucketedSignatureStore(root, n_buckets=4)
+        sp = {"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}}
+        sizes = []
+        for i in range(3):  # 10, 20, 30 rows: the watermark keeps its width
+            if i == 2:
+                meta = store._meta()
+                meta["summaries"] = [{"op": "ingest", **sp}] * 2
+                json.dump(meta, open(store._meta_path(), "w"))
+                store = BucketedSignatureStore(root)
+                assert store.read_signatures(spark).count() == 20
+            batch = [(10 * i + j, f"distinct doc {i}-{j} about weir number {i * 7 + j}") for j in range(10)]
+            store.append(sign_documents(_df(spark, batch), method="md5"), summary={"op": "ingest", **sp})
+            sizes.append(os.path.getsize(store._meta_path()))
+        assert store.signature_row_count() == 30
+        assert "summaries" not in store._meta()
+        assert sizes[0] == sizes[1] == sizes[2]
+
+    def test_repair_creates_missing_band_table_under_store_root(self, spark, tmp_path):
+        """Crash window of the very first append: signatures committed, the
+        bands table never created. The bands-only repair must create the
+        EXTERNAL bucketed table under the store root and record it in the
+        manifest, like an append does — not a managed table elsewhere that
+        the manifest never names (its band rows would be invisible to the
+        watermark and lost with the session catalog)."""
+        import json
+        import os
+        import shutil
+
+        from dsm2dtm_spark.operators.incremental import ingest_batch, repair_store
+        from dsm2dtm_spark.sources.manifest import SnapshotTable
+
+        corpus = SnapshotTable(str(tmp_path / "corpus"))
+        store = BucketedSignatureStore(str(tmp_path / "store"), n_buckets=4)
+        batch = _df(spark, [(i, f"doc {i} about locks and sluice gates number {i}") for i in range(5)])
+        ingest_batch(spark, batch, corpus, store, batch_id="b1")
+        meta = store._meta()
+        del meta["tables"]["bands"]
+        json.dump(meta, open(store._meta_path(), "w"))
+        spark.sql(f"DROP TABLE {store.bands_table}")
+        shutil.rmtree(store._location("bands", 0))
+        assert repair_store(spark, corpus, store) == 5
+        assert os.path.isdir(store._location("bands", 0))
+        assert store.band_row_count() == 5 * 4
+        spark.sql(f"DROP TABLE {store.sig_table}")
+        spark.sql(f"DROP TABLE {store.bands_table}")
+        assert BucketedSignatureStore(str(tmp_path / "store")).read_bands(spark).count() == 5 * 4
+
     def test_repair_high_watermark_with_bucketed_store(self, spark, tmp_path):
         from dsm2dtm_spark.operators.incremental import ingest_batch, repair_store
         from dsm2dtm_spark.sources.manifest import SnapshotTable
@@ -406,6 +462,31 @@ class TestBucketedStore:
         ids = sc.statusTracker().getJobIdsForGroup("repair-hw-bucketed")
         sc.setJobGroup(None, None)
         assert list(ids) == []
+
+
+@pytest.mark.parametrize("layout", ["plain", "bucketed"])
+def test_ingest_batch_and_incremental_dedup_agree(spark, tmp_path, layout):
+    """Both wrappers run the one store-backed dedup step: on the same store
+    state and a batch the quality and within-batch gates leave whole, they
+    keep the same ids and drop the same exact/near counts."""
+    from dsm2dtm_spark.operators.incremental import ingest_batch
+    from dsm2dtm_spark.sources.manifest import SnapshotTable
+
+    root = str(tmp_path / "store")
+    store = SignatureStore(root) if layout == "plain" else BucketedSignatureStore(root, n_buckets=4)
+    assert isinstance(store, SignatureStore)
+    corpus = SnapshotTable(str(tmp_path / "corpus"))
+    ingest_batch(spark, _df(spark, CORPUS), corpus, store, method="md5", batch_id="boot")
+    verdicts = {
+        r.doc_id: r.verdict
+        for r in incremental_dedup(store, _df(spark, FRESH), method="md5", commit=False).collect()
+    }
+    survivors, counts = ingest_batch(spark, _df(spark, FRESH), corpus, store, method="md5", batch_id="b1")
+    assert counts["after_within_batch_exact"] == len(FRESH)
+    assert verdicts == {100: "exact", 101: "near", 102: "keep", 103: "keep"}
+    assert {r.doc_id for r in survivors.collect()} == {i for i, v in verdicts.items() if v == "keep"}
+    assert counts["dropped_exact_vs_corpus"] == sum(v == "exact" for v in verdicts.values())
+    assert counts["dropped_near_vs_corpus"] == sum(v == "near" for v in verdicts.values())
 
 
 class TestBucketEvolution:

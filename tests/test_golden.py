@@ -272,12 +272,17 @@ class TestIDWInpaint:
         assert out[6, 6] != NODATA
 
     def test_pipeline_idw_option(self):
+        """The pipeline keeps the reference's nearest-value gap fill and
+        takes no ``inpaint`` option; IDW is a stage a caller runs on a grid
+        itself, and it fills exactly the holes the nearest fill reaches."""
         rng = np.random.default_rng(4)
         dsm = flat((60, 60))
         idx = rng.choice(dsm.size, 400, replace=False)
         dsm.ravel()[idx] = NODATA
-        a = golden.dsm_to_dtm(dsm, (1.0, 1.0), nodata=NODATA)
-        b = golden.dsm_to_dtm(dsm, (1.0, 1.0), nodata=NODATA, inpaint="idw")
-        assert np.sum(b != NODATA) >= np.sum(a != NODATA) - 1
+        with pytest.raises(TypeError):
+            golden.dsm_to_dtm(dsm, (1.0, 1.0), nodata=NODATA, inpaint="idw")
+        a = golden.gap_fill(dsm, NODATA, max_dist_px=3)
+        b = golden.gap_fill_idw(dsm, NODATA, max_dist_px=3)
+        assert np.array_equal(a != NODATA, b != NODATA)
         # IDW output interpolates (bounded by neighborhood range), NN copies
         assert np.abs(b[b != NODATA] - 100.0).max() < 5.0

@@ -75,7 +75,7 @@ class TestIVF:
         pdf = pd.DataFrame({"vec_id": range(60), "embedding": [v.tolist() for v in base]})
         sdf = spark.createDataFrame(pdf)
         queries = sdf.filter("vec_id = 3").selectExpr("vec_id as query_id", "embedding")
-        got = S.ivf_topk(sdf, queries, k=3, dim=8, n_centroids=8, nprobe=3).collect()
+        got = S.ivf_topk(sdf, queries, k=3, n_centroids=8, nprobe=3).collect()
         assert 7 in {r.neighbor_id for r in got}
 
     def test_ivf_recall_vs_exact(self, spark):
@@ -85,7 +85,7 @@ class TestIVF:
         sdf = spark.createDataFrame(pdf)
         queries = sdf.filter("vec_id < 8").selectExpr("vec_id as query_id", "embedding")
         exact = S.brute_force_topk(sdf, queries, k=5)
-        approx = S.ivf_topk(sdf, queries, k=5, dim=8, n_centroids=8, nprobe=4)
+        approx = S.ivf_topk(sdf, queries, k=5, n_centroids=8, nprobe=4)
         e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
         a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
         recall = len(e & a) / len(e)

@@ -52,6 +52,23 @@ def test_new_files_processed_incrementally(spark, tmp_path, inbox):
     assert out.read(spark).count() == 14
 
 
+def test_second_checkpoint_into_same_table_commits(spark, tmp_path, inbox):
+    """Epoch ids restart at 0 for every checkpoint: a second stream with its
+    own checkpoint writing into the same table must commit its batches, not
+    skip them as replays of the first stream's epochs."""
+    d, pdf = inbox
+    out = SnapshotTable(str(tmp_path / "out"))
+    streaming_dtm_ingest(spark, str(d), out, str(tmp_path / "ckpt_a"), available_now=True)
+    d2 = tmp_path / "inbox_b"
+    d2.mkdir()
+    more = synth.image_table(14, seed=21, sizes=(50,)).drop(columns=["scenario"]).iloc[10:]
+    pq.write_table(pa.Table.from_pandas(more, preserve_index=False), str(d2 / "c.parquet"))
+    streaming_dtm_ingest(spark, str(d2), out, str(tmp_path / "ckpt_b"), available_now=True)
+    got = out.read(spark)
+    assert got.count() == 14
+    assert got.select("image_id").distinct().count() == 14
+
+
 def test_stream_overview_pyramid_matches_batch(spark, tmp_path, inbox):
     from pyspark.sql import functions as F
 

@@ -253,7 +253,7 @@ class TestSimilaritySearch:
     def test_lsh_recall_reasonable(self, spark, vecs):
         pdf, sdf = vecs
         queries = sdf.filter("vec_id = 3").selectExpr("vec_id as query_id", "embedding")
-        got = S.lsh_topk(sdf, queries, k=3, dim=8, n_planes=4).collect()
+        got = S.lsh_topk(sdf, queries, k=3, n_planes=4).collect()
         assert 7 in {r.neighbor_id for r in got}  # planted near-identical vector found
 
 
