@@ -608,8 +608,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["events_value_band_join"] = events_value_band_join
 
     def events_tumbling_windows(spark, sf):
-        # the streaming operator's batch form (same plan shape; the stream
-        # adds only the watermark) under the oracle gate: 10-min tumbling
+        # the tumbling-window operator under the oracle gate: 10-min
         # windows align to epoch 0, which DuckDB replays as floor(epoch/600)
         from dsm2dtm_spark.streaming.windowed import windowed_event_counts
 

@@ -14,6 +14,8 @@ Layout
 - ``operators``  Spark operators: cell index, tiling+halo, stitch, spatial join,
                  kNN join, dedup (exact/minhash/simhash), text analysis, ANN
 - ``plans``      end-to-end Spark jobs (whole-image DTM, tiled DTM, resume)
+- ``streaming``  event-time window aggregation; the engine is batch-only, so
+                 late data arrives through the snapshot resume anti-join
 """
 
 __version__ = "0.1.0"

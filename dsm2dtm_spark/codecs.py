@@ -257,12 +257,6 @@ def decode(data: bytes, h: int, w: int, fmt: str) -> np.ndarray:
         raise ValueError(f"unknown fmt {fmt!r}; known: {FORMATS}") from None
 
 
-def is_lossless(fmt: str) -> bool:
-    """Whether decode(encode(x)) == x is guaranteed for grids the synthetic
-    generator stores (png16 grids are pre-snapped to the quantization grid)."""
-    return fmt in ("raw_f32", "png16")
-
-
 def snap(grid: np.ndarray, fmt: str, nodata: float = NODATA_DEFAULT) -> np.ndarray:
     """One encode/decode round trip — the generator stores snapped grids so
     png16 behaves losslessly on its own stored truth."""

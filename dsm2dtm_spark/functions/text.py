@@ -33,12 +33,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens_ws(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Approximate subword count: words plus digit runs plus punctuation marks
-    (a cheap proxy for BPE token count, JVM regex only)."""
-    return F.size(F.filter(F.split(text, r"(?<=\W)|(?=\W)"), lambda t: F.trim(t) != ""))
-
-
 def _token_stats_udf():
     """Arrow-batched (n_tokens, n_stop) over JVM-lowered text — identical to
     ``size(tokens_ws(t))`` and the stopword filter count: Python
@@ -103,11 +97,6 @@ def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         id_col, F.col("lang_cand").alias("lang_pred"), "hits"
     )
     return df.join(best, on=id_col, how="left").fillna({"lang_pred": "und", "hits": 0})
-
-
-def fingerprint_md5(text: Column) -> Column:
-    """Exact-dedup fingerprint; identical in Spark and DuckDB."""
-    return F.md5(text)
 
 
 ROLLING_HASH_BITS = 45  # 131·2^45 < 2^53: the accumulator never overflows int64

@@ -577,10 +577,6 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", met
     return agg.select(id_col, bit_terms.alias("simhash"))
 
 
-def hamming64(a, b):
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
-
-
 def hamming_near_dup_pairs(
     df: DataFrame,
     max_dist: int,

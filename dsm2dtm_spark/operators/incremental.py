@@ -371,10 +371,10 @@ class SignatureStore:
 class BucketedSignatureStore(SignatureStore):
     """SignatureStore layout whose sub-tables are hive-BUCKETED EXTERNAL
     tables — ``signatures`` bucketed+sorted by ``fingerprint``, ``bands`` by
-    ``(band, bucket)`` (operators/bucketing.py applied to the dedup store;
-    VERDICT r4 #4). The bucket files ARE the shuffle, paid once at write:
-    every per-batch join against the store reads the stored side with ZERO
-    Exchange — only the fresh batch shuffles (to n_buckets partitions).
+    ``(band, bucket)`` (VERDICT r4 #4). The bucket files ARE the shuffle,
+    paid once at write: every per-batch join against the store reads the
+    stored side with ZERO Exchange — only the fresh batch shuffles (to
+    n_buckets partitions).
 
     Use this (with ``dedup_against(broadcast_fresh=False)``) when batches
     are too big to broadcast; the default SignatureStore + broadcast probes
@@ -486,13 +486,12 @@ class BucketedSignatureStore(SignatureStore):
         """Recreate the catalog entries from the manifest DDL when this
         session hasn't seen the store yet (the in-memory catalog does not
         survive spark-submit runs; the manifest is the source of truth),
-        and DROP this session's cached file listing for them: an append
-        through a DIFFERENT session sharing the catalog — foreachBatch
-        hands the streaming twin a CLONED session — refreshes only the
-        writer's cache, and a stale InMemoryFileIndex here silently hides
-        the new bucket files from every join (wrong results, caught by the
-        streaming-over-bucketed-store test). The invalidation is metadata-
-        only; the next scan re-lists once."""
+        and DROP this session's cached file listing for them: an append or
+        compact through a DIFFERENT session sharing the catalog refreshes
+        only the writer's cache, and a stale InMemoryFileIndex here
+        silently hides the new bucket files from every join (wrong
+        results). The invalidation is metadata-only; the next scan re-lists
+        once."""
         import os
 
         meta = self._meta()
@@ -1196,9 +1195,9 @@ def ingest_batch(
 
     # idempotence guard over ALL snapshot summaries (one batch_id per
     # commit): robust to compaction/maintenance commits interleaving (they
-    # simply carry no batch_id) and bounded per-snapshot state — the same
-    # pattern as streaming/ingest.py, instead of threading a growing list
-    # through the latest summary (which any unrelated commit would erase)
+    # simply carry no batch_id) and bounded per-snapshot state, instead of
+    # threading a growing list through the latest summary (which any
+    # unrelated commit would erase)
     seen = {s.summary.get("batch_id") for s in corpus_table.snapshots() if s.summary}
     if batch_id and batch_id in seen:
         return None, {"skipped": "batch already ingested", "batch_id": batch_id, "repaired": repaired}

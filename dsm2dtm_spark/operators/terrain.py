@@ -388,8 +388,7 @@ def overview_markers(images: DataFrame, levels: int) -> DataFrame:
     value NULL), in the pyramid schema. Markers record done-ness for resume
     anti-joins — an all-nodata image emits no pyramid rows but must still
     count as processed — and carry the level count so an append with a
-    different ``levels`` can fail fast. Shared by the batch job and the
-    streaming sink so both ingestion paths produce ONE table format."""
+    different ``levels`` can fail fast."""
     return images.select(
         "image_id",
         F.lit(0).cast("int").alias("level"),

@@ -4,8 +4,7 @@ The reference's whole job surface is GeoTIFF-in / GeoTIFF-out (reference
 core.py:126-136, 191-204); the sandbox has no rasterio, so this module
 implements the uncompressed-strip subset of TIFF 6.0 + the GeoTIFF tags the
 engine needs, in pure stdlib + numpy (tag parsing, strip assembly, IEEE
-float32 samples — no entropy coding, which is exactly the honest boundary
-drawn for the other media codecs). ``read_geotiff_table`` is a drop-in for
+float32 samples — no entropy coding). ``read_geotiff_table`` is a drop-in for
 sources.geotiff.read_geotiff_table with the same output schema, so the DTM
 plans run on real .tif files without any optional dependency.
 

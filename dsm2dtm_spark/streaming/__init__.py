@@ -1,3 +1,1 @@
-from dsm2dtm_spark.streaming.ingest import streaming_dtm_ingest, streaming_overview_ingest
-
-__all__ = ["streaming_dtm_ingest", "streaming_overview_ingest"]
+"""Event-time window aggregation over batch DataFrames."""

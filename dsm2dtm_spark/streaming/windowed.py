@@ -1,15 +1,10 @@
-"""Event-time windowed streaming aggregation with watermark-bounded lateness.
+"""Event-time tumbling-window aggregation over batch DataFrames.
 
-The engine's metrics/lineage stream (one row per processed image or tile)
-needs rolled-up throughput over time at cluster scale; this operator is the
-standard Structured-Streaming shape for it: event-time tumbling windows with
-a watermark so state is bounded and late rows within the allowance still
-land in their window.
+The engine is batch-only (SURVEY.md E16): late data is picked up by the
+next run's snapshot anti-join, so no watermark or streaming state is kept.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -20,16 +15,10 @@ def windowed_event_counts(
     value_col: str = "value",
     key_col: str = "event_type",
     window_len: str = "10 minutes",
-    watermark: str = "5 minutes",
 ) -> DataFrame:
-    """Tumbling-window counts/sums per key with a lateness watermark.
-    Works on both a streaming and a batch DataFrame (same plan shape — the
-    batch form is the oracle in tests)."""
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
+    """Tumbling-window counts/sums per key."""
     return (
-        df.groupBy(F.window(F.col(ts_col), window_len).alias("win"), F.col(key_col))
+        events.groupBy(F.window(F.col(ts_col), window_len).alias("win"), F.col(key_col))
         .agg(F.count("*").alias("n"), F.round(F.sum(value_col), 2).alias("sum_value"))
         .select(
             F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
@@ -38,79 +27,3 @@ def windowed_event_counts(
             "sum_value",
         )
     )
-
-
-def session_window_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    key_col: str = "event_type",
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Session windows (dynamic, gap-based) per key with a lateness
-    watermark — Structured Streaming merges overlapping sessions as late
-    rows arrive, state is dropped once the watermark passes a session's end.
-    Works on both streaming and batch DataFrames (batch = the oracle form;
-    the contract query ``events_sessionization`` pins the same gap
-    semantics via a lag/running-sum window)."""
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return (
-        df.groupBy(F.session_window(F.col(ts_col), gap).alias("win"), F.col(key_col))
-        .agg(F.count("*").alias("n"), F.round(F.sum(value_col), 2).alias("sum_value"))
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("win.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            key_col,
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def run_session_stream(spark, inbox_dir: str, checkpoint_dir: str, out_dir: str, schema_ddl: str):
-    """File-stream events → watermarked session-window agg → idempotent
-    parquet sink (batch_id-keyed overwrite), availableNow trigger. Append
-    mode emits a session only once the watermark proves no more rows can
-    merge into it."""
-    stream = spark.readStream.schema(schema_ddl).parquet(inbox_dir)
-    agg = session_window_counts(stream)
-
-    def sink(batch_df, batch_id: int):
-        batch_df.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
-
-    q = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def run_windowed_stream(spark, inbox_dir: str, checkpoint_dir: str, out_dir: str, schema_ddl: str):
-    """File-stream events → watermarked tumbling-window agg → parquet via
-    foreachBatch (append output mode emits only windows the watermark has
-    closed — the late-data contract under test). The sink is idempotent:
-    each micro-batch overwrites its own ``batch_id=N`` partition, so a
-    replayed batch (crash between sink write and checkpoint commit) cannot
-    duplicate rows."""
-    stream = spark.readStream.schema(schema_ddl).parquet(inbox_dir)
-    agg = windowed_event_counts(stream)
-
-    def sink(batch_df, batch_id: int):
-        batch_df.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
-
-    q = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

@@ -42,7 +42,7 @@ def map_rows(
     returns that row's output — a record dict, a list of records, a
     ``pd.DataFrame`` chunk (vectorized producers), or ``None`` (no output).
 
-    The helper owns, once for every raster/media/GeoTIFF operator:
+    The helper owns, once for every per-row operator:
 
     - batching: one output frame per Arrow batch, records laid out in
       ``schema`` column order, so an empty batch still carries every column.

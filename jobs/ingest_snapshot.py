@@ -60,7 +60,7 @@ import json
 
 
 from dsm2dtm_spark.operators.incremental import ingest_batch, repair_store  # noqa: E402,F401
-# (moved to the package so the streaming twin can reuse them; this module
+# (repair_store is re-exported for tests/test_ingest_job.py; this module
 # remains the spark-submit CLI surface)
 
 

@@ -299,17 +299,17 @@ class TestBucketedStore:
             )
 
     def test_reads_see_appends_from_a_cloned_session(self, spark, tmp_path):
-        """foreachBatch (the streaming ingest twin) hands work a CLONED
-        SparkSession; an append there refreshes only the clone's file-index
-        cache. This session's reads must still see the new bucket files —
-        the stale-InMemoryFileIndex wrong-results bug (r5): the store read
-        silently missed every row committed through the stream."""
+        """An append through ANOTHER SparkSession sharing the catalog
+        refreshes only that session's file-index cache. This session's
+        reads must still see the new bucket files — the
+        stale-InMemoryFileIndex wrong-results bug (r5): the store read
+        silently missed every row committed through the other session."""
         store = BucketedSignatureStore(str(tmp_path / "xclone"), n_buckets=4)
         sp = {"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}}
         store.append(sign_documents(_df(spark, CORPUS[:2]), method="md5"), summary=sp)
         # cache THIS session's file listing for the table
         assert store.read_signatures(spark).count() == 2
-        # append through a clone (what foreachBatch does)
+        # append through a clone
         clone = spark.newSession()
         store.append(sign_documents(_df(clone, CORPUS[2:]), method="md5"), summary=sp)
         # this session must see all 4 rows, and join against them

@@ -603,3 +603,37 @@ class TestBandBucketsUnrolled:
         b = sorted(map(tuple, without_params.read_bands(spark).collect()))
         assert a == b
         assert a == sorted(map(tuple, band_buckets(sigs).collect()))
+
+
+def test_store_compaction_after_many_small_commits(spark, tmp_path):
+    from dsm2dtm_spark.operators.incremental import ingest_batch
+    from dsm2dtm_spark.sources.manifest import SnapshotTable
+
+    corpus = SnapshotTable(str(tmp_path / "corpus"))
+    store = SignatureStore(str(tmp_path / "store"))
+    # genuinely distinct texts: near-identical templates would be
+    # (correctly!) dropped as near-dups of earlier batches
+    topics = [
+        "glacier meltwater sediment transport in alpine catchment basins",
+        "parquet footer statistics drive file level predicate pruning",
+        "broadcast hash joins avoid shuffling the large fact relation",
+        "watermarks bound state retention for late arriving event data",
+        "morphological opening separates ground returns from canopy noise",
+        "salting hot keys spreads skewed partitions across executors",
+        "vectorized arrow batches amortize python interpreter overhead",
+        "connected components label duplicate clusters by minimum id",
+        "progressive filters grow window sizes with elevation thresholds",
+        "checkpoint lineage truncation keeps iterative plans bounded",
+        "inverted list probes trade recall against candidate volume",
+        "atomic manifest commits make crashed writers invisible",
+    ]
+    for i in range(4):
+        batch = _df(spark, [(100 * i + j, topics[3 * i + j]) for j in range(3)])
+        ingest_batch(spark, batch, corpus, store, batch_id=f"b{i}")
+    n_files_before = len(store.bands.current_snapshot().files)
+    res = store.compact(spark)
+    assert res["signatures"] >= 2 and res["bands"] >= 2
+    assert len(store.bands.current_snapshot().files) < n_files_before
+    # contents unchanged
+    assert store.read_signatures(spark).count() == 12
+    assert store.read_bands(spark).count() == 12 * 4

@@ -292,56 +292,3 @@ class TestLZWProperties:
             _lzw_decode(junk, 4096)
         except ValueError:
             pass
-
-
-class TestPngAdam7Properties:
-    """Adam7 decode inverts an independently-constructed spec-lattice
-    interlaced encoding for EVERY image shape — the pass geometry
-    (ceil-divisions, empty passes, 1-pixel edges) is where off-by-ones
-    live, so shapes are the fuzzed axis."""
-
-    @staticmethod
-    def _encode_adam7(img):
-        import struct
-        import zlib
-
-        from dsm2dtm_spark.operators import multimodal as M
-
-        h, w, channels = img.shape
-        raw = b""
-        for x0, y0, dx, dy in (
-            (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-        ):
-            block = img[y0::dy, x0::dx]
-            if block.shape[0] == 0 or block.shape[1] == 0:
-                continue
-            raw += b"".join(b"\x00" + block[y].tobytes() for y in range(block.shape[0]))
-        ctype = 2 if channels == 3 else 6
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + M._png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 1))
-            + M._png_chunk(b"IDAT", zlib.compress(raw))
-            + M._png_chunk(b"IEND", b"")
-        )
-
-    @FAST
-    @given(
-        st.integers(min_value=1, max_value=24),
-        st.integers(min_value=1, max_value=24),
-        st.integers(min_value=0, max_value=2**32 - 1),
-        st.sampled_from([3, 4]),
-    )
-    @example(1, 1, 0, 3)
-    @example(8, 8, 0, 4)
-    @example(9, 17, 7, 3)
-    def test_adam7_roundtrip_any_shape(self, h, w, seed, channels):
-        from dsm2dtm_spark.operators import multimodal as M
-
-        rng = np.random.default_rng(seed)
-        img = rng.integers(0, 256, (h, w, channels), dtype=np.uint8)
-        got = M.decode_png_rgb8(self._encode_adam7(img))
-        np.testing.assert_array_equal(got, img[:, :, :3])
-        # and it agrees with the non-interlaced decode of the same pixels
-        if channels == 3:
-            np.testing.assert_array_equal(got, M.decode_png_rgb8(M.encode_png_rgb8(img)))

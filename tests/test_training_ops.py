@@ -1,5 +1,5 @@
 """Training-data operator tests: dedup family, text analysis, similarity
-search, multimodal plumbing — Spark results vs Python references."""
+search — Spark results vs Python references."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pytest
 
 from dsm2dtm_spark.functions import text as T
 from dsm2dtm_spark.operators import dedup as D
-from dsm2dtm_spark.operators import multimodal as M
 from dsm2dtm_spark.operators import simsearch as S
 
 DOCS = [
@@ -255,276 +254,6 @@ class TestSimilaritySearch:
         queries = sdf.filter("vec_id = 3").selectExpr("vec_id as query_id", "embedding")
         got = S.lsh_topk(sdf, queries, k=3, n_planes=4).collect()
         assert 7 in {r.neighbor_id for r in got}  # planted near-identical vector found
-
-
-class TestMultimodal:
-    @pytest.fixture(scope="class")
-    def media(self, spark):
-        rng = np.random.default_rng(5)
-        rows = []
-        for i in range(6):
-            img = rng.integers(0, 256, (16, 12, 3), dtype=np.uint8)
-            rows.append({"media_id": f"m{i}", "bytes": M.fake_rgb8_encode(img), "h": 16, "w": 12, "fmt": "fake_rgb8"})
-        return spark.createDataFrame(pd.DataFrame(rows))
-
-    def test_features(self, spark, media):
-        out = M.media_features(media).collect()
-        assert len(out) == 6
-        for r in out:
-            assert len(r.mean_rgb) == 3 and len(r.luma_hist) == 16
-            assert sum(r.luma_hist) == 16 * 12
-
-    def test_resize(self, spark, media):
-        out = M.media_resize(media, 8, 6).collect()
-        assert all(r.h == 8 and r.w == 6 and len(bytes(r.bytes)) == 8 * 6 * 3 for r in out)
-
-    def test_entropy_coded_codecs_raise(self):
-        with pytest.raises(NotImplementedError):
-            M.media_decode_stub(b"", 1, 1, "jpeg")
-
-    def test_png_rgb_roundtrip(self):
-        rng = np.random.default_rng(17)
-        img = rng.integers(0, 256, (23, 31, 3), dtype=np.uint8)
-        data = M.encode_png_rgb8(img)
-        np.testing.assert_array_equal(M.decode_png_rgb8(data), img)
-        np.testing.assert_array_equal(M.media_decode_stub(data, 23, 31, "png_rgb"), img)
-
-    def test_png_rgb_decodes_all_filter_types(self):
-        """Spec-compliant unfiltering: encode the same image once per scanline
-        filter (Sub/Up/Average/Paeth applied forward, as libpng would emit)
-        and assert decode inverts each — so third-party PNGs decode here."""
-        import struct
-        import zlib
-
-        rng = np.random.default_rng(23)
-        img = rng.integers(0, 256, (12, 9, 3), dtype=np.uint8)
-        h, w, bpp = 12, 9, 3
-
-        def paeth(a, b, c):
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-        for ftype in (0, 1, 2, 3, 4):
-            raw = b""
-            prev = np.zeros(w * bpp, dtype=np.int32)
-            for y in range(h):
-                cur = img[y].reshape(-1).astype(np.int32)
-                filt = np.empty_like(cur)
-                for i in range(len(cur)):
-                    a = cur[i - bpp] if i >= bpp else 0
-                    b = prev[i]
-                    c = prev[i - bpp] if i >= bpp else 0
-                    pred = {0: 0, 1: a, 2: b, 3: (a + b) // 2, 4: paeth(int(a), int(b), int(c))}[ftype]
-                    filt[i] = (cur[i] - pred) % 256
-                raw += bytes([ftype]) + filt.astype(np.uint8).tobytes()
-                prev = cur
-            data = (
-                b"\x89PNG\r\n\x1a\n"
-                + M._png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-                + M._png_chunk(b"IDAT", zlib.compress(raw))
-                + M._png_chunk(b"IEND", b"")
-            )
-            np.testing.assert_array_equal(M.decode_png_rgb8(data), img, err_msg=f"filter {ftype}")
-
-    def test_png_rgb_decodes_mixed_filter_rows(self):
-        """Per-row filter CHOICE, as real encoders emit: runs of None/Up
-        (which decode vectorized across rows) interleaved with Sub/Avg/Paeth
-        rows — exercises every run boundary, the predecessor seed of an Up
-        run mid-image, and a run ending at the last scanline."""
-        import struct
-        import zlib
-
-        rng = np.random.default_rng(71)
-        h, w, bpp = 14, 7, 3
-        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-
-        def paeth(a, b, c):
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-        for pattern in (
-            [2, 2, 0, 0, 4, 2, 2, 2, 1, 0, 3, 2, 0, 0],  # Up run at start + end-0 run
-            [0, 2, 4, 0, 2, 1, 2, 0, 3, 2, 2, 2, 2, 2],  # Up run to the last row
-        ):
-            raw = b""
-            prev = np.zeros(w * bpp, dtype=np.int32)
-            for y in range(h):
-                ftype = pattern[y]
-                cur = img[y].reshape(-1).astype(np.int32)
-                filt = np.empty_like(cur)
-                for i in range(len(cur)):
-                    a = cur[i - bpp] if i >= bpp else 0
-                    b = prev[i]
-                    c = prev[i - bpp] if i >= bpp else 0
-                    pred = {0: 0, 1: a, 2: b, 3: (a + b) // 2, 4: paeth(int(a), int(b), int(c))}[ftype]
-                    filt[i] = (cur[i] - pred) % 256
-                raw += bytes([ftype]) + filt.astype(np.uint8).tobytes()
-                prev = cur
-            data = (
-                b"\x89PNG\r\n\x1a\n"
-                + M._png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-                + M._png_chunk(b"IDAT", zlib.compress(raw))
-                + M._png_chunk(b"IEND", b"")
-            )
-            np.testing.assert_array_equal(
-                M.decode_png_rgb8(data), img, err_msg=f"pattern {pattern}"
-            )
-
-    @staticmethod
-    def _forward_filter_block(block: np.ndarray, ftype: int, channels: int) -> bytes:
-        """Forward-apply one PNG filter over an independently-filtered block
-        (whole image or one Adam7 pass), as libpng would emit it. Written
-        from the spec, independent of the decoder's helpers."""
-
-        def paeth(a, b, c):
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-        raw = b""
-        prev = np.zeros(block.shape[1] * channels, dtype=np.int32)
-        for y in range(block.shape[0]):
-            cur = block[y].reshape(-1).astype(np.int32)
-            filt = np.empty_like(cur)
-            for i in range(len(cur)):
-                a = cur[i - channels] if i >= channels else 0
-                b = prev[i]
-                c = prev[i - channels] if i >= channels else 0
-                pred = {0: 0, 1: a, 2: b, 3: (a + b) // 2, 4: paeth(int(a), int(b), int(c))}[ftype]
-                filt[i] = (cur[i] - pred) % 256
-            raw += bytes([ftype]) + filt.astype(np.uint8).tobytes()
-            prev = cur
-        return raw
-
-    @classmethod
-    def _encode_adam7(cls, img: np.ndarray, ftype: int = 0) -> bytes:
-        """Independently-constructed Adam7 PNG: the seven reduced images are
-        extracted with the spec's lattice (start/step slicing straight from
-        PNG spec §8.2 — NOT the decoder's table) and each pass is filtered
-        on its own, so the decoder's per-pass predecessor reset is load-
-        bearing for any ftype != 0."""
-        import struct
-        import zlib
-
-        h, w, channels = img.shape
-        ctype = 2 if channels == 3 else 6
-        raw = b""
-        for x0, y0, dx, dy in (
-            (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-        ):
-            block = img[y0::dy, x0::dx]
-            if block.shape[0] == 0 or block.shape[1] == 0:
-                continue  # empty pass: no bytes at all
-            raw += cls._forward_filter_block(block, ftype, channels)
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + M._png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 1))
-            + M._png_chunk(b"IDAT", zlib.compress(raw))
-            + M._png_chunk(b"IEND", b"")
-        )
-
-    def test_png_adam7_matches_noninterlaced_decode(self):
-        rng = np.random.default_rng(31)
-        img = rng.integers(0, 256, (13, 9, 3), dtype=np.uint8)
-        got = M.decode_png_rgb8(self._encode_adam7(img))
-        np.testing.assert_array_equal(got, img)
-        np.testing.assert_array_equal(got, M.decode_png_rgb8(M.encode_png_rgb8(img)))
-
-    def test_png_adam7_all_filter_types_reset_per_pass(self):
-        rng = np.random.default_rng(37)
-        img = rng.integers(0, 256, (16, 11, 3), dtype=np.uint8)
-        for ftype in (0, 1, 2, 3, 4):
-            np.testing.assert_array_equal(
-                M.decode_png_rgb8(self._encode_adam7(img, ftype)), img, err_msg=f"filter {ftype}"
-            )
-
-    def test_png_adam7_small_images_with_empty_passes(self):
-        rng = np.random.default_rng(41)
-        for h, w in ((1, 1), (2, 3), (3, 2), (4, 4), (5, 7), (8, 8), (9, 1), (1, 9)):
-            img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-            np.testing.assert_array_equal(
-                M.decode_png_rgb8(self._encode_adam7(img)), img, err_msg=f"{h}x{w}"
-            )
-
-    def test_png_adam7_rgba_drops_alpha(self):
-        rng = np.random.default_rng(43)
-        rgba = rng.integers(0, 256, (10, 6, 4), dtype=np.uint8)
-        np.testing.assert_array_equal(M.decode_png_rgb8(self._encode_adam7(rgba)), rgba[:, :, :3])
-
-    def test_png_adam7_truncated_stream_raises(self):
-        rng = np.random.default_rng(47)
-        img = rng.integers(0, 256, (12, 12, 3), dtype=np.uint8)
-        import struct
-        import zlib
-
-        # drop the last pass's bytes: the stream inflates but is short
-        full = b""
-        for x0, y0, dx, dy in ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-                               (0, 2, 2, 4), (1, 0, 2, 2)):
-            full += self._forward_filter_block(img[y0::dy, x0::dx], 0, 3)
-        data = (
-            b"\x89PNG\r\n\x1a\n"
-            + M._png_chunk(b"IHDR", struct.pack(">IIBBBBB", 12, 12, 8, 2, 0, 0, 1))
-            + M._png_chunk(b"IDAT", zlib.compress(full))
-            + M._png_chunk(b"IEND", b"")
-        )
-        with pytest.raises(ValueError, match="truncated"):
-            M.decode_png_rgb8(data)
-
-    def test_wav_pcm16_roundtrip_and_features(self, spark):
-        rate = 8000
-        t = np.arange(rate, dtype=np.float64) / rate  # 1 s
-        tone = (10000 * np.sin(2 * np.pi * 440 * t)).astype(np.int16)
-        stereo = np.stack([tone, tone // 2], axis=1)
-        data = M.encode_wav_pcm16(stereo, rate)
-        back, got_rate = M.decode_wav_pcm16(data)
-        assert got_rate == rate
-        np.testing.assert_array_equal(back, stereo)
-        df = spark.createDataFrame(pd.DataFrame([{"media_id": "a440", "bytes": data}]))
-        r = M.audio_features(df).collect()[0]
-        assert r.duration_s == 1.0 and r.sample_rate == rate and r.channels == 2
-        assert r.peak == 10000
-        # a 440 Hz tone crosses zero ~880 times/s -> rate-normalized ~0.11
-        assert abs(r.zero_crossing_rate - 880 / rate) < 0.01
-        assert abs(r.rms - 10000 * 0.75 / np.sqrt(2)) / r.rms < 0.02  # mono mix of x and x/2
-
-    def test_png_rgb_end_to_end_features(self, spark):
-        rng = np.random.default_rng(29)
-        rows = []
-        imgs = {}
-        for i in range(3):
-            img = rng.integers(0, 256, (16, 12, 3), dtype=np.uint8)
-            imgs[f"p{i}"] = img
-            rows.append({"media_id": f"p{i}", "bytes": M.encode_png_rgb8(img), "h": 16, "w": 12, "fmt": "png_rgb"})
-        out = {r.media_id: r for r in M.media_features(spark.createDataFrame(pd.DataFrame(rows))).collect()}
-        for mid, img in imgs.items():
-            want = [round(float(x), 4) for x in img.reshape(-1, 3).mean(axis=0)]
-            assert out[mid].mean_rgb == want
-
-    def test_avi_dib_roundtrip_and_frame_sample(self, spark):
-        rng = np.random.default_rng(41)
-        frames = rng.integers(0, 256, (9, 10, 7, 3), dtype=np.uint8)  # odd width: row padding
-        data = M.encode_avi_dib(frames, fps=10)
-        np.testing.assert_array_equal(M.decode_avi_dib(data), frames)
-        df = spark.createDataFrame(pd.DataFrame([{"media_id": "v1", "bytes": data}]))
-        out = sorted(M.avi_frame_sample(df, every_n=4).collect(), key=lambda r: r.frame_idx)
-        assert [r.frame_idx for r in out] == [0, 4, 8]
-        for r in out:
-            got = M.media_decode_stub(bytes(r.bytes), r.h, r.w, "fake_rgb8")
-            np.testing.assert_array_equal(got, frames[r.frame_idx])
-
-    def test_frame_sample(self, spark):
-        img = np.zeros((4, 4, 3), dtype=np.uint8)
-        frames = b"".join(M.fake_rgb8_encode(img + i) for i in range(10))
-        df = spark.createDataFrame(
-            pd.DataFrame([{"media_id": "v0", "bytes": frames, "h": 4, "w": 4, "n_frames": 10}])
-        )
-        out = M.frame_sample(df, every_n=3).collect()
-        assert sorted(r.frame_idx for r in out) == [0, 3, 6, 9]
-        assert all(bytes(r.bytes)[0] == r.frame_idx for r in out)
 
 
 class TestDedupCorpusPipeline:
