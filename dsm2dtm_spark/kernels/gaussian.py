@@ -57,23 +57,27 @@ def _correlate1d_reflect(a: np.ndarray, taps: np.ndarray, axis: int) -> np.ndarr
     # float32 and self-consistent; float64 inputs — e.g. the brute-force
     # kernel unit tests — still get float64 accumulation)
     acc = np.float32 if a.dtype == np.float32 else np.float64
-    transposed = axis in (-2, a.ndim - 2)
-    if transposed:
-        a = np.swapaxes(a, -1, -2)
-    n = a.shape[-1]
-    if radius > max(32, n):  # giant kernels: exact periodic-extension FFT path
-        out = _correlate1d_fft(np.ascontiguousarray(a, dtype=np.float64), taps).astype(acc)
-        return np.swapaxes(out, -1, -2) if transposed else out
-    p = pad_reflect(np.ascontiguousarray(a, dtype=acc), radius, axis=-1)
+    axis %= a.ndim
+    n = a.shape[axis]
+    if radius > max(32, n):  # giant kernels: exact periodic-extension FFT path, on the last axis
+        out = _correlate1d_fft(np.ascontiguousarray(np.swapaxes(a, axis, -1), dtype=np.float64), taps).astype(acc)
+        return np.swapaxes(out, axis, -1)
+    tail = (slice(None),) * (a.ndim - 1 - axis)
+
+    def at(start: int) -> tuple:
+        return (Ellipsis, slice(start, start + n)) + tail
+
+    # rows for the last axis, row blocks for the one before: contiguous slices, no transpose
+    p = pad_reflect(a.astype(acc, copy=False), radius, axis)
     taps = taps.astype(acc)
     # symmetric kernel: fold mirrored taps together — w[r]*center + Σ w[r+d]*(left+right)
-    out = p[..., radius : radius + n] * taps[radius]
+    out = p[at(radius)] * taps[radius]
     buf = np.empty_like(out)
     for d in range(1, radius + 1):
-        np.add(p[..., radius - d : radius - d + n], p[..., radius + d : radius + d + n], out=buf)
+        np.add(p[at(radius - d)], p[at(radius + d)], out=buf)
         buf *= taps[radius + d]
         out += buf
-    return np.swapaxes(out, -1, -2) if transposed else out
+    return out
 
 
 def gaussian_filter2d(a: np.ndarray, sigma: float, truncate: float = _TRUNCATE) -> np.ndarray:

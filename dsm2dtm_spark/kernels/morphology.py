@@ -2,10 +2,18 @@
 
 Reference behavior: ``scipy.ndimage.grey_opening(a, footprint=np.ones((k,k)))``
 with default boundary mode ``'reflect'`` (reference algorithm.py:205-206). A
-square flat footprint separates into two 1-D passes per operation, and each 1-D
-sliding min/max runs in O(n) independent of window size via the van Herk /
-Gil–Werman running-extremum scheme — this is what keeps 161-px PMF windows
-linear-time at 10k×10k.
+square flat footprint separates into two 1-D passes per operation. Each 1-D
+sliding min/max runs in O(n·log k) by log-step doubling: ``m_2s[i] =
+op(m_s[i], m_s[i+s])`` extends the span from s to 2s, and once s is the largest
+power of two ≤ k, ``out[i] = op(m_s[i], m_s[i+k-s])`` covers the window with two
+overlapping spans (min and max are idempotent, so the overlap is exact).
+
+In numpy this beats the O(n) van Herk / Gil–Werman scheme: every step is one
+whole-array SIMD ``np.minimum``/``np.maximum`` over contiguous slices, while
+van Herk's prefix/suffix ``accumulate`` scans are scalar loops with a
+dependency on the previous element. The vertical pass slices row blocks
+(``[..., a:b, :]``) instead of transposing, so it needs no copy either. A
+161-px PMF window takes 8 passes.
 
 All code here is written from scratch against the published scipy semantics.
 """
@@ -18,49 +26,31 @@ from dsm2dtm_spark.kernels.padding import pad_reflect
 
 
 def _sliding_extremum_1d(a: np.ndarray, window: int, axis: int, is_min: bool) -> np.ndarray:
-    """van Herk running min/max of odd ``window`` along ``axis``, reflect boundary.
+    """Running min/max of odd ``window`` along ``axis``, reflect boundary.
 
-    For padded sequence p of length L = n + 2r (r = (window-1)//2), computes
-    out[i] = extremum(p[i : i+window]) for i in 0..n-1 using block prefix/suffix
-    scans: with blocks of size k=window, out[i] = ext(suffix[i], prefix[i+k-1]).
+    With p the input padded by r = (window-1)//2 on each side, out[i] is the
+    extremum of p[i : i+window] for i in 0..n-1.
     """
     if window == 1:
         return a.copy()
     if window % 2 != 1:
         raise ValueError("window must be odd")
-    k = window
-    r = (k - 1) // 2
-    transposed = axis in (-2, a.ndim - 2)
-    if transposed:
-        a = np.ascontiguousarray(np.swapaxes(a, -1, -2))  # contiguous rows for the scans
-    n = a.shape[-1]
-    if k <= 17:
-        # small windows: k SIMD min/max passes over shifted slices beat the
-        # sequential-dependency accumulate scans of van Herk
-        work = a if a.dtype.kind == "f" else a.astype(np.float64)
-        p = pad_reflect(work, r, axis=-1)
-        out = p[..., :n].copy()
-        op = np.minimum if is_min else np.maximum
-        for j in range(1, k):
-            op(out, p[..., j : j + n], out=out)
-        out = out.astype(a.dtype, copy=False)
-        return np.swapaxes(out, -1, -2) if transposed else out
-    L = n + 2 * r
-    nblocks = -(-L // k)
-    fill = np.inf if is_min else -np.inf
-    work = a if a.dtype.kind == "f" else a.astype(np.float64)
-    p = pad_reflect(work, r, axis=-1, tail=nblocks * k - L, tail_value=fill)
-    blocks = p.reshape(p.shape[:-1] + (nblocks, k))
-    acc = np.minimum.accumulate if is_min else np.maximum.accumulate
-    prefix = acc(blocks, axis=-1).reshape(p.shape[:-1] + (nblocks * k,))
-    # accumulate over a reversed VIEW walks memory backwards (no prefetch);
-    # a contiguous reversed copy + forward scan is ~40% faster at mid-size k
-    rev = np.ascontiguousarray(blocks[..., ::-1])
-    suffix = acc(rev, axis=-1)[..., ::-1].reshape(p.shape[:-1] + (nblocks * k,))
-    # window starting at padded position i spans [i, i+k-1]
-    out = (np.minimum if is_min else np.maximum)(suffix[..., :n], prefix[..., k - 1 : k - 1 + n])
-    out = out.astype(a.dtype, copy=False)
-    return np.swapaxes(out, -1, -2) if transposed else out
+    op = np.minimum if is_min else np.maximum
+    axis %= a.ndim
+    tail = (slice(None),) * (a.ndim - 1 - axis)
+
+    def at(start: int, stop: int) -> tuple:
+        return (Ellipsis, slice(start, stop)) + tail
+
+    n = a.shape[axis]
+    m = pad_reflect(a, (window - 1) // 2, axis)  # m[i] = extremum of p[i : i+s]
+    s = 1
+    while 2 * s <= window:
+        length = m.shape[axis] - s
+        m = op(m[at(0, length)], m[at(s, s + length)])
+        s *= 2
+    shift = window - s
+    return op(m[at(0, n)], m[at(shift, shift + n)])
 
 
 def erode_square(a: np.ndarray, window: int) -> np.ndarray:

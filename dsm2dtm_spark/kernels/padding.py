@@ -24,27 +24,25 @@ def reflect_indices(n: int, radius: int) -> np.ndarray:
     return np.where(m < n, m, 2 * n - 1 - m)
 
 
-def pad_reflect(a: np.ndarray, radius: int, axis: int, tail: int = 0, tail_value: float = 0.0) -> np.ndarray:
-    """Pad ``a`` by ``radius`` samples of symmetric reflection along ``axis``,
-    plus an optional ``tail`` of constant ``tail_value`` at the end (used by
-    the van Herk block layout to reach a multiple of the window size).
+def pad_reflect(a: np.ndarray, radius: int, axis: int) -> np.ndarray:
+    """Pad ``a`` by ``radius`` samples of symmetric reflection along ``axis``.
 
-    Fast path (radius < n, last axis): slice copies (memcpy) instead of a
-    fancy-indexed gather — this is on the PMF hot path at 10k×10k.
+    Fast path (0 < radius < n): slice copies (memcpy of rows or row blocks)
+    instead of a fancy-indexed gather — this is on the PMF hot path at 10k×10k.
     """
     n = a.shape[axis]
-    if axis in (-1, a.ndim - 1) and 0 < radius < n:
-        out = np.empty(a.shape[:-1] + (n + 2 * radius + tail,), dtype=a.dtype)
-        out[..., radius : radius + n] = a
-        out[..., :radius] = a[..., radius - 1 :: -1]
-        out[..., radius + n : radius + n + radius] = a[..., : -radius - 1 : -1]
-        if tail:
-            out[..., -tail:] = tail_value
-        return out
-    idx = reflect_indices(n, radius)
-    out = np.take(a, idx, axis=axis)
-    if tail:
-        pad = [(0, 0)] * a.ndim
-        pad[axis] = (0, tail)
-        out = np.pad(out, pad, mode="constant", constant_values=tail_value)
+    if not 0 < radius < n:
+        return np.take(a, reflect_indices(n, radius), axis=axis)
+    axis %= a.ndim
+    tail = (slice(None),) * (a.ndim - 1 - axis)
+
+    def at(s: slice) -> tuple:
+        return (Ellipsis, s) + tail
+
+    shape = list(a.shape)
+    shape[axis] = n + 2 * radius
+    out = np.empty(shape, dtype=a.dtype)
+    out[at(slice(radius, radius + n))] = a
+    out[at(slice(None, radius))] = a[at(slice(radius - 1, None, -1))]
+    out[at(slice(radius + n, None))] = a[at(slice(None, -radius - 1, -1))]
     return out

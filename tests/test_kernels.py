@@ -33,12 +33,9 @@ def _brute_extremum(a, k, is_min):
     fn = np.min if is_min else np.max
     for i in range(h):
         for j in range(w):
-            vals = [
-                a[_reflect_index(i + di, h), _reflect_index(j + dj, w)]
-                for di in range(-r, r + 1)
-                for dj in range(-r, r + 1)
-            ]
-            out[i, j] = fn(vals)
+            rows = [_reflect_index(i + di, h) for di in range(-r, r + 1)]
+            cols = [_reflect_index(j + dj, w) for dj in range(-r, r + 1)]
+            out[i, j] = fn(a[np.ix_(rows, cols)])
     return out
 
 
@@ -69,13 +66,18 @@ class TestReflect:
 
 
 class TestMorphology:
-    @pytest.mark.parametrize("k", [3, 5, 9])
-    @pytest.mark.parametrize("shape", [(7, 7), (5, 12), (12, 5)])
+    # k up to 65 spans the PMF schedule 3, 5, 9, 17, 33, 65 plus 19; (1, 9) and (9, 1)
+    # are single rows and columns; (4, 40), (40, 4) and (3, 2) put k wider than one
+    # axis or both, where the pad comes from reflect_indices rather than slice copies
+    @pytest.mark.parametrize("k", [3, 5, 9, 17, 19, 33, 65])
+    @pytest.mark.parametrize("shape", [(7, 7), (5, 12), (12, 5), (1, 9), (9, 1), (4, 40), (40, 4), (3, 2)])
     def test_matches_bruteforce(self, k, shape):
         rng = np.random.default_rng(7)
-        a = rng.normal(size=shape).astype(np.float32)
-        np.testing.assert_array_equal(erode_square(a, k), _brute_extremum(a, k, True))
-        np.testing.assert_array_equal(dilate_square(a, k), _brute_extremum(a, k, False))
+        for dtype in (np.float32, np.float64):
+            a = rng.normal(size=shape).astype(dtype)
+            for got, is_min in ((erode_square(a, k), True), (dilate_square(a, k), False)):
+                assert got.dtype == dtype
+                np.testing.assert_array_equal(got, _brute_extremum(a, k, is_min))
 
     def test_window_larger_than_axis(self):
         rng = np.random.default_rng(3)
