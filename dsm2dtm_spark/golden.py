@@ -147,7 +147,7 @@ def gap_fill(ground: np.ndarray, nodata: float, max_dist_px: float) -> np.ndarra
         dist2, nr, nc = nearest_valid(invalid)
         in_range = invalid & (dist2 <= max_dist_px * max_dist_px)
         if in_range.any():
-            dtm[in_range] = dtm[nr, nc][in_range]
+            dtm[in_range] = dtm[nr[in_range], nc[in_range]]
     return dtm
 
 

@@ -16,9 +16,9 @@ Algorithm (from scratch, exact, O(h·w) total):
    with masked pop/advance rounds, so the Python loop is O(w) amortized while
    every step does O(h) vector work.
 
-Tie-breaking on equidistant sites prefers the smaller source column / upper
-row; scipy's scan order may differ at exact ties — fixtures avoid
-tie-sensitive assertions (SURVEY.md §2.1 parity notes).
+One tie rule on every route: the valid cell with the smallest (d², col, row).
+``nearest_valid`` finds it with an offset scan whose cost follows the holes
+and hands deep voids to this transform.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from __future__ import annotations
 import numpy as np
 
 _BIG = 1.0e18  # finite sentinel (inf would produce nan in envelope intersections)
+_SCAN_BUDGET = 16  # offset-scan cell-visits per grid cell before the full transform takes over
 
 
 def _envelope_transform(f: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -108,67 +109,62 @@ def edt_with_indices(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarr
     return dist2, nearest_row, nearest_col
 
 
-def nearest_valid_sparse(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    """Sparse-case exact nearest-valid search: when few cells are invalid,
-    search a growing (2R+1)² window around each invalid cell; a hit at
-    Euclidean distance d ≤ R is certified globally nearest (anything outside
-    the Chebyshev-R window is farther than R). O(K·R²) — on the common
-    "refinement punched a few holes" images this replaces an O(h·w)
-    full-image transform that dominated the 10k×10k wall time.
-
-    Returns (dist2, nearest_row, nearest_col) in the same contract as
-    ``edt_with_indices`` (valid cells map to themselves at 0), or None when
-    the full transform is the better tool (dense/deep invalid regions).
-    """
-    h, w = mask.shape
-    inv_r, inv_c = np.nonzero(mask)
-    k = len(inv_r)
-    if k == 0 or not (~mask).any():
-        return None
-
-    dist2 = np.zeros((h, w), dtype=np.float64)
-    rows = np.arange(h, dtype=np.int64)[:, None]
-    cols = np.arange(w, dtype=np.int64)[None, :]
-    nr = np.broadcast_to(rows, (h, w)).copy()
-    nc = np.broadcast_to(cols, (h, w)).copy()
-
-    qr, qc = inv_r, inv_c
-    radius = 2
-    while len(qr):
-        if len(qr) * (2 * radius + 1) ** 2 > 4 * h * w:
-            return None  # window search would cost more than the full EDT
-        d = np.arange(-radius, radius + 1, dtype=np.int64)
-        rr = np.clip(qr[:, None] + d[None, :], 0, h - 1)  # (k, 2R+1)
-        cc = np.clip(qc[:, None] + d[None, :], 0, w - 1)
-        # candidate block per query: (k, 2R+1, 2R+1)
-        cand_valid = ~mask[rr[:, :, None], cc[:, None, :]]
-        dr = rr - qr[:, None]
-        dc = cc - qc[:, None]
-        d2 = dr[:, :, None].astype(np.float64) ** 2 + dc[:, None, :].astype(np.float64) ** 2
-        d2[~cand_valid] = np.inf
-        flat = d2.reshape(len(qr), -1)
-        best = np.argmin(flat, axis=1)
-        bestd2 = flat[np.arange(len(qr)), best]
-        ok = bestd2 <= float(radius * radius)  # certified: nothing outside beats it
-        bi, bj = np.divmod(best[ok], 2 * radius + 1)
-        sel_r, sel_c = qr[ok], qc[ok]
-        dist2[sel_r, sel_c] = bestd2[ok]
-        nr[sel_r, sel_c] = rr[ok, bi]
-        nc[sel_r, sel_c] = cc[ok][np.arange(ok.sum()), bj]
-        qr, qc = qr[~ok], qc[~ok]
-        radius *= 2
-    return dist2, nr, nc
+def _offset_rings(h: int, w: int):
+    """Yield rings (R, dr, dc, d²) of doubling radius R = 1, 2, 4, …: the offsets
+    with (R/2)² < dr² + dc² ≤ R² that fit an h×w grid, in (d², dc, dr) order."""
+    inner, r = 0, 1
+    while True:
+        span_r, span_c = min(r, h - 1), min(r, w - 1)
+        dr, dc = np.mgrid[-span_r : span_r + 1, -span_c : span_c + 1]
+        d2 = dr * dr + dc * dc
+        ring = (d2 > inner * inner) & (d2 <= r * r)
+        dr, dc, d2 = dr[ring], dc[ring], d2[ring]
+        order = np.lexsort((dr, dc, d2))
+        yield r, dr[order], dc[order], d2[order]
+        inner, r = r, 2 * r
 
 
 def nearest_valid(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Dispatcher: sparse windowed search when invalid cells are few/shallow,
-    full vectorized-FH transform otherwise. Identical contract either way."""
+    """``edt_with_indices``'s contract and tie rule, at a cost that follows the holes.
+
+    Distance-ordered offset scan: visit the offsets (dr, dc) in (d², dc, dr)
+    order and, per offset, give every still-unassigned invalid cell whose
+    shifted cell is valid that cell. The first hit is the smallest
+    (d², col, row), so no tie is left to break. Cost is one vector step per
+    offset over the cells still pending — small for the shallow holes
+    refinement punches. Deep voids (lakes, coverage gaps) exhaust a fixed
+    work budget and go to the O(h·w) full transform, with the same answer.
+    """
     mask = np.asarray(mask, dtype=bool)
-    if mask.sum() * 25 <= mask.size:  # ≤4% invalid: try the sparse path first
-        out = nearest_valid_sparse(mask)
-        if out is not None:
-            return out
-    return edt_with_indices(mask)
+    h, w = mask.shape
+    if not (~mask).any():
+        raise ValueError("nearest_valid requires at least one valid (False) cell")
+    dist2 = np.zeros(h * w, dtype=np.float64)
+    nr, nc = (a.ravel() for a in np.indices((h, w)))
+    pending = np.flatnonzero(mask)  # flat indices of cells not yet assigned
+    budget = _SCAN_BUDGET * h * w  # cell-visits before the full transform is cheaper
+    for r, ring_dr, ring_dc, ring_d2 in _offset_rings(h, w):
+        if not len(pending):
+            break
+        # valid cells in a grid padded by r, so no offset of the ring leaves it
+        wp = w + 2 * r
+        valid = np.pad(~mask, r).ravel()
+        pr, pc = np.divmod(pending, w)
+        at = (pr + r) * wp + pc + r
+        for dr, dc, d2 in zip(ring_dr.tolist(), ring_dc.tolist(), ring_d2.tolist()):
+            budget -= len(at)
+            if budget < 0:
+                return edt_with_indices(mask)
+            hit = valid[at + (dr * wp + dc)]
+            if hit.any():
+                cells = pending[hit]
+                dist2[cells] = d2
+                nr[cells] += dr
+                nc[cells] += dc
+                pending, at = pending[~hit], at[~hit]
+                if not len(pending):
+                    break
+    return dist2.reshape(h, w), nr.reshape(h, w), nc.reshape(h, w)
 
 
 def fill_nearest(values: np.ndarray, invalid_mask: np.ndarray) -> np.ndarray:

@@ -11,6 +11,7 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from dsm2dtm_spark import codecs
+from dsm2dtm_spark.kernels import edt_with_indices, nearest_valid
 from dsm2dtm_spark.operators import cellindex
 from dsm2dtm_spark.params import NODATA_DEFAULT
 from dsm2dtm_spark.sources import tiffio
@@ -34,6 +35,54 @@ def _grid(h, w, seed, nodata_frac):
     if nodata_frac:
         g[rng.random((h, w)) < nodata_frac] = NODATA_DEFAULT
     return g
+
+
+# nearest-valid masks: True = invalid. 1×n and n×1 strips alongside 2-D grids
+mask_shapes = st.one_of(
+    st.tuples(st.just(1), st.integers(min_value=1, max_value=80)),
+    st.tuples(st.integers(min_value=1, max_value=80), st.just(1)),
+    st.tuples(st.integers(min_value=1, max_value=40), st.integers(min_value=1, max_value=40)),
+)
+masks = st.tuples(
+    st.sampled_from(["random", "lattice", "ringed", "void"]),
+    mask_shapes,
+    st.integers(min_value=0, max_value=2**32 - 1),  # seed
+)
+
+
+def _mask(kind, shape, seed):
+    rng = np.random.default_rng(seed)
+    h, w = shape
+    if kind == "random":
+        mask = rng.random(shape) < rng.random()
+    elif kind == "lattice":  # valid sites on a regular lattice: equidistant ties everywhere
+        mask = np.ones(shape, dtype=bool)
+        s = int(rng.integers(2, 6))
+        mask[rng.integers(0, s) :: s, rng.integers(0, s) :: s] = False
+    elif kind == "ringed":  # single holes ringed by valid cells: 4-way ties at d² = 1
+        ii, jj = np.indices(shape)
+        mask = ((ii + jj) % 2 == 0) & (rng.random(shape) < rng.uniform(0.01, 0.2))
+    else:  # "void": a few valid cells in a sea of invalid ones, deep enough to end the offset scan early
+        mask = np.ones(shape, dtype=bool)
+        k = int(rng.integers(1, 4))
+        mask[rng.integers(0, h, k), rng.integers(0, w, k)] = False
+    if mask.all():
+        mask[rng.integers(0, h), rng.integers(0, w)] = False
+    return mask
+
+
+class TestNearestValidProperties:
+    @FAST
+    @given(masks)
+    @example(("void", (40, 40), 0))
+    @example(("void", (1, 80), 1))
+    @example(("lattice", (37, 29), 2))
+    @example(("ringed", (3, 11), 2))  # under 4% invalid: the old sparse route's upper-row tie
+    def test_offset_scan_equals_full_transform(self, case):
+        """One answer and one tie rule on every route: smallest (d², col, row)."""
+        mask = _mask(*case)
+        for got, want in zip(nearest_valid(mask), edt_with_indices(mask)):
+            np.testing.assert_array_equal(got, want)
 
 
 class TestTiffProperties:

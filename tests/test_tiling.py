@@ -25,6 +25,7 @@ def big_image_pdf() -> pd.DataFrame:
         "ramp_blocks": None,
         "nodata_holes": None,
         "vegetation": None,
+        "void_edge": None,
     }
     n = 512
     yy, xx = np.mgrid[0:n, 0:n]
@@ -40,6 +41,12 @@ def big_image_pdf() -> pd.DataFrame:
     idx = rng.choice(n * n, n * n // 5, replace=False)
     g3.ravel()[idx] += rng.uniform(2, 12, n * n // 5).astype(np.float32)
     scenes["vegetation"] = g3
+    # a void deeper than the halo plus one hole with equidistant valid
+    # neighbours: whole image and tile cuts must break the tie alike
+    g4 = g.copy()
+    g4[:, :100] = NODATA_DEFAULT
+    g4[450, 480] = NODATA_DEFAULT
+    scenes["void_edge"] = g4
     for i, (name, grid) in enumerate(scenes.items()):
         rows.append(
             {
