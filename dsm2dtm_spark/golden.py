@@ -27,6 +27,7 @@ from dsm2dtm_spark.params import (
     PMF_INIT_THRESHOLD,
     PMF_MAX_THRESHOLD,
     REFINE_ELEV_THRESHOLD,
+    DerivedParams,
     apply_radius_override,
     derive_params,
 )
@@ -74,7 +75,8 @@ def pmf(
     slope_px: float,
     init_threshold: float = PMF_INIT_THRESHOLD,
     max_threshold: float = PMF_MAX_THRESHOLD,
-    min_fill: float | None = None,
+    *,
+    min_fill: float,
 ) -> np.ndarray:
     """Progressive morphological filter (reference algorithm.py:165-217).
 
@@ -83,15 +85,14 @@ def pmf(
     ``min(init_thr + slope·(w−1)/2, max_thr)`` are pulled down to it. Nodata
     cells are restored at the end.
 
-    ``min_fill`` lets the tiled path inject the per-image global valid minimum
-    (reference line 197 computes it over the whole array); when None it is
-    computed locally.
+    ``min_fill`` is the whole image's valid minimum (reference line 197
+    computes it over the whole array), so a tile cut fills its nodata cells
+    with the same value as the whole image does.
     """
     valid = surface != nodata
     if not valid.any():
         return surface.copy()
-    fill = np.min(surface[valid]) if min_fill is None else min_fill
-    working = np.where(valid, surface, fill)
+    working = np.where(valid, surface, min_fill)
     buf = np.empty_like(working)
     mask = np.empty(working.shape, dtype=bool)
     w = init_window
@@ -111,7 +112,8 @@ def refine(
     nodata: float,
     sigma: float,
     elev_threshold: float = REFINE_ELEV_THRESHOLD,
-    min_fill: float | None = None,
+    *,
+    min_fill: float,
 ) -> np.ndarray:
     """Smooth-and-compare outlier removal (reference algorithm.py:220-252):
     cells ≥ ``elev_threshold`` above the Gaussian-smoothed (min-filled) surface
@@ -119,20 +121,18 @@ def refine(
     valid = ground != nodata
     if not valid.any():
         return ground.copy()
-    fill = np.min(ground[valid]) if min_fill is None else min_fill
-    smoothed = gaussian_filter2d(np.where(valid, ground, fill), sigma)
+    smoothed = gaussian_filter2d(np.where(valid, ground, min_fill), sigma)
     out = ground.copy()
     out[((ground - smoothed) >= elev_threshold) & valid] = nodata
     return out
 
 
-def final_smooth(ground: np.ndarray, nodata: float, sigma: float, min_fill: float | None = None) -> np.ndarray:
+def final_smooth(ground: np.ndarray, nodata: float, sigma: float, *, min_fill: float) -> np.ndarray:
     """Light Gaussian smoothing of valid cells (reference algorithm.py:423-429)."""
     valid = ground != nodata
     if not valid.any():
         return ground
-    fill = np.min(ground[valid]) if min_fill is None else min_fill
-    smoothed = gaussian_filter2d(np.where(valid, ground, fill), sigma)
+    smoothed = gaussian_filter2d(np.where(valid, ground, min_fill), sigma)
     return np.where(valid, smoothed, nodata)
 
 
@@ -149,6 +149,23 @@ def gap_fill(ground: np.ndarray, nodata: float, max_dist_px: float) -> np.ndarra
         if in_range.any():
             dtm[in_range] = dtm[nr[in_range], nc[in_range]]
     return dtm
+
+
+def stage_chain(dsm: np.ndarray, nodata: float, p: DerivedParams, min_valid: float,
+                init_threshold: float = PMF_INIT_THRESHOLD, max_threshold: float = PMF_MAX_THRESHOLD) -> np.ndarray:
+    """PMF → refine → final smooth → gap fill with derived params ``p``.
+
+    ``min_valid`` is the image's valid minimum and fills nodata in PMF,
+    refine and the final smooth. The reference takes each stage's fill from
+    that stage's own input, but the valid minimum survives PMF and refine
+    unchanged, so the one value is the same fill. The whole-image path and
+    every tile of the tiled path run this function; a tile passes its
+    image's minimum, which its cut alone may not contain."""
+    ground = pmf(dsm, nodata, p.init_window, p.max_window, p.slope_px, init_threshold, max_threshold,
+                 min_fill=min_valid)
+    ground = refine(ground, nodata, p.refine_sigma, min_fill=min_valid)
+    ground = final_smooth(ground, nodata, p.final_sigma, min_fill=min_valid)
+    return gap_fill(ground, nodata, p.gap_dist_px)
 
 
 def gap_fill_idw(ground: np.ndarray, nodata: float, max_dist_px: float, k: int = 4) -> np.ndarray:
@@ -216,19 +233,17 @@ def _standard_path(
     init_threshold: float,
     max_threshold: float,
 ) -> np.ndarray:
-    """Full-resolution pipeline: slope → params → PMF → refine → smooth →
-    gap fill (reference algorithm.py:349-445)."""
+    """Full-resolution pipeline: slope → params → the stage chain
+    (reference algorithm.py:349-445)."""
     if slope is None:
         slope = terrain_slope(dsm, cell_size, nodata)
     max_dim = max(dsm.shape)
     p = derive_params(cell_size, max_image_dim=max_dim, base_slope=slope)
     if radius_m is not None:
         apply_radius_override(p, radius_m, cell_size, max_dim)
-
-    ground = pmf(dsm, nodata, p.init_window, p.max_window, p.slope_px, init_threshold, max_threshold)
-    ground = refine(ground, nodata, p.refine_sigma)
-    ground = final_smooth(ground, nodata, p.final_sigma)
-    return gap_fill(ground, nodata, p.gap_dist_px)
+    valid = dsm != nodata
+    min_valid = float(dsm[valid].min()) if valid.any() else float("nan")
+    return stage_chain(dsm, nodata, p, min_valid, init_threshold, max_threshold)
 
 
 def _coarse_path(
@@ -320,6 +335,7 @@ __all__ = [
     "refine",
     "final_smooth",
     "gap_fill",
+    "stage_chain",
     "validate_job_params",
     "estimate_utm_epsg",
     "DEG_TO_M",

@@ -14,11 +14,12 @@ values):
   statistics; pass B re-streams and keeps only values assigned to those
   buckets, then selects exactly.
 
-Two block sources: ``raw_f32`` slices a zero-copy buffer view; ``png16``
-re-inflates the IDAT stream scanline-by-scanline per pass (PNG rows are
-zlib-sequential, so chunked decode costs extra CPU per pass but never holds
-more than a block of rows). Both produce bit-identical rows to the full
-decoder.
+Block sources (``block_source_for``): ``raw_f32`` slices a zero-copy buffer
+view; ``png16`` re-inflates the IDAT stream scanline-by-scanline per pass
+(PNG rows are zlib-sequential, so chunked decode costs extra CPU per pass but
+never holds more than a block of rows); qz8 has no row-streamable layout, so
+it decodes once and windows the grid. All produce bit-identical rows to the
+full decoder. The tiled plan's tile cut reads the same sources.
 
 Matches ``golden.terrain_slope`` exactly on the standard path (res ≥ 0.5 m,
 no decimation — the tiled plan's domain; float32 arithmetic mirrored
@@ -35,6 +36,7 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 
+from dsm2dtm_spark import codecs
 from dsm2dtm_spark.params import PMF_BASE_SLOPE
 
 # (y0, y1, lo, block) where block covers rows [lo, hi) with hi ≥ y1 — the
@@ -42,18 +44,16 @@ from dsm2dtm_spark.params import PMF_BASE_SLOPE
 Block = tuple[int, int, int, np.ndarray]
 BlockSource = Callable[[], Iterator[Block]]
 
-CHUNKED_FORMATS = ("raw_f32", "png16")
 
-
-def raw_f32_block_source(buf: bytes, h: int, w: int, block_rows: int, halo: int = 1) -> BlockSource:
-    arr = np.frombuffer(buf, dtype="<f4", count=h * w)  # zero-copy view
+def array_block_source(arr: np.ndarray, block_rows: int, halo: int = 1) -> BlockSource:
+    """Row windows (views) over a grid already in memory."""
+    h = arr.shape[0]
 
     def gen() -> Iterator[Block]:
         for y0 in range(0, h, block_rows):
             y1 = min(h, y0 + block_rows)
             lo = max(0, y0 - halo)
-            hi = min(h, y1 + halo)
-            yield y0, y1, lo, arr[lo * w : hi * w].reshape(hi - lo, w)
+            yield y0, y1, lo, arr[lo : min(h, y1 + halo)]
 
     return gen
 
@@ -63,8 +63,6 @@ def _png16_rows(data: bytes, h: int, w: int) -> Iterator[np.ndarray]:
     (incremental zlib inflate + filter-0/2 unfilter + dequantize), without
     ever materializing the whole image. Row values are bit-identical to
     ``codecs.decode_png16`` (same float64→float32 dequantize per row)."""
-    from dsm2dtm_spark import codecs
-
     if data[: len(codecs._PNG_SIG)] != codecs._PNG_SIG:
         raise ValueError("not a PNG stream")
     stride = 1 + 2 * w
@@ -145,11 +143,14 @@ def png16_block_source(data: bytes, h: int, w: int, block_rows: int, halo: int =
 
 
 def block_source_for(buf: bytes, h: int, w: int, fmt: str, block_rows: int, halo: int = 1) -> BlockSource:
+    """The block source of any codec: raw_f32 windows a zero-copy view of the
+    payload, png16 inflates scanline by scanline, and every other codec (qz8)
+    decodes once and hands out row windows of the decoded grid."""
     if fmt == "raw_f32":
-        return raw_f32_block_source(buf, h, w, block_rows, halo)
+        return array_block_source(np.frombuffer(buf, dtype="<f4", count=h * w).reshape(h, w), block_rows, halo)
     if fmt == "png16":
         return png16_block_source(buf, h, w, block_rows, halo)
-    raise ValueError(f"no chunked block source for fmt {fmt!r}; known: {CHUNKED_FORMATS}")
+    return array_block_source(codecs.decode(buf, h, w, fmt), block_rows, halo)
 
 
 def _block_mags(source: BlockSource, res: float, nodata: float):
@@ -266,23 +267,12 @@ def chunked_min_and_slope(
             b = bucket_of(finite)
             keep.append(finite[np.isin(b, need)])
     pool = np.sort(np.concatenate(keep))
-    rank_before = int(cum[need[0] - 1]) if need[0] > 0 else 0
     # bucket `need` may be non-contiguous (two medians in different buckets):
     # map global ranks onto the pooled values bucket-by-bucket
-    by_bucket = pool_by_bucket(pool, bucket_of, need, counts)
+    pool_bucket = bucket_of(pool)
     picks = []
     for k in want:
         b = int(np.searchsorted(cum, k + 1))
-        rank_in_bucket = k - (int(cum[b - 1]) if b > 0 else 0)
-        picks.append(by_bucket[b][rank_in_bucket])
+        picks.append(pool[pool_bucket == b][k - (int(cum[b - 1]) if b > 0 else 0)])
     med = picks[0] if len(picks) == 1 else np.float32((np.float32(picks[0]) + np.float32(picks[1])) / np.float32(2))
     return float(vmin), float(max(0.01, min(float(med), 1.0)))
-
-
-def pool_by_bucket(pool: np.ndarray, bucket_of, need: list[int], counts: np.ndarray) -> dict:
-    """Split the sorted pooled values back into their (sorted) buckets."""
-    out = {}
-    b_of_pool = bucket_of(pool)
-    for b in need:
-        out[b] = pool[b_of_pool == b]
-    return out

@@ -9,15 +9,22 @@ Plan shape (SURVEY.md §3 engine lifecycle):
                             locally (reference algorithm.py:197, 382-388).
                             The only quarantining pass (permissive).
     pass 2  emit_tiles      map_rows: cut overlapping tiles (core + halo ≥
-                            total influence radius), key each by its S2-style
-                            cell id + a salt column; `repartition(cell_id,
-                            salt)` is the explicit halo-exchange shuffle and
-                            the skew control for hot cells (E13).
-    pass 3  process_tiles   map_rows: run the standard pipeline per tile
-                            with injected global scalars, keep only the core;
+                            total influence radius) in one path, band by
+                            band from the codec's row-block source; key each
+                            by its S2-style cell id + a salt column;
+                            `repartition(cell_id, salt)` is the explicit
+                            halo-exchange shuffle and the skew control for
+                            hot cells (E13).
+    pass 3  process_tiles   map_rows: golden's stage chain per tile with the
+                            injected global scalars, keep only the core;
                             wall_ms/partition_id lineage per tile.
     pass 4  stitch          groupBy(image_id).applyInPandas: reassemble and
                             re-encode; bit-identical to the whole-image path.
+
+Each pass's per-image or per-tile work is a module-level pure function
+(``pass1_stats``, ``cut_tiles``, ``process_tile``, ``fill_canvas``), so the
+tiled ≡ whole-image claim is also tested without Spark
+(tests/test_properties.py::TestTiledEqualsWhole).
 
 Passes 1-3 (and ``halo_from_metadata``) are per-row functions behind
 ``util.map_rows``, the engine's one per-row Python boundary: it owns the
@@ -61,6 +68,7 @@ from pyspark.sql.types import (
 )
 
 from dsm2dtm_spark import codecs, golden
+from dsm2dtm_spark.kernels.streamstats import block_source_for, chunked_min_and_slope
 from dsm2dtm_spark.operators import cellindex
 from dsm2dtm_spark.util import ensure_min_partitions, map_rows
 from dsm2dtm_spark.params import (
@@ -157,61 +165,50 @@ def tile_center_lonlat(
     return lon, lat
 
 
-def image_stats(
-    images: DataFrame,
-    radius_m: float | None,
-    slope: float | None,
-    chunked: bool = False,
-    permissive: bool = False,
-) -> DataFrame:
-    """Pass 1: per-image global scalars. Cheap relative to pass 3 (decode +
-    one gradient/median), and the only stage that must see whole images.
-
-    ``chunked=True`` streams raw_f32/png16 payloads in row blocks through the
-    bounded-memory exact (min, median-slope) kernel
-    (kernels.streamstats) — identical results, memory O(block) instead of
-    O(image), for rasters beyond single-task decode budgets (png16 rows are
-    zlib-sequential, so each pass re-inflates scanline-by-scanline).
+def image_stats(images: DataFrame, radius_m: float | None, slope: float | None, permissive: bool = False) -> DataFrame:
+    """Pass 1: per-image global scalars (``pass1_stats`` per row). Cheap
+    relative to pass 3 (decode + one gradient/median), and the only stage
+    that must see whole images.
 
     ``permissive=True``: a poison payload yields a stats row with ``error``
     set and null scalars instead of killing the job; downstream tile stages
     see only error-free rows (pass 1 is the single place original bytes are
     first decoded, so the quarantine decision is made exactly once)."""
+    return map_rows(images, lambda row: pass1_stats(row, radius_m, slope), STATS_SCHEMA, permissive=permissive)
 
-    from dsm2dtm_spark.kernels.streamstats import CHUNKED_FORMATS, chunked_min_and_slope
 
-    def one(row) -> dict:
-        # windows/sigmas/halo come from METADATA, checked before any decode
-        # so a runaway kernel/halo config fails fast even on a raster whose
-        # decode itself would be the OOM (slope only sets slope_px, patched
-        # after estimation below)
-        cell_size, p, halo = _metadata_params(row, radius_m)
-        h, w = int(row.h), int(row.w)
-        # the streamed kernel covers the no-decimation slope domain
-        # (res ≥ 0.5); rarer sub-0.5 m standard rows decode whole-image
-        if chunked and row.fmt in CHUNKED_FORMATS and cell_size >= 0.5:
-            mn, s_auto = chunked_min_and_slope(row.bytes, h, w, cell_size, NODATA_DEFAULT, fmt=row.fmt)
-            s = slope if slope is not None else s_auto
-        else:
-            grid = codecs.decode(row.bytes, h, w, row.fmt)
-            valid = grid != NODATA_DEFAULT
-            mn = float(grid[valid].min()) if valid.any() else float("nan")
-            s = slope if slope is not None else golden.terrain_slope(grid, cell_size, NODATA_DEFAULT)
-        p.slope_px = float(s) * cell_size
-        return {
-            "image_id": row.image_id,
-            "min_valid": mn,
-            "slope_used": float(s),
-            "cell_size": cell_size,
-            "init_window": p.init_window,
-            "max_window": p.max_window,
-            "refine_sigma": p.refine_sigma,
-            "final_sigma": p.final_sigma,
-            "gap_dist_px": p.gap_dist_px,
-            "halo_px": halo,
-        }
-
-    return map_rows(images, one, STATS_SCHEMA, permissive=permissive)
+def pass1_stats(row, radius_m: float | None, slope: float | None) -> dict:
+    """One image row's pass-1 scalars: valid minimum, slope, derived params
+    and halo. At cell size ≥ 0.5 m, where the slope is not decimated, the
+    streamed kernel ``streamstats.chunked_min_and_slope`` reads row blocks
+    of the payload (memory O(block) on raw_f32/png16) and equals
+    ``golden.terrain_slope`` exactly; finer rows decode whole and run
+    ``golden.terrain_slope``."""
+    # windows/sigmas/halo come from METADATA, checked before any decode
+    # so a runaway kernel/halo config fails fast even on a raster whose
+    # decode itself would be the OOM (the slope enters none of them)
+    cell_size, p, halo = _metadata_params(row, radius_m)
+    h, w = int(row.h), int(row.w)
+    if cell_size >= 0.5:
+        mn, s = chunked_min_and_slope(row.bytes, h, w, cell_size, NODATA_DEFAULT, fmt=row.fmt)
+    else:
+        grid = codecs.decode(row.bytes, h, w, row.fmt)
+        valid = grid != NODATA_DEFAULT
+        mn = float(grid[valid].min()) if valid.any() else float("nan")
+        s = golden.terrain_slope(grid, cell_size, NODATA_DEFAULT)
+    s = float(slope) if slope is not None else s
+    return {
+        "image_id": row.image_id,
+        "min_valid": mn,
+        "slope_used": s,
+        "cell_size": cell_size,
+        "init_window": p.init_window,
+        "max_window": p.max_window,
+        "refine_sigma": p.refine_sigma,
+        "final_sigma": p.final_sigma,
+        "gap_dist_px": p.gap_dist_px,
+        "halo_px": halo,
+    }
 
 
 def _metadata_params(row, radius_m: float | None) -> tuple[float, DerivedParams, int]:
@@ -266,29 +263,30 @@ def halo_from_metadata(images: DataFrame, radius_m: float | None) -> DataFrame:
     )
 
 
-def emit_tiles(
-    images_with_stats: DataFrame,
-    tile_px: int,
-    cell_res: int = DEFAULT_CELL_RES,
-    chunked: bool = False,
-) -> DataFrame:
-    """Pass 2: cut overlapping tiles. The cut window is the core expanded by
-    halo_px, clipped to the image — clipping lands on true image borders where
-    reflect padding is exact.
+def cut_tiles(data: bytes, h: int, w: int, fmt: str, tile_px: int, halo: int):
+    """Every tile of one encoded image, in ``tile_grid`` order, as
+    (tile_row, tile_col, core_y, core_x, core_h, core_w, cut_y, cut_x, cut).
+    The cut is the core expanded by ``halo`` and clipped to the image —
+    clipping lands on true image borders, where reflect padding is exact.
 
-    ``chunked=True`` cuts tiles from a SLIDING ROW WINDOW over the encoded
-    payload (the streamstats block sources with halo = halo_px) instead of
-    decoding the whole raster: task memory becomes O((tile_px + 2·halo) × w)
-    rather than O(h × w) — with chunked pass-1 stats this lets a raster far
-    beyond executor memory (10-gigapixel GeoTIFF class) flow through the
-    tiled plan. Output rows are byte-identical to the whole-image cut."""
+    Each row of tiles is cut from one block of the codec's block source
+    (``streamstats.block_source_for``, ``halo`` rows of margin), so a
+    raw_f32 or png16 raster is never decoded whole: memory is
+    O((tile_px + 2·halo) × w) rather than O(h × w)."""
+    bands = block_source_for(data, h, w, fmt, block_rows=tile_px, halo=halo)()
+    for tr, tc, cy, cx, ch, cw in tile_grid(h, w, tile_px):
+        if tc == 0:
+            _, _, lo, blk = next(bands)
+        x0 = max(0, cx - halo)
+        yield tr, tc, cy, cx, ch, cw, lo, x0, blk[:, x0 : min(w, cx + cw + halo)]
 
-    from dsm2dtm_spark.kernels.streamstats import CHUNKED_FORMATS, block_source_for
 
-    def tile(row, h, w, tr, tc, cy, cx, ch, cw, cut_y, cut_x, cut_arr) -> dict:
-        lon_c, lat_c = tile_center_lonlat(
-            row.lon0, row.lat0, row.xres_m, row.yres_m, cx + cw / 2.0, cy + ch / 2.0
-        )
+def emit_tiles(images_with_stats: DataFrame, tile_px: int, cell_res: int = DEFAULT_CELL_RES) -> DataFrame:
+    """Pass 2: cut overlapping tiles (``cut_tiles``) and key each by the cell
+    of its core's center plus a salt."""
+
+    def tile(row, tr, tc, cy, cx, ch, cw, cut_y, cut_x, cut_arr) -> dict:
+        lon_c, lat_c = tile_center_lonlat(row.lon0, row.lat0, row.xres_m, row.yres_m, cx + cw / 2.0, cy + ch / 2.0)
         return {
             "image_id": row.image_id,
             "tile_row": tr,
@@ -310,37 +308,33 @@ def emit_tiles(
             "payload": codecs.encode_zf32(cut_arr),
             "fmt": row.fmt,
             "caption": row.caption,
-            "img_h": h,
-            "img_w": w,
+            "img_h": int(row.h),
+            "img_w": int(row.w),
         }
 
     def cut(row) -> list[dict]:
-        h, w = int(row.h), int(row.w)
-        halo = int(row.halo_px)
-        if chunked and row.fmt in CHUNKED_FORMATS:
-            src = block_source_for(row.bytes, h, w, row.fmt, block_rows=tile_px, halo=halo)
-            n_cols = max(1, math.ceil(w / tile_px))
-            out = []
-            for cy, y1, lo, blk in src():  # one band of tiles per block
-                tr = cy // tile_px
-                for tc in range(n_cols):
-                    cx = tc * tile_px
-                    cw = min(tile_px, w - cx)
-                    x0 = max(0, cx - halo)
-                    x1 = min(w, cx + cw + halo)
-                    out.append(tile(row, h, w, tr, tc, cy, cx, y1 - cy, cw, lo, x0, blk[:, x0:x1]))
-            return out
-        grid = codecs.decode(row.bytes, h, w, row.fmt)
-        out = []
-        for tr, tc, cy, cx, ch, cw in tile_grid(h, w, tile_px):
-            y0 = max(0, cy - halo)
-            x0 = max(0, cx - halo)
-            y1 = min(h, cy + ch + halo)
-            x1 = min(w, cx + cw + halo)
-            out.append(tile(row, h, w, tr, tc, cy, cx, ch, cw, y0, x0, grid[y0:y1, x0:x1]))
-        return out
+        tiles = cut_tiles(row.bytes, int(row.h), int(row.w), row.fmt, tile_px, int(row.halo_px))
+        return [tile(row, *t) for t in tiles]
 
     return map_rows(images_with_stats, cut, TILE_SCHEMA)
+
+
+def process_tile(cut: np.ndarray, stats, oy: int, ox: int, ch: int, cw: int,
+                 init_threshold: float = PMF_INIT_THRESHOLD,
+                 max_threshold: float = PMF_MAX_THRESHOLD) -> np.ndarray:
+    """``golden.stage_chain`` on one cut with its image's pass-1 scalars
+    (``stats``: a ``pass1_stats`` record's fields as attributes), cropped to
+    the core at (oy, ox) within the cut."""
+    p = DerivedParams(
+        init_window=int(stats.init_window),
+        max_window=int(stats.max_window),
+        slope_px=float(stats.slope_used) * float(stats.cell_size),
+        refine_sigma=float(stats.refine_sigma),
+        final_sigma=float(stats.final_sigma),
+        gap_dist_px=float(stats.gap_dist_px),
+    )
+    dtm = golden.stage_chain(cut, NODATA_DEFAULT, p, float(stats.min_valid), init_threshold, max_threshold)
+    return dtm[oy : oy + ch, ox : ox + cw]
 
 
 def process_tiles(
@@ -401,18 +395,9 @@ def process_tiles(
         # to their input (they build a min-filled working copy), so the
         # read-only array is safe to hand them directly
         cut = codecs.decode_zf32(row.payload, int(row.cut_h), int(row.cut_w))
-        mn = None if np.isnan(row.min_valid) else float(row.min_valid)
-        ground = golden.pmf(
-            cut, NODATA_DEFAULT, int(row.init_window), int(row.max_window),
-            float(row.slope_used) * float(row.cell_size),
-            init_threshold, max_threshold, min_fill=mn,
-        )
-        ground = golden.refine(ground, NODATA_DEFAULT, float(row.refine_sigma), min_fill=mn)
-        ground = golden.final_smooth(ground, NODATA_DEFAULT, float(row.final_sigma), min_fill=mn)
-        dtm = golden.gap_fill(ground, NODATA_DEFAULT, float(row.gap_dist_px))
         oy = int(row.core_y) - int(row.cut_y)
         ox = int(row.core_x) - int(row.cut_x)
-        core = dtm[oy : oy + int(row.core_h), ox : ox + int(row.core_w)]
+        core = process_tile(cut, row, oy, ox, int(row.core_h), int(row.core_w), init_threshold, max_threshold)
         return {
             "image_id": row.image_id,
             "tile_row": int(row.tile_row),
@@ -462,6 +447,16 @@ STITCHED_SCHEMA = StructType(
 )
 
 
+def fill_canvas(h: int, w: int, cores) -> np.ndarray:
+    """The h×w float32 image the (y, x, core) triples tile: each core is
+    written at its offset over a nodata canvas (cores partition the image,
+    so no cell is written twice)."""
+    canvas = np.full((h, w), NODATA_DEFAULT, dtype=np.float32)
+    for y, x, core in cores:
+        canvas[y : y + core.shape[0], x : x + core.shape[1]] = core
+    return canvas
+
+
 def stitch(processed: DataFrame, n_images_hint: int | None = None) -> DataFrame:
     """Pass 4: reassemble core regions per image and re-encode in the row's
     original codec — the window-based seam merge (cores partition the image,
@@ -473,11 +468,11 @@ def stitch(processed: DataFrame, n_images_hint: int | None = None) -> DataFrame:
 
         h = int(pdf.img_h.iloc[0])
         w = int(pdf.img_w.iloc[0])
-        canvas = np.full((h, w), NODATA_DEFAULT, dtype=np.float32)
-        for row in pdf.itertuples(index=False):
-            # zero-copy over the inflated buffer: only read into the canvas
-            core = codecs.decode_zf32(bytes(row.core_bytes), int(row.core_h), int(row.core_w))
-            canvas[row.core_y : row.core_y + row.core_h, row.core_x : row.core_x + row.core_w] = core
+        # zero-copy over the inflated buffers: only read into the canvas
+        canvas = fill_canvas(h, w, (
+            (int(r.core_y), int(r.core_x), codecs.decode_zf32(bytes(r.core_bytes), int(r.core_h), int(r.core_w)))
+            for r in pdf.itertuples(index=False)
+        ))
         fmt = pdf.fmt.iloc[0]
         return pd.DataFrame(
             {
@@ -518,24 +513,21 @@ def tiled_dtm_transform(
     max_threshold: float = PMF_MAX_THRESHOLD,
     route_coarse: bool = True,
     permissive: bool = False,
-    chunked: bool = True,
     output: str = "image",
 ) -> DataFrame:
     """Full tiled plan: stats → tiles → salted shuffle → process → stitch.
 
-    ``chunked`` (default True) runs BOTH whole-image passes with bounded
-    memory (streamed pass-1 stats + sliding-window tile cutting), so rasters
-    far beyond a task's decode budget flow through; results stay
-    bit-identical, and locally it also measures faster than whole-image
-    decode (zero-copy row windows, less allocator churn). Codecs without a
-    streaming source (qz8) and sub-0.5 m rows fall back per-row.
-    ``output='tiles'`` skips the stitch and returns the processed core tiles
-    as rows — at 10-gigapixel scale the stitched image row itself would be
-    the memory hazard, and real pipelines keep the tiled layout anyway.
+    Both whole-image passes read raw_f32 and png16 payloads in row blocks
+    (streamed pass-1 stats at cell size ≥ 0.5 m, and the tile cut), so
+    rasters far beyond a task's decode budget flow through; qz8 payloads
+    are decoded once per pass. ``output='tiles'`` skips the stitch and
+    returns the processed core tiles as rows — at 10-gigapixel scale the
+    stitched image row itself would be the memory hazard, and real
+    pipelines keep the tiled layout anyway.
 
-    Coarse-path rows (cell_size < 0.9·0.45 m) resample with whole-image
-    endpoint-aligned coordinates and cannot be tiled exactly; with
-    ``route_coarse`` they are split off by a metadata predicate and run
+    Coarse-path rows (cell_size < 0.45 m, i.e. 0.9 × 0.5 m) resample with
+    whole-image endpoint-aligned coordinates and cannot be tiled exactly;
+    with ``route_coarse`` they are split off by a metadata predicate and run
     through the whole-image plan inside the same job, so a mixed-resolution
     table processes end-to-end in one call. Outputs stay bit-exact on both
     branches (the union is by name on the common stitched schema).
@@ -600,7 +592,7 @@ def tiled_dtm_transform(
         # which rows are poison, so it must gate the tile stages (emit may
         # only ever decode error-free rows) AND feed the quarantine join —
         # materialize the KB-scale stats rows once so the decode runs once
-        stats = image_stats(images, radius_m, slope, chunked=chunked, permissive=True)
+        stats = image_stats(images, radius_m, slope, permissive=True)
         stats = stats.localCheckpoint(eager=True)
         good_stats = stats.filter(F.col("error").isNull())
         halo_src = good_stats.select("image_id", "halo_px")
@@ -618,15 +610,10 @@ def tiled_dtm_transform(
         # pruning), and the stats pass decodes straight off the file splits
         # (its parallelism ceiling is the image count anyway; only the
         # pixel-kernel pass 3 needs the round-robin spread)
-        stats = image_stats(images_raw, radius_m, slope, chunked=chunked, permissive=False)
+        stats = image_stats(images_raw, radius_m, slope)
         good_stats = stats
         halo_src = halo_from_metadata(images_raw, radius_m)
-    tiles = emit_tiles(
-        images.join(F.broadcast(halo_src), on="image_id", how="inner"),
-        tile_px,
-        cell_res,
-        chunked=chunked,
-    )
+    tiles = emit_tiles(images.join(F.broadcast(halo_src), on="image_id", how="inner"), tile_px, cell_res)
     processed = process_tiles(
         tiles,
         good_stats,

@@ -90,13 +90,13 @@ class TestPMF:
         dsm = np.full((20, 20), 10.0, dtype=np.float32)
         dsm[8:12, 8:12] = 20.0
         ground = golden.pmf(dsm, NODATA, init_window=3, max_window=9, slope_px=0.1,
-                            init_threshold=0.5, max_threshold=3.0)
+                            init_threshold=0.5, max_threshold=3.0, min_fill=10.0)
         assert ground[10, 10] < 11.0
         assert ground[0, 0] == 10.0
 
     def test_all_nodata_passthrough(self):
         dsm = np.full((8, 8), NODATA, dtype=np.float32)
-        np.testing.assert_array_equal(golden.pmf(dsm, NODATA, 3, 9, 0.1), dsm)
+        np.testing.assert_array_equal(golden.pmf(dsm, NODATA, 3, 9, 0.1, min_fill=np.nan), dsm)
 
     def test_global_min_preserved_through_pmf_and_refine(self):
         """Invariant the tiled two-pass plan relies on (SURVEY.md §7.2 item 3):
@@ -106,9 +106,9 @@ class TestPMF:
         dsm = (100 + rng.normal(0, 3, (60, 60))).astype(np.float32)
         dsm[10:20, 10:20] += 15
         mn = dsm.min()
-        g = golden.pmf(dsm, NODATA, 3, 17, 0.05)
+        g = golden.pmf(dsm, NODATA, 3, 17, 0.05, min_fill=mn)
         assert g[g != NODATA].min() == mn
-        r = golden.refine(g, NODATA, sigma=5.0)
+        r = golden.refine(g, NODATA, sigma=5.0, min_fill=mn)
         assert r[r != NODATA].min() == mn
 
 
@@ -117,7 +117,7 @@ class TestRefine:
         # reference tests/test_core.py:134-143
         ground = np.full((10, 10), 10.0, dtype=np.float32)
         ground[5, 5] = 15.0
-        refined = golden.refine(ground, NODATA, sigma=2.0)
+        refined = golden.refine(ground, NODATA, sigma=2.0, min_fill=10.0)
         assert refined[5, 5] == NODATA
         assert refined[0, 0] == 10.0
 

@@ -6,13 +6,15 @@ session needed — these pin the numpy/stdlib layers every Spark path sits on.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import numpy as np
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from dsm2dtm_spark import codecs
+from dsm2dtm_spark import codecs, golden
 from dsm2dtm_spark.kernels import edt_with_indices, nearest_valid
-from dsm2dtm_spark.operators import cellindex
+from dsm2dtm_spark.operators import cellindex, tiling
 from dsm2dtm_spark.params import NODATA_DEFAULT
 from dsm2dtm_spark.sources import tiffio
 
@@ -341,3 +343,105 @@ class TestLZWProperties:
             _lzw_decode(junk, 4096)
         except ValueError:
             pass
+
+
+class TestGoldenProperties:
+    @FAST
+    @given(grids, st.integers(min_value=1, max_value=5), st.floats(min_value=0.3, max_value=8.0))
+    def test_pmf_and_refine_keep_valid_minimum(self, hwsf, n_windows, sigma):
+        """The one injected min-fill of ``golden.stage_chain`` stands for each
+        stage's own input minimum only because PMF and refine keep the valid
+        minimum: PMF's opening never drops below it and never lifts it, and
+        the minimum cell never rises above its smoothed surface."""
+        g = _grid(*hwsf)
+        valid = g != NODATA_DEFAULT
+        if not valid.any():
+            return
+        mn = float(g[valid].min())
+        max_window = 2 ** n_windows + 1  # n_windows openings of the 3 → 2w−1 schedule
+        ground = golden.pmf(g, NODATA_DEFAULT, 3, max_window, 0.05, min_fill=mn)
+        assert float(ground[ground != NODATA_DEFAULT].min()) == mn
+        refined = golden.refine(ground, NODATA_DEFAULT, sigma, min_fill=mn)
+        assert float(refined[refined != NODATA_DEFAULT].min()) == mn
+
+
+# resolutions whose halo (3-26 px) is smaller than most generated images, so
+# tile cuts are really partial; all route to the standard (tileable) path.
+# Above 40 m both Gaussian radii are 0 and the halo is tight to the pixel
+TILED_RES = (10.0, 12.5, 20.0, 25.0, 50.0, 100.0)
+
+
+@st.composite
+def tiled_cases(draw):
+    """(resolution, radius, tile_px, grid) for the tiled ≡ whole-image check."""
+    res = draw(st.sampled_from(TILED_RES))
+    radius = draw(st.sampled_from([None, 15.0, 40.0]))
+    tile_px = draw(st.integers(min_value=3, max_value=40))
+    dims = draw(st.sampled_from(["free", "sub_tile", "remainder"]))
+    if dims == "sub_tile":  # the whole image is smaller than one tile
+        h, w = draw(st.integers(1, tile_px)), draw(st.integers(1, tile_px))
+    elif dims == "remainder":  # last tile row and/or column is 1 px
+        h = tile_px * draw(st.integers(1, max(1, 72 // tile_px))) + draw(st.sampled_from([0, 1]))
+        w = tile_px * draw(st.integers(1, max(1, 72 // tile_px))) + 1
+    else:  # non-square in general
+        h, w = draw(st.integers(1, 72)), draw(st.integers(1, 72))
+    scene = draw(st.sampled_from(["ties", "void", "border", "holes"]))
+    rng = np.random.default_rng(draw(st.integers(min_value=0, max_value=2**32 - 1)))
+    g = rng.normal(100, 5, (h, w)).astype(np.float32)
+    g[rng.random((h, w)) < 0.1] += rng.uniform(2, 15)  # vegetation/buildings for PMF to remove
+    if scene == "ties":  # valid cells on a lattice: equidistant nearest-valid ties everywhere
+        s = int(rng.integers(2, 5))
+        keep = np.zeros((h, w), dtype=bool)
+        keep[rng.integers(0, s) :: s, rng.integers(0, s) :: s] = True
+        g[~keep & (rng.random((h, w)) < 0.9)] = NODATA_DEFAULT
+    elif scene == "void":  # a band deeper than any halo, its edge at a tile seam ±1
+        depth = int(rng.integers(27, 45))
+        seam = tile_px * int(rng.integers(0, max(1, w // tile_px) + 1)) + int(rng.integers(-1, 2))
+        if rng.random() < 0.5:
+            g[:, max(0, seam - depth) : max(0, seam)] = NODATA_DEFAULT
+        else:
+            g[:, max(0, seam) : seam + depth] = NODATA_DEFAULT
+        g = g if rng.random() < 0.5 else np.ascontiguousarray(g.T)  # rows or columns
+    elif scene == "border":  # nodata frame, as around a reprojected raster
+        b = int(rng.integers(1, 6))
+        g[:b] = g[-b:] = NODATA_DEFAULT
+        g[:, :b] = g[:, -b:] = NODATA_DEFAULT
+    else:
+        g[rng.random((h, w)) < rng.uniform(0.0, 0.4)] = NODATA_DEFAULT
+    return res, radius, tile_px, g
+
+
+def _seam_void_case():
+    """At 50 m the halo (4 px: opening 2 + gap fill 2, both Gaussian radii 0)
+    is exactly the reach of a void's edge cell: a void ending one cell past a
+    tile seam leaves the core's edge cells filled from 2 px into the halo,
+    and PMF's 3-px opening there reads 2 px further, the cut's last column."""
+    g = np.random.default_rng(5).normal(100, 5, (16, 24)).astype(np.float32)
+    g[:, 4:9] = NODATA_DEFAULT
+    return 50.0, None, 8, g
+
+
+class TestTiledEqualsWhole:
+    """The tiled plan's exactness claim without Spark: pass-1 scalars (as
+    ``image_stats`` computes them) → ``cut_tiles`` → ``process_tile`` per cut
+    → ``fill_canvas`` reproduces ``golden.dsm_to_dtm`` byte for byte. What is
+    under test is the halo, ``params.total_influence_px``, and the injection
+    of the image's (not the cut's) valid minimum."""
+
+    @FAST
+    @given(tiled_cases())
+    @example(_seam_void_case())
+    def test_cut_process_stitch_equals_whole_image(self, case):
+        res, radius, tile_px, g = case
+        h, w = g.shape
+        row = SimpleNamespace(image_id="img", bytes=codecs.encode_raw_f32(g), h=h, w=w, fmt="raw_f32",
+                              xres_m=res, yres_m=res)
+        stats = SimpleNamespace(**tiling.pass1_stats(row, radius, None))
+        cores = [
+            (cy, cx, tiling.process_tile(cut, stats, cy - cut_y, cx - cut_x, ch, cw))
+            for _, _, cy, cx, ch, cw, cut_y, cut_x, cut in
+            tiling.cut_tiles(row.bytes, h, w, row.fmt, tile_px, stats.halo_px)
+        ]
+        got = tiling.fill_canvas(h, w, cores)
+        want = golden.dsm_to_dtm(g, (res, res), radius_m=radius)
+        assert got.tobytes() == want.tobytes()

@@ -88,7 +88,14 @@ class TestTileGrid:
 class TestTiledParity:
     @pytest.fixture(scope="class")
     def pdf(self):
-        return big_image_pdf()
+        pdf = big_image_pdf()
+        # a qz8 scene: the codec with no row-streamable layout, cut from its
+        # decoded grid by the same block-source path
+        qz8 = pdf[pdf.image_id.str.endswith("nodata_holes")].copy()
+        qz8["image_id"] = "big_qz8_nodata_holes"
+        qz8["bytes"] = [codecs.encode(codecs.decode(qz8.bytes.iloc[0], 512, 512, "raw_f32"), "qz8")]
+        qz8["fmt"] = "qz8"
+        return pd.concat([pdf, qz8], ignore_index=True)
 
     @pytest.fixture(scope="class")
     def goldens(self, pdf):
@@ -102,9 +109,12 @@ class TestTiledParity:
         sdf = spark.createDataFrame(pdf)
         result = tiling.tiled_dtm_transform(sdf, tile_px=128, radius_m=RADIUS).collect()
         assert len(result) == len(pdf)
+        assert {r.fmt for r in result} == {"raw_f32", "qz8"}
         for r in result:
+            assert bytes(r.bytes) == codecs.encode(goldens[r.image_id], r.fmt), r.image_id
             got = codecs.decode(bytes(r.bytes), r.h, r.w, r.fmt)
-            np.testing.assert_array_equal(got, goldens[r.image_id], err_msg=r.image_id)
+            if r.fmt == "raw_f32":
+                np.testing.assert_array_equal(got, goldens[r.image_id], err_msg=r.image_id)
             assert r.caption == pdf[pdf.image_id == r.image_id].caption.iloc[0]
 
     def test_assignments_deterministic_and_match_payload_path(self, spark, pdf):
@@ -165,12 +175,15 @@ class TestCoarseRouting:
 
 
 class TestChunkedTiling:
-    """Bounded-memory tiled plan: sliding-window tile cutting (+ chunked
-    pass-1 stats) must be BYTE-identical to the whole-image-decode plan —
-    this is the path that lets a raster far beyond task memory flow through."""
+    """Bounded-memory tiled plan: the tile cut reads row blocks of the
+    payload, never the whole decoded raster, and must be BYTE-identical to
+    slicing the decoded image — this is the path that lets a raster far
+    beyond task memory flow through."""
 
     @pytest.mark.parametrize("fmt", ["raw_f32", "png16"])
     def test_chunked_emit_equals_whole_image_emit(self, spark, fmt):
+        import zlib
+
         pdf = big_image_pdf().iloc[:1].copy()
         if fmt != "raw_f32":
             pdf["bytes"] = [
@@ -182,21 +195,35 @@ class TestChunkedTiling:
         stats = tiling.image_stats(sdf, RADIUS, None)
         joined = sdf.join(stats.select("image_id", "halo_px"), on="image_id")
         key = ["image_id", "tile_row", "tile_col"]
-        a = {tuple(getattr(r, k) for k in key): r for r in tiling.emit_tiles(joined, 128).collect()}
-        b = {tuple(getattr(r, k) for k in key): r for r in tiling.emit_tiles(joined, 128, chunked=True).collect()}
-        assert a.keys() == b.keys() and len(a) == 16
-        for k in a:
-            ra, rb = a[k], b[k]
+        got = {tuple(getattr(r, k) for k in key): r for r in tiling.emit_tiles(joined, 128).collect()}
+        # independent reference: the whole decoded image sliced by tile_grid,
+        # cells from the SQL assignment table, salts from their definition
+        image_id, halo = pdf.image_id.iloc[0], 75
+        grid = codecs.decode(pdf.bytes.iloc[0], 512, 512, fmt)
+        cells = {(r.tile_row, r.tile_col): r.cell_id for r in tiling.tile_assignments(sdf, 128).collect()}
+        want = {}
+        for tr, tc, cy, cx, ch, cw in tiling.tile_grid(512, 512, 128):
+            y0, x0 = max(0, cy - halo), max(0, cx - halo)
+            y1, x1 = min(512, cy + ch + halo), min(512, cx + cw + halo)
+            want[(image_id, tr, tc)] = {
+                "cell_id": cells[(tr, tc)], "salt": zlib.crc32(f"{image_id}/{tr}/{tc}".encode()) % tiling.N_SALT,
+                "core_y": cy, "core_x": cx, "core_h": ch, "core_w": cw,
+                "cut_y": y0, "cut_x": x0, "cut_h": y1 - y0, "cut_w": x1 - x0,
+                "caption": pdf.caption.iloc[0], "cut": grid[y0:y1, x0:x1],
+            }
+        assert got.keys() == want.keys() and len(got) == 16
+        for k, ref in want.items():
+            r = got[k]
             for f in ("cell_id", "salt", "core_y", "core_x", "core_h", "core_w",
                       "cut_y", "cut_x", "cut_h", "cut_w", "caption"):
-                assert getattr(ra, f) == getattr(rb, f), (k, f)
-            assert bytes(ra.payload) == bytes(rb.payload), k
+                assert getattr(r, f) == ref[f], (k, f)
+            assert bytes(r.payload) == codecs.encode_zf32(ref["cut"]), k
 
     def test_chunked_full_plan_bitexact_vs_golden(self, spark):
         pdf = big_image_pdf().iloc[:2]
         sdf = spark.createDataFrame(pdf)
         got = {r.image_id: r for r in
-               tiling.tiled_dtm_transform(sdf, tile_px=128, radius_m=RADIUS, chunked=True).collect()}
+               tiling.tiled_dtm_transform(sdf, tile_px=128, radius_m=RADIUS).collect()}
         for row in pdf.itertuples(index=False):
             grid = codecs.decode(row.bytes, row.h, row.w, row.fmt)
             want = golden.dsm_to_dtm(grid, (row.xres_m, row.yres_m), radius_m=RADIUS)
@@ -348,11 +375,17 @@ class TestChunkedStats:
             ]
             pdf["fmt"] = fmt
         sdf = spark.createDataFrame(pdf)
-        a = {r.image_id: r for r in tiling.image_stats(sdf, RADIUS, None).collect()}
-        b = {r.image_id: r for r in tiling.image_stats(sdf, RADIUS, None, chunked=True).collect()}
-        assert a.keys() == b.keys()
-        for k in a:
-            assert a[k] == b[k], k
+        got = {r.image_id: r for r in tiling.image_stats(sdf, RADIUS, None).collect()}
+        assert got.keys() == set(pdf.image_id) and len(got) == 4
+        # independent reference: the whole decoded grid's valid minimum and
+        # golden's own slope estimate, equal to the last bit
+        for row in pdf.itertuples(index=False):
+            grid = codecs.decode(row.bytes, row.h, row.w, row.fmt)
+            valid = grid != NODATA_DEFAULT
+            r = got[row.image_id]
+            assert r.min_valid == float(grid[valid].min()), row.image_id
+            assert r.slope_used == golden.terrain_slope(grid, 2.0, NODATA_DEFAULT), row.image_id
+            assert (r.cell_size, r.max_window, r.halo_px, r.error) == (2.0, 15, 75, None), row.image_id
 
     def test_png16_row_stream_matches_full_decoder(self):
         import numpy as np
