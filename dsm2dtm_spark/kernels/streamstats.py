@@ -168,6 +168,20 @@ def _block_mags(source: BlockSource, res: float, nodata: float):
         yield mag[sl], blk[sl] != nodata, blk[sl]
 
 
+def valid_min(source: BlockSource, nodata: float) -> tuple[float, int]:
+    """(minimum over the valid cells — NaN when there are none, valid cell
+    count) of a block source's core rows: one sweep, no gradient."""
+    vmin = np.inf
+    n_valid = 0
+    for y0, y1, lo, blk in source():
+        sel = blk[y0 - lo : y0 - lo + (y1 - y0)]
+        valid = sel != nodata
+        n_valid += int(valid.sum())
+        if valid.any():
+            vmin = min(vmin, float(sel[valid].min()))
+    return (float(vmin) if np.isfinite(vmin) else float("nan")), n_valid
+
+
 # below this pixel count the fast path gathers all magnitudes at once.
 # True transient peak at the limit with a fully-valid grid: the gathered
 # magnitudes (~256 MB f32) + np.concatenate's output + np.median's partition
@@ -220,18 +234,11 @@ def chunked_min_and_slope(
         return float(vmin), float(max(0.01, min(med, 1.0)))
 
     # ---- pass 0: valid min, finite-magnitude count and max
-    vmin = np.inf
-    mag_max = np.float32(0.0)
-    n_valid = 0
-    n_finite = 0
-    for y0, y1, lo, blk in source():
-        sel = blk[y0 - lo : y0 - lo + (y1 - y0)]
-        valid = sel != nodata
-        n_valid += int(valid.sum())
-        if valid.any():
-            vmin = min(vmin, float(sel[valid].min()))
+    vmin, n_valid = valid_min(source, nodata)
     if n_valid == 0 or h < 2 or w < 2:
-        return (float(vmin) if np.isfinite(vmin) else float("nan"), PMF_BASE_SLOPE)
+        return vmin, PMF_BASE_SLOPE
+    mag_max = np.float32(0.0)
+    n_finite = 0
     for mag, valid, _sel in _block_mags(source, res, nodata):
         finite = mag[valid]
         finite = finite[~np.isnan(finite)]

@@ -35,26 +35,27 @@ the dedup domain; no reference-repo equivalent (engine extension).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import os
+
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from dsm2dtm_spark.operators.dedup import _sign_rows, band_buckets
-from dsm2dtm_spark.sources.manifest import SnapshotTable
+from dsm2dtm_spark.sources.manifest import SnapshotTable, read_parquet
 
 
 def _est_jaccard_expr(n_hashes: int):
     """MinHash-estimated Jaccard of the candidate pair columns
-    (_fsig, _csig): fraction of agreeing components. Semantically identical
-    to the old ``aggregate(zip_with(...))`` form (null-safe: a null column
-    or out-of-bounds component contributes 0 matches), but unrolled into a
-    flat sum of ``n_hashes`` element comparisons — higher-order-function
-    lambdas are CodegenFallback (interpreted per row), and this expression
-    runs once per candidate pair (49M pairs at sf1), where the interpreted
-    form measured as the dominant verify cost."""
-    matches = None
-    for i in range(n_hashes):
-        m = F.when(F.get("_fsig", i) == F.get("_csig", i), 1).otherwise(0)
-        matches = m if matches is None else matches + m
-    return matches / F.size("_fsig")
+    (_fsig, _csig): fraction of agreeing components. Null-safe: a null
+    column or out-of-bounds component contributes 0 matches. A flat sum of
+    ``n_hashes`` element comparisons rather than ``aggregate(zip_with(...))``
+    — higher-order-function lambdas are CodegenFallback (interpreted per
+    row), and this expression runs once per candidate pair (49M pairs at
+    sf1). Built as ONE SQL string: the same sum assembled from Python
+    ``Column`` objects costs one py4j round trip per operator."""
+    matches = " + ".join(
+        f"CASE WHEN get(_fsig, {i}) = get(_csig, {i}) THEN 1 ELSE 0 END" for i in range(n_hashes)
+    )
+    return F.expr(f"({matches}) / size(_fsig)")
 
 
 def sign_documents(
@@ -133,8 +134,6 @@ class SignatureStore:
     # ------------------------------------------------ layout: snapshot tables
 
     def _open_layout(self) -> None:
-        import os
-
         if os.path.exists(os.path.join(self.root, "store.json")):
             raise ValueError(
                 f"{self.root} holds a BucketedSignatureStore (store.json manifest); "
@@ -145,9 +144,14 @@ class SignatureStore:
         self.signatures = SnapshotTable(f"{self.root}/signatures")
         self.bands = SnapshotTable(f"{self.root}/bands")
 
-    def _write(self, kind: str, df: DataFrame, summary: dict | None) -> None:
-        """Commit ``df`` to the ``kind`` sub-table ('signatures' or 'bands')."""
-        getattr(self, kind).write_dataframe(df, summary=summary)
+    def _write(self, kind: str, df: DataFrame, summary: dict | None) -> list[str]:
+        """Commit ``df`` to the ``kind`` sub-table ('signatures' or 'bands');
+        returns the paths of the data files this write added."""
+        table = getattr(self, kind)
+        before = table.current_snapshot()
+        old = set(before.files) if before else set()
+        snap = table.write_dataframe(df, summary=summary)
+        return [os.path.join(table.data_dir, f) for f in snap.files if f not in old]
 
     def is_empty(self) -> bool:
         return self.signatures.current_snapshot() is None
@@ -208,19 +212,21 @@ class SignatureStore:
             )
 
     def append(self, signatures_df: DataFrame, bands: int = 4, summary: dict | None = None) -> None:
-        """Register a batch: commit its signature rows and derived band rows
-        (derived here, not re-signed — slicing stored arrays is free). The
-        input plan is materialized ONCE: without the checkpoint, the bands
-        write would re-execute the whole sign+dedup lineage a second time —
-        the most expensive stage of every ingest. With a configured
+        """Register a batch: commit its signature rows, then band rows
+        derived from the signature files that write just added (sliced, not
+        re-signed). The input plan runs ONCE, in the signatures write: the
+        bands never re-execute the sign+dedup lineage — the most expensive
+        stage of every ingest — and need no pin of it. With a configured
         ``bucket_cap`` the hot-bucket census updates here too (write-path
         amortization; see class docstring)."""
+        spark = signatures_df.sparkSession
         # backfill BEFORE this batch's rows land in the band table, or the
         # later census read would double-count them
-        self._backfill_census_if_needed(signatures_df.sparkSession)
-        signatures_df = signatures_df.localCheckpoint(eager=True)
-        self._write("signatures", signatures_df, summary)
-        self._add_bands(band_buckets(signatures_df, bands=bands).localCheckpoint(eager=False), summary)
+        self._backfill_census_if_needed(spark)
+        written = self._write("signatures", signatures_df, summary)
+        # an empty input may write no file; its (empty) lineage then derives the bands
+        stored = read_parquet(spark, written) if written else signatures_df
+        self._add_bands(band_buckets(stored, bands=bands), summary)
 
     def append_band_rows(self, band_rows: DataFrame, summary: dict | None = None) -> None:
         """Commit band rows WITHOUT signature rows — the repair path for
@@ -408,7 +414,6 @@ class BucketedSignatureStore(SignatureStore):
 
     def _open_layout(self) -> None:
         import hashlib
-        import os
 
         # key on a COMMITTED marker (meta/CURRENT), not the bare directory:
         # merely opening a root with the plain class scaffolds empty
@@ -433,8 +438,6 @@ class BucketedSignatureStore(SignatureStore):
     # --------------------------------------------------------- manifest
 
     def _meta_path(self) -> str:
-        import os
-
         return os.path.join(self.root, "store.json")
 
     def _meta(self) -> dict:
@@ -448,7 +451,6 @@ class BucketedSignatureStore(SignatureStore):
 
     def _write_meta(self, meta: dict) -> None:
         import json
-        import os
         import uuid
 
         tmp = os.path.join(self.root, f".tmp-{uuid.uuid4().hex}")
@@ -468,8 +470,6 @@ class BucketedSignatureStore(SignatureStore):
         return self.sig_table if kind == "signatures" else self.bands_table
 
     def _location(self, kind: str, version: int) -> str:
-        import os
-
         return os.path.join(os.path.abspath(self.root), f"{kind}_v{version}")
 
     def _register(self, spark, kind: str, entry: dict) -> None:
@@ -492,8 +492,6 @@ class BucketedSignatureStore(SignatureStore):
         silently hides the new bucket files from every join (wrong
         results). The invalidation is metadata-only; the next scan re-lists
         once."""
-        import os
-
         meta = self._meta()
         # a re-bucketing compact in ANOTHER session changed the bucket spec;
         # registering with this session's stale count would mis-assign every
@@ -521,29 +519,37 @@ class BucketedSignatureStore(SignatureStore):
             else:
                 spark.catalog.refreshTable(name)
 
-    def _write(self, kind: str, df: DataFrame, summary: dict | None) -> None:
+    def _write(self, kind: str, df: DataFrame, summary: dict | None) -> list[str]:
         """Append ``df`` to the ``kind`` bucket table (creating it as an
         EXTERNAL table on first write), then commit the manifest: the
-        signatures write moves the row watermark and records sig_params."""
+        signatures write moves the row watermark — by the new files' footer
+        row counts, never a re-run of ``df`` — and records sig_params.
+        Returns the paths of the bucket files this write added."""
+        import glob
+
+        import pyarrow.parquet as pq
+
         self._ensure_registered(df.sparkSession)
         meta = self._meta()
         tables = meta.setdefault("tables", {})
         cols = self._BUCKET_COLS[kind]
         writer = df.write.bucketBy(self.n_buckets, *cols).sortBy(*cols).format("parquet")
         if kind in tables:
+            loc = self._location(kind, tables[kind]["version"])
+            before = set(glob.glob(os.path.join(loc, "*.parquet")))
             writer.mode("append").saveAsTable(self._table_name(kind))
         else:
             # path option ⇒ EXTERNAL table: data under the store root,
             # catalog entry recreatable from the manifest in any session
-            writer.mode("overwrite").option("path", self._location(kind, 0)).saveAsTable(
-                self._table_name(kind)
-            )
+            loc, before = self._location(kind, 0), set()
+            writer.mode("overwrite").option("path", loc).saveAsTable(self._table_name(kind))
             tables[kind] = {
                 "version": 0,
                 "ddl": ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields),
             }
+        written = sorted(set(glob.glob(os.path.join(loc, "*.parquet"))) - before)
         if kind == "signatures":
-            meta["rows"] = meta.get("rows", 0) + df.count()  # checkpointed blocks — cheap
+            meta["rows"] = meta.get("rows", 0) + sum(pq.ParquetFile(f).metadata.num_rows for f in written)
             if summary and summary.get("sig_params"):
                 meta["sig_params"] = summary["sig_params"]
         meta["n_buckets"] = self.n_buckets
@@ -551,6 +557,7 @@ class BucketedSignatureStore(SignatureStore):
         # by every _meta() call; drop it so the manifest stays fixed-size
         meta.pop("summaries", None)
         self._write_meta(meta)
+        return written
 
     def read_signatures(self, spark) -> DataFrame:
         self._ensure_registered(spark)
@@ -567,7 +574,6 @@ class BucketedSignatureStore(SignatureStore):
         """Summed parquet-footer num_rows over a sub-table's CURRENT version
         directory — zero data pages read, O(#files) metadata."""
         import glob
-        import os
 
         import pyarrow.parquet as pq
 
@@ -622,7 +628,6 @@ class BucketedSignatureStore(SignatureStore):
         return F.expr(f"pmod(hash({', '.join(cols)}), {n_buckets})")
 
     def _files_by_bucket(self, kind: str, version: int) -> dict[int, list[str]]:
-        import os
         import re
 
         loc = self._location(kind, version)
@@ -664,7 +669,6 @@ class BucketedSignatureStore(SignatureStore):
         (it rides on the catalog bucket spec, re-verified by plan tests);
         only dormant appends pay anything, and nothing is re-shingled."""
         import glob
-        import os
         import shutil
 
         self._ensure_registered(spark)
@@ -788,12 +792,18 @@ def dedup_against(
     """Dedup a fresh batch against the committed corpus state. Returns
     ``(decisions, fresh_signatures)``:
 
-    - ``decisions``: one row per fresh document — (id, verdict) with verdict
+    - ``decisions``: one row per fresh row — its columns plus ``verdict``:
       'exact' (fingerprint already committed), 'near' (MinHash-estimated
-      Jaccard vs some stored signature ≥ ``threshold``), or 'keep'.
+      Jaccard vs some stored signature ≥ ``threshold``), or 'keep'. The
+      kept rows are the batch's survivors.
     - ``fresh_signatures``: (id, fingerprint, signature) for the KEPT rows —
       exactly what ``SignatureStore.append`` commits so the next batch
       dedups against them too.
+
+    Both are projections of one per-row plan (each fresh row with its
+    fingerprint, signature and verdict). With ``materialize_fresh`` that
+    plan is lazily checkpointed: the first action over either result runs
+    it, the other reads its blocks.
 
     Scale shape (``broadcast_fresh=True``, the default): the stored side
     contributes three STREAMED scans — fingerprint column, (band, bucket)
@@ -824,50 +834,59 @@ def dedup_against(
     degraded-recall trade as minhash_lsh_candidates. ``hot_buckets``
     (a (band, bucket) DataFrame, e.g. the census a SignatureStore maintains
     at append time) supplies that list precomputed, skipping the full
-    per-batch groupBy census over the stored band table."""
+    per-batch groupBy census over the stored band table.
+
+    Under AQE a lazy ``localCheckpoint`` is not free at call time: it plans
+    its input and runs every exchange and broadcast stage below it then
+    (only its own final stage waits for the first consumer). The lazy
+    checkpoints here still run each subtree once for all its consumers."""
     if broadcast_fresh is None:
         raise TypeError(
             "dedup_against needs an explicit broadcast_fresh bool; the "
             "store-aware wrappers (incremental_dedup/ingest_batch) resolve "
             "None from the store layout before calling"
         )
-    fresh_fp = fresh.select(F.col(id_col), F.col(text_col)).withColumn(
-        "fingerprint", F.md5(F.col(text_col))
-    )
+    # columns other than id and text ride along packed, so none can clash
+    # with the per-row plan's own (fingerprint, signature, verdict)
+    columns = fresh.columns
+    extra = [c for c in columns if c not in (id_col, text_col)]
+    fresh = fresh.select(id_col, text_col, *([F.struct(*extra).alias("_row")] if extra else []))
+    fresh_fp = fresh.withColumn("fingerprint", F.md5(F.col(text_col)))
     if materialize_fresh:
-        # fresh_fp feeds the exact semi-join, the anti-join remainder AND
-        # (through `remaining`) the signing subtree — without this the
-        # fresh scan + fingerprint md5 re-executes once per consumer
-        # (3-4 scans per run measured in the final assembly query, r7)
+        # fresh_fp feeds the store probe, the exact semi-join AND the
+        # anti-join remainder the signing reads — without this the fresh
+        # scan + fingerprint md5 re-executes once per consumer (3-4 scans
+        # per run measured in the final assembly query, r7). Exchanges and
+        # broadcasts inside `fresh` (a decontam's joins, say) run now
         fresh_fp = fresh_fp.localCheckpoint(eager=False)
     if broadcast_fresh:
-        matched = _matched_fingerprints(stored_signatures, fresh_fp)
-        if materialize_fresh:
-            # two consumers (semi + anti) → probe the store once, not twice
-            matched = matched.localCheckpoint(eager=False)
-        stored_fps = F.broadcast(matched)
+        stored_fps = F.broadcast(_matched_fingerprints(stored_signatures, fresh_fp))
     else:
         # no .distinct(): the only consumers are a left-semi and a left-anti
         # join, both duplicate-insensitive on the build side — the aggregate
         # bought nothing (stored fingerprints are near-unique by
         # construction) and cost an extra HashAggregate pair per pass (r7)
         stored_fps = stored_signatures.select("fingerprint")
-    exact = (
-        fresh_fp.join(stored_fps, on="fingerprint", how="left_semi")
-        .select(F.col(id_col), F.lit("exact").alias("verdict"))
-    )
+    # exact rows stay unsigned; the rest are signed and wait for the near
+    # pass (verdict NULL). The semi and anti joins sit in one plan, so
+    # their shared exchanges (the matched-set broadcast) run once
     remaining = fresh_fp.join(stored_fps, on="fingerprint", how="left_anti")
-
-    # the fresh signing (shingle + n_hashes hashes per shingle — the most
-    # expensive stage) feeds THREE subtrees (band explode, the verify join,
-    # and the returned keep_sigs); lazy-checkpoint so it executes once.
-    # ``materialize_fresh=False`` keeps the raw lineage visible — used by
-    # the no-reshingle PLAN test, which must see the shingle expressions
-    fresh_sigs = sign_documents(
-        remaining, text_col, id_col, n_hashes=n_hashes, shingle_n=shingle_n, method=method
+    signed = _signed(remaining, text_col, n_hashes, shingle_n, method)
+    exact = fresh_fp.join(stored_fps, on="fingerprint", how="left_semi").withColumns(
+        {"signature": F.lit(None).cast(signed.schema["signature"].dataType), "verdict": F.lit("exact")}
     )
+    # signed rows first: a write of the kept rows then leaves the exact
+    # branch's partitions empty, and Spark writes no file for those
+    rows = signed.withColumn("verdict", F.lit(None).cast("string")).unionByName(exact)
     if materialize_fresh:
-        fresh_sigs = fresh_sigs.localCheckpoint(eager=False)
+        # the fresh signing (shingle + n_hashes hashes per shingle — the
+        # most expensive stage) feeds THREE subtrees (band explode, the
+        # verify join, the returned rows); lazy-checkpoint so it executes
+        # once. Both exact-pass broadcasts run now. ``materialize_fresh=
+        # False`` keeps the raw lineage visible — used by the no-reshingle
+        # PLAN test, which must see the shingle expressions
+        rows = rows.localCheckpoint(eager=False)
+    fresh_sigs = rows.filter(F.col("signature").isNotNull())
     if hot_buckets is not None:
         hot = hot_buckets.select("band", "bucket")
     elif bucket_cap is not None:
@@ -953,29 +972,36 @@ def dedup_against(
         if hot is not None:
             cb = cb.join(F.broadcast(hot), on=["band", "bucket"], how="left_anti")
         paired = fb.join(cb, on=["band", "bucket"])
-    near = (
-        paired.withColumn("_est", est_j)
-        .filter(F.col("_est") >= threshold)
-        .select(F.col(id_col), F.lit("near").alias("verdict"))
-        .distinct()
-    )
-    if materialize_fresh:
-        # `near` feeds the decisions union AND both anti-joins (kept rows,
-        # keep_sigs) — without the checkpoint Catalyst re-executes the whole
-        # candidate+verify stream (49M rows at sf1) once per consumer; the
-        # near set itself is tiny (measured: 2-3 full streams → 1)
-        near = near.localCheckpoint(eager=False)
-    near_ids = near.select(id_col)
+    near = paired.withColumn("_est", est_j).filter(F.col("_est") >= threshold).select(id_col).distinct()
+    near = near.withColumn("_near", F.lit(True))
     if broadcast_fresh:
-        near_ids = F.broadcast(near_ids)
-    kept = (
-        remaining.select(id_col)
-        .join(near_ids, on=id_col, how="left_anti")
-        .select(F.col(id_col), F.lit("keep").alias("verdict"))
+        near = F.broadcast(near)
+    verdict = F.coalesce(F.col("verdict"), F.when(F.col("_near"), F.lit("near")), F.lit("keep"))
+    rows = rows.join(near, on=id_col, how="left").withColumn("verdict", verdict)
+    if materialize_fresh:
+        # decisions and kept signatures both read it — without the
+        # checkpoint Catalyst re-executes the whole candidate+verify stream
+        # (49M rows at sf1) once per consumer. Every stage below it, up to
+        # the near broadcast, runs now
+        rows = rows.localCheckpoint(eager=False)
+    decisions = rows.select(
+        *[F.col(c) if c in (id_col, text_col) else F.col("_row")[c].alias(c) for c in columns], "verdict"
     )
-    decisions = exact.unionByName(near).unionByName(kept)
-    keep_sigs = fresh_sigs.join(near_ids, on=id_col, how="left_anti")
-    return decisions, keep_sigs
+    keep = (F.col("verdict") == "keep") & F.col("signature").isNotNull()
+    return decisions, rows.filter(keep).select(id_col, "fingerprint", "signature")
+
+
+def _signed(df: DataFrame, text_col: str, n_hashes: int, shingle_n: int, method: str) -> DataFrame:
+    """``df``'s rows with their MinHash ``signature`` appended, signed by
+    ``sign_documents`` (each whole row rides through it as the id). Unlike
+    ``sign_documents`` no row is dropped: the md5 signer's NULL-text rows
+    come back unsigned (NULL signature)."""
+    packed = df.select(F.struct(*df.columns).alias("_r"), text_col)
+    signed = sign_documents(packed, text_col, "_r", n_hashes, shingle_n, method).select("_r.*", "signature")
+    if method != "md5":
+        return signed
+    unsigned = df.filter(F.col(text_col).isNull()).withColumn("signature", F.lit(None).cast("array<string>"))
+    return signed.unionByName(unsigned)
 
 
 def _dedup_step(
@@ -991,35 +1017,39 @@ def _dedup_step(
     method: str,
     bucket_cap: int | None,
     broadcast_fresh: bool | None,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, dict]:
     """Dedup ``fresh`` against ``store`` WITHOUT committing: returns
-    ``(decisions, kept signatures)``, the pair ``dedup_against`` returns.
-    An empty store keeps the whole batch (bootstrap). Otherwise the batch
-    must match the store's signature parameters, and the decisions are
-    pinned before the caller mutates the store."""
+    ``(decisions, kept signatures)``, the pair ``dedup_against`` returns,
+    and the verdict tally ({'exact', 'near', 'keep'} → rows). An empty
+    store keeps the whole batch (bootstrap). Otherwise the batch must match
+    the store's signature parameters. The decisions are pinned by ONE eager
+    checkpoint before the caller mutates the store, and the tally is
+    observed on that same action."""
     if store.is_empty():
-        return (
-            fresh.select(F.col(id_col), F.lit("keep").alias("verdict")),
-            sign_documents(fresh, text_col, id_col, n_hashes, shingle_n, method),
+        decisions = fresh.withColumn("verdict", F.lit("keep"))
+        keep_sigs = sign_documents(fresh, text_col, id_col, n_hashes, shingle_n, method)
+    else:
+        store.check_params(n_hashes, bands, shingle_n, method)
+        spark = fresh.sparkSession
+        decisions, keep_sigs = dedup_against(
+            fresh,
+            store.read_signatures(spark),
+            store.read_bands(spark),
+            text_col=text_col,
+            id_col=id_col,
+            threshold=threshold,
+            n_hashes=n_hashes,
+            bands=bands,
+            shingle_n=shingle_n,
+            method=method,
+            bucket_cap=bucket_cap,
+            broadcast_fresh=store.BROADCAST_FRESH_DEFAULT if broadcast_fresh is None else broadcast_fresh,
+            hot_buckets=store.hot_buckets(spark, bucket_cap),
         )
-    store.check_params(n_hashes, bands, shingle_n, method)
-    spark = fresh.sparkSession
-    decisions, keep_sigs = dedup_against(
-        fresh,
-        store.read_signatures(spark),
-        store.read_bands(spark),
-        text_col=text_col,
-        id_col=id_col,
-        threshold=threshold,
-        n_hashes=n_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        method=method,
-        bucket_cap=bucket_cap,
-        broadcast_fresh=store.BROADCAST_FRESH_DEFAULT if broadcast_fresh is None else broadcast_fresh,
-        hot_buckets=store.hot_buckets(spark, bucket_cap),
-    )
-    return decisions.localCheckpoint(eager=True), keep_sigs
+    tally = Observation()
+    counts = [F.count(F.when(F.col("verdict") == v, True)).alias(v) for v in ("exact", "near", "keep")]
+    decisions = decisions.observe(tally, *counts).localCheckpoint(eager=True)
+    return decisions, keep_sigs, tally.get
 
 
 def incremental_dedup(
@@ -1038,16 +1068,16 @@ def incremental_dedup(
 ) -> DataFrame:
     """End-to-end store-backed step: dedup ``fresh`` against the store,
     commit the kept rows' signatures (one atomic snapshot per table), return
-    the decisions DataFrame. An empty store registers the whole batch as
-    'keep' (bootstrap). NOTE: decisions are materialized before the commit
-    (the commit itself re-executes the plan for the kept signatures).
+    the decisions DataFrame (``dedup_against``'s: the fresh rows with their
+    verdict). An empty store registers the whole batch as 'keep'
+    (bootstrap). NOTE: decisions are materialized before the commit.
 
     ``broadcast_fresh=None`` (default) picks the join strategy the store's
     layout is built for: broadcast probes for the plain SignatureStore,
     shuffle joins (which its bucket files serve exchange-free) for
     BucketedSignatureStore. Pass an explicit bool to override."""
     op = "bootstrap" if store.is_empty() else "incremental"
-    decisions, keep_sigs = _dedup_step(
+    decisions, keep_sigs, _ = _dedup_step(
         store, fresh, text_col=text_col, id_col=id_col, threshold=threshold, n_hashes=n_hashes,
         bands=bands, shingle_n=shingle_n, method=method, bucket_cap=bucket_cap,
         broadcast_fresh=broadcast_fresh,
@@ -1202,39 +1232,43 @@ def ingest_batch(
     if batch_id and batch_id in seen:
         return None, {"skipped": "batch already ingested", "batch_id": batch_id, "repaired": repaired}
 
-    counts = {"input": fresh.count(), "repaired": repaired}
+    # the quality → within-batch exact chain runs ONCE, in one eager pin
+    # that every downstream consumer (dedup fresh side, survivors, store
+    # writes) reads; each stage's row count is observed on that action.
+    # An Observation must sit on the plan of the action that runs it: one
+    # below a lazy checkpoint sees only the stages that already ran
+    stages: dict[str, Observation] = {}
 
-    # each stage is lazily checkpointed and materialized by its own count,
-    # so the chain executes ONCE — downstream consumers (dedup fresh side,
-    # survivors join, both store writes) read the cached blocks instead of
-    # re-running the quality/window/decontam lineage four more times
-    q = quality_features(fresh, text_col=text_col)
+    def observed(df: DataFrame, stage: str) -> DataFrame:
+        stages[stage] = Observation()
+        return df.observe(stages[stage], F.count(F.lit(1)).alias("n"))
+
+    q = quality_features(observed(fresh, "input"), text_col=text_col)
     kept = q.filter(
         (F.col("n_tokens") >= min_tokens) & (F.col("stopword_ratio") <= max_stopword_ratio)
-    ).select(*fresh.columns).localCheckpoint(eager=False)
-    counts["after_quality"] = kept.count()
-
-    kept = exact_dedup(kept, text_col=text_col, id_col=id_col).localCheckpoint(eager=False)
-    counts["after_within_batch_exact"] = kept.count()
+    ).select(*fresh.columns)
+    kept = exact_dedup(observed(kept, "after_quality"), text_col=text_col, id_col=id_col)
+    kept = observed(kept, "after_within_batch_exact").localCheckpoint(eager=True)
+    n = {stage: obs.get["n"] for stage, obs in stages.items()}
+    counts = {"input": n.pop("input"), "repaired": repaired, **n}
 
     if eval_docs is not None:
-        kept = decontaminate(
-            kept, eval_docs, n=ngram, text_col=text_col, id_col=id_col
-        ).localCheckpoint(eager=False)
-        counts["after_decontam"] = kept.count()
+        # not observed: decontam reads `kept` twice (flagged ids, anti-join).
+        # Every decontaminated row gets exactly one verdict below, so the
+        # verdict tally sums to this stage's count
+        kept = decontaminate(kept, eval_docs, n=ngram, text_col=text_col, id_col=id_col)
 
-    decisions, keep_sigs = _dedup_step(
+    decisions, keep_sigs, tally = _dedup_step(
         store, kept, text_col=text_col, id_col=id_col, threshold=threshold, n_hashes=n_hashes,
         bands=bands, shingle_n=3, method=method, bucket_cap=bucket_cap,
         broadcast_fresh=broadcast_fresh,
     )
-    verdicts = {r["verdict"]: r["n"] for r in decisions.groupBy("verdict").agg(F.count("*").alias("n")).collect()}
-    counts["dropped_exact_vs_corpus"] = verdicts.get("exact", 0)
-    counts["dropped_near_vs_corpus"] = verdicts.get("near", 0)
-    counts["survivors"] = verdicts.get("keep", 0)
-    survivors = kept.join(
-        decisions.filter(F.col("verdict") == "keep").select(id_col), on=id_col, how="left_semi"
-    )
+    if eval_docs is not None:
+        counts["after_decontam"] = sum(tally.values())
+    counts["dropped_exact_vs_corpus"] = tally["exact"]
+    counts["dropped_near_vs_corpus"] = tally["near"]
+    counts["survivors"] = tally["keep"]
+    survivors = decisions.filter(F.col("verdict") == "keep").drop("verdict")
     summary = {"op": "ingest", **counts}
     if batch_id:
         summary["batch_id"] = batch_id

@@ -68,7 +68,7 @@ from pyspark.sql.types import (
 )
 
 from dsm2dtm_spark import codecs, golden
-from dsm2dtm_spark.kernels.streamstats import block_source_for, chunked_min_and_slope
+from dsm2dtm_spark.kernels.streamstats import block_source_for, chunked_min_and_slope, valid_min
 from dsm2dtm_spark.operators import cellindex
 from dsm2dtm_spark.util import ensure_min_partitions, map_rows
 from dsm2dtm_spark.params import (
@@ -179,24 +179,27 @@ def image_stats(images: DataFrame, radius_m: float | None, slope: float | None, 
 
 def pass1_stats(row, radius_m: float | None, slope: float | None) -> dict:
     """One image row's pass-1 scalars: valid minimum, slope, derived params
-    and halo. At cell size ≥ 0.5 m, where the slope is not decimated, the
-    streamed kernel ``streamstats.chunked_min_and_slope`` reads row blocks
-    of the payload (memory O(block) on raw_f32/png16) and equals
-    ``golden.terrain_slope`` exactly; finer rows decode whole and run
-    ``golden.terrain_slope``."""
+    and halo. A given ``slope`` is used as is: one streamed sweep takes the
+    valid minimum and no slope is estimated. Otherwise, at cell size ≥ 0.5 m,
+    where the slope is not decimated, the streamed kernel
+    ``streamstats.chunked_min_and_slope`` reads row blocks of the payload
+    (memory O(block) on raw_f32/png16) and equals ``golden.terrain_slope``
+    exactly; finer rows decode whole and run ``golden.terrain_slope``."""
     # windows/sigmas/halo come from METADATA, checked before any decode
     # so a runaway kernel/halo config fails fast even on a raster whose
     # decode itself would be the OOM (the slope enters none of them)
     cell_size, p, halo = _metadata_params(row, radius_m)
     h, w = int(row.h), int(row.w)
-    if cell_size >= 0.5:
+    if slope is not None:
+        mn = valid_min(block_source_for(row.bytes, h, w, row.fmt, block_rows=256), NODATA_DEFAULT)[0]
+        s = float(slope)
+    elif cell_size >= 0.5:
         mn, s = chunked_min_and_slope(row.bytes, h, w, cell_size, NODATA_DEFAULT, fmt=row.fmt)
     else:
         grid = codecs.decode(row.bytes, h, w, row.fmt)
         valid = grid != NODATA_DEFAULT
         mn = float(grid[valid].min()) if valid.any() else float("nan")
         s = golden.terrain_slope(grid, cell_size, NODATA_DEFAULT)
-    s = float(slope) if slope is not None else s
     return {
         "image_id": row.image_id,
         "min_valid": mn,

@@ -72,6 +72,71 @@ def _file_column_stats(path: str) -> dict:
     return out
 
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _arrow_to_spark(t):
+    """The Spark type the parquet reader infers for a plain Arrow type, or
+    None outside the allowlist (booleans, integers, floats, strings, binary
+    and lists of those)."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        element = _arrow_to_spark(t.value_type)
+        return T.ArrayType(element) if element is not None else None
+    plain = {
+        pa.bool_(): T.BooleanType(), pa.int8(): T.ByteType(), pa.int16(): T.ShortType(),
+        pa.int32(): T.IntegerType(), pa.int64(): T.LongType(), pa.float32(): T.FloatType(),
+        pa.float64(): T.DoubleType(), pa.string(): T.StringType(), pa.large_string(): T.StringType(),
+        pa.binary(): T.BinaryType(), pa.large_binary(): T.BinaryType(),
+    }
+    return plain.get(t)
+
+
+def footer_schema(paths: list[str]):
+    """The schema ``spark.read.parquet(*paths)`` infers, read from one footer
+    on the driver instead of by Spark's schema-inference job — or None when
+    it cannot be read off exactly (the caller then lets Spark infer).
+
+    Spark's inference reads the first non-empty file in path order. A
+    Spark-written file carries its Spark schema in the footer key
+    ``org.apache.spark.sql.parquet.row.metadata``; any other writer's
+    schema is mapped from plain Arrow types only. The reader makes every
+    field nullable either way, as inference does. Hive partition columns
+    are not in the files: Spark still adds them from the directory names."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructField, StructType
+
+    first = next((p for p in sorted(paths) if os.path.getsize(p) > 0), None)
+    if first is None:
+        return None
+    try:
+        f = pq.ParquetFile(first)
+        spark_json = (f.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if spark_json is not None:
+            return StructType.fromJson(json.loads(spark_json))
+        arrow = f.schema_arrow
+    except Exception:  # noqa: BLE001 — an unreadable footer: Spark infers
+        return None
+    types = [_arrow_to_spark(a.type) for a in arrow]
+    if None in types:
+        return None
+    return StructType([StructField(a.name, t) for a, t in zip(arrow, types)])
+
+
+def read_parquet(spark: SparkSession, paths: list[str], base_path: str | None = None) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema taken from a footer
+    (see ``footer_schema``), so building the DataFrame runs no Spark job."""
+    reader = spark.read
+    schema = footer_schema(paths)
+    if schema is not None:
+        reader = reader.schema(schema)
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    return reader.parquet(*paths)
+
+
 def _file_survives(stats: dict | None, col: str, op: str, val) -> bool:
     """Can a file with these footer stats contain a row matching the
     predicate? Missing stats → must keep (never prune blindly)."""
@@ -201,7 +266,9 @@ class SnapshotTable:
         """DataFrame over the committed file set (time travel via snapshot_id).
         Plain parquet scan → Catalyst predicate pushdown / column pruning
         apply untouched; hive-style partition directories (from a
-        ``partition_by`` write) keep partition-pruning via basePath.
+        ``partition_by`` write) keep partition-pruning via basePath. The
+        schema comes from a footer (``read_parquet``), so building the
+        DataFrame runs no Spark job.
 
         ``where``: optional conjunction of ``(col, op, value)`` predicates
         (op ∈ =, <, <=, >, >=). Files whose footer min/max provably cannot
@@ -221,7 +288,7 @@ class SnapshotTable:
                 f for f in files if all(_file_survives(snap.stats.get(f), c, op, v) for (c, op, v) in where)
             ] or snap.files[:1]  # keep one file for schema; filters below yield 0 rows
         paths = [os.path.join(self.data_dir, f) for f in files]
-        df = spark.read.option("basePath", self.data_dir).parquet(*paths)
+        df = read_parquet(spark, paths, base_path=self.data_dir)
         ops = {
             "=": lambda col, v: col == v,
             "<": lambda col, v: col < v,
@@ -312,7 +379,7 @@ class SnapshotTable:
             for d, small in sorted(groups.items()):
                 total = sum(os.path.getsize(os.path.join(self.data_dir, f)) for f in small)
                 n_out = max(1, math.ceil(total / target_file_bytes))
-                df = spark.read.parquet(*[os.path.join(self.data_dir, f) for f in small])
+                df = read_parquet(spark, [os.path.join(self.data_dir, f) for f in small])
                 if sort_by:  # range-cluster: tight per-file min/max for file skipping
                     df = df.repartitionByRange(n_out, *sort_by).sortWithinPartitions(*sort_by)
                 else:

@@ -5,6 +5,8 @@ pipeline (VERDICT r3 #1)."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +14,7 @@ from pyspark.sql import functions as F
 from dsm2dtm_spark.operators.dedup import minhash_signatures
 from dsm2dtm_spark.operators.incremental import (
     SignatureStore,
+    _est_jaccard_expr,
     _matched_fingerprints,
     band_buckets,
     dedup_against,
@@ -478,6 +481,73 @@ class TestStoreCensusAndRepair:
         # count run; a signature-length aggregate would add jobs on top
         assert heal_jobs <= 10
         assert append_jobs <= 3
+
+
+def _est_jaccard_columns(n_hashes: int):
+    """Reference: the same estimate assembled from Python ``Column``
+    objects, one ``F.when`` term per component."""
+    matches = None
+    for i in range(n_hashes):
+        m = F.when(F.get("_fsig", i) == F.get("_csig", i), 1).otherwise(0)
+        matches = m if matches is None else matches + m
+    return matches / F.size("_fsig")
+
+
+@pytest.mark.parametrize("element", ["bigint", "string"])
+def test_est_jaccard_sql_expression_equals_column_form(spark, element):
+    """The one-string SQL estimate equals the Column-built sum on equal,
+    disjoint, partly matching, null and short signature arrays, in both
+    flavours' element types."""
+
+    def conv(a):
+        if a is None or element == "bigint":
+            return a
+        return [None if v is None else str(v) for v in a]
+
+    pairs = {
+        "equal": ([1, 2, 3, 4], [1, 2, 3, 4]),
+        "disjoint": ([1, 2, 3, 4], [5, 6, 7, 8]),
+        "partial": ([1, 2, 3, 4], [1, 9, 3, 9]),
+        "null_fresh": (None, [1, 2, 3, 4]),
+        "null_stored": ([1, 2, 3, 4], None),
+        "null_component": ([1, None, 3, 4], [1, None, 3, 5]),
+        "short_stored": ([1, 2, 3, 4], [1, 2]),
+        "short_fresh": ([1, 2], [1, 2, 3, 4]),
+    }
+    df = spark.createDataFrame(
+        [(k, conv(f), conv(c)) for k, (f, c) in pairs.items()],
+        f"case string, _fsig array<{element}>, _csig array<{element}>",
+    )
+    got = {
+        r.case: (r.new, r.old)
+        for r in df.select("case", _est_jaccard_expr(4).alias("new"), _est_jaccard_columns(4).alias("old")).collect()
+    }
+    assert {k: new for k, (new, _) in got.items()} == {k: old for k, (_, old) in got.items()}
+    assert (got["equal"][0], got["disjoint"][0], got["partial"][0]) == (1.0, 0.0, 0.5)
+    assert got["short_stored"][0] == 0.5 and got["short_fresh"][0] == 1.0
+
+
+def test_decisions_carry_the_fresh_rows(spark, tmp_path):
+    """Decisions are the fresh rows with a verdict appended: every input
+    column comes back unchanged, including one named like a column the
+    dedup computes (``fingerprint``), and the kept signatures stay the
+    store's three columns."""
+    store = SignatureStore(str(tmp_path / "cols"))
+    incremental_dedup(store, _df(spark, CORPUS), method="md5")
+    fresh = spark.createDataFrame(
+        [(doc_id, text, f"user-{doc_id}", "en") for doc_id, text in FRESH_1],
+        "doc_id bigint, text string, fingerprint string, lang string",
+    )
+    decisions, keep_sigs = dedup_against(
+        fresh, store.read_signatures(spark), store.read_bands(spark), method="md5"
+    )
+    assert decisions.columns == ["doc_id", "text", "fingerprint", "lang", "verdict"]
+    got = {r.doc_id: (r.text, r.fingerprint, r.lang, r.verdict) for r in decisions.collect()}
+    want = dict(zip((100, 101, 102, 103), ("exact", "near", "keep", "keep")))
+    assert got == {i: (t, f"user-{i}", "en", want[i]) for i, t in FRESH_1}
+    assert keep_sigs.columns == ["doc_id", "fingerprint", "signature"]
+    md5 = {i: hashlib.md5(t.encode()).hexdigest() for i, t in FRESH_1}
+    assert {r.doc_id: r.fingerprint for r in keep_sigs.collect()} == {i: md5[i] for i in (102, 103)}
 
 
 class TestMd5SignatureProperties:

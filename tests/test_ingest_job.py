@@ -170,3 +170,87 @@ class TestIngestJob:
         corpus.commit([], operation="append", summary={"compacted": 0})
         _, c = ingest_batch(spark, b, corpus, store, batch_id="b1")
         assert c.get("skipped") == "batch already ingested"
+
+
+class TestIngestJobBudget:
+    """One ingest of a batch against a non-empty store runs at most 15 Spark
+    jobs: the stage counts are observed on the one pin of the quality →
+    within-batch exact chain, the verdict tally on the decisions pin, and
+    the survivors, signatures and bands writes read those pins. The counts
+    are exact, with and without decontam, and on an all-dropped batch."""
+
+    BASE = [
+        (0, "a long enough document about parquet footers and row groups"),
+        (1, "another fine document describing broadcast joins in detail"),
+        (2, "a third document about snapshot manifests and their commits"),
+    ]
+
+    def test_ingest_runs_at_most_15_jobs_with_exact_counts(self, spark, tables):
+        corpus, store = tables
+        ingest_batch(spark, _df(spark, self.BASE), corpus, store, batch_id="base")
+        batch = _df(
+            spark,
+            [
+                (10, "a long enough document about parquet footers and row groups"),  # exact vs corpus
+                (11, "another fine document describing broadcast joins in details"),  # near vs corpus
+                (12, "x"),  # fails the quality gate
+                (13, "entirely novel writing on glacier meltwater and moraine lakes"),
+                (14, "entirely novel writing on glacier meltwater and moraine lakes"),  # in-batch dup of 13
+                (15, "a wholly separate note on river gauges and flood warnings"),
+            ],
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("ingest-budget", "one ingest")
+        try:
+            _, c = ingest_batch(spark, batch, corpus, store, batch_id="b1")
+            jobs = list(sc.statusTracker().getJobIdsForGroup("ingest-budget"))
+        finally:
+            sc.setJobGroup(None, None)
+        assert c == {
+            "input": 6,
+            "repaired": 0,
+            "after_quality": 5,
+            "after_within_batch_exact": 4,
+            "dropped_exact_vs_corpus": 1,
+            "dropped_near_vs_corpus": 1,
+            "survivors": 2,
+        }
+        assert len(jobs) <= 15, f"{len(jobs)} Spark jobs for one ingest"
+        assert corpus.current_snapshot().summary == {"op": "ingest", "batch_id": "b1", **c}
+        assert sorted(r.doc_id for r in corpus.read(spark).collect()) == [0, 1, 2, 13, 15]
+
+        ev = _df(spark, [(0, f"context {EVAL} more context")])
+        batch2 = _df(
+            spark,
+            [
+                (20, f"leaked eval text: {EVAL} thanks"),  # decontaminated
+                (21, "a wholly separate note on river gauges and flood warnings"),  # exact vs corpus
+                (22, "fresh snowfall covered the quiet village before dawn broke gently"),
+                (23, "fresh snowfall covered the quiet village before dawn broke gently"),  # in-batch dup
+            ],
+        )
+        _, c2 = ingest_batch(spark, batch2, corpus, store, eval_docs=ev, batch_id="b2")
+        assert c2 == {
+            "input": 4,
+            "repaired": 0,
+            "after_quality": 4,
+            "after_within_batch_exact": 3,
+            "after_decontam": 2,
+            "dropped_exact_vs_corpus": 1,
+            "dropped_near_vs_corpus": 0,
+            "survivors": 1,
+        }
+
+        dropped = _df(spark, [(30, "x"), (31, "y z")])  # nothing passes the quality gate
+        _, c3 = ingest_batch(spark, dropped, corpus, store, batch_id="b3")
+        assert c3 == {
+            "input": 2,
+            "repaired": 0,
+            "after_quality": 0,
+            "after_within_batch_exact": 0,
+            "dropped_exact_vs_corpus": 0,
+            "dropped_near_vs_corpus": 0,
+            "survivors": 0,
+        }
+        assert corpus.current_snapshot().summary["op"] == "ingest-empty"
+        assert corpus.read(spark).count() == 6

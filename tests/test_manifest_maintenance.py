@@ -76,6 +76,97 @@ class TestFileStatsAndPruning:
         assert sorted(r.x for r in pruned.collect()) == [4, 5, 6]
 
 
+class TestReadSchema:
+    """``SnapshotTable.read`` takes its schema from one footer: it equals the
+    schema Spark's own inference gives (nullability and field metadata
+    included), and building the DataFrame runs no Spark job."""
+
+    @staticmethod
+    def _read_checked(spark, t):
+        paths = [os.path.join(t.data_dir, f) for f in t.current_snapshot().files]
+        inferred = spark.read.option("basePath", t.data_dir).parquet(*paths).schema
+        sc = spark.sparkContext
+        sc.setJobGroup("snapshot-read", "SnapshotTable.read")
+        try:
+            df = t.read(spark)
+            jobs = list(sc.statusTracker().getJobIdsForGroup("snapshot-read"))
+        finally:
+            sc.setJobGroup(None, None)
+        assert df.schema == inferred
+        assert jobs == []
+        return df
+
+    def test_spark_written_two_appends(self, spark, tmp_path):
+        t = SnapshotTable(str(tmp_path / "s"))
+        t.write_dataframe(spark.createDataFrame([(1, "a", [1.0])], "id bigint not null, s string, v array<double>"))
+        t.write_dataframe(spark.createDataFrame([(2, "b", [2.0, None])], "id bigint, s string, v array<double>"))
+        df = self._read_checked(spark, t)
+        assert df.schema["id"].nullable
+        assert sorted(r.id for r in df.collect()) == [1, 2]
+
+    def test_write_pandas(self, spark, tmp_path):
+        t = SnapshotTable(str(tmp_path / "p"))
+        t.write_pandas(pd.DataFrame({"k": [1, 2], "x": [0.5, 1.5], "name": ["a", None]}))
+        assert self._read_checked(spark, t).count() == 2
+
+    def test_partitioned(self, spark, tmp_path):
+        t = SnapshotTable(str(tmp_path / "h"))
+        for k in (1, 2):
+            t.write_dataframe(spark.createDataFrame([(k, f"row {k}")], "k int, s string"), partition_by=["k"])
+        df = self._read_checked(spark, t)
+        assert df.columns == ["s", "k"]
+        assert sorted((r.k, r.s) for r in df.collect()) == [(1, "row 1"), (2, "row 2")]
+
+    def test_pyarrow_commit(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        t = SnapshotTable(str(tmp_path / "a"))
+        schema = pa.schema(
+            [
+                pa.field("i32", pa.int32(), nullable=False),
+                ("i64", pa.int64()),
+                ("f32", pa.float32()),
+                ("f64", pa.float64()),
+                ("s", pa.string()),
+                ("b", pa.binary()),
+                ("l", pa.list_(pa.int64())),
+                ("ls", pa.list_(pa.string())),
+            ]
+        )
+        cols = {
+            "i32": [1, 2], "i64": [3, None], "f32": [0.5, 1.5], "f64": [2.5, None],
+            "s": ["x", None], "b": [b"\x00", b"\x01"], "l": [[1, 2], None], "ls": [["u"], []],
+        }
+        table = pa.table(cols, schema=schema)
+        pq.write_table(table, os.path.join(t.data_dir, "ext.parquet"))
+        t.commit(["ext.parquet"])
+        df = self._read_checked(spark, t)
+        assert [r.i32 for r in df.collect()] == [1, 2]
+
+    def test_compacted(self, spark, tmp_path):
+        t = SnapshotTable(str(tmp_path / "c"))
+        for i in range(3):
+            t.write_dataframe(spark.createDataFrame([(i, [i])], "id bigint, v array<int>"))
+        assert t.compact(spark) is not None
+        assert len(t.current_snapshot().files) == 1
+        assert self._read_checked(spark, t).count() == 3
+
+    def test_types_outside_the_allowlist_fall_back_to_inference(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from dsm2dtm_spark.sources.manifest import footer_schema
+
+        t = SnapshotTable(str(tmp_path / "ts"))
+        path = os.path.join(t.data_dir, "ts.parquet")
+        pq.write_table(pa.table({"t": pa.array([0], pa.timestamp("us")), "k": [1]}), path)
+        t.commit(["ts.parquet"])
+        assert footer_schema([path]) is None
+        inferred = spark.read.parquet(path).schema
+        assert t.read(spark).schema == inferred
+
+
 class TestCompaction:
     def test_compact_folds_small_files(self, spark, tmp_path):
         t = SnapshotTable(str(tmp_path / "c"))

@@ -363,6 +363,31 @@ class TestImageStats:
             tiling.image_stats(sdf, RADIUS, None).collect()
 
 
+class TestGivenSlope:
+    @pytest.mark.parametrize("res, fmt", [(2.0, "raw_f32"), (2.0, "png16"), (0.47, "raw_f32")])
+    def test_given_slope_skips_the_slope_estimate(self, monkeypatch, res, fmt):
+        """A caller's slope is used as is: pass 1 returns the same valid
+        minimum and params as with the slope estimated, and never calls a
+        slope kernel (streamed above 0.5 m, golden's below)."""
+        from types import SimpleNamespace
+
+        g = np.random.default_rng(7).normal(100, 5, (300, 200)).astype(np.float32)
+        g[:40, :30] = NODATA_DEFAULT
+        row = SimpleNamespace(image_id="i", bytes=codecs.encode(g, fmt), h=300, w=200, fmt=fmt, xres_m=res, yres_m=res)
+        estimated = tiling.pass1_stats(row, RADIUS, None)
+
+        def slope_kernel(*a, **k):
+            raise AssertionError("a slope kernel ran although the slope was given")
+
+        monkeypatch.setattr(tiling, "chunked_min_and_slope", slope_kernel)
+        monkeypatch.setattr(golden, "terrain_slope", slope_kernel)
+        given = tiling.pass1_stats(row, RADIUS, 0.3)
+        decoded = codecs.decode(row.bytes, 300, 200, fmt)
+        assert given["min_valid"] == estimated["min_valid"] == float(decoded[decoded != NODATA_DEFAULT].min())
+        assert given["slope_used"] == 0.3
+        assert {**given, "slope_used": None} == {**estimated, "slope_used": None}
+
+
 class TestChunkedStats:
     @pytest.mark.parametrize("fmt", ["raw_f32", "png16"])
     def test_chunked_equals_whole_image_stats(self, spark, fmt):
