@@ -146,12 +146,13 @@ class SignatureStore:
 
     def _write(self, kind: str, df: DataFrame, summary: dict | None) -> list[str]:
         """Commit ``df`` to the ``kind`` sub-table ('signatures' or 'bands');
-        returns the paths of the data files this write added."""
+        returns the paths of the data files this write added. A write of
+        zero rows commits nothing and returns []."""
         table = getattr(self, kind)
         before = table.current_snapshot()
         old = set(before.files) if before else set()
-        snap = table.write_dataframe(df, summary=summary)
-        return [os.path.join(table.data_dir, f) for f in snap.files if f not in old]
+        rows, snap = table.append_rows(df, summary=summary)
+        return [os.path.join(table.data_dir, f) for f in snap.files if f not in old] if rows else []
 
     def is_empty(self) -> bool:
         return self.signatures.current_snapshot() is None
@@ -218,15 +219,15 @@ class SignatureStore:
         bands never re-execute the sign+dedup lineage — the most expensive
         stage of every ingest — and need no pin of it. With a configured
         ``bucket_cap`` the hot-bucket census updates here too (write-path
-        amortization; see class docstring)."""
+        amortization; see class docstring). An empty batch commits nothing
+        to either table."""
         spark = signatures_df.sparkSession
         # backfill BEFORE this batch's rows land in the band table, or the
         # later census read would double-count them
         self._backfill_census_if_needed(spark)
         written = self._write("signatures", signatures_df, summary)
-        # an empty input may write no file; its (empty) lineage then derives the bands
-        stored = read_parquet(spark, written) if written else signatures_df
-        self._add_bands(band_buckets(stored, bands=bands), summary)
+        if written:
+            self._add_bands(band_buckets(read_parquet(spark, written), bands=bands), summary)
 
     def append_band_rows(self, band_rows: DataFrame, summary: dict | None = None) -> None:
         """Commit band rows WITHOUT signature rows — the repair path for
@@ -524,7 +525,8 @@ class BucketedSignatureStore(SignatureStore):
         EXTERNAL table on first write), then commit the manifest: the
         signatures write moves the row watermark — by the new files' footer
         row counts, never a re-run of ``df`` — and records sig_params.
-        Returns the paths of the bucket files this write added."""
+        Returns the paths of the bucket files this write added. A write of
+        zero rows leaves the manifest as it was and returns []."""
         import glob
 
         import pyarrow.parquet as pq
@@ -543,13 +545,16 @@ class BucketedSignatureStore(SignatureStore):
             # catalog entry recreatable from the manifest in any session
             loc, before = self._location(kind, 0), set()
             writer.mode("overwrite").option("path", loc).saveAsTable(self._table_name(kind))
-            tables[kind] = {
-                "version": 0,
-                "ddl": ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields),
-            }
         written = sorted(set(glob.glob(os.path.join(loc, "*.parquet"))) - before)
+        rows = sum(pq.read_metadata(f).num_rows for f in written)
+        if rows == 0:
+            return []
+        tables.setdefault(kind, {
+            "version": 0,
+            "ddl": ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields),
+        })
         if kind == "signatures":
-            meta["rows"] = meta.get("rows", 0) + sum(pq.ParquetFile(f).metadata.num_rows for f in written)
+            meta["rows"] = meta.get("rows", 0) + rows
             if summary and summary.get("sig_params"):
                 meta["sig_params"] = summary["sig_params"]
         meta["n_buckets"] = self.n_buckets

@@ -2,9 +2,11 @@
 
 Single place that encodes the execution-model decisions (SURVEY.md §4.2):
 AQE on (runtime re-planning + skew-join splitting + partition coalescing),
-Arrow on with a small batch row cap (rows carry multi-MB image payloads — the
-default 10k rows/batch would materialize GBs per Arrow batch in the Python
-worker), a shuffle-partition count sized to the local core budget, and
+Arrow on with small batches, capped by rows and by bytes (rows carry
+multi-MB encoded image payloads — the default 10k rows/batch would
+materialize GBs per Arrow batch in the Python worker, and a row cap alone
+lets a task's batch grow with its share of rows), a shuffle-partition count
+sized to the local core budget, and
 the engine's own Python daemon (``_daemon``): reused workers skip PySpark's
 per-task re-read of unchanged zip archives on ``sys.path``. The workers find
 the engine, and that daemon, at the import root of this package, wherever
@@ -19,7 +21,8 @@ from pyspark.sql import SparkSession
 
 import dsm2dtm_spark
 
-ARROW_BATCH_ROWS = 64  # ≈ 64 × (few MB) decoded per python-worker batch
+ARROW_BATCH_ROWS = 64  # the docs signer's Arrow UDFs batch by this
+ARROW_BATCH_BYTES = 2 << 20  # encoded image bytes per python-worker batch
 
 
 # Python workers allocate/free MB-scale numpy buffers constantly; with
@@ -58,6 +61,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         .config("spark.sql.files.maxPartitionBytes", "64m")
         # floor scan parallelism at the core budget (guide §6): a 126 MB
         # 6-row-group parquet otherwise becomes TWO 64 MB splits — every

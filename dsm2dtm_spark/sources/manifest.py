@@ -308,14 +308,32 @@ class SnapshotTable:
         partition_by: list[str] | None = None,
     ) -> Snapshot:
         """Write ``df`` as new immutable data files + commit one snapshot.
+        With ``partition_by`` the hive-style ``col=value`` directory layout
+        is preserved, making the partition column prunable at scan time
+        (Iceberg-style data layout)."""
+        return self.commit(self._stage(df, partition_by), operation, summary)
 
-        Spark writes to a scratch dir; the part files are moved into data/
-        under fresh UUID names before the snapshot references them, so a
-        crashed job never leaves half-visible data (files without a snapshot
-        are invisible garbage, collectable later). With ``partition_by`` the
-        hive-style ``col=value`` directory layout is preserved, making the
-        partition column prunable at scan time (Iceberg-style data layout).
-        """
+    def append_rows(self, df: DataFrame, summary: dict | None = None) -> tuple[int, Snapshot | None]:
+        """Append ``df`` as one snapshot whose summary records the rows it
+        added under ``rows``; returns (rows, snapshot). The count is summed
+        from the written files' footers, so no Spark action counts ``df``.
+        A write of zero rows commits nothing: its files are deleted and
+        (0, current snapshot) comes back, so a job with nothing left to do
+        leaves the table as it was."""
+        new_files = self._stage(df)
+        rows = self._footer_rows(new_files)
+        if rows == 0:
+            for rel in new_files:
+                os.remove(os.path.join(self.data_dir, rel))
+            return 0, self.current_snapshot()
+        return rows, self.commit(new_files, "append", {**(summary or {}), "rows": rows})
+
+    def _stage(self, df: DataFrame, partition_by: list[str] | None = None) -> list[str]:
+        """Write ``df`` and move its part files into data/ under fresh UUID
+        names; returns their names relative to data/. Spark writes to a
+        scratch dir first, so a crashed job never leaves half-visible data
+        (files without a snapshot are invisible garbage, collectable
+        later)."""
         scratch = os.path.join(self.root, f".stage-{uuid.uuid4().hex}")
         try:
             w = df.write.mode("overwrite")
@@ -335,7 +353,7 @@ class SnapshotTable:
                         os.makedirs(os.path.join(self.data_dir, rel_dir), exist_ok=True)
                     shutil.move(os.path.join(dirpath, fn), os.path.join(self.data_dir, rel))
                     new_files.append(rel)
-            return self.commit(new_files, operation, summary)
+            return new_files
         finally:
             shutil.rmtree(scratch, ignore_errors=True)
 
@@ -436,18 +454,17 @@ class SnapshotTable:
         O(corpus) anti-join on the happy path. Returns None for a table with
         no commits; raises nothing — an unreadable footer falls back to a
         Spark count by the caller (never guessed)."""
-        import pyarrow.parquet as pq
-
         if snapshot_id is None:
             snap = self.current_snapshot()
         else:
             snap = next((s for s in self.snapshots() if s.snapshot_id == snapshot_id), None)
-        if snap is None:
-            return None
-        total = 0
-        for rel in snap.files:
-            total += pq.ParquetFile(os.path.join(self.data_dir, rel)).metadata.num_rows
-        return total
+        return None if snap is None else self._footer_rows(snap.files)
+
+    def _footer_rows(self, files: list[str]) -> int:
+        """Summed footer ``num_rows`` of data files (names relative to data/)."""
+        import pyarrow.parquet as pq
+
+        return sum(pq.read_metadata(os.path.join(self.data_dir, rel)).num_rows for rel in files)
 
     def write_pandas(self, pdf, operation: str = "append", summary: dict | None = None) -> Snapshot:
         """Commit a pandas DataFrame as one data file (generator convenience)."""

@@ -22,7 +22,10 @@ def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None, mult
     split) would serialize the whole job behind a handful of tasks — the byte
     shuffle is cheap insurance against idle executors. Shared by the
     whole-image plan, the tiled plan, and the terrain operators so the guard
-    evolves in one place.
+    evolves in one place. ``mult`` trades balance against per-task cost:
+    every task pays a fixed set-up (executor deserialize, Python-boundary
+    set-up, one output file), so the whole-image plan asks for one task
+    per core (``mult=1``).
     """
     if min_partitions is None:
         min_partitions = mult * df.sparkSession.sparkContext.defaultParallelism

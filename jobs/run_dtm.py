@@ -87,8 +87,10 @@ def main():
     ap.add_argument("--cores", type=int, default=None, help="local-mode core count (ignored under a cluster master)")
     args = ap.parse_args()
 
+    from functools import partial
+
     from dsm2dtm_spark import golden
-    from dsm2dtm_spark.plans import dtm_transform, resume_remaining
+    from dsm2dtm_spark.plans import commit_remaining, dtm_transform
     from dsm2dtm_spark.session import get_spark
     from dsm2dtm_spark.sources import SnapshotTable
 
@@ -107,46 +109,29 @@ def main():
         paths = sorted(p for pat in args.input.split(",") for p in glob.glob(pat))
         if not paths:
             raise SystemExit(f"no files match --input {args.input}")
-        # materialize the ingest ONCE: the plan below consumes src three
-        # times (resume count, transform, geotiff-out metadata join) and a
-        # mapInPandas ingest would re-read + re-decode every raster per use
+        # materialize the ingest ONCE: the job below consumes src twice
+        # (the resume + transform write, the geotiff-out metadata join) and
+        # a mapInPandas ingest would re-read + re-decode every raster per use
         src = read_geotiff_table(spark, paths).localCheckpoint(eager=True)
     else:
         src = SnapshotTable(args.input).read(spark)
 
-    try:
-        done = out.read(spark)
-    except ValueError:
-        done = None
     mode = "dtm-tiled" if args.tiled else "dtm"
-    if done is not None:
-        check_resume_mode(out, mode)
-    todo = resume_remaining(src, done)
-    n = todo.count()
-    if n:
-        if args.tiled:
-            from dsm2dtm_spark.operators.tiling import tiled_dtm_transform
+    check_resume_mode(out, mode)
+    kw = dict(
+        radius_m=args.radius,
+        slope=args.slope,
+        init_threshold=args.init_threshold,
+        max_threshold=args.max_threshold,
+        permissive=args.permissive,
+    )
+    if args.tiled:
+        from dsm2dtm_spark.operators.tiling import tiled_dtm_transform
 
-            result = tiled_dtm_transform(
-                todo,
-                tile_px=args.tile_px,
-                radius_m=args.radius,
-                slope=args.slope,
-                init_threshold=args.init_threshold,
-                max_threshold=args.max_threshold,
-                permissive=args.permissive,
-            )
-        else:
-            result = dtm_transform(
-                todo,
-                radius_m=args.radius,
-                slope=args.slope,
-                init_threshold=args.init_threshold,
-                max_threshold=args.max_threshold,
-                permissive=args.permissive,
-            )
-        out.write_dataframe(result, summary={"rows": n, "op": mode})
-    snap = out.current_snapshot()
+        transform = partial(tiled_dtm_transform, tile_px=args.tile_px, **kw)
+    else:
+        transform = partial(dtm_transform, **kw)
+    n, snap = commit_remaining(src, out, mode, transform)
 
     tif_paths: list[str] = []
     if args.geotiff_out:

@@ -645,3 +645,23 @@ class TestBucketEvolution:
         other.compact(spark.newSession(), n_buckets=8)
         assert store.read_signatures(spark).count() == 4  # re-registered at v1/8
         assert store.n_buckets == 8
+
+
+@pytest.mark.parametrize("layout", ["plain", "bucketed"])
+def test_empty_batch_commits_nothing(spark, tmp_path, layout):
+    """An empty batch leaves an empty store empty on both layouts: no
+    signatures or bands commit, no recorded signature parameters, and the
+    next batch is still the bootstrap."""
+    root = str(tmp_path / "store")
+    store = SignatureStore(root) if layout == "plain" else BucketedSignatureStore(root, n_buckets=4)
+    empty = spark.createDataFrame([], "doc_id bigint, text string")
+    assert incremental_dedup(store, empty, method="md5").count() == 0
+    assert store.is_empty() and store.params() == {}
+    assert store.signature_row_count() is None and store.band_row_count() is None
+    incremental_dedup(store, _df(spark, CORPUS), method="md5")
+    assert store.signature_row_count() == len(CORPUS) and store.band_row_count() == 4 * len(CORPUS)
+    # an empty batch into a non-empty store changes nothing either
+    before = store.params()
+    incremental_dedup(store, empty, method="md5")
+    assert store.params() == before
+    assert store.signature_row_count() == len(CORPUS) and store.band_row_count() == 4 * len(CORPUS)

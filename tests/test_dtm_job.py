@@ -83,9 +83,11 @@ class TestSnapshotResume:
         final = out.read(spark)
         assert final.count() == 24
         assert final.select("image_id").distinct().count() == 24
-        # idempotent rerun: nothing left
-        n3, _ = run_dtm_job(spark, inp, out, radius_m=RADIUS)
+        # idempotent rerun: nothing left, and nothing committed
+        before = out.current_snapshot().snapshot_id
+        n3, snap3 = run_dtm_job(spark, inp, out, radius_m=RADIUS)
         assert n3 == 0
+        assert snap3.snapshot_id == before == out.current_snapshot().snapshot_id
 
     def test_snapshot_time_travel(self, spark, tmp_path, image_pdf):
         t = SnapshotTable(str(tmp_path / "tt"))
@@ -94,6 +96,28 @@ class TestSnapshotResume:
         assert t.read(spark, snapshot_id=s0.snapshot_id).count() == 5
         assert t.read(spark, snapshot_id=s1.snapshot_id).count() == 9
         assert t.current_snapshot().snapshot_id == s1.snapshot_id
+
+
+class TestDtmJobBudget:
+    """A fresh run is one write: no count job (n comes from the committed
+    footers), and one wave of DTM tasks, one per core, when the scan gives
+    fewer partitions than cores."""
+
+    def test_one_write_one_task_per_core(self, spark, tmp_path, input_table):
+        sc = spark.sparkContext
+        assert input_table.read(spark).rdd.getNumPartitions() < sc.defaultParallelism
+        out = SnapshotTable(str(tmp_path / "out"))
+        sc.setJobGroup("dtm-budget", "one run_dtm_job")
+        try:
+            n, snap = run_dtm_job(spark, input_table, out, radius_m=RADIUS)
+            jobs = list(sc.statusTracker().getJobIdsForGroup("dtm-budget"))
+        finally:
+            sc.setJobGroup(None, None)
+        assert n == 24 and snap.summary == {"op": "dtm", "rows": 24}
+        assert len(jobs) <= 2, f"{len(jobs)} Spark jobs for one run_dtm_job"
+        tasks = out.read(spark).groupBy("partition_id").count().collect()
+        assert len(tasks) == sc.defaultParallelism
+        assert sum(r["count"] for r in tasks) == 24
 
 
 class TestPlanQuality:

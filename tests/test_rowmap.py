@@ -109,3 +109,21 @@ def test_single_per_row_boundary():
     }
     assert hits - allowed == set(), f"hand-rolled mapInPandas loops: {sorted(hits - allowed)}"
     assert "util.py" in hits
+
+
+def test_arrow_batches_are_capped_by_bytes(spark):
+    """The session caps each Arrow batch the Python boundary receives by
+    bytes, not only by rows: 40 rows of 0.5 MB in one partition reach the
+    worker as batches of at most the cap plus one row."""
+    from dsm2dtm_spark.session import ARROW_BATCH_BYTES
+
+    row_bytes = 500_000
+
+    def sizes(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"rows": [len(pdf)], "payload": [int(pdf["bytes"].map(len).sum())]})
+
+    df = spark.range(0, 40, 1, 1).selectExpr("id", f"cast(repeat('x', {row_bytes}) as binary) as bytes")
+    got = df.mapInPandas(sizes, "rows long, payload long").collect()
+    assert sum(r.rows for r in got) == 40
+    assert max(r.payload for r in got) <= ARROW_BATCH_BYTES + row_bytes, got
