@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import hashlib
 import struct
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -54,13 +55,16 @@ def shingle_expr(text_col: str, n: int = 3):
 
 
 def _gram_slices(t: str, n: int):
-    """The ONE copy of the python-side gram construction every Arrow twin
-    shares (shingle_grams_udf, jaccard_counts_udf and the MinHash signer):
-    codepoint slices ``t[i:i+n]`` over ``max(len(t)-n+1, 1)`` positions —
-    exactly ``substring(t, i+1, n)`` over ``greatest(length(t)-(n-1), 1)``
-    incl. the short-text clamp. Keeping it shared is load-bearing: the
-    rounded Jaccard oracles and the signatures rely on the UDFs agreeing
-    bit-for-bit with shingle_expr, so the clamp/slicing must never drift."""
+    """The ONE copy of the python-side gram construction the Arrow twins
+    share (shingle_grams_udf, jaccard_counts_udf): codepoint slices
+    ``t[i:i+n]`` over ``max(len(t)-n+1, 1)`` positions — exactly
+    ``substring(t, i+1, n)`` over ``greatest(length(t)-(n-1), 1)`` incl.
+    the short-text clamp. Keeping it shared is load-bearing: the rounded
+    Jaccard oracles rely on the UDFs agreeing bit-for-bit with shingle_expr,
+    so the clamp/slicing must never drift. The MinHash signer builds the
+    same positions with array operations (``_sign_batch``); the signer's
+    property test, whose reference loop slices with this function, keeps
+    the two in step."""
     return (t[i : i + n] for i in range(max(len(t) - n + 1, 1)))
 
 
@@ -206,13 +210,16 @@ def _xxh64(data: bytes) -> int:
 # 377 distinct 3-grams), so each distinct gram is hashed once per worker,
 # not once per occurrence. Rows: md5 → the n_hashes (hi, lo) uint64 halves
 # of md5('i:'||gram); xxhash64 → ONE int64, pmod(xxhash64(gram), P) — the
-# permutations are applied per document. Bounded: a document that could
-# push the cache past _GRAM_CACHE_MAX rows first resets it to a fresh
-# _GRAM_CACHE_ROWS matrix (recompute, never wrong; the grown storage is
-# freed, not kept).
+# permutations are applied per batch. Bounded by the cap, or one batch's
+# distinct grams: a batch that could push the cache past _GRAM_CACHE_MAX
+# rows first resets it to a fresh _GRAM_CACHE_ROWS matrix (recompute, never
+# wrong; the grown storage is freed, not kept).
 _GRAM_CACHE: dict[tuple, dict] = {}
 _GRAM_CACHE_MAX = 262_144
 _GRAM_CACHE_ROWS = 4096
+# codepoints past U+10FFFF that fill a gram window past its text's end: the
+# pad of a text shorter than n, and the one gram of a NULL text
+_PAD, _NULL_CP = 0x110000, 0x110001
 
 
 def _fresh_gram_cache(method: str, n_hashes: int) -> dict:
@@ -223,68 +230,104 @@ def _fresh_gram_cache(method: str, n_hashes: int) -> dict:
     return {"idx": {}, "mat": mat, "n": 0}
 
 
+def _gram_windows(texts: list, n: int):
+    """The batch's gram positions, labelled: text i has ``max(len−n+1, 1)``
+    positions, those of ``_gram_slices``. Returns (label of each position,
+    first position of each text, each label's gram). Labels number the
+    n-codepoint windows by first appearance, one ``factorize`` fold per
+    codepoint; a text shorter than n pads its one window past its end with
+    a sentinel, so its gram is the text itself, and a NULL text's window is
+    all NULL sentinels, the NULL gram."""
+    lens = np.array([0 if t is None else len(t) for t in texts], dtype=np.int64)
+    s = "".join(t for t in texts if t is not None)
+    # n codepoints past the end keep every window's gather in bounds
+    cp = np.frombuffer((s + "\0" * n).encode("utf-32-le"), dtype=np.uint32)
+    npos = np.maximum(lens - n + 1, 1)
+    first = np.cumsum(npos) - npos
+    at = np.arange(npos.sum()) + np.repeat(np.cumsum(lens) - lens - first, npos)  # each position's codepoint
+    short = np.flatnonzero(lens < n)
+    fill = np.array([_NULL_CP if texts[d] is None else _PAD for d in short.tolist()], dtype=np.uint32)
+    lab = np.zeros(len(at), dtype=np.int64)
+    for k in range(n):
+        c = cp[at + k]
+        past = lens[short] <= k
+        c[first[short[past]]] = fill[past]
+        lab *= _NULL_CP + 1
+        lab += c
+        lab = pd.factorize(lab)[0]
+    seen = np.flatnonzero(np.diff(np.maximum.accumulate(lab), prepend=-1))  # each label's first position
+    w = cp[at[seen, None] + np.arange(n)]  # each label's window, read as one n-character string
+    grams = w.view(f"<U{n}").ravel().tolist()
+    for u in np.flatnonzero(w[:, -1] == 0).tolist():  # numpy strips trailing U+0000
+        grams[u] = s[at[seen[u]] : at[seen[u]] + n]
+    for d in short.tolist():
+        grams[lab[first[d]]] = texts[d]
+    return lab, first, grams
+
+
 def _sign_batch(lowered: pd.Series, n_hashes: int, shingle_n: int, method: str) -> pd.Series:
-    """MinHash signatures of a batch of JVM-lowered texts: the distinct
-    ``shingle_n``-grams of ``_gram_slices`` (NULL text → the one NULL gram
-    of ``shingle_expr``), their cached per-gram hashes, per-component mins.
+    """MinHash signatures of a batch of JVM-lowered texts by array
+    operations over the batch's gram positions (``_gram_windows``): only
+    the batch's distinct grams are looked up in the gram cache, and hashed
+    when new, in Python; each text's minima are ``reduceat``s over its
+    positions. NULL text → the one NULL gram of ``shingle_expr``.
 
     - md5: component i = min over grams of md5('i:'||gram) as lowercase hex
       — the lexicographic min of the hexdigests is the numeric (hi, lo)
-      min, so it is taken on the uint64 halves and formatted once;
+      min: hi by ``reduceat``, then lo over the positions holding that hi;
     - xxhash64: component i = min over grams of (aᵢ·h + bᵢ) mod P with
       h = pmod(xxhash64(gram), P).
 
     Both equal Spark's own md5 / xxhash64 / pmod / min over ``shingle_expr``
     grams bit for bit; the input must be lowered in the JVM so the case
     mapping stays the SQL oracles'."""
+    texts = lowered.tolist()
+    if not texts:
+        return pd.Series([], dtype=object)
+    lab, first, grams = _gram_windows(texts, shingle_n)
+
     key = (method, n_hashes)
     st = _GRAM_CACHE.get(key) or _GRAM_CACHE.setdefault(key, _fresh_gram_cache(method, n_hashes))
+    if st["n"] + len(grams) > _GRAM_CACHE_MAX:
+        st = _GRAM_CACHE[key] = _fresh_gram_cache(method, n_hashes)
+    idx = st["idx"]
+    rows = np.fromiter(map(idx.get, grams, repeat(-1)), dtype=np.int64, count=len(grams))
+    miss = np.flatnonzero(rows < 0)
+    if len(miss):
+        new = [grams[i] for i in miss.tolist()]
+        r0, r1 = st["n"], st["n"] + len(new)
+        while len(st["mat"]) < r1:
+            st["mat"] = np.concatenate([st["mat"], np.empty_like(st["mat"])])
+        if method == "md5":
+            prefixes = [f"{i}:".encode() for i in range(n_hashes)]
+            digests = b"".join(hashlib.md5(p + g.encode("utf-8")).digest() for g in new for p in prefixes)
+            st["mat"][r0:r1] = np.frombuffer(digests, dtype=">u8").reshape(-1, n_hashes, 2)
+        else:
+            st["mat"][r0:r1] = [(_XXH_SEED if g is None else _xxh64(g.encode("utf-8"))) % MERSENNE_P for g in new]
+        idx.update(zip(new, range(r0, r1)))
+        st["n"] = r1
+        rows[miss] = np.arange(r0, r1)
+
+    m = st["mat"][rows]
     if method == "md5":
-        prefixes = [f"{i}:".encode() for i in range(n_hashes)]
         maxu = np.uint64(0xFFFFFFFFFFFFFFFF)
-
-        def gram_row(g):
-            gb = g.encode("utf-8")
-            digests = b"".join(hashlib.md5(p + gb).digest() for p in prefixes)
-            return np.frombuffer(digests, dtype=">u8").reshape(n_hashes, 2)
-
-        def signature(m):
-            hi, lo = m[:, :, 0], m[:, :, 1]
-            hi_min = hi.min(0)
-            lo_min = np.where(hi == hi_min, lo, maxu).min(0)
-            return [f"{h:016x}{l:016x}" for h, l in zip(hi_min.tolist(), lo_min.tolist())]
-
+        npos = np.diff(first, append=len(lab))
+        hi_min = np.empty((len(texts), n_hashes), dtype=np.uint64)
+        lo_min = np.empty_like(hi_min)
+        for i in range(n_hashes):
+            hi = m[:, i, 0][lab]
+            hi_min[:, i] = np.minimum.reduceat(hi, first)
+            lo = np.where(hi == np.repeat(hi_min[:, i], npos), m[:, i, 1][lab], maxu)
+            lo_min[:, i] = np.minimum.reduceat(lo, first)
+        out = [[f"{h:016x}{l:016x}" for h, l in zip(hr, lr)] for hr, lr in zip(hi_min.tolist(), lo_min.tolist())]
     else:
-        mult = np.array([2 * i + 1 for i in range(n_hashes)], dtype=np.int64)
-        add = np.array(
-            [(1442695040888963407 + i * 6364136223846793005) % MERSENNE_P for i in range(n_hashes)],
-            dtype=np.int64,
-        )
-
-        def gram_row(g):
-            return (_XXH_SEED if g is None else _xxh64(g.encode("utf-8"))) % MERSENNE_P
-
-        def signature(h):
-            return ((h[:, None] * mult + add) % MERSENNE_P).min(0).tolist()
-
-    out = []
-    for t in lowered:
-        grams = {None} if t is None else set(_gram_slices(t, shingle_n))
-        if st["n"] + len(grams) > _GRAM_CACHE_MAX:
-            st = _GRAM_CACHE[key] = _fresh_gram_cache(method, n_hashes)
-        idx = st["idx"]
-        rows = []
-        for g in grams:
-            r = idx.get(g)
-            if r is None:
-                r = st["n"]
-                if r == len(st["mat"]):
-                    st["mat"] = np.concatenate([st["mat"], np.empty_like(st["mat"])])
-                st["mat"][r] = gram_row(g)
-                idx[g] = r
-                st["n"] = r + 1
-            rows.append(r)
-        out.append(signature(st["mat"][rows]))
+        sig = np.empty((len(texts), n_hashes), dtype=np.int64)
+        for i in range(n_hashes):
+            a_i, b_i = 2 * i + 1, (1442695040888963407 + i * 6364136223846793005) % MERSENNE_P
+            v = m * a_i + b_i
+            v -= v // MERSENNE_P * MERSENNE_P  # v % P (v ≥ 0): numpy divides by a scalar faster than it takes %
+            sig[:, i] = np.minimum.reduceat(v[lab], first)
+        out = sig.tolist()
     return pd.Series(out, dtype=object)
 
 
@@ -298,6 +341,8 @@ def _sign_rows(
     unique per row."""
     if method not in ("xxhash64", "md5"):
         raise ValueError(f"method must be 'xxhash64' or 'md5', got {method!r}")
+    if shingle_n < 1:  # a NULL text's window is n sentinels, so n=0 would merge it with ""
+        raise ValueError(f"shingle_n must be at least 1, got {shingle_n}")
 
     @F.pandas_udf("array<string>" if method == "md5" else "array<bigint>")
     def sig(lowered: pd.Series) -> pd.Series:

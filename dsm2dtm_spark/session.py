@@ -21,7 +21,11 @@ from pyspark.sql import SparkSession
 
 import dsm2dtm_spark
 
-ARROW_BATCH_ROWS = 64  # the docs signer's Arrow UDFs batch by this
+# the docs signer's Arrow UDFs batch by this; it also bounds the signer's
+# per-batch gram-position arrays (signing a docs ingest's 1,585 fresh rows
+# as one batch ran about 2x faster serially, but took the ingest's peak
+# worker RSS from 116 to 156 MB, 4 cores)
+ARROW_BATCH_ROWS = 64
 ARROW_BATCH_BYTES = 2 << 20  # encoded image bytes per python-worker batch
 
 
