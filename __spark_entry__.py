@@ -829,19 +829,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["docs_incremental_dedup"] = docs_incremental_dedup
 
     def docs_incremental_dedup_bucketed(spark, sf):
-        # the SAME scenario, but the committed state lives in a real
-        # hive-bucketed BucketedSignatureStore (EXTERNAL tables under a
-        # temp root, signatures bucketed by fingerprint, bands by
-        # (band, bucket)) and the batch dedups via the shuffle path
-        # (broadcast_fresh=False) — the layout those bucket files serve
-        # with zero stored-side Exchange. Same oracle as
-        # docs_incremental_dedup: the driver certifies the bucketed
-        # layout computes the identical decisions.
+        # the name stays for the frozen query registry; the hive-bucketed
+        # store layout it once exercised is gone. The SAME scenario as
+        # docs_incremental_dedup, but the committed state is a persisted
+        # SignatureStore (snapshot tables under a temp root) that the
+        # store-backed step the ingest job runs bootstraps; the batch then
+        # dedups through that step without committing, on the shuffle path
+        # (batch ≈ corpus). Same oracle as docs_incremental_dedup.
         import hashlib
         import shutil
         import tempfile
 
-        from dsm2dtm_spark.operators.incremental import BucketedSignatureStore, incremental_dedup
+        from dsm2dtm_spark.operators.incremental import SignatureStore, incremental_dedup
 
         # same one-shuffle checkpoint as docs_incremental_dedup (r7): the
         # store append and the fresh-side dedup otherwise each re-run the
@@ -861,17 +860,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the previous call's store, capping the leak at one store per sf dir
         root = os.path.join(
             tempfile.gettempdir(),
-            f"q_bstore_{hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]}",
+            f"q_sigstore_{hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]}",
         )
         shutil.rmtree(root, ignore_errors=True)
-        store = BucketedSignatureStore(root, n_buckets=16)
-        spark.sql(f"DROP TABLE IF EXISTS {store.sig_table}")
-        spark.sql(f"DROP TABLE IF EXISTS {store.bands_table}")
-        # bootstrap with the corpus, then dedup the batch through the same
-        # store-backed step the ingest job runs (the layout resolves the
-        # shuffle path) without committing it
+        store = SignatureStore(root)
         incremental_dedup(store, corpus, method="md5")
-        decisions = incremental_dedup(store, fresh, method="md5", threshold=0.75, commit=False)
+        decisions = incremental_dedup(
+            store, fresh, method="md5", threshold=0.75, commit=False, broadcast_fresh=False
+        )
         return decisions.select("doc_id", "verdict")
 
     q["docs_incremental_dedup_bucketed"] = docs_incremental_dedup_bucketed
@@ -1749,8 +1745,8 @@ def oracle_sql() -> dict[str, str]:
         WHERE doc_id NOT IN (SELECT doc_id FROM near)
     """
 
-    # the bucketed-store twin computes the identical decisions — one SQL
-    # replay certifies both physical layouts
+    # the persisted-store twin computes the identical decisions — one SQL
+    # replay certifies both the in-memory and the persisted store state
     o["docs_incremental_dedup_bucketed"] = o["docs_incremental_dedup"]
 
     o["docs_decontam"] = """

@@ -55,47 +55,15 @@ def shingle_expr(text_col: str, n: int = 3):
 
 
 def _gram_slices(t: str, n: int):
-    """The ONE copy of the python-side gram construction the Arrow twins
-    share (shingle_grams_udf, jaccard_counts_udf): codepoint slices
-    ``t[i:i+n]`` over ``max(len(t)-n+1, 1)`` positions — exactly
-    ``substring(t, i+1, n)`` over ``greatest(length(t)-(n-1), 1)`` incl.
-    the short-text clamp. Keeping it shared is load-bearing: the rounded
-    Jaccard oracles rely on the UDFs agreeing bit-for-bit with shingle_expr,
-    so the clamp/slicing must never drift. The MinHash signer builds the
-    same positions with array operations (``_sign_batch``); the signer's
-    property test, whose reference loop slices with this function, keeps
-    the two in step."""
+    """The python-side gram construction of ``jaccard_counts_udf``:
+    codepoint slices ``t[i:i+n]`` over ``max(len(t)-n+1, 1)`` positions —
+    exactly ``substring(t, i+1, n)`` over ``greatest(length(t)-(n-1), 1)``
+    incl. the short-text clamp. The rounded Jaccard oracles rely on the UDF
+    agreeing bit-for-bit with shingle_expr, so the clamp/slicing must never
+    drift. The MinHash signer builds the same positions with array
+    operations (``_sign_batch``); the signer's property test, whose
+    reference loop slices with this function, keeps the two in step."""
     return (t[i : i + n] for i in range(max(len(t) - n + 1, 1)))
-
-
-def shingle_grams_udf(n: int = 3):
-    """Arrow-batched twin of ``shingle_expr`` over JVM-LOWERED text (pass it
-    ``F.lower(col)`` — the unicode case mapping must stay the JVM's, exactly
-    like the md5 MinHash signer). Value-identical by construction:
-
-    - Python ``t[i:i+n]`` slices codepoints exactly like ``substring(t, i+1,
-      n)`` (both clamp at the end; Spark strings index by codepoint);
-    - the gram count is ``max(len(t) - n + 1, 1)`` — the expression's
-      ``greatest(length(t) - (n-1), 1)``, so sub-``n``-length docs yield the
-      single clamped partial gram ("" for empty text) exactly as before;
-    - ``dict.fromkeys`` keeps first-occurrence order == ``array_distinct``;
-    - NULL text → ``[None]`` (the expression's ``substring(NULL,...)`` path).
-
-    Why: the expression form is an interpreted higher-order-function chain
-    (no codegen) measured at 1.8 s per 50k-doc pass at sf1 — the dominant
-    cost of every consecutive-pair query (r7, guide §4.2)."""
-
-    @F.pandas_udf("array<string>")
-    def grams(lowered: pd.Series) -> pd.Series:
-        out = []
-        for t in lowered:
-            if t is None:
-                out.append([None])
-                continue
-            out.append(list(dict.fromkeys(_gram_slices(t, n))))
-        return pd.Series(out, dtype=object)
-
-    return grams
 
 
 def jaccard_counts_udf(n: int = 3):
@@ -105,8 +73,9 @@ def jaccard_counts_udf(n: int = 3):
 
         size(array_intersect(sh(l), sh(r))), size(array_union(sh(l), sh(r)))
 
-    with ``sh = shingle_grams_udf(n)``: the gram construction is the same
-    codepoint slicing + short-text clamp, set cardinality == the sizes of
+    with ``sh = shingle_expr(·, n)`` (which lowers in the JVM itself): the
+    gram construction is the same codepoint slicing + short-text clamp
+    (``_gram_slices``), set cardinality == the sizes of
     ``array_distinct``-based intersect/union (Spark treats NULL elements as
     equal, mirrored by ``None`` membership in Python sets), and the division
     + ``round`` stay in the JVM — so the rounded Jaccard is bit-identical

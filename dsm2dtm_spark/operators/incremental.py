@@ -17,6 +17,12 @@ tables (sources.manifest), and each fresh batch joins against them:
 3. commit — survivors' signatures/bands append to the store, so the next
    batch dedups against corpus + this batch (associative by construction).
 
+The store has one layout, ``SignatureStore``'s snapshot tables, and
+``dedup_against`` two join paths: broadcast probes that stream the store
+and build on batch-bounded sides (every ingest), and shuffle joins for a
+batch about as big as the store (``broadcast_fresh=False``), which re-band
+every stored signature and so cost O(corpus) per call.
+
 Signatures come in two flavors, signed by the one MinHash signer of
 ``dedup.minhash_signatures`` (an Arrow UDF with a per-worker gram cache)
 and banded by the one ``dedup.band_buckets`` expression; ``method`` picks
@@ -86,11 +92,9 @@ class SignatureStore:
     ['bucket'])``) so the band table's footer min/max make the candidate
     join's scan prunable.
 
-    This class owns the layout-independent half of a store — the params
-    check, the append sequence and the hot-bucket census — and the plain
-    snapshot layout. ``BucketedSignatureStore`` overrides only the layout:
-    manifest, table registration, table writes, reads, row counts and
-    ``compact``.
+    A root holding a ``store.json`` manifest was written by the hive-
+    bucketed layout of older builds; it is refused rather than opened as an
+    empty store over the committed state.
 
     ``bucket_cap``: configuring the flood cap ON THE STORE moves the
     hot-bucket census to the write path (VERDICT r4 #5): each append
@@ -107,13 +111,18 @@ class SignatureStore:
     # pathological (the cap is meant to catch a few flood buckets) — the
     # reader then falls back to the census rather than bloating metadata
     MAX_HOT_LIST = 50_000
-    # the dedup_against join strategy this layout is built for (resolved by
-    # the store-aware wrappers when the caller passes broadcast_fresh=None)
-    BROADCAST_FRESH_DEFAULT = True
 
     def __init__(self, root: str, bucket_cap: int | None = None):
+        if os.path.exists(os.path.join(root, "store.json")):
+            raise ValueError(
+                f"{root} holds a store.json manifest: its signatures are in the "
+                "hive-bucketed layout of older builds, which is no longer supported. "
+                "Re-sign into a fresh store root: the first ingest's repair_store "
+                "re-signs the whole corpus into an empty store."
+            )
         self.root = root
-        self._open_layout()
+        self.signatures = SnapshotTable(f"{root}/signatures")
+        self.bands = SnapshotTable(f"{root}/bands")
         self.bucket_stats = SnapshotTable(f"{root}/bucket_stats")
         persisted = self._persisted_cap()
         if bucket_cap is not None and persisted is not None and bucket_cap != persisted:
@@ -131,18 +140,7 @@ class SignatureStore:
             self.bucket_cap is not None and persisted is None and not self.is_empty()
         )
 
-    # ------------------------------------------------ layout: snapshot tables
-
-    def _open_layout(self) -> None:
-        if os.path.exists(os.path.join(self.root, "store.json")):
-            raise ValueError(
-                f"{self.root} holds a BucketedSignatureStore (store.json manifest); "
-                "opening it as a plain SignatureStore would silently ignore the "
-                "committed state and re-bootstrap — reopen with "
-                "BucketedSignatureStore (jobs: --bucketed-store)."
-            )
-        self.signatures = SnapshotTable(f"{self.root}/signatures")
-        self.bands = SnapshotTable(f"{self.root}/bands")
+    # ------------------------------------------------ snapshot tables
 
     def _write(self, kind: str, df: DataFrame, summary: dict | None) -> list[str]:
         """Commit ``df`` to the ``kind`` sub-table ('signatures' or 'bands');
@@ -196,7 +194,7 @@ class SignatureStore:
             "bucket_stats": n_stats,
         }
 
-    # ------------------------------------------------ layout-independent
+    # ------------------------------------------------ params and appends
 
     def check_params(self, n_hashes: int, bands: int, shingle_n: int, method: str) -> None:
         """Fail fast when a batch's signature parameters differ from the
@@ -361,7 +359,7 @@ class SignatureStore:
         """Fold per-append census partials into one row per (band, bucket),
         carrying the cap/hot-list summary keys — the append-time probe then
         reads pre-summed rows. Returns the pre-rollup file count (0 = no-op).
-        Shared by both store layouts' compact()."""
+        Called by ``compact``."""
         snap = self.bucket_stats.current_snapshot()
         if snap is None or len(snap.files) <= 1:
             return 0
@@ -373,395 +371,6 @@ class SignatureStore:
         }
         self.bucket_stats.write_dataframe(rolled, operation="rollup", summary=carried)
         return len(snap.files)
-
-
-class BucketedSignatureStore(SignatureStore):
-    """SignatureStore layout whose sub-tables are hive-BUCKETED EXTERNAL
-    tables — ``signatures`` bucketed+sorted by ``fingerprint``, ``bands`` by
-    ``(band, bucket)`` (VERDICT r4 #4). The bucket files ARE the shuffle,
-    paid once at write: every per-batch join against the store reads the
-    stored side with ZERO Exchange — only the fresh batch shuffles (to
-    n_buckets partitions).
-
-    Use this (with ``dedup_against(broadcast_fresh=False)``) when batches
-    are too big to broadcast; the default SignatureStore + broadcast probes
-    cover the common small-batch-vs-huge-store case. Only the layout
-    differs: the params check, the append sequence, the hot list and the
-    ``bucket_stats`` census are the base class's.
-
-    Storage is self-contained under ``root``: parquet bucket files in
-    versioned subdirectories (``signatures_v0`` …, bumped by ``compact``)
-    plus a small fixed-size JSON manifest (column DDL + bucket spec for
-    catalog re-registration, sig_params, and the cumulative row count — the
-    repair high-watermark) updated atomically AFTER each table write. The
-    session catalog is only a cache: any new Spark session (a later
-    spark-submit run) re-registers the tables from the manifest DDL on
-    first touch, and the bucketed-read property survives because it lives
-    in the catalog entry the manifest recreates. Single-writer, like every
-    snapshot table here. Crash points: between a table write and its
-    manifest update ⇒ the row count is stale-low, which only makes the next
-    repair run its anti-join (conservative); mid-compact ⇒ the manifest
-    still points at the old version and the half-written new version
-    directory is swept by the next compact."""
-
-    # the bucket files serve shuffle joins exchange-free; broadcast probes
-    # would waste the layout
-    BROADCAST_FRESH_DEFAULT = False
-    _BUCKET_COLS = {"signatures": ["fingerprint"], "bands": ["band", "bucket"]}
-
-    def __init__(self, root: str, bucket_cap: int | None = None, n_buckets: int = 16):
-        self.n_buckets = n_buckets
-        super().__init__(root, bucket_cap)
-
-    def _open_layout(self) -> None:
-        import hashlib
-
-        # key on a COMMITTED marker (meta/CURRENT), not the bare directory:
-        # merely opening a root with the plain class scaffolds empty
-        # signatures/meta dirs, and that must not brick the root for the
-        # bucketed layout (r5 review finding)
-        if os.path.exists(
-            os.path.join(self.root, "signatures", "meta", "CURRENT")
-        ) and not os.path.exists(self._meta_path()):
-            raise ValueError(
-                f"{self.root} holds a plain SignatureStore (snapshot sub-tables); "
-                "opening it as a BucketedSignatureStore would silently ignore "
-                "the committed state and re-bootstrap — reopen with "
-                "SignatureStore (jobs: drop --bucketed-store)."
-            )
-        os.makedirs(self.root, exist_ok=True)
-        digest = hashlib.md5(os.path.abspath(self.root).encode()).hexdigest()[:10]
-        self.sig_table = f"sigstore_{digest}_signatures"
-        self.bands_table = f"sigstore_{digest}_bands"
-        # the layout is fixed at creation: the manifest's count wins
-        self.n_buckets = self._meta().get("n_buckets") or self.n_buckets
-
-    # --------------------------------------------------------- manifest
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.root, "store.json")
-
-    def _meta(self) -> dict:
-        import json
-
-        try:
-            with open(self._meta_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
-
-    def _write_meta(self, meta: dict) -> None:
-        import json
-        import uuid
-
-        tmp = os.path.join(self.root, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(tmp, self._meta_path())
-
-    # --------------------------------------------------------- layout
-
-    def is_empty(self) -> bool:
-        return not self._meta().get("rows")
-
-    def params(self) -> dict:
-        return self._meta().get("sig_params", {})
-
-    def _table_name(self, kind: str) -> str:
-        return self.sig_table if kind == "signatures" else self.bands_table
-
-    def _location(self, kind: str, version: int) -> str:
-        return os.path.join(os.path.abspath(self.root), f"{kind}_v{version}")
-
-    def _register(self, spark, kind: str, entry: dict) -> None:
-        cols = self._BUCKET_COLS[kind]
-        clustered = ", ".join(cols)
-        spark.sql(
-            f"CREATE TABLE {self._table_name(kind)} ({entry['ddl']}) USING PARQUET "
-            f"CLUSTERED BY ({clustered}) SORTED BY ({clustered}) "
-            f"INTO {self.n_buckets} BUCKETS "
-            f"LOCATION '{self._location(kind, entry['version'])}'"
-        )
-
-    def _ensure_registered(self, spark) -> None:
-        """Recreate the catalog entries from the manifest DDL when this
-        session hasn't seen the store yet (the in-memory catalog does not
-        survive spark-submit runs; the manifest is the source of truth),
-        and DROP this session's cached file listing for them: an append or
-        compact through a DIFFERENT session sharing the catalog refreshes
-        only the writer's cache, and a stale InMemoryFileIndex here
-        silently hides the new bucket files from every join (wrong
-        results). The invalidation is metadata-only; the next scan re-lists
-        once."""
-        meta = self._meta()
-        # a re-bucketing compact in ANOTHER session changed the bucket spec;
-        # registering with this session's stale count would mis-assign every
-        # row to buckets at read time (wrong pruning, wrong join alignment)
-        if meta.get("n_buckets"):
-            self.n_buckets = meta["n_buckets"]
-        for kind, entry in meta.get("tables", {}).items():
-            name = self._table_name(kind)
-            if not spark.catalog.tableExists(name):
-                self._register(spark, kind, entry)
-                continue
-            # a compact in ANOTHER session bumps the versioned location and
-            # deletes the old directory; a catalog entry still pointing at
-            # it must be re-registered, not just refreshed
-            registered = (
-                spark.sql(f"DESCRIBE FORMATTED {name}")
-                .filter("col_name = 'Location'")
-                .collect()[0]
-                .data_type
-            )
-            expected = self._location(kind, entry["version"])
-            if os.path.abspath(registered.removeprefix("file:")) != expected:
-                spark.sql(f"DROP TABLE {name}")
-                self._register(spark, kind, entry)
-            else:
-                spark.catalog.refreshTable(name)
-
-    def _write(self, kind: str, df: DataFrame, summary: dict | None) -> list[str]:
-        """Append ``df`` to the ``kind`` bucket table (creating it as an
-        EXTERNAL table on first write), then commit the manifest: the
-        signatures write moves the row watermark — by the new files' footer
-        row counts, never a re-run of ``df`` — and records sig_params.
-        Returns the paths of the bucket files this write added. A write of
-        zero rows leaves the manifest as it was and returns []."""
-        import glob
-
-        import pyarrow.parquet as pq
-
-        self._ensure_registered(df.sparkSession)
-        meta = self._meta()
-        tables = meta.setdefault("tables", {})
-        cols = self._BUCKET_COLS[kind]
-        writer = df.write.bucketBy(self.n_buckets, *cols).sortBy(*cols).format("parquet")
-        if kind in tables:
-            loc = self._location(kind, tables[kind]["version"])
-            before = set(glob.glob(os.path.join(loc, "*.parquet")))
-            writer.mode("append").saveAsTable(self._table_name(kind))
-        else:
-            # path option ⇒ EXTERNAL table: data under the store root,
-            # catalog entry recreatable from the manifest in any session
-            loc, before = self._location(kind, 0), set()
-            writer.mode("overwrite").option("path", loc).saveAsTable(self._table_name(kind))
-        written = sorted(set(glob.glob(os.path.join(loc, "*.parquet"))) - before)
-        rows = sum(pq.read_metadata(f).num_rows for f in written)
-        if rows == 0:
-            return []
-        tables.setdefault(kind, {
-            "version": 0,
-            "ddl": ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields),
-        })
-        if kind == "signatures":
-            meta["rows"] = meta.get("rows", 0) + rows
-            if summary and summary.get("sig_params"):
-                meta["sig_params"] = summary["sig_params"]
-        meta["n_buckets"] = self.n_buckets
-        # older manifests carry an unread per-append summary log, re-parsed
-        # by every _meta() call; drop it so the manifest stays fixed-size
-        meta.pop("summaries", None)
-        self._write_meta(meta)
-        return written
-
-    def read_signatures(self, spark) -> DataFrame:
-        self._ensure_registered(spark)
-        return spark.table(self.sig_table)
-
-    def read_bands(self, spark) -> DataFrame:
-        self._ensure_registered(spark)
-        return spark.table(self.bands_table)
-
-    def signature_row_count(self) -> int | None:
-        return self._meta().get("rows") or None
-
-    def _footer_rows(self, kind: str) -> int | None:
-        """Summed parquet-footer num_rows over a sub-table's CURRENT version
-        directory — zero data pages read, O(#files) metadata."""
-        import glob
-
-        import pyarrow.parquet as pq
-
-        entry = self._meta().get("tables", {}).get(kind)
-        if entry is None:
-            return None
-        loc = self._location(kind, entry["version"])
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(os.path.join(loc, "*.parquet"))
-        )
-
-    def band_row_count(self) -> int | None:
-        """Footer-metadata row count of the band table (summed num_rows over
-        the current version directory — zero data pages read)."""
-        return self._footer_rows("bands")
-
-    def sync_row_watermark(self, spark) -> int:
-        """Correct a stale-low manifest row count — the crash window between
-        the table appends and the manifest write — from the signature
-        table's parquet-footer num_rows sum (O(#files) metadata, no Spark
-        scan — a full table count here would make the repair heal far more
-        expensive than advertised on a huge store; ADVICE r5), so the repair
-        high-watermark happy path comes back instead of anti-joining
-        forever. Called by ``repair_store`` when a count mismatch turned up
-        nothing missing. Falls back to a Spark count only if a footer is
-        unreadable."""
-        meta = self._meta()
-        if "signatures" not in meta.get("tables", {}):
-            return 0
-        try:
-            n = self._footer_rows("signatures")
-        except Exception:  # noqa: BLE001 — footers are an optimization only
-            n = self.read_signatures(spark).count()
-        if n and meta.get("rows") != n:
-            meta["rows"] = n
-            self._write_meta(meta)
-        return n or 0
-
-    # bucket id is encoded in the bucket-file name Spark writes:
-    # part-<split>-<uuid>_<bucket:05d>.c<n>.snappy.parquet
-    _BUCKET_FILE_RE = r"_(\d{5})\.c\d{3}"
-
-    @staticmethod
-    def _bucket_id_expr(cols: list[str], n_buckets: int):
-        """The bucket-id expression Spark's bucketed writer uses:
-        pmod(Murmur3Hash(cols, seed=42), n) — SQL ``hash()`` is the same
-        Murmur3 (pinned empirically against written bucket-file names in
-        tests/test_bucketed_store.py). Documentation of the layout only:
-        compaction groups files by NAME and rewrites by VALUE, so its
-        correctness never rides on this equivalence."""
-        return F.expr(f"pmod(hash({', '.join(cols)}), {n_buckets})")
-
-    def _files_by_bucket(self, kind: str, version: int) -> dict[int, list[str]]:
-        import re
-
-        loc = self._location(kind, version)
-        out: dict[int, list[str]] = {}
-        for f in os.listdir(loc):
-            m = re.search(self._BUCKET_FILE_RE, f)
-            if m and f.endswith(".parquet"):
-                out.setdefault(int(m.group(1)), []).append(f)
-        return out
-
-    def compact(
-        self,
-        spark,
-        n_buckets: int | None = None,
-        max_files_per_bucket: int = 1,
-        **kwargs,
-    ) -> dict:
-        """Fold per-append bucket-file pileup — INCREMENTALLY by default
-        (VERDICT r5 #3): only buckets holding more than
-        ``max_files_per_bucket`` files are rewritten (folded to one sorted
-        file each); every other bucket's files are hard-linked unchanged
-        into the next versioned location, so steady-state maintenance cost
-        is proportional to the buckets recent appends actually touched,
-        not to the table. The catalog entry and manifest pointer swap
-        atomically per sub-table; old version directories (and any
-        half-written orphans from a crashed compact) are swept after the
-        manifest commit (links keep survivor bytes alive). Restores the
-        sorted-within-bucket property that lets the bucketed SMJ skip its
-        per-partition Sort. Census partials roll up like the parent
-        store's. A sub-table with no over-threshold bucket is untouched.
-
-        ``n_buckets`` — bucket-count EVOLUTION (VERDICT r5 #2): rewrite
-        BOTH sub-tables into a new bucket spec (necessarily a full rewrite:
-        every row can change buckets) and record it in the manifest, which
-        every later session's registration honors. A store bootstrapped at
-        16 buckets that grew to 10^12 rows would otherwise cap every
-        stored-side scan at 16 tasks forever — re-bucket instead of
-        rebuilding. The exchange-free join property survives both paths
-        (it rides on the catalog bucket spec, re-verified by plan tests);
-        only dormant appends pay anything, and nothing is re-shingled."""
-        import glob
-        import shutil
-
-        self._ensure_registered(spark)
-        out: dict = {}
-        meta = self._meta()
-        if not meta.get("tables"):
-            # empty store (or a mistyped --store path): a maintenance pass
-            # must be a no-op — writing an empty manifest here would
-            # permanently mark the root as bucketed-layout
-            return {"signatures": 0, "bands": 0}
-        rebucket = n_buckets is not None and n_buckets != self.n_buckets
-        target = n_buckets if rebucket else self.n_buckets
-        for kind, cols in self._BUCKET_COLS.items():
-            name = self._table_name(kind)
-            entry = meta.get("tables", {}).get(kind)
-            if entry is None or not spark.catalog.tableExists(name):
-                out[kind] = 0
-                continue
-            by_bucket = self._files_by_bucket(kind, entry["version"])
-            if rebucket:
-                hot = set(by_bucket)  # every row can move: rewrite all
-            else:
-                hot = {b for b, fs in by_bucket.items() if len(fs) > max_files_per_bucket}
-                if not hot:
-                    out[kind] = 0
-                    continue
-            new_version = entry["version"] + 1
-            new_loc = self._location(kind, new_version)
-            shutil.rmtree(new_loc, ignore_errors=True)  # crashed-compact orphan
-            tmp = f"{name}__rewrite"
-            spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-            old_loc = self._location(kind, entry["version"])
-            if rebucket:
-                src = spark.table(name)  # every row can change buckets
-            else:
-                # hot buckets only, READ BY EXPLICIT FILE PATH: IO is
-                # proportional to the piled-up bytes, never the table —
-                # and a path read claims no output partitioning, so the
-                # aligning repartition below is a real Exchange (a
-                # catalog-table read advertises the bucket spec, which
-                # makes Catalyst ELIDE the repartition while separately
-                # auto-disabling the bucketed scan — misaligned tasks,
-                # two files per bucket; found empirically)
-                src = spark.read.parquet(
-                    *[os.path.join(old_loc, f) for b in sorted(hot) for f in by_bucket[b]]
-                )
-            (
-                src.repartition(target, *[F.col(c) for c in cols])
-                .write.mode("overwrite")
-                .option("path", new_loc)
-                .bucketBy(target, *cols)
-                .sortBy(*cols)
-                .format("parquet")
-                .saveAsTable(tmp)
-            )
-            linked = 0
-            for b, fs in by_bucket.items():
-                if b in hot:
-                    continue
-                for f in fs:  # cold buckets: link bytes, never rewrite
-                    try:
-                        os.link(os.path.join(old_loc, f), os.path.join(new_loc, f))
-                    except OSError:  # cross-device fs: fall back to copy
-                        shutil.copy2(os.path.join(old_loc, f), os.path.join(new_loc, f))
-                    linked += 1
-            spark.sql(f"DROP TABLE {name}")  # external: catalog entry only
-            spark.sql(f"ALTER TABLE {tmp} RENAME TO {name}")  # keeps new_loc
-            if linked:
-                # the table's cached file index predates the linked files
-                spark.catalog.refreshTable(name)
-            entry["version"] = new_version
-            out[kind] = 1
-            out[f"{kind}_buckets_rewritten"] = len(hot)
-            out[f"{kind}_files_linked"] = linked
-        if rebucket:
-            meta["n_buckets"] = target
-            self.n_buckets = target
-        self._write_meta(meta)
-        # sweep every version directory the manifest no longer references
-        for kind, entry in meta.get("tables", {}).items():
-            current = self._location(kind, entry["version"])
-            for d in glob.glob(self._location(kind, 0)[:-1] + "*"):
-                if d != current:
-                    shutil.rmtree(d, ignore_errors=True)
-        n_stats = self._rollup_census(spark)
-        if n_stats:
-            out["bucket_stats"] = n_stats
-        return out
 
 
 def _matched_fingerprints(stored_signatures: DataFrame, fresh_fp: DataFrame) -> DataFrame:
@@ -826,13 +435,12 @@ def dedup_against(
 
     The corpus TEXT is never read and never re-shingled; only the fresh
     batch is signed, so cost is O(batch + collisions), never O(corpus).
-    ``broadcast_fresh=False`` keeps plain shuffle joins for batches too big
-    to broadcast — pair it with a fingerprint-bucketed store
-    (``BucketedSignatureStore``) so the stored side still reads shuffle-free.
 
-    ``broadcast_fresh`` must be a real bool here — ``dedup_against`` has no
-    store object to resolve a layout default from; the store-aware wrappers
-    (``incremental_dedup``/``ingest_batch``) resolve ``None`` before calling.
+    ``broadcast_fresh=False`` plans shuffle joins instead, for a batch about
+    as big as the store (the symmetric contract queries): the candidates
+    come from re-banding the stored signatures (``stored_bands`` feeds only
+    the flood-cap census) and shuffling them against the fresh bands, so
+    every call costs O(corpus) — never the ingest path.
 
     ``bucket_cap`` drops stored buckets larger than the cap from candidate
     generation (broadcast anti-join) — the boilerplate-flood guard, same
@@ -845,12 +453,6 @@ def dedup_against(
     its input and runs every exchange and broadcast stage below it then
     (only its own final stage waits for the first consumer). The lazy
     checkpoints here still run each subtree once for all its consumers."""
-    if broadcast_fresh is None:
-        raise TypeError(
-            "dedup_against needs an explicit broadcast_fresh bool; the "
-            "store-aware wrappers (incremental_dedup/ingest_batch) resolve "
-            "None from the store layout before calling"
-        )
     # columns other than id and text ride along packed, so none can clash
     # with the per-row plan's own (fingerprint, signature, verdict)
     columns = fresh.columns
@@ -1021,7 +623,7 @@ def _dedup_step(
     shingle_n: int,
     method: str,
     bucket_cap: int | None,
-    broadcast_fresh: bool | None,
+    broadcast_fresh: bool,
 ) -> tuple[DataFrame, DataFrame, dict]:
     """Dedup ``fresh`` against ``store`` WITHOUT committing: returns
     ``(decisions, kept signatures)``, the pair ``dedup_against`` returns,
@@ -1048,7 +650,7 @@ def _dedup_step(
             shingle_n=shingle_n,
             method=method,
             bucket_cap=bucket_cap,
-            broadcast_fresh=store.BROADCAST_FRESH_DEFAULT if broadcast_fresh is None else broadcast_fresh,
+            broadcast_fresh=broadcast_fresh,
             hot_buckets=store.hot_buckets(spark, bucket_cap),
         )
     tally = Observation()
@@ -1069,7 +671,7 @@ def incremental_dedup(
     method: str = "xxhash64",
     bucket_cap: int | None = None,
     commit: bool = True,
-    broadcast_fresh: bool | None = None,
+    broadcast_fresh: bool = True,
 ) -> DataFrame:
     """End-to-end store-backed step: dedup ``fresh`` against the store,
     commit the kept rows' signatures (one atomic snapshot per table), return
@@ -1077,10 +679,9 @@ def incremental_dedup(
     verdict). An empty store registers the whole batch as 'keep'
     (bootstrap). NOTE: decisions are materialized before the commit.
 
-    ``broadcast_fresh=None`` (default) picks the join strategy the store's
-    layout is built for: broadcast probes for the plain SignatureStore,
-    shuffle joins (which its bucket files serve exchange-free) for
-    BucketedSignatureStore. Pass an explicit bool to override."""
+    ``broadcast_fresh`` picks ``dedup_against``'s join strategy: the
+    default broadcast probes stream the store, ``False`` shuffles it (see
+    ``dedup_against``)."""
     op = "bootstrap" if store.is_empty() else "incremental"
     decisions, keep_sigs, _ = _dedup_step(
         store, fresh, text_col=text_col, id_col=id_col, threshold=threshold, n_hashes=n_hashes,
@@ -1148,17 +749,12 @@ def repair_store(
             "op": "repair",
             "sig_params": {"n_hashes": n_hashes, "bands": bands, "shingle_n": 3, "method": method},
         })
-    elif hasattr(store, "sync_row_watermark") and not store.is_empty():
-        # count mismatch but nothing missing: the store's row watermark is
-        # stale-low (manifest-write crash window) — heal it here or every
-        # future repair runs this anti-join again
-        store.sync_row_watermark(spark)
     return n + _repair_bands(spark, store, bands=bands, id_col=id_col)
 
 
 def _repair_bands(spark, store, bands: int, id_col: str = "doc_id", n_sigs: int | None = None) -> int:
     """Bands-completeness half of ``repair_store``: signatures whose bands
-    commit crashed (wholly or — after a torn bucketed append — partially)
+    commit crashed (wholly or partially)
     get the missing band rows re-derived from the STORED signature arrays
     (no text, no shingling) and appended bands-only, de-duplicated per
     (id, band) so partially-banded documents heal without double rows.
@@ -1209,13 +805,12 @@ def ingest_batch(
     batch_id: str | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_fresh: bool | None = None,
 ):
     """One incremental-ingest step. Returns (survivors DataFrame or None,
     stage-count dict). ``corpus_table``/``store`` mutate only when there is
     something to commit; an already-ingested ``batch_id`` short-circuits.
-    ``broadcast_fresh`` defaults to the store layout's strategy (see
-    ``incremental_dedup``)."""
+    The batch always dedups by ``dedup_against``'s broadcast probes: its
+    shuffle path would cost O(corpus) per batch."""
     from dsm2dtm_spark.functions.text import quality_features
     from dsm2dtm_spark.operators.dedup import exact_dedup
     from dsm2dtm_spark.operators.decontam import decontaminate
@@ -1266,7 +861,7 @@ def ingest_batch(
     decisions, keep_sigs, tally = _dedup_step(
         store, kept, text_col=text_col, id_col=id_col, threshold=threshold, n_hashes=n_hashes,
         bands=bands, shingle_n=3, method=method, bucket_cap=bucket_cap,
-        broadcast_fresh=broadcast_fresh,
+        broadcast_fresh=True,
     )
     if eval_docs is not None:
         counts["after_decontam"] = sum(tally.values())

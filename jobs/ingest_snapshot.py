@@ -17,17 +17,13 @@ Per batch:
     spark-submit --py-files engine.zip jobs/ingest_snapshot.py \
         --input /path/to/fresh.parquet --corpus /path/to/corpus_table \
         --store /path/to/sigstore [--eval-set /path/to/eval.parquet] \
-        [--threshold 0.5] [--ngram 13] [--bucket-cap 20000] [--cores 32] \
-        [--bucketed-store]
+        [--threshold 0.5] [--ngram 13] [--bucket-cap 20000] [--cores 32]
 
-Store layout: the default SignatureStore + broadcast-fresh probes fits the
-common small-batch-vs-huge-store cadence (the store streams map-side, the
-batch broadcasts). ``--bucketed-store`` selects BucketedSignatureStore —
-hive-bucketed external tables + shuffle joins — for batches too big to
-broadcast; the stored side still reads with zero Exchange (the bucket
-files are the shuffle, paid once at append). The layout is fixed at store
-creation: reopening an existing store with the other flag fails fast (both
-classes detect the on-disk layout) rather than silently re-bootstrapping.
+Store: a SignatureStore (snapshot tables) probed by broadcasting the fresh
+batch, so the store streams map-side and no batch costs O(corpus). A
+``--store`` root left by the hive-bucketed layout of older builds (it holds
+a ``store.json``) is refused; point ``--store`` at a fresh root and the
+run's repair step re-signs the whole corpus into it.
 
 Exactly-once-ish semantics: a batch id (md5 of the resolved input path,
 row count, AND two order-independent content digests — bit_xor of
@@ -76,20 +72,12 @@ def main():
     ap.add_argument("--max-stopword-ratio", type=float, default=0.9)
     ap.add_argument("--method", choices=["xxhash64", "md5"], default="xxhash64")
     ap.add_argument("--bucket-cap", type=int, default=None)
-    ap.add_argument(
-        "--bucketed-store",
-        action="store_true",
-        help="hive-bucketed store layout (signatures by fingerprint, bands by "
-        "(band,bucket)) + shuffle joins instead of broadcast probes — for "
-        "batches too big to broadcast; the stored side still reads with zero "
-        "Exchange (the bucket files are the shuffle, paid once at write)",
-    )
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
 
     import os
 
-    from dsm2dtm_spark.operators.incremental import BucketedSignatureStore, SignatureStore
+    from dsm2dtm_spark.operators.incremental import SignatureStore
     from dsm2dtm_spark.session import get_spark
     from dsm2dtm_spark.sources import SnapshotTable
 
@@ -117,12 +105,11 @@ def main():
     batch_id = hashlib.md5(
         f"{os.path.abspath(args.input)}:{agg['n']}:{agg['xor']}:{agg['msum']}".encode()
     ).hexdigest()[:16]
-    store_cls = BucketedSignatureStore if args.bucketed_store else SignatureStore
     _, counts = ingest_batch(
         spark,
         fresh,
         SnapshotTable(args.corpus),
-        store_cls(args.store, bucket_cap=args.bucket_cap),
+        SignatureStore(args.store, bucket_cap=args.bucket_cap),
         eval_docs=eval_docs,
         threshold=args.threshold,
         ngram=args.ngram,

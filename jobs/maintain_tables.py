@@ -4,15 +4,13 @@ compaction/expiry pass every long-lived ingest loop needs.
 A year of daily `ingest_snapshot` batches leaves each snapshot table with
 hundreds of small files (every commit appends a few) and as many snapshot
 manifests; scan time degrades into footer-listing, and the dedup store's
-bucketed SMJ loses its sorted-within-bucket fast path. This job folds all
-of it in one sequential pass:
+band table loses the clustering that makes its footers prunable. This job
+folds all of it in one sequential pass:
 
     zip -qr engine.zip dsm2dtm_spark
     spark-submit --py-files engine.zip jobs/maintain_tables.py \
         [--table /path/to/snapshot_table]... [--sort-by cell_id] \
-        [--store /path/to/sigstore [--bucketed-store] \
-         [--repair-corpus /path/to/corpus_table] \
-         [--store-n-buckets 64] [--store-max-files-per-bucket 1]] \
+        [--store /path/to/sigstore [--repair-corpus /path/to/corpus_table]] \
         [--ann-store /path/to/annindex]... \
         [--small-file-mb 32] [--target-file-mb 128] \
         [--expire-keep-last 3] [--cores 32]
@@ -23,19 +21,11 @@ of it in one sequential pass:
   make `read(where=...)` file skipping sharp), then
   `expire_snapshots(keep_last)` — old manifests drop and unreferenced
   data files (crashed-write orphans included) are deleted;
-- `--store`: the matching store class's `compact()` — the plain store
-  folds its three sub-tables (bands clustered by bucket for sharp footer
-  min/max) and rolls up the hot-bucket census; the bucketed store
-  INCREMENTALLY folds only buckets whose per-append file pileup exceeds
-  `--store-max-files-per-bucket` into the next versioned location
-  (cold buckets hard-link across, unread and unwritten — restoring the
-  exchange-free SMJ's sort-free read at cost proportional to recent
-  appends, not the table), swaps the catalog entry + manifest pointer,
-  and sweeps old/orphan version directories; `--store-n-buckets N`
-  re-buckets BOTH sub-tables into a new bucket count (a deliberate full
-  rewrite — how a store bootstrapped small evolves its read parallelism
-  as it grows, instead of being rebuilt). Store layout is auto-guarded: opening with the
-  wrong flag fails fast rather than touching anything. `--repair-corpus`
+- `--store`: `SignatureStore.compact()` folds the store's sub-tables
+  (bands clustered by bucket for sharp footer min/max) and rolls up the
+  hot-bucket census; an empty or mistyped root commits nothing, and a root
+  left by the hive-bucketed layout of older builds is refused before
+  anything is touched. `--repair-corpus`
   additionally runs the store self-heal against that corpus table BEFORE
   compacting (footer watermarks; re-signs/re-bands only what a crashed
   ingest actually lost) using the signature parameters the store itself
@@ -61,21 +51,18 @@ def run_maintenance(
     spark,
     tables: list[str],
     store_root: str | None = None,
-    bucketed: bool = False,
     small_file_mb: int = 32,
     target_file_mb: int = 128,
     expire_keep_last: int = 3,
     sort_by: str | None = None,
     repair_corpus: str | None = None,
-    store_n_buckets: int | None = None,
-    store_max_files_per_bucket: int = 1,
     ann_stores: list[str] | None = None,
 ) -> dict:
     """Compact each snapshot table (then expire old snapshots) and the
     dedup store, sequentially. Returns the per-target count report the CLI
     prints. ``expire_keep_last=0`` disables expiry — keep > 1 normally so
     readers pinned to the pre-compaction snapshot keep working."""
-    from dsm2dtm_spark.operators.incremental import BucketedSignatureStore, SignatureStore
+    from dsm2dtm_spark.operators.incremental import SignatureStore
     from dsm2dtm_spark.sources import SnapshotTable
 
     report: dict = {"tables": {}, "store": None}
@@ -93,8 +80,7 @@ def run_maintenance(
             "expired_files": len(expired),
         }
     if store_root:
-        store_cls = BucketedSignatureStore if bucketed else SignatureStore
-        store = store_cls(store_root)
+        store = SignatureStore(store_root)
         if repair_corpus:
             from dsm2dtm_spark.operators.incremental import repair_store
 
@@ -107,18 +93,11 @@ def run_maintenance(
                 bands=sp.get("bands", 4),
                 method=sp.get("method", "xxhash64"),
             )
-        kwargs = (
-            {
-                "n_buckets": store_n_buckets,
-                "max_files_per_bucket": store_max_files_per_bucket,
-            }
-            if bucketed
-            else {
-                "small_file_bytes": small_file_mb << 20,
-                "target_file_bytes": target_file_mb << 20,
-            }
+        report["store"] = store.compact(
+            spark,
+            small_file_bytes=small_file_mb << 20,
+            target_file_bytes=target_file_mb << 20,
         )
-        report["store"] = store.compact(spark, **kwargs)
     if ann_stores:
         from dsm2dtm_spark.operators.annstore import AnnIndexStore
 
@@ -148,28 +127,9 @@ def main():
     )
     ap.add_argument("--store", default=None, help="SignatureStore root")
     ap.add_argument(
-        "--bucketed-store",
-        action="store_true",
-        help="the --store root holds a BucketedSignatureStore layout",
-    )
-    ap.add_argument(
         "--repair-corpus",
         default=None,
         help="corpus snapshot-table root: run the store self-heal against it before compacting",
-    )
-    ap.add_argument(
-        "--store-n-buckets",
-        type=int,
-        default=None,
-        help="bucketed store only: re-bucket BOTH sub-tables into this bucket "
-        "count (full rewrite; manifest records it for every later session)",
-    )
-    ap.add_argument(
-        "--store-max-files-per-bucket",
-        type=int,
-        default=1,
-        help="bucketed store only: rewrite only buckets holding more files "
-        "than this (cold buckets are hard-linked, not rewritten)",
     )
     ap.add_argument(
         "--ann-store",
@@ -201,14 +161,11 @@ def main():
         spark,
         args.table,
         store_root=args.store,
-        bucketed=args.bucketed_store,
         small_file_mb=args.small_file_mb,
         target_file_mb=args.target_file_mb,
         expire_keep_last=args.expire_keep_last,
         sort_by=args.sort_by,
         repair_corpus=args.repair_corpus,
-        store_n_buckets=args.store_n_buckets,
-        store_max_files_per_bucket=args.store_max_files_per_bucket,
         ann_stores=args.ann_store,
     )
     print(json.dumps(report))

@@ -185,62 +185,24 @@ def main():
     sections.append(
         (
             "Incremental cross-snapshot dedup (stored side never re-shingled)",
-            "Every shingle expression (explode over sequence/substring) must hang "
-            "off the FRESH relation only; the committed side enters as the "
-            "materialized signature/band scans (here the localCheckpoint "
-            "placeholder; in production, parquet scans of the SignatureStore). "
-            "Candidate generation is a banded equi-join; verification joins the "
-            "two signature ARRAYS on candidate ids — the corpus text never "
-            "appears in the plan. The exact pass (default broadcast_fresh=True) "
-            "probes the stored fingerprints against BROADCAST fresh ones, so the "
-            "store streams map-side — no Exchange over the stored subtree; the "
-            "matched set (O(batch)) then broadcasts back for the semi/anti split.",
+            "The signer (`ArrowEvalPython sig(lower(text))`) runs over the FRESH "
+            "scan only; the committed side enters as the signature checkpoint "
+            "(`Scan ExistingRDD` of doc_id, fingerprint, signature; in production, "
+            "parquet scans of the SignatureStore), so the corpus text never appears "
+            "in the plan. Here the stored band rows are a `Generate` (posexplode of "
+            "the band keys) over that checkpoint; in production they are the store's "
+            "band table. Candidate generation is a banded equi-join that streams "
+            "the stored band rows against BROADCAST fresh bands; verification "
+            "streams the stored signature ARRAYS against the broadcast candidate "
+            "set, with the unrolled Jaccard estimate as the join condition. The "
+            "exact pass (broadcast_fresh=True, the default) probes the stored "
+            "fingerprints against BROADCAST fresh ones, so the store streams "
+            "map-side; the matched set (O(batch)) then broadcasts back for the "
+            "semi/anti split. The only two Exchanges are the candidate-pair and "
+            "near-id distincts; none sits above a stored scan.",
             fmt(decisions),
         )
     )
-
-    import shutil
-    import tempfile as _tf
-
-    from dsm2dtm_spark.operators.incremental import BucketedSignatureStore
-
-    bs_root = _tf.mkdtemp(prefix="plans_bstore_")
-    try:
-        bstore = BucketedSignatureStore(bs_root, n_buckets=8)
-        bstore.append(
-            incremental.sign_documents(corpus.limit(400), method="md5"),
-            summary={"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}},
-        )
-        old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            bdecisions, _ = incremental.dedup_against(
-                fresh,
-                bstore.read_signatures(spark),
-                bstore.read_bands(spark),
-                method="md5",
-                broadcast_fresh=False,
-                materialize_fresh=False,
-            )
-            bplan = fmt(bdecisions)
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        sections.append(
-            (
-                "Bucketed SignatureStore (stored side reads with zero Exchange)",
-                "The big-batch path (broadcast_fresh=False, hive-bucketed store: "
-                "signatures by fingerprint, bands by (band, bucket)): every stored-"
-                "side FileScan says `Bucketed: true` and feeds its SortMergeJoin "
-                "directly — no Exchange above a store scan even with auto-broadcast "
-                "disabled (the bucket files are the shuffle, paid once at append). "
-                "Only fresh-derived subtrees repartition. At a daily-batch cadence "
-                "over a 10^12-row store this removes the per-batch O(corpus) "
-                "shuffle that was the r4 scale veto.",
-                bplan,
-            )
-        )
-    finally:
-        shutil.rmtree(bs_root, ignore_errors=True)
 
     ev = docs.filter("doc_id % 7 = 0")
     train = docs.filter("doc_id % 7 != 0")

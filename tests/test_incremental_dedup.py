@@ -126,8 +126,8 @@ class TestIncrementalDedup:
         assert plan.count("BroadcastHashJoin") >= 4  # probe, semi, anti, bands, verify
 
     def test_broadcast_and_shuffle_paths_agree(self, spark, tmp_path, method):
-        """``broadcast_fresh=False`` (the too-big-to-broadcast batch path,
-        for bucketed stores) must produce identical verdicts."""
+        """``broadcast_fresh=False`` (the shuffle path, for a batch about as
+        big as the store) must produce identical verdicts."""
         store = SignatureStore(str(tmp_path / f"agree_{method}"))
         incremental_dedup(store, _df(spark, CORPUS), method=method)
         kw = dict(method=method)
@@ -364,18 +364,29 @@ class TestStoreCensusAndRepair:
         want = [(r.doc_id, r.band, r.bucket) for r in full.collect()]
         assert sorted(got) == sorted(want)  # complete AND duplicate-free
 
-    def test_cross_class_open_does_not_brick_an_empty_root(self, spark, tmp_path):
-        """Opening an empty root with the plain class scaffolds empty dirs;
-        the bucketed guard keys on a committed marker, so the root stays
-        usable for either layout until something actually commits."""
-        from dsm2dtm_spark.operators.incremental import BucketedSignatureStore
+    def test_store_json_root_is_refused(self, spark, tmp_path):
+        """A root holding a store.json manifest (the hive-bucketed layout
+        of older builds) is refused, not opened as an empty store over the
+        committed state; an empty root still opens and bootstraps."""
+        import json
+        import os
+
+        old = tmp_path / "old_layout"
+        os.makedirs(old / "signatures_v0")
+        (old / "store.json").write_text(json.dumps({
+            "rows": 4,
+            "n_buckets": 16,
+            "sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"},
+            "tables": {"signatures": {"version": 0, "ddl": "`doc_id` bigint"}},
+        }))
+        with pytest.raises(ValueError, match="no longer supported. Re-sign into a fresh store root"):
+            SignatureStore(str(old))
+        assert sorted(os.listdir(old)) == ["signatures_v0", "store.json"]  # nothing scaffolded
 
         root = str(tmp_path / "fresh")
-        SignatureStore(root)  # scaffolds signatures/meta etc., commits nothing
-        store = BucketedSignatureStore(root, n_buckets=4)  # must not raise
-        incremental_dedup(store, _df(spark, [(1, "first doc about sluices")]), method="md5")
-        with pytest.raises(ValueError, match="BucketedSignatureStore"):
-            SignatureStore(root)  # now it HAS committed bucketed state
+        assert SignatureStore(root).is_empty()
+        incremental_dedup(SignatureStore(root), _df(spark, CORPUS), method="md5")
+        assert SignatureStore(root).signature_row_count() == len(CORPUS)
 
     def test_census_accumulates_across_appends(self, spark, tmp_path):
         # a bucket that crosses the cap only CUMULATIVELY (3 rows, then 3
@@ -707,3 +718,43 @@ def test_store_compaction_after_many_small_commits(spark, tmp_path):
     # contents unchanged
     assert store.read_signatures(spark).count() == 12
     assert store.read_bands(spark).count() == 12 * 4
+
+
+def test_ingest_batch_and_incremental_dedup_agree(spark, tmp_path):
+    """Both wrappers run the one store-backed dedup step: on the same store
+    state and a batch the quality and within-batch gates leave whole, they
+    keep the same ids and drop the same exact/near counts."""
+    from dsm2dtm_spark.operators.incremental import ingest_batch
+    from dsm2dtm_spark.sources.manifest import SnapshotTable
+
+    store = SignatureStore(str(tmp_path / "store"))
+    corpus = SnapshotTable(str(tmp_path / "corpus"))
+    ingest_batch(spark, _df(spark, CORPUS), corpus, store, method="md5", batch_id="boot")
+    verdicts = {
+        r.doc_id: r.verdict
+        for r in incremental_dedup(store, _df(spark, FRESH_1), method="md5", commit=False).collect()
+    }
+    survivors, counts = ingest_batch(spark, _df(spark, FRESH_1), corpus, store, method="md5", batch_id="b1")
+    assert counts["after_within_batch_exact"] == len(FRESH_1)
+    assert verdicts == {100: "exact", 101: "near", 102: "keep", 103: "keep"}
+    assert {r.doc_id for r in survivors.collect()} == {i for i, v in verdicts.items() if v == "keep"}
+    assert counts["dropped_exact_vs_corpus"] == sum(v == "exact" for v in verdicts.values())
+    assert counts["dropped_near_vs_corpus"] == sum(v == "near" for v in verdicts.values())
+
+
+def test_empty_batch_commits_nothing(spark, tmp_path):
+    """An empty batch leaves an empty store empty: no signatures or bands
+    commit, no recorded signature parameters, and the next batch is still
+    the bootstrap."""
+    store = SignatureStore(str(tmp_path / "store"))
+    empty = spark.createDataFrame([], "doc_id bigint, text string")
+    assert incremental_dedup(store, empty, method="md5").count() == 0
+    assert store.is_empty() and store.params() == {}
+    assert store.signature_row_count() is None and store.band_row_count() is None
+    incremental_dedup(store, _df(spark, CORPUS), method="md5")
+    assert store.signature_row_count() == len(CORPUS) and store.band_row_count() == 4 * len(CORPUS)
+    # an empty batch into a non-empty store changes nothing either
+    before = store.params()
+    incremental_dedup(store, empty, method="md5")
+    assert store.params() == before
+    assert store.signature_row_count() == len(CORPUS) and store.band_row_count() == 4 * len(CORPUS)

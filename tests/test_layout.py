@@ -54,8 +54,12 @@ def _imported_names(path: Path) -> set[str]:
     return names
 
 
+def _entry_files() -> list[Path]:
+    return [p for pat in ENTRY_POINTS for p in ROOT.glob(pat) if not p.name.startswith("test_")]
+
+
 def _reached(mods: dict[str, Path]) -> set[str]:
-    todo = [p for pat in ENTRY_POINTS for p in ROOT.glob(pat) if not p.name.startswith("test_")]
+    todo = _entry_files()
     seen: set[str] = set()
     while todo:
         for name in _imported_names(todo.pop()):
@@ -80,3 +84,46 @@ def test_every_package_module_is_reachable():
     assert set(UNREACHED_BY_DESIGN) - unreached == set(), (
         f"reached, so no longer needs a reason: {sorted(set(UNREACHED_BY_DESIGN) - unreached)}"
     )
+
+
+def _top_level_bindings(path: Path) -> set[str]:
+    """Names a module binds at its top level (defs, classes, assignments,
+    imports), including under top-level ``if``/``try``/``with`` blocks."""
+    names: set[str] = set()
+    todo = list(ast.parse(path.read_text(), str(path)).body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.If, ast.Try, ast.With)):
+            todo.extend(node.body + getattr(node, "orelse", []) + getattr(node, "finalbody", []))
+            for h in getattr(node, "handlers", []):
+                todo.extend(h.body)
+    return names
+
+
+def test_entry_point_imports_resolve():
+    """Every ``from dsm2dtm_spark... import name`` in an entry point
+    (function bodies included) names a submodule or a top-level binding of
+    that module. The tests do not run the jobs and scripts, so an import of
+    a deleted name there would otherwise go unseen until a user runs it."""
+    mods = _package_modules()
+    broken = []
+    for path in _entry_files():
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (isinstance(node, ast.ImportFrom) and node.module and node.module.split(".")[0] == PKG):
+                continue
+            if node.module not in mods:
+                broken.append(f"{path.relative_to(ROOT)}:{node.lineno}: no module {node.module}")
+                continue
+            bound = _top_level_bindings(mods[node.module])
+            for a in node.names:
+                if f"{node.module}.{a.name}" not in mods and a.name not in bound:
+                    broken.append(f"{path.relative_to(ROOT)}:{node.lineno}: {node.module} has no {a.name}")
+    assert broken == [], "\n".join(broken)

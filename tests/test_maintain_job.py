@@ -1,6 +1,6 @@
 """Maintenance job (jobs/maintain_tables.py): compaction + snapshot expiry
-over snapshot tables and both dedup-store layouts, and the post-maintenance
-resume/read invariants."""
+over snapshot tables, the dedup store and ANN index stores, and the
+post-maintenance resume/read invariants."""
 
 from __future__ import annotations
 
@@ -8,17 +8,12 @@ import os
 import sys
 
 import pandas as pd
-import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
 
 from maintain_tables import run_maintenance  # noqa: E402
 
-from dsm2dtm_spark.operators.incremental import (  # noqa: E402
-    BucketedSignatureStore,
-    SignatureStore,
-    incremental_dedup,
-)
+from dsm2dtm_spark.operators.incremental import SignatureStore, incremental_dedup  # noqa: E402
 from dsm2dtm_spark.sources import SnapshotTable  # noqa: E402
 
 
@@ -60,34 +55,14 @@ class TestMaintainJob:
         assert len(t.snapshots()) == 1
         assert store.read_signatures(spark).count() == sig_before
 
-    def test_bucketed_store_path_and_wrong_flag_guard(self, spark, tmp_path):
-        root = str(tmp_path / "bstore")
-        store = BucketedSignatureStore(root, n_buckets=4)
-        for i in range(3):
-            incremental_dedup(
-                store, _docs(spark, 100 * i, 100 * i + 15), method="md5", broadcast_fresh=False
-            )
-        before = store.read_signatures(spark).count()
-        v0 = store._location("signatures", 0)
-        report = run_maintenance(spark, [], store_root=root, bucketed=True)
-        # no bucket_cap configured -> no census table to roll up
-        assert report["store"]["signatures"] == 1 and report["store"]["bands"] == 1
-        assert "bucket_stats" not in report["store"]
-        assert store.read_signatures(spark).count() == before
-        assert not os.path.exists(v0)  # version bumped, old dir swept
-        with pytest.raises(ValueError, match="BucketedSignatureStore"):
-            run_maintenance(spark, [], store_root=root, bucketed=False)
-
     def test_empty_or_mistyped_store_root_is_a_noop(self, spark, tmp_path):
-        """Maintenance on an empty --store path must not write a manifest:
-        an empty store.json would permanently mark the root as
-        bucketed-layout and break a later correct plain-store open
-        (r5 review finding)."""
+        """Maintenance on an empty --store path commits nothing and writes
+        no manifest: the root still opens as an empty store afterwards."""
         root = str(tmp_path / "typo_sigstore")
-        report = run_maintenance(spark, [], store_root=root, bucketed=True)
-        assert report["store"] == {"signatures": 0, "bands": 0}
+        report = run_maintenance(spark, [], store_root=root)
+        assert report["store"] == {"signatures": 0, "bands": 0, "bucket_stats": 0}
         assert not os.path.exists(os.path.join(root, "store.json"))
-        SignatureStore(root)  # still opens as a plain store
+        assert SignatureStore(root).is_empty()
 
     def test_repair_corpus_option_heals_before_compacting(self, spark, tmp_path):
         """--repair-corpus runs the store self-heal (with the store's OWN

@@ -658,60 +658,21 @@ class TestRepeatedPassages:
 
 
 class TestShingleGramsUdf:
-    """r7: shingle_grams_udf is the Arrow twin of shingle_expr — the parity
-    must hold on the edges the expression semantics define (short/empty/null
-    text, unicode lowercasing done in the JVM, first-occurrence distinct)."""
-
-    def test_matches_shingle_expr_on_edges(self, spark):
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from dsm2dtm_spark.operators.dedup import shingle_expr, shingle_grams_udf
-
-        rows = [
-            (0, "the quick brown fox jumps over the lazy dog"),
-            (1, ""),                       # empty → [""]
-            (2, "ab"),                     # shorter than n → one clamped gram
-            (3, "ÄÖÜ SS ß İstanbul"),      # JVM lower() semantics
-            (4, None),                     # NULL text → [None]
-            (5, "aaaaa"),                  # distinct collapses repeats
-            (6, "x" * 500),
-        ]
-        df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-        a = {r.doc_id: r.g for r in df.select("doc_id", shingle_expr("text").alias("g")).collect()}
-        b = {
-            r.doc_id: r.g
-            for r in df.select(
-                "doc_id", shingle_grams_udf(3)(F.lower(F.col("text"))).alias("g")
-            ).collect()
-        }
-        assert a == b
-
-    def test_n5_matches_too(self, spark):
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from dsm2dtm_spark.operators.dedup import shingle_expr, shingle_grams_udf
-
-        df = spark.createDataFrame(
-            pd.DataFrame({"doc_id": [0, 1], "text": ["five gram shingles here", "hi"]})
-        )
-        a = [r.g for r in df.select(shingle_expr("text", 5).alias("g")).collect()]
-        b = [
-            r.g
-            for r in df.select(shingle_grams_udf(5)(F.lower(F.col("text"))).alias("g")).collect()
-        ]
-        assert a == b
+    """r7: jaccard_counts_udf is the Arrow twin of the JVM Jaccard counts
+    over ``shingle_expr`` — the parity must hold on the edges the
+    expression semantics define (short/empty/null text, unicode lowercasing
+    done in the JVM, set semantics over repeats)."""
 
     def test_jaccard_counts_udf_matches_array_form_on_edges(self, spark):
         # r7: jaccard_counts_udf returns |A∩B|, |A∪B| per pair — must equal
-        # size(array_intersect/array_union) over shingle_grams_udf output on
-        # every edge the expression semantics define (NULL text → [None] and
-        # Spark's null-equal-null set semantics, empty, short, unicode).
+        # size(array_intersect/array_union) over shingle_expr output (the
+        # JVM form the contract oracles replay) on every edge the expression
+        # semantics define (NULL text → [None] and Spark's null-equal-null
+        # set semantics, empty, short, unicode).
         import pandas as pd
         from pyspark.sql import functions as F
 
-        from dsm2dtm_spark.operators.dedup import jaccard_counts_udf, shingle_grams_udf
+        from dsm2dtm_spark.operators.dedup import jaccard_counts_udf, shingle_expr
 
         rows = [
             ("", ""), ("a", ""), ("ab", "ab"), ("abc", "abd"), (None, "abc"),
@@ -719,16 +680,15 @@ class TestShingleGramsUdf:
             ("abcabcabc", "abcabc"), ("x" * 300, "x" * 300 + "y"),
         ]
         df = spark.createDataFrame(pd.DataFrame(rows, columns=["text", "rtext"]))
-        sh = shingle_grams_udf(3)
-        lg, rg = sh(F.lower(F.col("text"))), sh(F.lower(F.col("rtext")))
-        old = df.select(
+        lg, rg = shingle_expr("text", 3), shingle_expr("rtext", 3)
+        jvm = df.select(
             F.size(F.array_intersect(lg, rg)).alias("i"),
             F.size(F.array_union(lg, rg)).alias("u"),
         ).collect()
-        new = df.select(
+        udf = df.select(
             jaccard_counts_udf(3)(F.lower(F.col("text")), F.lower(F.col("rtext"))).alias("c")
         ).collect()
-        assert [(r.i, r.u) for r in old] == [(r.c.i, r.c.u) for r in new]
+        assert [(r.i, r.u) for r in jvm] == [(r.c.i, r.c.u) for r in udf]
 
 
 class TestDecontamDedupEval:
