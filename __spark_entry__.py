@@ -863,11 +863,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             f"q_sigstore_{hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]}",
         )
         shutil.rmtree(root, ignore_errors=True)
-        store = SignatureStore(root)
-        incremental_dedup(store, corpus, method="md5")
-        decisions = incremental_dedup(
-            store, fresh, method="md5", threshold=0.75, commit=False, broadcast_fresh=False
-        )
+        store = SignatureStore(root, method="md5")
+        incremental_dedup(store, corpus)
+        decisions = incremental_dedup(store, fresh, threshold=0.75, commit=False, broadcast_fresh=False)
         return decisions.select("doc_id", "verdict")
 
     q["docs_incremental_dedup_bucketed"] = docs_incremental_dedup_bucketed

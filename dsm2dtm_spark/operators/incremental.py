@@ -23,6 +23,10 @@ and build on batch-bounded sides (every ingest), and shuffle joins for a
 batch about as big as the store (``broadcast_fresh=False``), which re-band
 every stored signature and so cost O(corpus) per call.
 
+The store owns its settings (signing parameters, flood cap); the
+store-backed calls read them from it, while the store-less operators
+``sign_documents`` and ``dedup_against`` take them as arguments.
+
 Signatures come in two flavors, signed by the one MinHash signer of
 ``dedup.minhash_signatures`` (an Arrow UDF with a per-worker gram cache)
 and banded by the one ``dedup.band_buckets`` expression; ``method`` picks
@@ -90,7 +94,14 @@ class SignatureStore:
     plain parquet scans on read (Catalyst pushdown intact). At warehouse
     scale, compact periodically (``SnapshotTable.compact(sort_by=
     ['bucket'])``) so the band table's footer min/max make the candidate
-    join's scan prunable.
+    join's scan prunable. Opening a store creates nothing on disk.
+
+    Settings: the signing parameters ``n_hashes=16``, ``bands=4``,
+    ``shingle_n=3`` and ``method`` (default 'xxhash64') are recorded on
+    every signatures commit, compactions included; an existing store uses
+    the newest recorded ones (compactions of older builds recorded none),
+    and a non-empty root without any is refused. An explicit ``method`` or
+    ``bucket_cap`` that conflicts with the recorded one raises.
 
     A root holding a ``store.json`` manifest was written by the hive-
     bucketed layout of older builds; it is refused rather than opened as an
@@ -105,14 +116,15 @@ class SignatureStore:
     never from a per-batch full groupBy over 10^12 stored band rows.
     The append-time update only scans bucket_stats rows for buckets the
     batch actually touched (broadcast semi-join probe, pre-aggregated
-    rows, footer-prunable after compact)."""
+    rows, footer-prunable after compact). Enabling a cap on a store that
+    already holds band rows backfills the census once."""
 
     # hot lists live in snapshot-summary JSON; a list bigger than this is
     # pathological (the cap is meant to catch a few flood buckets) — the
     # reader then falls back to the census rather than bloating metadata
     MAX_HOT_LIST = 50_000
 
-    def __init__(self, root: str, bucket_cap: int | None = None):
+    def __init__(self, root: str, method: str | None = None, bucket_cap: int | None = None):
         if os.path.exists(os.path.join(root, "store.json")):
             raise ValueError(
                 f"{root} holds a store.json manifest: its signatures are in the "
@@ -124,10 +136,25 @@ class SignatureStore:
         self.signatures = SnapshotTable(f"{root}/signatures")
         self.bands = SnapshotTable(f"{root}/bands")
         self.bucket_stats = SnapshotTable(f"{root}/bucket_stats")
-        persisted = self._persisted_cap()
+        recorded = self._recorded_params()
+        if not recorded and not self.is_empty():
+            raise ValueError(
+                f"SignatureStore at {root} holds signatures but no recorded signing "
+                "parameters (a compaction by an older build dropped them and its "
+                "history was expired). Re-sign into a fresh store root: the first "
+                "ingest's repair_store re-signs the whole corpus into an empty store."
+            )
+        if method is not None and recorded and method != recorded["method"]:
+            raise ValueError(
+                f"SignatureStore at {root} holds method={recorded['method']!r} "
+                f"signatures; a method={method!r} batch would be incomparable with them."
+            )
+        self._params = recorded or {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": method or "xxhash64"}
+        census = self.bucket_stats.current_snapshot()
+        persisted = census.summary.get("bucket_cap") if census else None
         if bucket_cap is not None and persisted is not None and bucket_cap != persisted:
             raise ValueError(
-                f"{type(self).__name__} at {root} maintains its hot-bucket census "
+                f"SignatureStore at {root} maintains its hot-bucket census "
                 f"for bucket_cap={persisted}; reopen with that cap (got {bucket_cap})."
             )
         self.bucket_cap = bucket_cap if bucket_cap is not None else persisted
@@ -139,6 +166,13 @@ class SignatureStore:
         self._census_backfill_pending = (
             self.bucket_cap is not None and persisted is None and not self.is_empty()
         )
+
+    def _recorded_params(self) -> dict:
+        """The newest recorded signing parameters; {} when none are."""
+        snap = self.signatures.current_snapshot()
+        if snap is not None and "sig_params" not in snap.summary:  # an older build's compaction
+            snap = next((s for s in reversed(self.signatures.snapshots()) if "sig_params" in s.summary), None)
+        return snap.summary["sig_params"] if snap else {}
 
     # ------------------------------------------------ snapshot tables
 
@@ -156,10 +190,8 @@ class SignatureStore:
         return self.signatures.current_snapshot() is None
 
     def params(self) -> dict:
-        """The signature parameters the store was built with (recorded at
-        bootstrap). Empty dict for an empty store."""
-        snap = self.signatures.current_snapshot()
-        return (snap.summary or {}).get("sig_params", {}) if snap else {}
+        """The store's signing parameters: n_hashes, bands, shingle_n, method."""
+        return dict(self._params)
 
     def read_signatures(self, spark) -> DataFrame:
         return self.signatures.read(spark)
@@ -185,7 +217,7 @@ class SignatureStore:
         and maxima make ``read(where=...)`` file skipping sharp). Returns
         {'signatures': n_compacted, 'bands': n_compacted}."""
         kwargs.pop("sort_by", None)  # bands' clustering key is fixed
-        s = self.signatures.compact(spark, **kwargs)
+        s = self.signatures.compact(spark, summary={"sig_params": self.params()}, **kwargs)
         b = self.bands.compact(spark, sort_by=["bucket"], **kwargs)
         n_stats = self._rollup_census(spark)
         return {
@@ -194,38 +226,27 @@ class SignatureStore:
             "bucket_stats": n_stats,
         }
 
-    # ------------------------------------------------ params and appends
+    # ------------------------------------------------------------ appends
 
-    def check_params(self, n_hashes: int, bands: int, shingle_n: int, method: str) -> None:
-        """Fail fast when a batch's signature parameters differ from the
-        store's: mismatched n_hashes would zip NULL-padded signatures and
-        silently UNDERESTIMATE every Jaccard (near-dups leak through), and a
-        different hash method/shingle size makes buckets incomparable."""
-        want = {"n_hashes": n_hashes, "bands": bands, "shingle_n": shingle_n, "method": method}
-        have = self.params()
-        if have and have != want:
-            raise ValueError(
-                f"SignatureStore at {self.root} was built with {have}; this "
-                f"batch uses {want} — signatures would be incomparable. "
-                "Rebuild the store or match its parameters."
-            )
-
-    def append(self, signatures_df: DataFrame, bands: int = 4, summary: dict | None = None) -> None:
+    def append(self, signatures_df: DataFrame, summary: dict | None = None) -> None:
         """Register a batch: commit its signature rows, then band rows
         derived from the signature files that write just added (sliced, not
         re-signed). The input plan runs ONCE, in the signatures write: the
         bands never re-execute the sign+dedup lineage — the most expensive
-        stage of every ingest — and need no pin of it. With a configured
-        ``bucket_cap`` the hot-bucket census updates here too (write-path
-        amortization; see class docstring). An empty batch commits nothing
-        to either table."""
+        stage of every ingest — and need no pin of it. Both commits record
+        the store's signing parameters. With a configured ``bucket_cap``
+        the hot-bucket census updates here too (write-path amortization;
+        see class docstring). An empty batch commits nothing to either
+        table."""
         spark = signatures_df.sparkSession
+        summary = {**(summary or {}), "sig_params": self.params()}
         # backfill BEFORE this batch's rows land in the band table, or the
         # later census read would double-count them
         self._backfill_census_if_needed(spark)
         written = self._write("signatures", signatures_df, summary)
         if written:
-            self._add_bands(band_buckets(read_parquet(spark, written), bands=bands), summary)
+            bands = band_buckets(read_parquet(spark, written), bands=self._params["bands"])
+            self._add_bands(bands, summary)
 
     def append_band_rows(self, band_rows: DataFrame, summary: dict | None = None) -> None:
         """Commit band rows WITHOUT signature rows — the repair path for
@@ -241,10 +262,6 @@ class SignatureStore:
             self._update_bucket_census(band_rows)
 
     # ------------------------------------------------- hot-bucket census
-
-    def _persisted_cap(self) -> int | None:
-        snap = self.bucket_stats.current_snapshot()
-        return snap.summary.get("bucket_cap") if snap else None
 
     def _backfill_census_if_needed(self, spark) -> None:
         """One-time census bootstrap when ``bucket_cap`` was configured on a
@@ -327,11 +344,11 @@ class SignatureStore:
             summary["hot"] = sorted([list(h) for h in hot])
         self.bucket_stats.write_dataframe(counts_new, summary=summary)
 
-    def hot_buckets(self, spark, bucket_cap: int | None) -> DataFrame | None:
-        """The persisted flood list as a (band, bucket) DataFrame — None when
-        the store doesn't maintain a census for this cap (caller falls back
-        to the on-the-fly groupBy census). Metadata-only on the happy path."""
-        if bucket_cap is None or bucket_cap != self.bucket_cap:
+    def hot_buckets(self, spark) -> DataFrame | None:
+        """The persisted flood list as a (band, bucket) DataFrame — None
+        when the store has no ``bucket_cap`` (or no census yet).
+        Metadata-only on the happy path."""
+        if self.bucket_cap is None:
             return None
         self._backfill_census_if_needed(spark)
         snap = self.bucket_stats.current_snapshot()
@@ -342,7 +359,7 @@ class SignatureStore:
                 self.bucket_stats.read(spark)
                 .groupBy("band", "bucket")
                 .agg(F.sum("n").alias("n"))
-                .filter(F.col("n") > bucket_cap)
+                .filter(F.col("n") > self.bucket_cap)
                 .select("band", "bucket")
             )
         hot = snap.summary.get("hot") or []
@@ -398,7 +415,6 @@ def dedup_against(
     bands: int = 4,
     shingle_n: int = 3,
     method: str = "xxhash64",
-    bucket_cap: int | None = None,
     materialize_fresh: bool = True,
     broadcast_fresh: bool = True,
     hot_buckets: DataFrame | None = None,
@@ -438,16 +454,14 @@ def dedup_against(
 
     ``broadcast_fresh=False`` plans shuffle joins instead, for a batch about
     as big as the store (the symmetric contract queries): the candidates
-    come from re-banding the stored signatures (``stored_bands`` feeds only
-    the flood-cap census) and shuffling them against the fresh bands, so
-    every call costs O(corpus) — never the ingest path.
+    come from re-banding the stored signatures (``stored_bands`` is not
+    read) and shuffling them against the fresh bands, so every call costs
+    O(corpus) — never the ingest path.
 
-    ``bucket_cap`` drops stored buckets larger than the cap from candidate
-    generation (broadcast anti-join) — the boilerplate-flood guard, same
-    degraded-recall trade as minhash_lsh_candidates. ``hot_buckets``
-    (a (band, bucket) DataFrame, e.g. the census a SignatureStore maintains
-    at append time) supplies that list precomputed, skipping the full
-    per-batch groupBy census over the stored band table.
+    ``hot_buckets`` (a (band, bucket) DataFrame: the flood list a capped
+    SignatureStore maintains at append time) drops those stored buckets
+    from candidate generation (broadcast anti-join) — the boilerplate-flood
+    guard, same degraded-recall trade as minhash_lsh_candidates.
 
     Under AQE a lazy ``localCheckpoint`` is not free at call time: it plans
     its input and runs every exchange and broadcast stage below it then
@@ -494,20 +508,7 @@ def dedup_against(
         # PLAN test, which must see the shingle expressions
         rows = rows.localCheckpoint(eager=False)
     fresh_sigs = rows.filter(F.col("signature").isNotNull())
-    if hot_buckets is not None:
-        hot = hot_buckets.select("band", "bucket")
-    elif bucket_cap is not None:
-        # fallback census — a full groupBy over the stored band rows; a
-        # store-maintained hot list (hot_buckets) makes this free per batch
-        hot = (
-            stored_bands.select("band", "bucket")
-            .groupBy("band", "bucket")
-            .count()
-            .filter(F.col("count") > bucket_cap)
-            .select("band", "bucket")
-        )
-    else:
-        hot = None
+    hot = hot_buckets.select("band", "bucket") if hot_buckets is not None else None
     # verify on STORED signatures only: estimated Jaccard = fraction of
     # agreeing components (classic MinHash estimator; no text touched) —
     # unrolled codegen form, see _est_jaccard_expr
@@ -618,25 +619,20 @@ def _dedup_step(
     text_col: str,
     id_col: str,
     threshold: float,
-    n_hashes: int,
-    bands: int,
-    shingle_n: int,
-    method: str,
-    bucket_cap: int | None,
     broadcast_fresh: bool,
 ) -> tuple[DataFrame, DataFrame, dict]:
     """Dedup ``fresh`` against ``store`` WITHOUT committing: returns
     ``(decisions, kept signatures)``, the pair ``dedup_against`` returns,
-    and the verdict tally ({'exact', 'near', 'keep'} → rows). An empty
-    store keeps the whole batch (bootstrap). Otherwise the batch must match
-    the store's signature parameters. The decisions are pinned by ONE eager
-    checkpoint before the caller mutates the store, and the tally is
-    observed on that same action."""
+    and the verdict tally ({'exact', 'near', 'keep'} → rows). The batch is
+    signed with the store's parameters and flood-guarded by its hot list.
+    An empty store keeps the whole batch (bootstrap). The decisions are
+    pinned by ONE eager checkpoint before the caller mutates the store, and
+    the tally is observed on that same action."""
+    p = store.params()
     if store.is_empty():
         decisions = fresh.withColumn("verdict", F.lit("keep"))
-        keep_sigs = sign_documents(fresh, text_col, id_col, n_hashes, shingle_n, method)
+        keep_sigs = sign_documents(fresh, text_col, id_col, p["n_hashes"], p["shingle_n"], p["method"])
     else:
-        store.check_params(n_hashes, bands, shingle_n, method)
         spark = fresh.sparkSession
         decisions, keep_sigs = dedup_against(
             fresh,
@@ -645,13 +641,9 @@ def _dedup_step(
             text_col=text_col,
             id_col=id_col,
             threshold=threshold,
-            n_hashes=n_hashes,
-            bands=bands,
-            shingle_n=shingle_n,
-            method=method,
-            bucket_cap=bucket_cap,
             broadcast_fresh=broadcast_fresh,
-            hot_buckets=store.hot_buckets(spark, bucket_cap),
+            hot_buckets=store.hot_buckets(spark),
+            **p,
         )
     tally = Observation()
     counts = [F.count(F.when(F.col("verdict") == v, True)).alias(v) for v in ("exact", "near", "keep")]
@@ -665,11 +657,6 @@ def incremental_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    n_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    method: str = "xxhash64",
-    bucket_cap: int | None = None,
     commit: bool = True,
     broadcast_fresh: bool = True,
 ) -> DataFrame:
@@ -684,13 +671,10 @@ def incremental_dedup(
     ``dedup_against``)."""
     op = "bootstrap" if store.is_empty() else "incremental"
     decisions, keep_sigs, _ = _dedup_step(
-        store, fresh, text_col=text_col, id_col=id_col, threshold=threshold, n_hashes=n_hashes,
-        bands=bands, shingle_n=shingle_n, method=method, bucket_cap=bucket_cap,
-        broadcast_fresh=broadcast_fresh,
+        store, fresh, text_col=text_col, id_col=id_col, threshold=threshold, broadcast_fresh=broadcast_fresh
     )
     if commit:
-        sig_params = {"n_hashes": n_hashes, "bands": bands, "shingle_n": shingle_n, "method": method}
-        store.append(keep_sigs, bands=bands, summary={"op": op, "sig_params": sig_params})
+        store.append(keep_sigs, summary={"op": op})
     return decisions
 
 
@@ -702,14 +686,12 @@ def repair_store(
     store,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int = 16,
-    bands: int = 4,
-    method: str = "xxhash64",
 ) -> int:
     """Re-sign corpus rows that have no signature in the store (the
     crash-between-commits window, or a store lost to operator error), and
     re-derive band rows for signatures whose bands commit crashed (the
-    window INSIDE ``store.append``, between its two table writes).
+    window INSIDE ``store.append``, between its two table writes). Both
+    use the store's own signing parameters.
 
     Happy path (VERDICT r4 #5): corpus rows == signature rows AND band rows
     == signature rows × bands, all read from parquet FOOTER metadata —
@@ -727,7 +709,6 @@ def repair_store(
     if store.is_empty():
         missing = corpus_table.read(spark)
     else:
-        store.check_params(n_hashes, bands, 3, method)
         try:
             n_corpus, n_sigs = corpus_table.row_count(), store.signature_row_count()
         except Exception:  # noqa: BLE001 — footer stats are an optimization only
@@ -738,21 +719,19 @@ def repair_store(
             # is exactly the state a crash inside store.append leaves;
             # the bands watermark (also footer-only on ITS happy path)
             # still runs
-            return _repair_bands(spark, store, bands=bands, id_col=id_col, n_sigs=n_sigs)
+            return _repair_bands(spark, store, id_col=id_col, n_sigs=n_sigs)
         sig_ids = store.read_signatures(spark).select(id_col)
         missing = corpus_table.read(spark).join(sig_ids, on=id_col, how="left_anti")
     missing = missing.localCheckpoint(eager=False)
     n = missing.count()
     if n:
-        sigs = sign_documents(missing, text_col, id_col, n_hashes=n_hashes, method=method)
-        store.append(sigs, bands=bands, summary={
-            "op": "repair",
-            "sig_params": {"n_hashes": n_hashes, "bands": bands, "shingle_n": 3, "method": method},
-        })
-    return n + _repair_bands(spark, store, bands=bands, id_col=id_col)
+        p = store.params()
+        sigs = sign_documents(missing, text_col, id_col, p["n_hashes"], p["shingle_n"], p["method"])
+        store.append(sigs, summary={"op": "repair"})
+    return n + _repair_bands(spark, store, id_col=id_col)
 
 
-def _repair_bands(spark, store, bands: int, id_col: str = "doc_id", n_sigs: int | None = None) -> int:
+def _repair_bands(spark, store, id_col: str = "doc_id", n_sigs: int | None = None) -> int:
     """Bands-completeness half of ``repair_store``: signatures whose bands
     commit crashed (wholly or partially)
     get the missing band rows re-derived from the STORED signature arrays
@@ -766,6 +745,7 @@ def _repair_bands(spark, store, bands: int, id_col: str = "doc_id", n_sigs: int 
     band row of a healthy store)."""
     if store.is_empty():
         return 0
+    bands = store.params()["bands"]
     try:
         if n_sigs is None:
             n_sigs = store.signature_row_count()
@@ -798,10 +778,6 @@ def ingest_batch(
     ngram: int = 13,
     min_tokens: int = 3,
     max_stopword_ratio: float = 0.9,
-    n_hashes: int = 16,
-    bands: int = 4,
-    method: str = "xxhash64",
-    bucket_cap: int | None = None,
     batch_id: str | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -810,7 +786,8 @@ def ingest_batch(
     stage-count dict). ``corpus_table``/``store`` mutate only when there is
     something to commit; an already-ingested ``batch_id`` short-circuits.
     The batch always dedups by ``dedup_against``'s broadcast probes: its
-    shuffle path would cost O(corpus) per batch."""
+    shuffle path would cost O(corpus) per batch. Signing parameters and
+    flood cap are the store's."""
     from dsm2dtm_spark.functions.text import quality_features
     from dsm2dtm_spark.operators.dedup import exact_dedup
     from dsm2dtm_spark.operators.decontam import decontaminate
@@ -818,10 +795,7 @@ def ingest_batch(
     # self-heal BEFORE the batch guard: a crash between the corpus and store
     # commits left rows committed-but-unsigned, and the guard would
     # otherwise short-circuit past them forever
-    repaired = repair_store(
-        spark, corpus_table, store, text_col=text_col, id_col=id_col,
-        n_hashes=n_hashes, bands=bands, method=method,
-    )
+    repaired = repair_store(spark, corpus_table, store, text_col=text_col, id_col=id_col)
 
     # idempotence guard over ALL snapshot summaries (one batch_id per
     # commit): robust to compaction/maintenance commits interleaving (they
@@ -859,9 +833,7 @@ def ingest_batch(
         kept = decontaminate(kept, eval_docs, n=ngram, text_col=text_col, id_col=id_col)
 
     decisions, keep_sigs, tally = _dedup_step(
-        store, kept, text_col=text_col, id_col=id_col, threshold=threshold, n_hashes=n_hashes,
-        bands=bands, shingle_n=3, method=method, bucket_cap=bucket_cap,
-        broadcast_fresh=True,
+        store, kept, text_col=text_col, id_col=id_col, threshold=threshold, broadcast_fresh=True
     )
     if eval_docs is not None:
         counts["after_decontam"] = sum(tally.values())
@@ -878,8 +850,7 @@ def ingest_batch(
         # and a LOST store append only risks duplicates being re-admitted
         # (conservative), never committed rows being double-dropped
         corpus_table.write_dataframe(survivors, summary=summary)
-        sig_params = {"n_hashes": n_hashes, "bands": bands, "shingle_n": 3, "method": method}
-        store.append(keep_sigs, bands=bands, summary={"op": "ingest", "sig_params": sig_params})
+        store.append(keep_sigs, summary={"op": "ingest"})
     elif batch_id and corpus_table.current_snapshot() is not None:
         # record the batch even when nothing survives, so reruns short-circuit
         corpus_table.commit([], operation="append", summary={**summary, "op": "ingest-empty"})

@@ -168,11 +168,15 @@ class Snapshot:
 
 class SnapshotTable:
     def __init__(self, root: str):
-        self.root = root
-        self.data_dir = os.path.join(root, "data")
+        self.root = root  # created by the first write, never by opening
         self.meta_dir = os.path.join(root, "meta")
-        os.makedirs(self.data_dir, exist_ok=True)
-        os.makedirs(self.meta_dir, exist_ok=True)
+
+    @property
+    def data_dir(self) -> str:
+        """Created on first use: callers place files there before a commit."""
+        path = os.path.join(self.root, "data")
+        os.makedirs(path, exist_ok=True)
+        return path
 
     # ------------------------------------------------------------- snapshots
 
@@ -202,6 +206,8 @@ class SnapshotTable:
 
     def snapshots(self) -> list[Snapshot]:
         out = []
+        if not os.path.isdir(self.meta_dir):
+            return out
         for name in sorted(os.listdir(self.meta_dir)):
             if name.startswith("snapshot-") and name.endswith(".json"):
                 with open(os.path.join(self.meta_dir, name)) as f:
@@ -234,6 +240,7 @@ class SnapshotTable:
         stats.update(self._harvest_stats(new_files))
         snap = Snapshot(sid, cur.snapshot_id if cur else None, operation, files, summary or {}, stats)
         name = f"snapshot-{sid:06d}.json"
+        os.makedirs(self.meta_dir, exist_ok=True)
         tmp = os.path.join(self.meta_dir, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             json.dump(
@@ -363,6 +370,7 @@ class SnapshotTable:
         small_file_bytes: int = 32 << 20,
         target_file_bytes: int = 128 << 20,
         sort_by: list[str] | None = None,
+        summary: dict | None = None,
     ) -> Snapshot | None:
         """Table maintenance: fold small data files into ~target-sized ones
         as ONE new snapshot (remove+add atomically). Small files are the
@@ -374,7 +382,9 @@ class SnapshotTable:
         ``col=value`` path, so partition pruning is untouched and untouched
         partitions cost nothing. ``sort_by`` optionally clusters rows (e.g.
         by cell id) during the rewrite so the new footers' min/max become
-        tight and ``read(where=...)`` file skipping gets sharper. Time
+        tight and ``read(where=...)`` file skipping gets sharper.
+        ``summary`` carries keys a table's readers rely on into the new
+        snapshot (they would otherwise read the compaction's only). Time
         travel to pre-compaction snapshots keeps working — replaced files
         stay on disk until ``expire_snapshots`` drops the snapshots that
         reference them. Returns the new snapshot, or None when there is
@@ -416,7 +426,7 @@ class SnapshotTable:
                 survivors + new_files,
                 new_files,
                 "compact",
-                {"compacted": len(small_all), "into": len(new_files)},
+                {**(summary or {}), "compacted": len(small_all), "into": len(new_files)},
             )
         finally:
             shutil.rmtree(scratch, ignore_errors=True)

@@ -17,10 +17,14 @@ Per batch:
     spark-submit --py-files engine.zip jobs/ingest_snapshot.py \
         --input /path/to/fresh.parquet --corpus /path/to/corpus_table \
         --store /path/to/sigstore [--eval-set /path/to/eval.parquet] \
-        [--threshold 0.5] [--ngram 13] [--bucket-cap 20000] [--cores 32]
+        [--threshold 0.5] [--ngram 13] [--method md5] [--bucket-cap 20000] \
+        [--cores 32]
 
 Store: a SignatureStore (snapshot tables) probed by broadcasting the fresh
-batch, so the store streams map-side and no batch costs O(corpus). A
+batch, so the store streams map-side and no batch costs O(corpus). The
+store owns its signing parameters and flood cap: ``--method`` and
+``--bucket-cap`` configure a new store (or a first cap) and must match an
+existing store's, or the run stops before it starts Spark. A
 ``--store`` root left by the hive-bucketed layout of older builds (it holds
 a ``store.json``) is refused; point ``--store`` at a fresh root and the
 run's repair step re-signs the whole corpus into it.
@@ -70,8 +74,8 @@ def main():
     ap.add_argument("--ngram", type=int, default=13, help="decontamination word n-gram size")
     ap.add_argument("--min-tokens", type=int, default=3)
     ap.add_argument("--max-stopword-ratio", type=float, default=0.9)
-    ap.add_argument("--method", choices=["xxhash64", "md5"], default="xxhash64")
-    ap.add_argument("--bucket-cap", type=int, default=None)
+    ap.add_argument("--method", choices=["xxhash64", "md5"], default=None, help="MinHash method of a new store")
+    ap.add_argument("--bucket-cap", type=int, default=None, help="flood cap of the store's hot-bucket census")
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
 
@@ -81,6 +85,8 @@ def main():
     from dsm2dtm_spark.session import get_spark
     from dsm2dtm_spark.sources import SnapshotTable
 
+    # a conflicting --method/--bucket-cap fails here, before any Spark work
+    store = SignatureStore(args.store, method=args.method, bucket_cap=args.bucket_cap)
     spark = get_spark("ingest-snapshot", cores=args.cores)
     if os.path.isdir(os.path.join(args.input, "meta")):
         fresh = SnapshotTable(args.input).read(spark)
@@ -109,14 +115,12 @@ def main():
         spark,
         fresh,
         SnapshotTable(args.corpus),
-        SignatureStore(args.store, bucket_cap=args.bucket_cap),
+        store,
         eval_docs=eval_docs,
         threshold=args.threshold,
         ngram=args.ngram,
         min_tokens=args.min_tokens,
         max_stopword_ratio=args.max_stopword_ratio,
-        method=args.method,
-        bucket_cap=args.bucket_cap,
         batch_id=batch_id,
     )
     print(json.dumps({"batch_id": batch_id, **counts}))

@@ -23,14 +23,14 @@ folds all of it in one sequential pass:
   data files (crashed-write orphans included) are deleted;
 - `--store`: `SignatureStore.compact()` folds the store's sub-tables
   (bands clustered by bucket for sharp footer min/max) and rolls up the
-  hot-bucket census; an empty or mistyped root commits nothing, and a root
-  left by the hive-bucketed layout of older builds is refused before
-  anything is touched. `--repair-corpus`
-  additionally runs the store self-heal against that corpus table BEFORE
-  compacting (footer watermarks; re-signs/re-bands only what a crashed
-  ingest actually lost) using the signature parameters the store itself
-  recorded — useful after restoring a store from backup, when the next
-  scheduled ingest is far away.
+  hot-bucket census, and the compaction commit keeps the store's recorded
+  signing parameters; an empty or mistyped root commits and creates
+  nothing, and a root left by the hive-bucketed layout of older builds is
+  refused before anything is touched. `--repair-corpus` additionally runs
+  the store self-heal against that corpus table BEFORE compacting (footer
+  watermarks; re-signs/re-bands only what a crashed ingest actually lost)
+  with the store's own signing parameters — useful after restoring a store
+  from backup, when the next scheduled ingest is far away.
 - each `--ann-store` (repeatable): `AnnIndexStore.compact()` — per-append
   posting files fold within their inverted-list partition directories
   (layout and pruning untouched), then old snapshots expire.
@@ -84,15 +84,7 @@ def run_maintenance(
         if repair_corpus:
             from dsm2dtm_spark.operators.incremental import repair_store
 
-            sp = store.params()
-            report["repaired"] = repair_store(
-                spark,
-                SnapshotTable(repair_corpus),
-                store,
-                n_hashes=sp.get("n_hashes", 16),
-                bands=sp.get("bands", 4),
-                method=sp.get("method", "xxhash64"),
-            )
+            report["repaired"] = repair_store(spark, SnapshotTable(repair_corpus), store)
         report["store"] = store.compact(
             spark,
             small_file_bytes=small_file_mb << 20,
@@ -129,7 +121,8 @@ def main():
     ap.add_argument(
         "--repair-corpus",
         default=None,
-        help="corpus snapshot-table root: run the store self-heal against it before compacting",
+        help="corpus snapshot-table root: run the store self-heal (with the store's "
+        "recorded signing parameters) against it before compacting",
     )
     ap.add_argument(
         "--ann-store",

@@ -1,7 +1,13 @@
 """Generate PLANS.md: `.explain("formatted")` for the engine's headline plans
 with commentary on what each plan must (and must not) contain. Run after
 plan-affecting changes; the assertions here are the same ones the test suite
-pins (pushdown, pruning, broadcast, partition filters)."""
+pins (pushdown, pruning, broadcast, partition filters).
+
+    SPARK_GRAFT_SF_DIR=/path/to/sf0.01 python scripts/explain_plans.py
+
+Reads the contract test data at ``$SPARK_GRAFT_SF_DIR`` (default: the
+sf0.01 set) on ``local[$SPARK_GRAFT_CPUS]`` (default: all cores), as
+bench.py does."""
 
 from __future__ import annotations
 
@@ -33,9 +39,10 @@ def main():
     from dsm2dtm_spark.session import get_spark
     from dsm2dtm_spark.sources import SnapshotTable
 
-    spark = get_spark("plans", cores=8)
+    spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
     sf = "/root/testdata/sf0.01"
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", sf)
     sections: list[tuple[str, str, str]] = []
 
     entry._ensure_contract_tables()

@@ -47,12 +47,12 @@ def _df(spark, rows):
 @pytest.mark.parametrize("method", ["xxhash64", "md5"])
 class TestIncrementalDedup:
     def test_verdicts_and_store_growth(self, spark, tmp_path, method):
-        store = SignatureStore(str(tmp_path / f"store_{method}"))
-        boot = incremental_dedup(store, _df(spark, CORPUS), method=method)
+        store = SignatureStore(str(tmp_path / f"store_{method}"), method=method)
+        boot = incremental_dedup(store, _df(spark, CORPUS))
         assert {r.verdict for r in boot.collect()} == {"keep"}
         assert store.read_signatures(spark).count() == 4
 
-        d1 = {r.doc_id: r.verdict for r in incremental_dedup(store, _df(spark, FRESH_1), method=method).collect()}
+        d1 = {r.doc_id: r.verdict for r in incremental_dedup(store, _df(spark, FRESH_1)).collect()}
         assert d1[100] == "exact"
         assert d1[101] == "near"
         assert d1[102] == "keep" and d1[103] == "keep"
@@ -60,7 +60,7 @@ class TestIncrementalDedup:
         assert store.read_signatures(spark).count() == 6
 
         # batch 2 dedups against corpus + batch 1 (the store grew)
-        d2 = {r.doc_id: r.verdict for r in incremental_dedup(store, _df(spark, FRESH_2), method=method).collect()}
+        d2 = {r.doc_id: r.verdict for r in incremental_dedup(store, _df(spark, FRESH_2)).collect()}
         assert d2 == {200: "exact", 201: "keep"}
         assert store.read_signatures(spark).count() == 7
         assert store.read_bands(spark).count() == 7 * 4
@@ -69,8 +69,8 @@ class TestIncrementalDedup:
         """The committed side must enter the plan as parquet scans of the
         signature/band tables only — shingling (sequence/substring explode)
         may appear for the FRESH side exclusively."""
-        store = SignatureStore(str(tmp_path / f"plan_{method}"))
-        incremental_dedup(store, _df(spark, CORPUS), method=method)
+        store = SignatureStore(str(tmp_path / f"plan_{method}"), method=method)
+        incremental_dedup(store, _df(spark, CORPUS))
         decisions, keep_sigs = dedup_against(
             _df(spark, FRESH_1),
             store.read_signatures(spark),
@@ -104,8 +104,8 @@ class TestIncrementalDedup:
         SortMergeJoin / ShuffledHashJoin anywhere, so the 10^12-row stored
         fingerprint/band/signature scans only ever STREAM. The exact-pass
         probe subtree itself must carry zero shuffle Exchange."""
-        store = SignatureStore(str(tmp_path / f"bf_{method}"))
-        incremental_dedup(store, _df(spark, CORPUS), method=method)
+        store = SignatureStore(str(tmp_path / f"bf_{method}"), method=method)
+        incremental_dedup(store, _df(spark, CORPUS))
 
         fresh_fp = _df(spark, FRESH_1).withColumn("fingerprint", F.md5("text"))
         probe = _matched_fingerprints(store.read_signatures(spark), fresh_fp)
@@ -128,8 +128,8 @@ class TestIncrementalDedup:
     def test_broadcast_and_shuffle_paths_agree(self, spark, tmp_path, method):
         """``broadcast_fresh=False`` (the shuffle path, for a batch about as
         big as the store) must produce identical verdicts."""
-        store = SignatureStore(str(tmp_path / f"agree_{method}"))
-        incremental_dedup(store, _df(spark, CORPUS), method=method)
+        store = SignatureStore(str(tmp_path / f"agree_{method}"), method=method)
+        incremental_dedup(store, _df(spark, CORPUS))
         kw = dict(method=method)
         a = dedup_against(
             _df(spark, FRESH_1), store.read_signatures(spark), store.read_bands(spark), **kw
@@ -144,8 +144,8 @@ class TestIncrementalDedup:
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
     def test_deterministic_across_partitioning(self, spark, tmp_path, method):
-        store = SignatureStore(str(tmp_path / f"det_{method}"))
-        incremental_dedup(store, _df(spark, CORPUS), method=method)
+        store = SignatureStore(str(tmp_path / f"det_{method}"), method=method)
+        incremental_dedup(store, _df(spark, CORPUS))
         a = dedup_against(
             _df(spark, FRESH_1), store.read_signatures(spark), store.read_bands(spark), method=method
         )[0]
@@ -158,17 +158,59 @@ class TestIncrementalDedup:
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
+MD5_PARAMS = {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}
+
+
 class TestStoreParamGuard:
+    """The store records its signing parameters at its first append and
+    every store-backed call signs with them."""
+
     def test_mismatched_params_fail_fast(self, spark, tmp_path):
-        store = SignatureStore(str(tmp_path / "guard"))
-        incremental_dedup(store, _df(spark, CORPUS), method="md5", n_hashes=16)
-        with pytest.raises(ValueError, match="incomparable"):
-            incremental_dedup(store, _df(spark, FRESH_1), method="md5", n_hashes=32)
-        with pytest.raises(ValueError, match="incomparable"):
-            incremental_dedup(store, _df(spark, FRESH_1), method="xxhash64", n_hashes=16)
-        # matching params still work
-        out = incremental_dedup(store, _df(spark, FRESH_1), method="md5", n_hashes=16)
-        assert out.count() == 4
+        root = str(tmp_path / "guard")
+        incremental_dedup(SignatureStore(root, method="md5"), _df(spark, CORPUS))
+        with pytest.raises(ValueError, match="method='md5' signatures; a method='xxhash64' batch"):
+            SignatureStore(root, method="xxhash64")
+        # a reopen that names no method signs with the recorded one
+        store = SignatureStore(root)
+        assert store.params() == MD5_PARAMS
+        out = {r.doc_id: r.verdict for r in incremental_dedup(store, _df(spark, FRESH_1)).collect()}
+        assert out == {100: "exact", 101: "near", 102: "keep", 103: "keep"}
+        # recorded parameters win over the defaults of a new store
+        other = SignatureStore(str(tmp_path / "nh32"))
+        other.signatures.write_dataframe(
+            sign_documents(_df(spark, CORPUS), n_hashes=32, method="md5"),
+            summary={"sig_params": {**MD5_PARAMS, "n_hashes": 32}},
+        )
+        assert SignatureStore(other.root).params()["n_hashes"] == 32
+
+    def test_params_survive_compaction_and_expiry(self, spark, tmp_path):
+        root = str(tmp_path / "compacted")
+        store = SignatureStore(root, method="md5")
+        incremental_dedup(store, _df(spark, CORPUS[:2]))
+        incremental_dedup(store, _df(spark, CORPUS[2:]))
+        store.compact(spark)
+        assert store.signatures.current_snapshot().operation == "compact"
+        for table in (store.signatures, store.bands, store.bucket_stats):
+            table.expire_snapshots(keep_last=1)
+        assert len(store.signatures.snapshots()) == 1
+        assert SignatureStore(root).params() == MD5_PARAMS
+        with pytest.raises(ValueError, match="method='md5' signatures; a method='xxhash64' batch"):
+            SignatureStore(root, method="xxhash64")
+
+    def test_params_read_past_a_compaction_that_dropped_them(self, spark, tmp_path):
+        """Compactions of older builds committed no parameters: the store
+        reads them from the newest commit that has them, and refuses a root
+        whose history holds none."""
+        root = str(tmp_path / "old_compaction")
+        store = SignatureStore(root, method="md5")
+        incremental_dedup(store, _df(spark, CORPUS[:2]))
+        incremental_dedup(store, _df(spark, CORPUS[2:]))
+        store.signatures.compact(spark)  # a bare table compaction records no parameters
+        assert "sig_params" not in store.signatures.current_snapshot().summary
+        assert SignatureStore(root).params() == MD5_PARAMS
+        store.signatures.expire_snapshots(keep_last=1)
+        with pytest.raises(ValueError, match="no recorded signing parameters"):
+            SignatureStore(root)
 
 
 class TestStoreCensusAndRepair:
@@ -178,8 +220,8 @@ class TestStoreCensusAndRepair:
     FLOOD = [(i, f"standard legal boilerplate footer text {i % 2}") for i in range(50)]
 
     def test_persisted_hot_list_matches_census(self, spark, tmp_path):
-        store = SignatureStore(str(tmp_path / "census"), bucket_cap=3)
-        incremental_dedup(store, _df(spark, self.FLOOD), method="md5", bucket_cap=3)
+        store = SignatureStore(str(tmp_path / "census"), method="md5", bucket_cap=3)
+        incremental_dedup(store, _df(spark, self.FLOOD))
         census = {
             (r.band, r.bucket)
             for r in store.read_bands(spark)
@@ -189,16 +231,33 @@ class TestStoreCensusAndRepair:
             .select("band", "bucket")
             .collect()
         }
-        hot = {(r.band, r.bucket) for r in store.hot_buckets(spark, 3).collect()}
+        hot = {(r.band, r.bucket) for r in store.hot_buckets(spark).collect()}
         assert hot and hot == census
-        # mismatched cap → no persisted list (caller falls back to census)
-        assert store.hot_buckets(spark, 7) is None
 
-        # the capped dedup THROUGH the persisted list behaves like the
-        # on-the-fly census: boilerplate fresh doc is NOT flagged near
+        # the capped dedup THROUGH the persisted list: the boilerplate
+        # fresh doc is NOT flagged near
         fresh = _df(spark, [(999, "standard legal boilerplate footer text 0 extra")])
-        out = incremental_dedup(store, fresh, method="md5", bucket_cap=3, commit=False)
+        out = incremental_dedup(store, fresh, commit=False)
         assert [r.verdict for r in out.collect()] == ["keep"]
+
+    def test_reopened_store_keeps_its_flood_guard(self, spark, tmp_path):
+        """A capped store reopened without restating its cap still drops
+        flooded buckets, through incremental_dedup and ingest_batch alike."""
+        from dsm2dtm_spark.operators.incremental import ingest_batch
+        from dsm2dtm_spark.sources.manifest import SnapshotTable
+
+        root = str(tmp_path / "reopened")
+        incremental_dedup(SignatureStore(root, bucket_cap=3), _df(spark, self.FLOOD))
+        fresh = _df(spark, [(999, "standard legal boilerplate footer text 0 extra")])
+        store = SignatureStore(root)
+        # without the guard the doc is a near-dup of the flood
+        unguarded = dedup_against(fresh, store.read_signatures(spark), store.read_bands(spark))[0]
+        assert [r.verdict for r in unguarded.collect()] == ["near"]
+        out = incremental_dedup(store, fresh, commit=False)
+        assert [r.verdict for r in out.collect()] == ["keep"]
+        corpus = SnapshotTable(str(tmp_path / "corpus"))
+        _, counts = ingest_batch(spark, fresh, corpus, SignatureStore(root), batch_id="b1")
+        assert counts["dropped_near_vs_corpus"] == 0 and counts["survivors"] == 1
 
     def test_hot_overflow_is_sticky_across_appends(self, spark, tmp_path, monkeypatch):
         """Once the hot list overflows MAX_HOT_LIST, later appends must keep
@@ -206,21 +265,21 @@ class TestStoreCensusAndRepair:
         batch must not shrink the persisted list and silently drop the
         flood guard for untouched buckets (r5 review finding)."""
         monkeypatch.setattr(SignatureStore, "MAX_HOT_LIST", 2)
-        store = SignatureStore(str(tmp_path / "ovf"), bucket_cap=1)
+        store = SignatureStore(str(tmp_path / "ovf"), method="md5", bucket_cap=1)
         # 3 copies of one text -> its 4 band buckets all cross cap=1 ->
         # 4 hot pairs > MAX_HOT_LIST=2 -> overflow commit
         flood = [(i, "identical flood text shared by all copies") for i in range(3)]
-        incremental_dedup(store, _df(spark, flood), method="md5", bucket_cap=1)
+        incremental_dedup(store, _df(spark, flood))
         snap1 = store.bucket_stats.current_snapshot()
         assert snap1.summary.get("hot_overflow") is True and "hot" not in snap1.summary
         # next batch: unique docs, nothing newly hot — the flag must persist
         quiet = [(100 + i, f"wholly unique document number {i} about topic {i}") for i in range(3)]
-        incremental_dedup(store, _df(spark, quiet), method="md5", bucket_cap=1)
+        incremental_dedup(store, _df(spark, quiet))
         snap2 = store.bucket_stats.current_snapshot()
         assert snap2.summary.get("hot_overflow") is True and "hot" not in snap2.summary
         # reader falls back to the census and still sees all 4 flood buckets
         # (the buggy behavior returned ONLY buckets the second batch touched)
-        hot = {(r.band, r.bucket) for r in store.hot_buckets(spark, 1).collect()}
+        hot = {(r.band, r.bucket) for r in store.hot_buckets(spark).collect()}
         flood_pairs = {
             (r.band, r.bucket)
             for r in store.read_bands(spark).filter("doc_id < 3").select("band", "bucket").collect()
@@ -235,13 +294,13 @@ class TestStoreCensusAndRepair:
         the flood guard dedup_against relies on."""
         root = str(tmp_path / "late_cap")
         # phase 1: capless store accumulates a flood (no census maintained)
-        store0 = SignatureStore(root)
-        incremental_dedup(store0, _df(spark, self.FLOOD), method="md5")
+        store0 = SignatureStore(root, method="md5")
+        incremental_dedup(store0, _df(spark, self.FLOOD))
         assert store0.bucket_stats.current_snapshot() is None
         # phase 2: reopen WITH the cap — the persisted list must now cover
         # the HISTORICAL flood buckets, exactly matching the on-the-fly census
         store = SignatureStore(root, bucket_cap=3)
-        hot = {(r.band, r.bucket) for r in store.hot_buckets(spark, 3).collect()}
+        hot = {(r.band, r.bucket) for r in store.hot_buckets(spark).collect()}
         census = {
             (r.band, r.bucket)
             for r in store.read_bands(spark)
@@ -252,7 +311,7 @@ class TestStoreCensusAndRepair:
         # phase 3: a later append must not double-count — cumulative census
         # totals stay equal to a fresh groupBy over the actual band table
         quiet = [(1000 + i, f"wholly unique follow-up document {i} topic {i}") for i in range(3)]
-        incremental_dedup(store, _df(spark, quiet), method="md5", bucket_cap=3)
+        incremental_dedup(store, _df(spark, quiet))
         totals = {
             (r.band, r.bucket): r.n
             for r in store.bucket_stats.read(spark)
@@ -274,7 +333,7 @@ class TestStoreCensusAndRepair:
         from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
 
         monkeypatch.setattr(SignatureStore, "MAX_HOT_LIST", 2)
-        store = SignatureStore(str(tmp_path / "bounded"), bucket_cap=0)
+        store = SignatureStore(str(tmp_path / "bounded"), method="md5", bucket_cap=0)
         sizes: list[int] = []
         orig = ClassicDF.collect
 
@@ -294,7 +353,7 @@ class TestStoreCensusAndRepair:
         # the census fallback still sees every crossing bucket
         n_pairs = store.read_bands(spark).select("band", "bucket").distinct().count()
         assert n_pairs > SignatureStore.MAX_HOT_LIST
-        assert store.hot_buckets(spark, 0).count() == n_pairs
+        assert store.hot_buckets(spark).count() == n_pairs
 
     def test_repair_restores_missing_band_rows(self, spark, tmp_path):
         """The OTHER half of the crash window: signatures committed but the
@@ -306,17 +365,14 @@ class TestStoreCensusAndRepair:
         from dsm2dtm_spark.sources.manifest import SnapshotTable
 
         corpus = SnapshotTable(str(tmp_path / "corpus"))
-        store = SignatureStore(str(tmp_path / "store"))
+        store = SignatureStore(str(tmp_path / "store"), method="md5")
         docs = _df(spark, [(i, f"document {i} on levees and culverts number {i}") for i in range(4)])
         corpus.write_pandas(docs.toPandas())
         # simulate the crash: signatures land, bands never do
         sigs = sign_documents(docs, method="md5")
-        store.signatures.write_dataframe(
-            sigs,
-            summary={"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}},
-        )
+        store.signatures.write_dataframe(sigs, summary={"sig_params": MD5_PARAMS})
         assert store.band_row_count() is None
-        assert repair_store(spark, corpus, store, method="md5") == 4
+        assert repair_store(spark, corpus, store) == 4
         assert store.band_row_count() == 4 * 4
         # the healed bands equal a from-scratch derivation — and a near-dup
         # of a crashed-batch doc is now caught through the LSH path
@@ -327,12 +383,12 @@ class TestStoreCensusAndRepair:
         got = {(r.doc_id, r.band, r.bucket) for r in store.read_bands(spark).collect()}
         assert got == want
         near = _df(spark, [(99, "document 2 on levees and culverts number 3")])
-        out = incremental_dedup(store, near, method="md5", commit=False)
+        out = incremental_dedup(store, near, commit=False)
         assert [r.verdict for r in out.collect()] == ["near"]
         # and the happy path is quiet again: zero Spark jobs
         sc = spark.sparkContext
         sc.setJobGroup("repair-bands-happy", "happy path")
-        assert repair_store(spark, corpus, store, method="md5") == 0
+        assert repair_store(spark, corpus, store) == 0
         ids = sc.statusTracker().getJobIdsForGroup("repair-bands-happy")
         sc.setJobGroup(None, None)
         assert list(ids) == []
@@ -346,18 +402,17 @@ class TestStoreCensusAndRepair:
         from dsm2dtm_spark.sources.manifest import SnapshotTable
 
         corpus = SnapshotTable(str(tmp_path / "corpus"))
-        store = SignatureStore(str(tmp_path / "store"))
+        store = SignatureStore(str(tmp_path / "store"), method="md5")
         docs = _df(spark, [(i, f"document {i} on weirs and gates number {i}") for i in range(3)])
         corpus.write_pandas(docs.toPandas())
         sigs = sign_documents(docs, method="md5")
-        sp = {"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}}
-        store.signatures.write_dataframe(sigs, summary=sp)
+        store.signatures.write_dataframe(sigs, summary={"sig_params": MD5_PARAMS})
         # torn append: doc 0 keeps only bands 0-1, doc 1 all 4, doc 2 none
         full = band_buckets(sigs)
         torn = full.filter("(doc_id = 0 AND band < 2) OR doc_id = 1")
         store.bands.write_dataframe(torn)
         assert store.band_row_count() == 6
-        assert repair_store(spark, corpus, store, method="md5") == 2  # docs 0 and 2 healed
+        assert repair_store(spark, corpus, store) == 2  # docs 0 and 2 healed
         got = [
             (r.doc_id, r.band, r.bucket) for r in store.read_bands(spark).collect()
         ]
@@ -376,7 +431,7 @@ class TestStoreCensusAndRepair:
         (old / "store.json").write_text(json.dumps({
             "rows": 4,
             "n_buckets": 16,
-            "sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"},
+            "sig_params": MD5_PARAMS,
             "tables": {"signatures": {"version": 0, "ddl": "`doc_id` bigint"}},
         }))
         with pytest.raises(ValueError, match="no longer supported. Re-sign into a fresh store root"):
@@ -385,56 +440,33 @@ class TestStoreCensusAndRepair:
 
         root = str(tmp_path / "fresh")
         assert SignatureStore(root).is_empty()
-        incremental_dedup(SignatureStore(root), _df(spark, CORPUS), method="md5")
+        incremental_dedup(SignatureStore(root, method="md5"), _df(spark, CORPUS))
         assert SignatureStore(root).signature_row_count() == len(CORPUS)
 
     def test_census_accumulates_across_appends(self, spark, tmp_path):
         # a bucket that crosses the cap only CUMULATIVELY (3 rows, then 3
         # more via direct append) must turn hot — partial counts sum across
         # commits, and compact()'s rollup must not lose that
-        store = SignatureStore(str(tmp_path / "accum"), bucket_cap=5)
+        store = SignatureStore(str(tmp_path / "accum"), method="md5", bucket_cap=5)
         text = "common boilerplate prefix shared by every flood document"
         sigs1 = sign_documents(_df(spark, [(i, text) for i in range(3)]), method="md5")
         store.append(sigs1, summary={"op": "t"})
-        assert store.hot_buckets(spark, 5).count() == 0
+        assert store.hot_buckets(spark).count() == 0
         sigs2 = sign_documents(_df(spark, [(10 + i, text) for i in range(3)]), method="md5")
         store.append(sigs2, summary={"op": "t"})
-        assert store.hot_buckets(spark, 5).count() == 4  # all 4 bands hot at n=6
+        assert store.hot_buckets(spark).count() == 4  # all 4 bands hot at n=6
         store.compact(spark)
-        assert store.hot_buckets(spark, 5).count() == 4  # rollup carried the list
+        assert store.hot_buckets(spark).count() == 4  # rollup carried the list
         rolled = store.bucket_stats.read(spark).collect()
         assert sorted(r.n for r in rolled) == [6, 6, 6, 6]
 
     def test_cap_mismatch_on_reopen_fails_fast(self, spark, tmp_path):
-        store = SignatureStore(str(tmp_path / "capguard"), bucket_cap=3)
-        incremental_dedup(store, _df(spark, self.FLOOD), method="md5", bucket_cap=3)
+        store = SignatureStore(str(tmp_path / "capguard"), method="md5", bucket_cap=3)
+        incremental_dedup(store, _df(spark, self.FLOOD))
         reopened = SignatureStore(str(tmp_path / "capguard"))  # cap restored
         assert reopened.bucket_cap == 3
         with pytest.raises(ValueError, match="hot-bucket census"):
             SignatureStore(str(tmp_path / "capguard"), bucket_cap=9)
-
-    def test_hot_list_skips_band_census_in_plan(self, spark, tmp_path):
-        store = SignatureStore(str(tmp_path / "planhot"), bucket_cap=3)
-        incremental_dedup(store, _df(spark, self.FLOOD), method="md5", bucket_cap=3)
-        fresh = _df(spark, [(999, "standard legal boilerplate footer text 0 extra")])
-        kw = dict(method="md5", materialize_fresh=False)
-        with_census = dedup_against(
-            fresh, store.read_signatures(spark), store.read_bands(spark), bucket_cap=3, **kw
-        )[0]
-        with_hot = dedup_against(
-            fresh,
-            store.read_signatures(spark),
-            store.read_bands(spark),
-            bucket_cap=3,
-            hot_buckets=store.hot_buckets(spark, 3),
-            **kw,
-        )[0]
-        p_census = with_census._jdf.queryExecution().optimizedPlan().toString()
-        p_hot = with_hot._jdf.queryExecution().optimizedPlan().toString()
-        # the persisted list replaces the stored-band groupBy census with a
-        # LocalRelation: strictly fewer Aggregates, and identical verdicts
-        assert p_hot.count("Aggregate") < p_census.count("Aggregate")
-        assert sorted(map(tuple, with_hot.collect())) == sorted(map(tuple, with_census.collect()))
 
     def test_repair_happy_path_runs_zero_spark_jobs(self, spark, tmp_path):
         from dsm2dtm_spark.operators.incremental import ingest_batch, repair_store
@@ -472,19 +504,19 @@ class TestStoreCensusAndRepair:
         docs = _df(spark, [(i, f"document {i} on weirs and gates number {i}") for i in range(3)])
         corpus = SnapshotTable(str(tmp_path / "corpus"))
         corpus.write_pandas(docs.toPandas())
-        store = SignatureStore(str(tmp_path / "store"))
+        store = SignatureStore(str(tmp_path / "store"), method="md5")
         sigs = sign_documents(docs, method="md5").localCheckpoint(eager=True)
-        sp = {"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}}
+        sp = {"sig_params": MD5_PARAMS}
         store.signatures.write_dataframe(sigs, summary=sp)
         store.bands.write_dataframe(band_buckets(sigs).filter("(doc_id = 0 AND band < 2) OR doc_id = 1"))
 
         sc = spark.sparkContext
         try:
             sc.setJobGroup("torn-heal", "torn-bands heal")
-            assert repair_store(spark, corpus, store, method="md5") == 2
+            assert repair_store(spark, corpus, store) == 2
             heal_jobs = len(sc.statusTracker().getJobIdsForGroup("torn-heal"))
             sc.setJobGroup("append-jobs", "one store append")
-            SignatureStore(str(tmp_path / "store2")).append(sigs, summary=sp)
+            SignatureStore(str(tmp_path / "store2"), method="md5").append(sigs, summary=sp)
             append_jobs = len(sc.statusTracker().getJobIdsForGroup("append-jobs"))
         finally:
             sc.setJobGroup(None, None)
@@ -543,8 +575,8 @@ def test_decisions_carry_the_fresh_rows(spark, tmp_path):
     column comes back unchanged, including one named like a column the
     dedup computes (``fingerprint``), and the kept signatures stay the
     store's three columns."""
-    store = SignatureStore(str(tmp_path / "cols"))
-    incremental_dedup(store, _df(spark, CORPUS), method="md5")
+    store = SignatureStore(str(tmp_path / "cols"), method="md5")
+    incremental_dedup(store, _df(spark, CORPUS))
     fresh = spark.createDataFrame(
         [(doc_id, text, f"user-{doc_id}", "en") for doc_id, text in FRESH_1],
         "doc_id bigint, text string, fingerprint string, lang string",
@@ -584,19 +616,23 @@ class TestMd5SignatureProperties:
         assert by_doc[0] != by_doc[2]
 
     def test_bucket_cap_drops_flood_buckets(self, spark, tmp_path):
-        # 50 near-identical boilerplate docs in the corpus: with a cap the
-        # flooded buckets leave candidate generation, so a fresh boilerplate
-        # doc is NOT flagged near (degraded recall, bounded join) — without
-        # the cap it is
+        # 50 near-identical boilerplate docs in the corpus: with the capped
+        # store's hot list the flooded buckets leave candidate generation,
+        # so a fresh boilerplate doc is NOT flagged near (degraded recall,
+        # bounded join) — without the list it is
         flood = [(i, f"standard legal boilerplate footer text {i % 2}") for i in range(50)]
-        store = SignatureStore(str(tmp_path / "flood"))
-        incremental_dedup(store, _df(spark, flood), method="md5")
+        store = SignatureStore(str(tmp_path / "flood"), method="md5", bucket_cap=3)
+        incremental_dedup(store, _df(spark, flood))
         fresh = _df(spark, [(999, "standard legal boilerplate footer text 0 extra")])
         uncapped, _ = dedup_against(
             fresh, store.read_signatures(spark), store.read_bands(spark), method="md5"
         )
         capped, _ = dedup_against(
-            fresh, store.read_signatures(spark), store.read_bands(spark), method="md5", bucket_cap=3
+            fresh,
+            store.read_signatures(spark),
+            store.read_bands(spark),
+            method="md5",
+            hot_buckets=store.hot_buckets(spark),
         )
         assert [r.verdict for r in uncapped.collect()] == ["near"]
         assert [r.verdict for r in capped.collect()] == ["keep"]
@@ -652,16 +688,15 @@ class TestBandBucketsUnrolled:
                 assert all(r.signature == dict(rows)[r.doc_id] for r in carried)
 
     def test_append_with_wrong_declared_n_hashes_falls_back_to_generic(self, spark, tmp_path):
-        # r7 review: the unrolled form indexes components 0..n-1 blindly, so
-        # a declared length exceeding the actual arrays would bucket
-        # NULL-skipped md5('') floods. The append must confirm the declared
-        # length against the data and fall back to the generic expression.
+        # r7 review: an unrolled form indexing components 0..n-1 blindly
+        # would, for a declared length exceeding the actual arrays, bucket
+        # NULL-skipped md5('') floods. A caller's summary cannot declare the
+        # length: the store records its own parameters over it, and bands
+        # slice the arrays the batch actually carries.
         sigs = sign_documents(_df(spark, CORPUS), method="md5")  # arrays of 16
-        store = SignatureStore(str(tmp_path / "wrongnh"))
-        store.append(
-            sigs,
-            summary={"sig_params": {"n_hashes": 32, "bands": 4, "shingle_n": 3, "method": "md5"}},
-        )
+        store = SignatureStore(str(tmp_path / "wrongnh"), method="md5")
+        store.append(sigs, summary={"sig_params": {**MD5_PARAMS, "n_hashes": 32}})
+        assert store.signatures.current_snapshot().summary["sig_params"] == MD5_PARAMS
         committed = sorted(map(tuple, store.read_bands(spark).collect()))
         assert committed == sorted(map(tuple, band_buckets(sigs).collect()))
         # no md5('') flood bucket
@@ -669,17 +704,14 @@ class TestBandBucketsUnrolled:
         assert all(r[2] != empty_md5 for r in committed)
 
     def test_store_append_band_rows_identical_with_and_without_sig_params(self, spark, tmp_path):
-        # r7: appends with recorded sig_params take the unrolled codegen
-        # bucket form; appends without fall back to the generic expression.
-        # The committed band ROWS must be identical either way.
+        # a caller's summary may or may not carry sig_params; the store
+        # records its own either way, and the committed band ROWS are
+        # identical
         sigs = sign_documents(_df(spark, CORPUS), method="md5")
-        with_params = SignatureStore(str(tmp_path / "wp"))
-        with_params.append(
-            sigs,
-            summary={"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}},
-        )
-        without_params = SignatureStore(str(tmp_path / "np"))
-        without_params.append(sigs)  # no summary anywhere → generic path
+        with_params = SignatureStore(str(tmp_path / "wp"), method="md5")
+        with_params.append(sigs, summary={"sig_params": MD5_PARAMS})
+        without_params = SignatureStore(str(tmp_path / "np"), method="md5")
+        without_params.append(sigs)
         a = sorted(map(tuple, with_params.read_bands(spark).collect()))
         b = sorted(map(tuple, without_params.read_bands(spark).collect()))
         assert a == b
@@ -727,14 +759,13 @@ def test_ingest_batch_and_incremental_dedup_agree(spark, tmp_path):
     from dsm2dtm_spark.operators.incremental import ingest_batch
     from dsm2dtm_spark.sources.manifest import SnapshotTable
 
-    store = SignatureStore(str(tmp_path / "store"))
+    store = SignatureStore(str(tmp_path / "store"), method="md5")
     corpus = SnapshotTable(str(tmp_path / "corpus"))
-    ingest_batch(spark, _df(spark, CORPUS), corpus, store, method="md5", batch_id="boot")
+    ingest_batch(spark, _df(spark, CORPUS), corpus, store, batch_id="boot")
     verdicts = {
-        r.doc_id: r.verdict
-        for r in incremental_dedup(store, _df(spark, FRESH_1), method="md5", commit=False).collect()
+        r.doc_id: r.verdict for r in incremental_dedup(store, _df(spark, FRESH_1), commit=False).collect()
     }
-    survivors, counts = ingest_batch(spark, _df(spark, FRESH_1), corpus, store, method="md5", batch_id="b1")
+    survivors, counts = ingest_batch(spark, _df(spark, FRESH_1), corpus, store, batch_id="b1")
     assert counts["after_within_batch_exact"] == len(FRESH_1)
     assert verdicts == {100: "exact", 101: "near", 102: "keep", 103: "keep"}
     assert {r.doc_id for r in survivors.collect()} == {i for i, v in verdicts.items() if v == "keep"}
@@ -744,17 +775,18 @@ def test_ingest_batch_and_incremental_dedup_agree(spark, tmp_path):
 
 def test_empty_batch_commits_nothing(spark, tmp_path):
     """An empty batch leaves an empty store empty: no signatures or bands
-    commit, no recorded signature parameters, and the next batch is still
-    the bootstrap."""
-    store = SignatureStore(str(tmp_path / "store"))
+    commit, no signing parameters are recorded (the root still opens with
+    another method), and the next batch is still the bootstrap."""
+    root = str(tmp_path / "store")
+    store = SignatureStore(root, method="md5")
     empty = spark.createDataFrame([], "doc_id bigint, text string")
-    assert incremental_dedup(store, empty, method="md5").count() == 0
-    assert store.is_empty() and store.params() == {}
-    assert store.signature_row_count() is None and store.band_row_count() is None
-    incremental_dedup(store, _df(spark, CORPUS), method="md5")
+    assert incremental_dedup(store, empty).count() == 0
+    assert store.signatures.snapshots() == [] and store.bands.snapshots() == []
+    assert SignatureStore(root, method="xxhash64").is_empty()
+    incremental_dedup(store, _df(spark, CORPUS))
     assert store.signature_row_count() == len(CORPUS) and store.band_row_count() == 4 * len(CORPUS)
     # an empty batch into a non-empty store changes nothing either
-    before = store.params()
-    incremental_dedup(store, empty, method="md5")
-    assert store.params() == before
+    before = [len(t.snapshots()) for t in (store.signatures, store.bands)]
+    incremental_dedup(store, empty)
+    assert [len(t.snapshots()) for t in (store.signatures, store.bands)] == before
     assert store.signature_row_count() == len(CORPUS) and store.band_row_count() == 4 * len(CORPUS)

@@ -148,17 +148,12 @@ class TestIngestJob:
         assert c["dropped_exact_vs_corpus"] == 1 and c["survivors"] == 0
 
     def test_param_drift_rejected_against_existing_store(self, spark, tables):
+        """The store records its method at the first ingest; reopening it
+        with another method fails before any batch is signed."""
         corpus, store = tables
         ingest_batch(spark, _df(spark, [(0, "a long enough document about parquet footers")]), corpus, store, batch_id="a")
-        with pytest.raises(ValueError, match="incomparable"):
-            ingest_batch(
-                spark,
-                _df(spark, [(1, "a second long enough document about row group statistics")]),
-                corpus,
-                store,
-                n_hashes=32,
-                batch_id="b",
-            )
+        with pytest.raises(ValueError, match="method='xxhash64' signatures; a method='md5' batch"):
+            SignatureStore(store.root, method="md5")
 
     def test_guard_survives_unrelated_commits(self, spark, tables):
         """A maintenance/compaction commit (no batch_id in its summary) must

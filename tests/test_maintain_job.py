@@ -32,9 +32,9 @@ class TestMaintainJob:
         t = SnapshotTable(table_root)
         for i in range(5):  # five small commits -> file pileup + 5 manifests
             t.write_pandas(pd.DataFrame({"doc_id": [10 * i + j for j in range(3)], "v": [1] * 3}))
-        store = SignatureStore(str(tmp_path / "store"))
+        store = SignatureStore(str(tmp_path / "store"), method="md5")
         for i in range(3):
-            incremental_dedup(store, _docs(spark, 100 * i, 100 * i + 20), method="md5")
+            incremental_dedup(store, _docs(spark, 100 * i, 100 * i + 20))
         rows_before = t.read(spark).count()
         sig_before = store.read_signatures(spark).count()
 
@@ -56,13 +56,14 @@ class TestMaintainJob:
         assert store.read_signatures(spark).count() == sig_before
 
     def test_empty_or_mistyped_store_root_is_a_noop(self, spark, tmp_path):
-        """Maintenance on an empty --store path commits nothing and writes
-        no manifest: the root still opens as an empty store afterwards."""
+        """Maintenance on an empty --store path commits nothing and creates
+        nothing: the root still opens as an empty store afterwards, and
+        neither the pass nor that open leaves a directory behind."""
         root = str(tmp_path / "typo_sigstore")
         report = run_maintenance(spark, [], store_root=root)
         assert report["store"] == {"signatures": 0, "bands": 0, "bucket_stats": 0}
-        assert not os.path.exists(os.path.join(root, "store.json"))
         assert SignatureStore(root).is_empty()
+        assert not os.path.exists(root)
 
     def test_repair_corpus_option_heals_before_compacting(self, spark, tmp_path):
         """--repair-corpus runs the store self-heal (with the store's OWN
@@ -74,9 +75,9 @@ class TestMaintainJob:
         from dsm2dtm_spark.operators.incremental import ingest_batch as _ib
 
         corpus = SnapshotTable(str(tmp_path / "corpus"))
-        store = SignatureStore(str(tmp_path / "store"))
+        store = SignatureStore(str(tmp_path / "store"), method="md5")
         batch = _docs(spark, 0, 8)
-        _ib(spark, batch, corpus, store, method="md5", batch_id="m1")
+        _ib(spark, batch, corpus, store, batch_id="m1")
         shutil.rmtree(str(tmp_path / "store" / "bands"))  # lost in a bad restore
         report = run_maintenance(
             spark,
@@ -93,8 +94,29 @@ class TestMaintainJob:
                 columns=["doc_id", "text"],
             )
         )
-        out = incremental_dedup(store, fresh, method="md5", threshold=0.5, commit=False)
+        out = incremental_dedup(store, fresh, threshold=0.5, commit=False)
         assert [r.verdict for r in out.collect()] == ["near"]
+
+    def test_repair_corpus_signs_a_compacted_store_with_its_method(self, spark, tmp_path):
+        """A store compaction keeps the recorded method, so a later
+        --repair-corpus re-signs the documents a crash left unsigned as md5
+        strings, and the store still reads."""
+        from dsm2dtm_spark.operators.incremental import ingest_batch
+
+        corpus = SnapshotTable(str(tmp_path / "corpus"))
+        root = str(tmp_path / "store")
+        gauges = [(100 + i, f"river gauge {i} reported flood stage {i * 7} at dawn") for i in range(5)]
+        for i, batch in enumerate([_docs(spark, 0, 5), spark.createDataFrame(gauges, "doc_id long, text string")]):
+            ingest_batch(spark, batch, corpus, SignatureStore(root, method="md5"), batch_id=f"m{i}")
+        run_maintenance(spark, [], store_root=root)
+        assert SignatureStore(root).signatures.current_snapshot().operation == "compact"
+        # the crash window: corpus rows whose signatures never committed
+        corpus.write_dataframe(_docs(spark, 500, 503), summary={"op": "ingest", "batch_id": "lost"})
+        report = run_maintenance(spark, [], store_root=root, repair_corpus=str(tmp_path / "corpus"))
+        assert report["repaired"] == 3
+        sigs = {r.doc_id: r.signature for r in SignatureStore(root).read_signatures(spark).collect()}
+        assert sorted(sigs) == sorted(r.doc_id for r in corpus.read(spark).collect())
+        assert all(isinstance(c, str) and len(c) == 32 for i in (500, 501, 502) for c in sigs[i])
 
     def test_ann_store_compacts_and_expires(self, spark, tmp_path):
         """--ann-store folds per-append posting-file pileup inside each
